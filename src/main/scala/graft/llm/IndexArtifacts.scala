@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized index tables for the LLM-pipeline operators.
@@ -34,17 +35,11 @@ object IndexArtifacts {
 
   private lazy val tempRoot: Path = {
     val p = Files.createTempDirectory("graft-index-artifacts")
-    sys.addShutdownHook(deleteRecursively(p.toFile))
+    sys.addShutdownHook(FileUtils.deleteQuietly(p.toFile))
     p
   }
 
   private val counter = new AtomicLong()
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
-    ()
-  }
 
   /** Write `df` once as a parquet index table owned by this call and
     * return a fresh scan of it. Each invocation pays its own build —
@@ -71,7 +66,7 @@ object IndexArtifacts {
       tag: String): (DataFrame, () => Unit) = {
     val p = tempRoot.resolve(s"$tag-${counter.incrementAndGet()}")
     df.write.parquet(p.toString)
-    (s.read.parquet(p.toString), () => deleteRecursively(p.toFile))
+    (s.read.parquet(p.toString), () => FileUtils.deleteQuietly(p.toFile))
   }
 
   /** [[materializeOwned]] plus the written row count, read from the
@@ -83,7 +78,7 @@ object IndexArtifacts {
     val p = tempRoot.resolve(s"$tag-${counter.incrementAndGet()}")
     df.write.parquet(p.toString)
     (s.read.parquet(p.toString), parquetRowCount(p.toString),
-      () => deleteRecursively(p.toFile))
+      () => FileUtils.deleteQuietly(p.toFile))
   }
 
   /** Exact row count of a parquet directory from file footers (no

@@ -2,19 +2,15 @@ package graft.sources.binlog
 
 import java.util.regex.Pattern
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cdc._
+import graft.sources.log._
 
 /** DataSource V2 CDC streaming source over a file-backed changelog —
   * the Spark-4-native re-expression of the reference's v1
@@ -49,24 +45,14 @@ import graft.cdc._
   * Output schema: a single `value: String` column of JSON envelopes —
   * the Kafka-source shape the reference emits (MBDS:40-44).
   */
-class BinlogDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-binlog"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BinlogDataSource.schemaFor(options)
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    require(schema == BinlogDataSource.schemaFor(opts),
-      s"graft-binlog has a fixed schema ${BinlogDataSource.schemaFor(opts).simpleString}; " +
-        "custom schemas are not supported") // reference MBDS:40 rejects them too
-    new BinlogTable(opts)
-  }
+class BinlogDataSource
+    extends LogDataSource("graft-binlog", BinlogDataSource.WideSchema) {
+  override protected def scanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new BinlogScanBuilder(options)
 }
 
 object BinlogDataSource {
-  val Schema: StructType = StructType(Seq(StructField("value", StringType)))
+  val Schema: StructType = LogDataSource.Schema
 
   /** `envelopeColumns=true` widens the scan with the envelope's
     * routing fields as TYPED TOP-LEVEL COLUMNS (`db`, `table`, `op`,
@@ -80,81 +66,29 @@ object BinlogDataSource {
     * composes: a query not selecting `value` skips envelope
     * serialization entirely.
     */
-  val WideSchema: StructType = StructType(Seq(
-    StructField("value", StringType),
-    StructField("db", StringType),
-    StructField("table", StringType),
-    StructField("op", StringType),
-    StructField("offset", LongType)))
+  val WideSchema: StructType = LogDataSource.wideSchema()
 
   def schemaFor(options: CaseInsensitiveStringMap): StructType =
-    if (Option(options.get("envelopeColumns")).exists(_.toBoolean)) WideSchema
-    else Schema
+    LogDataSource.schemaFor(options, WideSchema)
 }
 
-final class BinlogTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-binlog(${options.get("path")})"
-  override def schema(): StructType = BinlogDataSource.schemaFor(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new BinlogScanBuilder(opts)
-}
-
-/** Plan-level pushdown (SURVEY §4 (b)) for the wide-schema scan:
-  * db/table/op equality|IN and `offset` range predicates written in
-  * the PLAN (`.filter(...)`, `WHERE ...`) reach the source exactly
-  * like the option-level surface — the offset bounds clamp the batch
-  * plan's [start, end) so out-of-range files/chunks are never
-  * partitioned (manifest pruning, the same spine the option path
-  * uses), and db/table/op cuts apply in the partition readers
-  * pre-materialization. Pushed filters are ALSO left in the plan for
-  * Spark to re-evaluate (`pushFilters` returns its input): the
-  * source's pruning is an optimization, never the correctness
-  * boundary — the standard parquet-source contract.
-  *
-  * Filters are accepted only when no option-level regex competes for
-  * the same field (an option pattern AND a pushed equality would need
-  * a conjunction the single-pattern conf cannot carry; the residual
-  * evaluation keeps the un-pushed predicate exact).
+/** Plan-level pushdown (SURVEY §4 (b)) for the wide-schema scan: on
+  * top of the shared db/table/op cuts ([[LogScanBuilder]]), `offset`
+  * range predicates written in the PLAN clamp the batch plan's
+  * [start, end) so out-of-range files/chunks are never partitioned
+  * (manifest pruning, the same spine the option path uses).
   */
 final class BinlogScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
+    extends LogScanBuilder(options, BinlogDataSource.schemaFor(options)) {
   import org.apache.spark.sql.sources._
 
-  private val wide =
-    Option(options.get("envelopeColumns")).exists(_.toBoolean)
-  private var required: StructType = BinlogDataSource.schemaFor(options)
-  private var pushed: Array[Filter] = Array.empty
-
-  private var dbIn: Option[Set[String]] = None
-  private var tblIn: Option[Set[String]] = None
-  private var opIn: Option[Set[String]] = None
   private var offLo: Option[Long] = None // inclusive
   private var offHi: Option[Long] = None // exclusive
 
-  private def strings(vs: Array[Any]): Option[Set[String]] = {
-    val ss = vs.collect { case s: String => s }
-    if (ss.length == vs.length) Some(ss.toSet) else None
-  }
-  private def narrow(cur: Option[Set[String]], add: Set[String]): Option[Set[String]] =
-    Some(cur.map(_.intersect(add)).getOrElse(add))
   private def lo(v: Long): Unit = offLo = Some(offLo.fold(v)(math.max(_, v)))
   private def hi(v: Long): Unit = offHi = Some(offHi.fold(v)(math.min(_, v)))
 
-  private def accept(f: Filter): Boolean = f match {
-    case EqualTo("db", v: String) if options.get("databaseNamePattern") == null =>
-      dbIn = narrow(dbIn, Set(v)); true
-    case In("db", vs) if options.get("databaseNamePattern") == null =>
-      strings(vs).exists { s => dbIn = narrow(dbIn, s); true }
-    case EqualTo("table", v: String) if options.get("tableNamePattern") == null =>
-      tblIn = narrow(tblIn, Set(v)); true
-    case In("table", vs) if options.get("tableNamePattern") == null =>
-      strings(vs).exists { s => tblIn = narrow(tblIn, s); true }
-    case EqualTo("op", v: String) => opIn = narrow(opIn, Set(v)); true
-    case In("op", vs) => strings(vs).exists { s => opIn = narrow(opIn, s); true }
+  override protected def acceptOwn(f: Filter): Boolean = f match {
     // `> MaxValue` matches nothing — a MaxValue lower bound planes to
     // zero partitions; `<= MaxValue` matches everything — record no
     // bound. Both guards exist because v + 1 would wrap to MinValue
@@ -169,38 +103,17 @@ final class BinlogScanBuilder(options: CaseInsensitiveStringMap)
     case _ => false
   }
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = if (wide) filters.filter(accept) else Array.empty
-    filters // every filter stays in the plan as the correctness boundary
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // the planner prunes to a subset of the declared schema; an empty
-    // projection (pure COUNT) legally prunes every column away
-    required = requiredSchema
-
   override def build(): Scan = {
     val base = BinlogSourceConf(options)
-    def quoted(s: Set[String]): String =
-      s.toSeq.sorted.map(Pattern.quote).mkString("|")
-    val conf = base.copy(
-      databaseNamePattern = dbIn.map(quoted).orElse(base.databaseNamePattern),
-      tableNamePattern = tblIn.map(quoted).orElse(base.tableNamePattern),
-      opFilter = opIn,
-      offsetLowerBound = offLo,
-      offsetUpperBound = offHi)
+    val conf = base.copy(log = narrowed(base.log),
+      offsetLowerBound = offLo, offsetUpperBound = offHi)
     new BinlogScan(conf, required, pushed)
   }
 }
 
 final class BinlogScan(conf: BinlogSourceConf, required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter]) extends Scan {
-  override def readSchema(): StructType = required
-  override def description(): String =
-    s"graft-binlog ${conf.dir}" +
-      (if (pushed.nonEmpty) s", PushedFilters: [${pushed.mkString(", ")}]"
-       else "")
+    pushed: Array[org.apache.spark.sql.sources.Filter])
+    extends LogScan("graft-binlog", conf.dir, required, pushed) {
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new BinlogMicroBatchStream(conf.copy(
       // plan-level offset bounds describe a BATCH range; a streaming
@@ -211,19 +124,14 @@ final class BinlogScan(conf: BinlogSourceConf, required: StructType,
 
 /** Validated source configuration (serializable, shipped to readers). */
 final case class BinlogSourceConf(
-    dir: String,
-    prefix: String,
-    databaseNamePattern: Option[String],
-    tableNamePattern: Option[String],
+    log: LogConf,
     startingOffsets: String,
     binlogIndex: Option[Long],
     binlogFileOffset: Option[Long],
-    maxEventsPerTrigger: Option[Long],
     /** Explicit per-partition record bound; when unset the planner
       * adapts to the session's parallelism ([[BinlogPartitioning.chunkSize]]).
       */
     maxRecordsPerPartition: Option[Long],
-    failOnDataLoss: Boolean,
     pruneCommitted: Boolean,
     offsetsByTable: Boolean,
     /** Explicit opt-in for resuming a legacy single-long checkpoint in
@@ -234,11 +142,6 @@ final case class BinlogSourceConf(
       * that state drop every new event as a "duplicate".
       */
     upgradeLegacyCheckpoint: Boolean,
-    /** `binlog.field.decode.<col>` / `binlog.field.decode.*` charset
-      * options, keyed exactly as [[graft.cdc.TypeKernels.decodeBytes]]
-      * expects (reference SchemaTool.scala:43-50).
-      */
-    fieldDecode: Map[String, String],
     /** Emit update before-images as `beforeRows` (SURVEY §1.6 — the
       * reference silently drops them, UpdateRowsWriter.java:54-57).
       */
@@ -257,15 +160,12 @@ final case class BinlogSourceConf(
       * should not see them unless they ask.
       */
     includeDdl: Boolean,
-    sessionTimeZone: String,
-    /** Plan-pushed constraints ([[BinlogScanBuilder]]) — never set from
-      * options. `opFilter` cuts records by op in the readers;
-      * the offset bounds clamp the BATCH plan's [start, end) range
+    /** Plan-pushed offset bounds ([[BinlogScanBuilder]]) — never set
+      * from options. They clamp the BATCH plan's [start, end) range
       * (inclusive lower, exclusive upper, over packed offsets).
       */
-    opFilter: Option[Set[String]] = None,
     offsetLowerBound: Option[Long] = None,
-    offsetUpperBound: Option[Long] = None) extends Serializable {
+    offsetUpperBound: Option[Long] = None) extends LogSourceConf {
 
   /** db/table regex filters applied to a `db.table` offset key (split
     * at the FIRST dot — fixture dbs are dot-free).
@@ -283,43 +183,31 @@ final case class BinlogSourceConf(
 
 object BinlogSourceConf {
   def apply(options: CaseInsensitiveStringMap): BinlogSourceConf = {
-    val dir = options.get("path")
-    require(dir != null, "option 'path' (changelog directory) is required")
+    val log = LogConf(options, "changelog directory")
     require(!Option(options.get("txnAligned")).exists(_.toBoolean) ||
         !Option(options.get("offsetsByTable")).forall(_.toBoolean),
       "txnAligned=true requires offsetsByTable=false: transactions are " +
         "positions in the global log order (a txn may span tables), so " +
         "batch alignment needs the single packed (fileId, pos) offset space")
     BinlogSourceConf(
-      dir = dir,
-      prefix = Option(options.get("prefix")).getOrElse(ChangelogFiles.DefaultPrefix),
-      databaseNamePattern = Option(options.get("databaseNamePattern")),
-      tableNamePattern = Option(options.get("tableNamePattern")),
+      log = log,
       startingOffsets = Option(options.get("startingOffsets")).getOrElse("earliest"),
       binlogIndex = Option(options.get("binlogIndex")).map(_.toLong),
       binlogFileOffset = Option(options.get("binlogFileOffset")).map(_.toLong),
-      maxEventsPerTrigger = Option(options.get("maxEventsPerTrigger")).map(_.toLong),
       maxRecordsPerPartition =
         Option(options.get("maxRecordsPerPartition")).map(_.toLong),
-      failOnDataLoss =
-        Option(options.get("failOnDataLoss")).forall(_.toBoolean),
       pruneCommitted =
         Option(options.get("pruneCommitted")).exists(_.toBoolean),
       offsetsByTable =
         Option(options.get("offsetsByTable")).forall(_.toBoolean),
       upgradeLegacyCheckpoint =
         Option(options.get("upgradeLegacyCheckpoint")).exists(_.toBoolean),
-      fieldDecode = options.asCaseSensitiveMap().asScala.toMap
-        .filter(_._1.toLowerCase.startsWith("binlog.field.decode."))
-        .map { case (k, v) => "binlog.field.decode." + k.drop(20) -> v },
       includeBeforeImage =
         Option(options.get("includeBeforeImage")).exists(_.toBoolean),
       txnAligned =
         Option(options.get("txnAligned")).exists(_.toBoolean),
       includeDdl =
-        Option(options.get("includeDdl")).exists(_.toBoolean),
-      sessionTimeZone =
-        Option(options.get("sessionTimeZone")).getOrElse("UTC"))
+        Option(options.get("includeDdl")).exists(_.toBoolean))
   }
 }
 
@@ -332,43 +220,26 @@ final case class BinlogSourceOffset(packed: Long) extends Offset {
   def offset: BinlogOffset = BinlogOffset.unpack(packed)
 }
 
-/** Kafka-style per-table map offset `{db.table: consumedCount}` with
-  * deterministic (sorted-key) JSON — the binlog-path port of
-  * [[graft.sources.wal.WalOffset]] (reference
-  * CommonSourceOffset.scala:14-53). The value is the table-LOCAL count
-  * of records consumed, computed over the full log history (manifest ∪
-  * live files), so it is stable under head-file retention pruning.
+/** Kafka-style per-table map offset `{db.table: consumedCount}` in
+  * the shared sorted-key JSON ([[MapOffsetJson]]). The value is the
+  * table-LOCAL count of records consumed, computed over the full log
+  * history (manifest ∪ live files), so it is stable under head-file
+  * retention pruning.
   */
 final case class BinlogTableOffsets(tables: Map[String, Long]) extends Offset {
-  override def json(): String = {
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    tables.toSeq.sortBy(_._1).foreach { case (t, n) => g.writeNumberField(t, n) }
-    g.writeEndObject()
-    g.close()
-    sw.toString
-  }
+  override def json(): String = MapOffsetJson.write(tables)
 }
 
 object BinlogTableOffsets {
-  def parse(json: String): BinlogTableOffsets = {
-    import com.fasterxml.jackson.core.JsonToken
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(json)
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    require(p.nextToken() == JsonToken.START_OBJECT,
-      "binlog table offset must be a JSON object")
-    while (p.nextToken() != JsonToken.END_OBJECT) {
-      val t = p.currentName(); p.nextToken(); m += t -> p.getLongValue
-    }
-    p.close()
-    BinlogTableOffsets(m.toMap)
-  }
+  def parse(json: String): BinlogTableOffsets =
+    BinlogTableOffsets(MapOffsetJson.parse(json, "binlog table offset"))
 }
 
 final class BinlogMicroBatchStream(conf: BinlogSourceConf,
     required: StructType = BinlogDataSource.Schema)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends LogMicroBatchStream {
+
+  override protected def log: LogConf = conf.log
 
   /** The configured global starting position (legacy mode; also the
     * conversion anchor for map-offset mode).
@@ -424,19 +295,6 @@ final class BinlogMicroBatchStream(conf: BinlogSourceConf,
         .filter { case (k, _) => conf.tableKeyMatches(k) }
   }
 
-  override def getDefaultReadLimit: ReadLimit =
-    conf.maxEventsPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called with admission control")
-
-  /** Per-table independent advance (map-offset mode): under a row cap,
-    * the budget is allocated against BACKLOG ([[AdmissionBudget]]) — a
-    * stalled/slow table can neither stall the others nor starve itself,
-    * and idle tables never dilute the rate of active ones. Mirrors
-    * WalMicroBatchStream.latestOffset region handling.
-    */
   /** A map-offset checkpoint cannot be downgraded to the single-long
     * space (the global position of a per-table count mix is not
     * recoverable) — fail with the remedy instead of a bare cast error.
@@ -449,12 +307,17 @@ final class BinlogMicroBatchStream(conf: BinlogSourceConf,
         "option or start a fresh checkpoint")
   }
 
+  /** Per-table independent advance (map-offset mode): under a row cap,
+    * the budget is allocated against BACKLOG ([[AdmissionBudget]]) — a
+    * stalled/slow table can neither stall the others nor starve itself,
+    * and idle tables never dilute the rate of active ones.
+    */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     if (!conf.offsetsByTable) {
       val startOff = requireLegacy(start).offset
       val latest = ChangelogFiles.latestOffset(conf.dir, conf.prefix)
       val end = limit match {
-        case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
+        case r: ReadMaxRows =>
           val capped = ChangelogFiles.advance(conf.dir, startOff, r.maxRows(), conf.prefix)
           if (capped < latest) capped else latest
         case _ => latest
@@ -481,7 +344,7 @@ final class BinlogMicroBatchStream(conf: BinlogSourceConf,
       // it, so one active table among N quiet ones gets the full rate
       // (not 1/N of it) — unused shares roll over until spent
       val grants = limit match {
-        case r: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
+        case r: ReadMaxRows =>
           AdmissionBudget.allocate(keys,
             t => { val (from, total) = bounds(t); total - from }, r.maxRows())
         case _ => keys.map(t => t -> (bounds(t)._2 - bounds(t)._1)).toMap
@@ -547,8 +410,6 @@ final class BinlogMicroBatchStream(conf: BinlogSourceConf,
         }
       }
   }
-
-  override def stop(): Unit = ()
 }
 
 /** Batch read of the whole log (earliest → latest) — lets users run
@@ -604,31 +465,11 @@ object BinlogPartitioning {
   def plan(conf: BinlogSourceConf, start: BinlogOffset, end: BinlogOffset): Array[InputPartition] = {
     require(end.packed >= start.packed,
       s"end offset $end < start offset $start — some data may have been missed")
+    // data-loss check BEFORE the empty-range early return, so a total
+    // purge (all files gone, end collapses to start) still surfaces
+    LogScan.requireNoUnreadPurge(conf.log, conf.dir,
+      ChangelogFiles.listedIdSet(conf.dir, conf.prefix), start, "", "changelog")
     val files = ChangelogFiles.listFiles(conf.dir, conf.prefix)
-    // Data-loss check — BEFORE the empty-range early return, so a
-    // total purge (all files gone, end collapses to start) still
-    // surfaces. fileId 0 is the empty-dir sentinel (= beginning of
-    // log, never a loss). For any PURGED file the manifest (which
-    // survives pruning) knows the record count: unread data was lost
-    // iff a purged file at/after the start offset had records the
-    // reader had not consumed — at the start file itself that means
-    // `count >= start.pos`; strictly after it, any record at all.
-    // Purged files wholly BELOW the start offset are normal retention.
-    if (conf.failOnDataLoss && start.fileId > 0) {
-      val existing = ChangelogFiles.listedIdSet(conf.dir, conf.prefix)
-      val unreadPurged = ChangelogFiles.manifestById(conf.dir, conf.prefix)
-        .exists { case (id, e) =>
-          !existing.contains(id) &&
-            ((id == start.fileId && e.count >= start.pos) ||
-             (id > start.fileId && e.count > 0))
-        }
-      if (unreadPurged) {
-        throw new IllegalStateException(
-          s"start offset $start points at or before purged changelog data " +
-            s"(existing files: ${files.map(_._1).mkString(",")}) — unread " +
-            "data was lost (set failOnDataLoss=false to ignore)")
-      }
-    }
     if (end.packed == start.packed) return Array.empty
     val maxId = files.lastOption.map(_._1).getOrElse(-1L)
     val ranges = for {
@@ -807,17 +648,13 @@ final case class BinlogInputPartition(
     filePath: String, fileId: Long, fromPos: Long, untilPos: Long,
     seekBytes: Long = -1L, seekPos: Long = 1L) extends InputPartition
 
-/** Map-offset partition: serve, per table, local indices
-  * `[ranges(t)._1, ranges(t)._2)` where `base(t)` is the table's
-  * cumulative index at the file start. `scanUntil` is the planner's
-  * complete-line count + 1: the reader must never parse at or past it,
-  * because under concurrent append the bytes beyond the planning
-  * snapshot can end in a torn line.
-  */
 /** Map-offset scan slice. `base` is each table's global index at
   * `scanFrom` (file base + manifest-sync prefix counts when the slice
   * starts mid-file); `ranges` are the table-local index ranges this
   * slice serves, all falling inside [scanFrom, scanUntil).
+  * `scanUntil` is the planner's complete-line count + 1: the reader
+  * must never parse at or past it, because under concurrent append the
+  * bytes beyond the planning snapshot can end in a torn line.
   */
 final case class BinlogMapInputPartition(
     filePath: String, fileId: Long,
@@ -842,17 +679,12 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
       k -> DataType.fromJson(v).asInstanceOf[StructType]
     }
 
-  // column pruning: `value` (the envelope serialization — the only
-  // expensive column) is built ONLY when the pruned schema asks for it
-  private val wantValue = required.fieldNames.contains("value")
-  private val isWide = required != BinlogDataSource.Schema
-
-  /** Changelog record → JSON-envelope row. `offset` is the packed
-    * global offset (legacy partitions) or the 1-based table-local index
+  /** Changelog record → JSON envelope. `offset` is the packed global
+    * offset (legacy partitions) or the 1-based table-local index
     * (map-offset partitions) — monotonic per (db, table) either way,
     * which is all the downstream exactly-once dedup (F7) requires.
     */
-  private def envelope(current: ChangelogRecord, offset: Long): InternalRow = {
+  private def envelope(current: ChangelogRecord, offset: Long): UTF8String = {
     val key = s"${current.db}.${current.table}"
     val st = structs.getOrElse(key, null)
     // raw byte[]/BIT/temporal cells → envelope form via the type
@@ -867,49 +699,20 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
     val ev = CdcEvent(current.op, current.tsMillis, current.db, current.table,
       schemas.getOrElse(key, null), row, offset = offset, beforeRow = before,
       txnId = current.txn)
-    InternalRow(UTF8String.fromString(EnvelopeCodec.write(ev)))
+    UTF8String.fromString(EnvelopeCodec.write(ev))
   }
 
-  /** Pruned-schema row builder (wide mode): only the fields the plan
-    * kept are materialized — in particular a routing-only projection
-    * (db/table/op/offset) never pays envelope serialization. The
-    * field→extractor resolution happens ONCE per executor-side factory
-    * instance; the per-record path is a flat array loop (no per-row
-    * name matching or Seq allocation over a multi-million-record scan).
-    */
-  @transient private lazy val fieldGetters: Array[(ChangelogRecord, Long) => Any] =
-    required.fields.map[(ChangelogRecord, Long) => Any] { f =>
-      f.name match {
-        case "value" => (c, o) => envelope(c, o).getUTF8String(0)
-        case "db" => (c, _) => UTF8String.fromString(c.db)
-        case "table" => (c, _) => UTF8String.fromString(c.table)
-        case "op" => (c, _) => UTF8String.fromString(c.op)
-        case "offset" => (_, o) => o
-      }
-    }
-
-  private def prunedRow(current: ChangelogRecord, offset: Long): InternalRow = {
-    val gs = fieldGetters
-    val vals = new Array[Any](gs.length)
-    var i = 0
-    while (i < gs.length) { vals(i) = gs(i)(current, offset); i += 1 }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-  }
-
-  private def emit(current: ChangelogRecord, offset: Long): InternalRow =
-    if (isWide || !wantValue) prunedRow(current, offset)
-    else envelope(current, offset)
-
-  private def isCdcOp(op: String): Boolean =
-    op == "insert" || op == "update" || op == "delete"
+  // column pruning: `value` (the envelope serialization — the only
+  // expensive column) is built ONLY when the pruned schema asks for it
+  private def rows(): LogRows = new LogRows(required, BinlogDataSource.Schema,
+    envelope(_, _), PartialFunction.empty)
 
   /** Record ops this scan emits: row changes always; DDL only by
-    * opt-in; plan-pushed op equality/IN cuts on top. Every other op
-    * consumes its position silently.
+    * opt-in. Every other op consumes its position silently.
     */
-  private def emits(op: String): Boolean =
-    (isCdcOp(op) || (conf.includeDdl && op == "ddl")) &&
-      conf.opFilter.forall(_.contains(op))
+  private def served(op: String): Boolean =
+    op == "insert" || op == "update" || op == "delete" ||
+      (conf.includeDdl && op == "ddl")
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
@@ -917,22 +720,18 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
         new PartitionReader[InternalRow] {
           // db/table regex filters applied at the source, pre-materialization
           // (reference BinLogSocketServerInExecutor.scala:239-250, compile :278-281)
-          private val dbP = conf.databaseNamePattern.map(Pattern.compile)
-          private val tblP = conf.tableNamePattern.map(Pattern.compile)
+          private val cut = new RecordFilter(conf.log)
+          private val out = rows()
           private val raw = ChangelogFiles.readRange(
             new java.io.File(p.filePath), p.fromPos, p.untilPos,
             p.seekBytes, p.seekPos)
-          private val it = raw
-            .filter { r =>
-              dbP.forall(_.matcher(r.db).matches()) &&
-                tblP.forall(_.matcher(r.table).matches()) && emits(r.op)
-            }
+          private val it = raw.filter(r => cut.keeps(r) && served(r.op))
           private var current: ChangelogRecord = _
 
           override def next(): Boolean =
             if (it.hasNext) { current = it.next(); true } else false
           override def get(): InternalRow =
-            emit(current, BinlogOffset(p.fileId, current.pos).packed)
+            out.row(current, BinlogOffset(p.fileId, current.pos).packed)
           // release the file handle even if the task is cancelled mid-range
           override def close(): Unit = raw.close()
         }
@@ -948,6 +747,8 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
           // range is exhausted: under concurrent append the bytes past
           // the planning snapshot can end in a torn line that must not
           // be parsed.
+          private val cut = new RecordFilter(conf.log)
+          private val out = rows()
           private val raw = ChangelogFiles.readRange(
             new java.io.File(p.filePath), p.scanFrom, p.scanUntil,
             p.seekBytes, seekPos = p.scanFrom)
@@ -967,7 +768,7 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
                   seen.put(k, seen.getOrElse(k, 0L) + 1)
                   if (idx >= lo && idx < hi) {
                     remaining -= 1
-                    if (emits(r.op)) {
+                    if (served(r.op) && cut.keepsOp(r.op)) {
                       current = r; currentIdx = idx; return true
                     }
                   }
@@ -977,7 +778,7 @@ final class BinlogReaderFactory(conf: BinlogSourceConf,
             close()
             false
           }
-          override def get(): InternalRow = emit(current, currentIdx + 1)
+          override def get(): InternalRow = out.row(current, currentIdx + 1)
           override def close(): Unit = raw.close()
         }
     }

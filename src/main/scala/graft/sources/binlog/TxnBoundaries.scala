@@ -1,102 +1,35 @@
 package graft.sources.binlog
 
-import java.io.File
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.cdc.{BinlogOffset, ChangelogFiles, ChangelogRecord}
-import graft.sources.wal.MutationBoundaries.{largestAtOrBelow, smallestAbove}
+import graft.cdc.ChangelogFiles.ManifestEntry
+import graft.sources.log.BoundaryIndex
+import graft.sources.log.BoundaryIndex.{largestAtOrBelow, smallestAbove}
 
 /** Driver-side transaction-commit index for txn-aligned batch planning:
   * for each changelog file, the ascending positions whose record is the
   * LAST record of a committed transaction (the XID positions of a MySQL
-  * binlog).
+  * binlog) — a [[BoundaryIndex]] over the manifest's `txnEnds`.
   *
-  * The per-trigger contract matches the rest of the offset machinery
-  * (SCALING.md: "offset spaces are metadata, not data"):
+  * A commit is proven only by evidence: a TAGGED record p ends its
+  * transaction when the record at p+1 carries a different txn id, while
+  * an UNTAGGED record is autocommit — its own commit, boundary
+  * immediate. The last tagged record seen in a live tail is never
+  * assumed committed; its boundary materializes when its successor (or
+  * the manifest entry) lands.
   *
-  *  - COMPLETED files (manifest entry current, `txnEnds` present —
-  *    written by the transactional generator at roll/close) resolve
-  *    with zero content I/O;
-  *  - the LIVE tail is parsed INCREMENTALLY — only bytes appended since
-  *    the last look, through a fixed 64 KB buffer. A commit is proven
-  *    only by evidence: a TAGGED record p ends its transaction when the
-  *    record at p+1 carries a different txn id, while an UNTAGGED
-  *    record is autocommit — its own commit, boundary immediate. The
-  *    last tagged record seen in a live tail is never assumed
-  *    committed; its boundary materializes when its successor (or the
-  *    manifest entry) lands.
-  *
-  * Position accounting matches the read path: one pos per newline,
-  * blank lines consume a pos but carry no record.
+  * The key is the last record's (pos, txn id).
   */
-object TxnBoundaries {
+object TxnBoundaries extends BoundaryIndex[(Long, Option[Long])] {
 
-  /** `consumed` = byte position just past the last complete line;
-    * `lines` = pos of that line; `lastRec` = (pos, txn) of the last
-    * non-blank record (None when state came from the manifest — if the
-    * file then grows, it is rescanned once to re-establish it).
-    */
-  private final case class State(consumed: Long, mtime: Long, lines: Long,
-      lastRec: Option[(Long, Option[Long])], ends: Vector[Long])
+  override protected def manifestBounds(e: ManifestEntry): Seq[Long] = e.txnEnds
 
-  private val cache = new ConcurrentHashMap[String, State]()
-
-  /** (record-line count, ascending txn-commit positions) over the
-    * complete lines of `f`. `dir` is the manifest's directory.
-    */
-  def of(dir: String, f: File): (Long, IndexedSeq[Long]) = {
-    val path = f.getAbsolutePath
-    val len = f.length(); val mtime = f.lastModified()
-    // the manifest is AUTHORITATIVE whenever current — checked before
-    // any cache hit, because it can arrive AFTER the file was content-
-    // scanned (writer closes the file, then publishes) and is the only
-    // evidence that the file's final transaction committed. manifest()
-    // is itself mtime-cached, so this is a map lookup per call.
-    ChangelogFiles.manifest(dir).get(f.getName) match {
-      case Some(e) if e.length == len && e.txnEnds.nonEmpty =>
-        val st = State(len, mtime, e.count, None, e.txnEnds.toVector)
-        cache.put(path, st)
-        return (st.lines, st.ends)
-      case _ => ()
-    }
-    val prev0 = cache.get(path)
-    if (prev0 != null && prev0.consumed == len && prev0.mtime == mtime)
-      return (prev0.lines, prev0.ends)
-    val prev =
-      if (prev0 == null) null
-      else if (len < prev0.consumed) null // truncation: rescan
-      else if (len == prev0.consumed) null // same length, new mtime: rewrite suspected
-      else if (prev0.lastRec.isEmpty && prev0.lines > 0) null // manifest-loaded, grew
-      else prev0
-    val from = if (prev == null) 0L else prev.consumed
-    val st = scan(f, from, len, mtime,
-      if (prev == null) 0L else prev.lines,
-      if (prev == null) None else prev.lastRec,
-      if (prev == null) Vector.empty else prev.ends)
-    cache.put(path, st)
-    (st.lines, st.ends)
-  }
-
-  private def scan(f: File, from: Long, until: Long, mtime: Long,
-      lines0: Long, lastRec0: Option[(Long, Option[Long])],
-      ends0: Vector[Long]): State = {
-    var lines = lines0
-    var lastRec = lastRec0
-    var ends = ends0
-    val consumed = ChangelogFiles.forEachCompleteLine(f, from, until) { line =>
-      lines += 1
-      if (line.nonEmpty) {
-        val r = ChangelogRecord.parse(line)
-        // a txn-id change proves the previous tagged txn committed …
-        lastRec.foreach { case (p, t) =>
-          if (t.nonEmpty && t != r.txn) ends = ends :+ p
-        }
-        // … while an autocommit record is its own commit, immediately
-        if (r.txn.isEmpty) ends = ends :+ lines
-        lastRec = Some((lines, r.txn))
-      }
-    }
-    State(consumed, mtime, lines, lastRec, ends)
+  override protected def step(pos: Long, r: ChangelogRecord,
+      last: Option[(Long, Option[Long])], mark: Long => Unit): (Long, Option[Long]) = {
+    // a txn-id change proves the previous tagged txn committed …
+    last.foreach { case (p, t) => if (t.nonEmpty && t != r.txn) mark(p) }
+    // … while an autocommit record is its own commit, immediately
+    if (r.txn.isEmpty) mark(pos)
+    (pos, r.txn)
   }
 
   /** Snap a candidate exclusive end offset to a transaction boundary so

@@ -1,124 +1,27 @@
 package graft.sources.wal
 
-import java.io.File
-import java.util.concurrent.ConcurrentHashMap
-
-import graft.cdc.{ChangelogFiles, ChangelogRecord, EnvelopeValue}
+import graft.cdc.{ChangelogRecord, EnvelopeValue}
+import graft.cdc.ChangelogFiles.ManifestEntry
+import graft.sources.log.BoundaryIndex
 
 /** Driver-side mutation-boundary index for grouping-mode batch
   * alignment (T5): for each WAL file, the sorted positions at which a
-  * new `(rowkey, op, ts)` mutation starts.
+  * new `(rowkey, op, ts)` mutation starts — a [[BoundaryIndex]] over
+  * the manifest's `bounds`. Every non-blank record participates in the
+  * key comparison — exactly the fold the reader applies within a batch.
   *
-  * The per-trigger contract is the same as the rest of the offset
-  * machinery (SCALING.md: "offset spaces are metadata, not data"):
-  *
-  *  - COMPLETED files (manifest entry current, `bounds` present —
-  *    written by the cell-per-record generator at roll/close) resolve
-  *    with zero content I/O;
-  *  - the LIVE tail is parsed INCREMENTALLY — only bytes appended since
-  *    the last look, through a fixed 64 KB buffer, never re-reading
-  *    from the batch start — the same cost class as the incremental
-  *    tail record count. A torn trailing line stays unconsumed and is
-  *    re-examined once its newline lands.
-  *
-  * Boundary accounting matches the read path: one pos per newline
-  * (blank lines consume a pos but carry no record), every non-blank
-  * record participates in the key comparison — exactly the fold the
-  * reader applies within a batch.
+  * The key is the last record's (rowkey, op, ts).
   */
-object MutationBoundaries {
+object MutationBoundaries
+    extends BoundaryIndex[(Option[EnvelopeValue], String, Long)] {
 
-  private final case class MutKey(rowkey: Option[EnvelopeValue], op: String,
-      ts: Long)
+  override protected def manifestBounds(e: ManifestEntry): Seq[Long] = e.bounds
 
-  /** `consumed` = byte position just past the last complete line;
-    * `lines` = pos of that line; `lastKey` = its mutation key (None when
-    * state was loaded from the manifest and the file never grew — if it
-    * does grow, the whole file is rescanned once to re-establish it).
-    */
-  private final case class State(consumed: Long, mtime: Long, lines: Long,
-      lastKey: Option[MutKey], bounds: Vector[Long])
-
-  private val cache = new ConcurrentHashMap[String, State]()
-
-  /** (record count, ascending mutation-start positions) over the
-    * complete lines of `f`. `dir` is the file's directory (manifest
-    * location).
-    */
-  def of(dir: String, f: File): (Long, IndexedSeq[Long]) = {
-    val path = f.getAbsolutePath
-    val len = f.length(); val mtime = f.lastModified()
-    val prev0 = cache.get(path)
-    if (prev0 != null && prev0.consumed == len && prev0.mtime == mtime)
-      return (prev0.lines, prev0.bounds)
-    val prev =
-      if (prev0 == null) null
-      else if (len < prev0.consumed) null // truncation: rescan
-      else if (len == prev0.consumed) null // same length, new mtime: rewrite suspected
-      else if (prev0.lastKey.isEmpty && prev0.lines > 0) null // manifest-loaded, grew
-      else prev0
-    if (prev == null) {
-      // manifest home: the live region dir, or (for an archived file
-      // whose manifest moved with it) the file's own directory
-      val entry = ChangelogFiles.manifest(dir).get(f.getName)
-        .orElse(ChangelogFiles.manifest(f.getParent).get(f.getName))
-      entry match {
-        case Some(e) if e.length == len && e.bounds.nonEmpty =>
-          val st = State(len, mtime, e.count, None, e.bounds.toVector)
-          cache.put(path, st)
-          return (st.lines, st.bounds)
-        case _ => ()
-      }
-    }
-    val from = if (prev == null) 0L else prev.consumed
-    val st = scan(f, from, len, mtime,
-      if (prev == null) 0L else prev.lines,
-      if (prev == null) None else prev.lastKey,
-      if (prev == null) Vector.empty else prev.bounds)
-    cache.put(path, st)
-    (st.lines, st.bounds)
-  }
-
-  // binary searches over an ascending bounds vector — no per-call array
-  // copies; -1 when no such element
-  def largestAtOrBelow(bounds: IndexedSeq[Long], pos: Long): Long = {
-    var lo = 0; var hi = bounds.length - 1; var res = -1L
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (bounds(mid) <= pos) { res = bounds(mid); lo = mid + 1 } else hi = mid - 1
-    }
-    res
-  }
-  def smallestAbove(bounds: IndexedSeq[Long], pos: Long): Long = {
-    var lo = 0; var hi = bounds.length - 1; var res = -1L
-    while (lo <= hi) {
-      val mid = (lo + hi) >>> 1
-      if (bounds(mid) > pos) { res = bounds(mid); hi = mid - 1 } else lo = mid + 1
-    }
-    res
-  }
-  def contains(bounds: IndexedSeq[Long], pos: Long): Boolean =
-    largestAtOrBelow(bounds, pos) == pos
-
-  /** Parse complete lines in [from, until), extending (lines, lastKey,
-    * bounds) — built on the shared fixed-buffer line scanner
-    * ([[ChangelogFiles.forEachCompleteLine]]); the torn tail stays
-    * unconsumed.
-    */
-  private def scan(f: File, from: Long, until: Long, mtime: Long,
-      lines0: Long, lastKey0: Option[MutKey], bounds0: Vector[Long]): State = {
-    var lines = lines0
-    var lastKey = lastKey0
-    var bounds = bounds0
-    val consumed = ChangelogFiles.forEachCompleteLine(f, from, until) { line =>
-      lines += 1
-      if (line.nonEmpty) {
-        val r = ChangelogRecord.parse(line)
-        val k = Some(MutKey(r.row.get("rowkey"), r.op, r.tsMillis))
-        if (k != lastKey) bounds = bounds :+ lines
-        lastKey = k
-      }
-    }
-    State(consumed, mtime, lines, lastKey, bounds)
+  override protected def step(pos: Long, r: ChangelogRecord,
+      last: Option[(Option[EnvelopeValue], String, Long)],
+      mark: Long => Unit): (Option[EnvelopeValue], String, Long) = {
+    val k = (r.row.get("rowkey"), r.op, r.tsMillis)
+    if (!last.contains(k)) mark(pos)
+    k
   }
 }

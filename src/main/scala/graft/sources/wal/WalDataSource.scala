@@ -1,20 +1,15 @@
 package graft.sources.wal
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.cdc._
+import graft.sources.log._
+import graft.sources.log.BoundaryIndex.{contains, largestAtOrBelow, smallestAbove}
 
 /** Multi-partition WAL-tailing CDC source — the analog of the
   * reference's HBase-WAL module (MLSQLHBaseWALDataSource.scala), which
@@ -37,23 +32,14 @@ import graft.cdc._
   *    with offsets intact — the reference polls live WAL dirs AND the
   *    `oldWALs/` archive the same way (HBaseWALClient.scala:47-151).
   */
-class WalDataSource extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "graft-wal"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    WalDataSource.schemaFor(options)
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    require(schema == WalDataSource.schemaFor(opts),
-      s"graft-wal has a fixed schema ${WalDataSource.schemaFor(opts).simpleString}")
-    new WalTable(opts)
-  }
+class WalDataSource
+    extends LogDataSource("graft-wal", WalDataSource.WideSchema) {
+  override protected def scanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new WalScanBuilder(options)
 }
 
 object WalDataSource {
-  val Schema: StructType = StructType(Seq(StructField("value", StringType)))
+  val Schema: StructType = LogDataSource.Schema
 
   /** `envelopeColumns=true` widens the scan with typed routing columns
     * (`region`, `db`, `table`, `op`, `offset`) next to `value` — the
@@ -65,17 +51,11 @@ object WalDataSource {
     * is exposed for inspection/dedup but never accepted as a pushed
     * global range.
     */
-  val WideSchema: StructType = StructType(Seq(
-    StructField("value", StringType),
-    StructField("region", StringType),
-    StructField("db", StringType),
-    StructField("table", StringType),
-    StructField("op", StringType),
-    StructField("offset", LongType)))
+  val WideSchema: StructType =
+    LogDataSource.wideSchema(StructField("region", StringType))
 
   def schemaFor(options: CaseInsensitiveStringMap): StructType =
-    if (Option(options.get("envelopeColumns")).exists(_.toBoolean)) WideSchema
-    else Schema
+    LogDataSource.schemaFor(options, WideSchema)
 
   /** Archive sub-dir for rotated logs — the `oldWALs/` analog
     * (reference HBaseWALClient.scala:47-151 polls BOTH the live
@@ -169,82 +149,25 @@ object WalDataSource {
   }
 }
 
-final class WalTable(options: CaseInsensitiveStringMap)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft-wal(${options.get("path")})"
-  override def schema(): StructType = WalDataSource.schemaFor(options)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ, TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(opts: CaseInsensitiveStringMap): ScanBuilder =
-    new WalScanBuilder(opts)
-}
-
-/** Plan-level pushdown for the wide-schema WAL scan: `region`
-  * equality|IN prunes whole regions off the partition plan (each
-  * region is an independent sub-log — this is genuine partition
-  * pruning, the planner never lists the skipped regions' files), and
-  * db/table/op equality|IN cut records in the readers. BATCH scans
-  * only — [[WalScan]] drops every plan-derived override on the
-  * streaming path (see its doc for the checkpoint rationale). Pushed
-  * filters remain in the plan for Spark to re-evaluate; the source's
-  * pruning is an optimization, never the correctness boundary.
+/** Plan-level pushdown for the wide-schema WAL scan: on top of the
+  * shared db/table/op cuts ([[LogScanBuilder]]), `region` equality|IN
+  * prunes whole regions off the partition plan (each region is an
+  * independent sub-log — this is genuine partition pruning, the planner
+  * never lists the skipped regions' files). BATCH scans only —
+  * [[WalScan]] drops every plan-derived override on the streaming path
+  * (see its doc for the checkpoint rationale).
   */
 final class WalScanBuilder(options: CaseInsensitiveStringMap)
-    extends ScanBuilder
-    with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
-  import org.apache.spark.sql.sources._
+    extends LogScanBuilder(options, WalDataSource.schemaFor(options)) {
 
-  private val wide =
-    Option(options.get("envelopeColumns")).exists(_.toBoolean)
-  private var required: StructType = WalDataSource.schemaFor(options)
-  private var pushed: Array[Filter] = Array.empty
+  private val region = new Cut("region")
 
-  private var regionIn: Option[Set[String]] = None
-  private var dbIn: Option[Set[String]] = None
-  private var tblIn: Option[Set[String]] = None
-  private var opIn: Option[Set[String]] = None
-
-  private def strings(vs: Array[Any]): Option[Set[String]] = {
-    val ss = vs.collect { case s: String => s }
-    if (ss.length == vs.length) Some(ss.toSet) else None
-  }
-  private def narrow(cur: Option[Set[String]], add: Set[String]): Option[Set[String]] =
-    Some(cur.map(_.intersect(add)).getOrElse(add))
-
-  private def accept(f: Filter): Boolean = f match {
-    case EqualTo("region", v: String) => regionIn = narrow(regionIn, Set(v)); true
-    case In("region", vs) => strings(vs).exists { s => regionIn = narrow(regionIn, s); true }
-    case EqualTo("db", v: String) if options.get("databaseNamePattern") == null =>
-      dbIn = narrow(dbIn, Set(v)); true
-    case In("db", vs) if options.get("databaseNamePattern") == null =>
-      strings(vs).exists { s => dbIn = narrow(dbIn, s); true }
-    case EqualTo("table", v: String) if options.get("tableNamePattern") == null =>
-      tblIn = narrow(tblIn, Set(v)); true
-    case In("table", vs) if options.get("tableNamePattern") == null =>
-      strings(vs).exists { s => tblIn = narrow(tblIn, s); true }
-    case EqualTo("op", v: String) => opIn = narrow(opIn, Set(v)); true
-    case In("op", vs) => strings(vs).exists { s => opIn = narrow(opIn, s); true }
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = if (wide) filters.filter(accept) else Array.empty
-    filters // every filter stays in the plan as the correctness boundary
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override protected def acceptOwn(
+      f: org.apache.spark.sql.sources.Filter): Boolean = region.accept(f)
 
   override def build(): Scan = {
     val base = WalSourceConf(options)
-    def quoted(s: Set[String]): String =
-      s.toSeq.sorted.map(java.util.regex.Pattern.quote).mkString("|")
-    val conf = base.copy(
-      databaseNamePattern = dbIn.map(quoted).orElse(base.databaseNamePattern),
-      tableNamePattern = tblIn.map(quoted).orElse(base.tableNamePattern),
-      opFilter = opIn,
-      regionFilter = regionIn)
+    val conf = base.copy(log = narrowed(base.log), regionFilter = region.values)
     new WalScan(conf, base, required, pushed)
   }
 }
@@ -265,23 +188,26 @@ final class WalScanBuilder(options: CaseInsensitiveStringMap)
   */
 final class WalScan(val conf: WalSourceConf, val optionConf: WalSourceConf,
     required: StructType,
-    pushed: Array[org.apache.spark.sql.sources.Filter]) extends Scan {
-  override def readSchema(): StructType = required
-  override def description(): String =
-    s"graft-wal ${conf.dir}" +
-      (if (pushed.nonEmpty) s", PushedFilters: [${pushed.mkString(", ")}]"
-       else "")
+    pushed: Array[org.apache.spark.sql.sources.Filter])
+    extends LogScan("graft-wal", conf.dir, required, pushed) {
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new WalMicroBatchStream(optionConf, required)
   override def toBatch: Batch = new WalBatch(conf, required)
 }
 
+/** The WAL's own options on top of the shared [[LogConf]]. Its
+  * `databaseNamePattern`/`tableNamePattern` cut is applied AFTER cell
+  * grouping (a mutation either emits whole or not at all — same
+  * layering as `startTime`), and is position-intact: filtered mutations
+  * still advance offsets, so checkpoints, admission budgets, and
+  * manifest counts are unaffected by the filter and the pattern can be
+  * changed on an existing checkpoint. An HBase region server's WAL
+  * interleaves EVERY table it hosts, so a per-table consumer needs the
+  * cut at the source.
+  */
 final case class WalSourceConf(
-    dir: String,
-    prefix: String,
-    maxEventsPerTrigger: Option[Long],
+    log: LogConf,
     maxRecordsPerPartition: Long,
-    failOnDataLoss: Boolean,
     /** Read-path cell grouping (T5): the log carries one record per
       * `family:qualifier` cell and the reader folds consecutive cells
       * of the same (rowkey, op, timestamp) into one mutation — the
@@ -290,11 +216,6 @@ final case class WalSourceConf(
       * could span an arbitrary record chunk).
       */
     groupRawCells: Boolean,
-    /** Same kernel options as the binlog path: `binlog.field.decode.*`
-      * charsets and the session zone for raw temporal cells.
-      */
-    fieldDecode: Map[String, String],
-    sessionTimeZone: String,
     /** Reference `startTime` (MLSQLHBaseWALDataSource / HBaseWALClient):
       * WAL entries whose write time predates this epoch-ms instant are
       * dropped AT THE SOURCE. Offsets stay position-intact — filtered
@@ -307,87 +228,40 @@ final case class WalSourceConf(
       * unset = the in-root `<root>/oldWALs` layout.
       */
     oldWalLogPath: Option[String],
-    /** Reference `databaseNamePattern`/`tableNamePattern`
-      * (HBaseWALSocketServerInExecutor.scala:131-137, applied
-      * :146-153): full-match regexes over each mutation's db/table.
-      * An HBase region server's WAL interleaves EVERY table it hosts,
-      * so a per-table consumer needs the cut at the source. Applied
-      * AFTER cell grouping (a mutation either emits whole or not at
-      * all — same layering as `startTime`), and position-intact:
-      * filtered mutations still advance offsets, so checkpoints,
-      * admission budgets, and manifest counts are unaffected by the
-      * filter and the pattern can be changed on an existing
-      * checkpoint.
+    /** Plan-pushed region cut ([[WalScanBuilder]]) — never set from
+      * options: prunes whole regions off the partition plan.
       */
-    databaseNamePattern: Option[String],
-    tableNamePattern: Option[String],
-    /** Plan-pushed constraints ([[WalScanBuilder]]) — never set from
-      * options. `regionFilter` prunes whole regions off the partition
-      * plan; `opFilter` cuts mutations by op in the readers.
-      */
-    opFilter: Option[Set[String]] = None,
-    regionFilter: Option[Set[String]] = None) extends Serializable
+    regionFilter: Option[Set[String]] = None) extends LogSourceConf
 
 object WalSourceConf {
-  def apply(options: CaseInsensitiveStringMap): WalSourceConf = {
-    import scala.jdk.CollectionConverters._
-    val dir = options.get("path")
-    require(dir != null, "option 'path' (WAL root directory) is required")
+  def apply(options: CaseInsensitiveStringMap): WalSourceConf =
     WalSourceConf(
-      dir = dir,
-      prefix = Option(options.get("prefix")).getOrElse(ChangelogFiles.DefaultPrefix),
-      maxEventsPerTrigger = Option(options.get("maxEventsPerTrigger")).map(_.toLong),
+      log = LogConf(options, "WAL root directory"),
       maxRecordsPerPartition =
         Option(options.get("maxRecordsPerPartition")).map(_.toLong).getOrElse(100000L),
-      failOnDataLoss =
-        Option(options.get("failOnDataLoss")).forall(_.toBoolean),
       groupRawCells =
         Option(options.get("groupRawCells")).exists(_.toBoolean),
-      fieldDecode = options.asCaseSensitiveMap().asScala.toMap
-        .filter(_._1.toLowerCase.startsWith("binlog.field.decode."))
-        .map { case (k, v) => "binlog.field.decode." + k.drop(20) -> v },
-      sessionTimeZone =
-        Option(options.get("sessionTimeZone")).getOrElse("UTC"),
       startTimeMs = Option(options.get("startTime")).map(_.toLong),
-      oldWalLogPath = Option(options.get("oldWALLogPath")),
-      databaseNamePattern = Option(options.get("databaseNamePattern")),
-      tableNamePattern = Option(options.get("tableNamePattern")))
-  }
+      oldWalLogPath = Option(options.get("oldWALLogPath")))
 }
 
-/** Kafka-style map offset `{region: packedLong}` with deterministic
-  * (sorted-key) JSON — the CommonSourceOffset shape
-  * (CommonSourceOffset.scala:24-53 serializes partition maps the same
-  * way; W3 deterministic ordering).
+/** Kafka-style map offset `{region: packedLong}` in the shared
+  * sorted-key JSON ([[MapOffsetJson]]; W3 deterministic ordering).
   */
 final case class WalOffset(regions: Map[String, Long]) extends Offset {
-  override def json(): String = {
-    val sw = new java.io.StringWriter()
-    val g = new JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    regions.toSeq.sortBy(_._1).foreach { case (r, off) => g.writeNumberField(r, off) }
-    g.writeEndObject()
-    g.close()
-    sw.toString
-  }
+  override def json(): String = MapOffsetJson.write(regions)
 }
 
 object WalOffset {
-  def parse(json: String): WalOffset = {
-    val p = new JsonFactory().createParser(json)
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    require(p.nextToken() == JsonToken.START_OBJECT, "wal offset must be a JSON object")
-    while (p.nextToken() != JsonToken.END_OBJECT) {
-      val r = p.currentName(); p.nextToken(); m += r -> p.getLongValue
-    }
-    p.close()
-    WalOffset(m.toMap)
-  }
+  def parse(json: String): WalOffset =
+    WalOffset(MapOffsetJson.parse(json, "wal offset"))
 }
 
 final class WalMicroBatchStream(val conf: WalSourceConf,
     required: StructType = WalDataSource.Schema)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends LogMicroBatchStream {
+
+  override protected def log: LogConf = conf.log
 
   private def regionDir(r: String): String = s"${conf.dir}/$r"
   private def files(r: String): Seq[(Long, java.io.File)] =
@@ -397,13 +271,6 @@ final class WalMicroBatchStream(val conf: WalSourceConf,
     WalOffset(WalDataSource.listRegions(conf.dir, conf.oldWalLogPath).map { r =>
       r -> ChangelogFiles.earliestOffsetOf(files(r)).packed
     }.toMap)
-
-  override def getDefaultReadLimit: ReadLimit =
-    conf.maxEventsPerTrigger.map(n => ReadLimit.maxRows(n)).getOrElse(ReadLimit.allAvailable())
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) should be called with admission control")
 
   /** Cell-grouping batch alignment: an end offset must never split the
     * cells of one (rowkey, op, ts) mutation across micro-batches — the
@@ -451,10 +318,10 @@ final class WalMicroBatchStream(val conf: WalSourceConf,
     }
     // mid-file end: complete iff the first excluded record starts a new
     // mutation
-    if (MutationBoundaries.contains(bounds, end.pos)) return end
+    if (contains(bounds, end.pos)) return end
     // snap DOWN to the start of the mutation containing the last
     // included record
-    val downPos = MutationBoundaries.largestAtOrBelow(bounds, end.pos - 1)
+    val downPos = largestAtOrBelow(bounds, end.pos - 1)
     if (downPos > 0) {
       val down = BinlogOffset(end.fileId, downPos)
       if (down.packed > from.packed) return down
@@ -463,7 +330,7 @@ final class WalMicroBatchStream(val conf: WalSourceConf,
     // the admission budget. Extend UP to its end instead (soft cap
     // overrun bounded by one mutation) — unless it runs to a live EOF,
     // where completeness is unknowable and the defer stands.
-    val upPos = MutationBoundaries.smallestAbove(bounds, end.pos)
+    val upPos = smallestAbove(bounds, end.pos)
     if (upPos > 0) BinlogOffset(end.fileId, upPos)
     else if (fileComplete) BinlogOffset(end.fileId, n + 1)
     else BinlogOffset(end.fileId, math.max(downPos, 1L)) // defer at live tail
@@ -499,7 +366,7 @@ final class WalMicroBatchStream(val conf: WalSourceConf,
       r -> ChangelogFiles.latestOffsetOf(regionFs(r))
     }.toMap
     val grants = limit match {
-      case l: org.apache.spark.sql.connector.read.streaming.ReadMaxRows =>
+      case l: ReadMaxRows =>
         // backlog precomputed ONCE per region: allocate() re-reads its
         // backlog function every refill round
         val backlog = regions.map(r =>
@@ -531,7 +398,6 @@ final class WalMicroBatchStream(val conf: WalSourceConf,
 
   override def deserializeOffset(json: String): Offset = WalOffset.parse(json)
   override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 final class WalBatch(conf: WalSourceConf,
@@ -579,28 +445,10 @@ object WalPartitioning {
       val endOff = BinlogOffset.unpack(endPacked)
       require(endOff.packed >= startOff.packed,
         s"region $region: end $endOff < start $startOff — data may have been missed")
-      // per-region data-loss check, mirroring the binlog path: a purged
-      // file (manifest entry, no file) at/after the region's start
-      // offset with records the reader had not consumed means loss —
-      // silently skipping it would drop region records. fileId 0 is the
-      // empty-dir sentinel (stream began before the region had files).
-      if (conf.failOnDataLoss && startOff.fileId > 0) {
-        val existing = files.map(_._1).toSet
-        val unreadPurged = ChangelogFiles.manifest(regionDir).exists { case (name, e) =>
-          try {
-            val id = BinlogOffset.fileIdOf(name)
-            !existing.contains(id) &&
-              ((id == startOff.fileId && e.count >= startOff.pos) ||
-               (id > startOff.fileId && e.count > 0))
-          } catch { case _: Exception => false }
-        }
-        if (unreadPurged) {
-          throw new IllegalStateException(
-            s"region $region: start offset $startOff points at or before purged " +
-              s"WAL data (existing files: ${files.map(_._1).mkString(",")}) — unread " +
-              "data was lost (set failOnDataLoss=false to ignore)")
-        }
-      }
+      // per-region data-loss check: silently skipping a purged file
+      // would drop region records
+      LogScan.requireNoUnreadPurge(conf.log, regionDir,
+        files.map(_._1).toSet, startOff, s"region $region: ", "WAL")
       // grouping mode assumes batch starts are mutation boundaries (the
       // aligned ends guarantee it for checkpoints this source wrote). A
       // mid-mutation start — a user-configured offset, or a checkpoint
@@ -611,8 +459,7 @@ object WalPartitioning {
       if (conf.groupRawCells && endOff.packed > startOff.packed && startOff.pos > 1) {
         files.find(_._1 == startOff.fileId).foreach { case (_, f) =>
           val (n, bounds) = MutationBoundaries.of(regionDir, f)
-          val aligned = startOff.pos > n ||
-            MutationBoundaries.contains(bounds, startOff.pos)
+          val aligned = startOff.pos > n || contains(bounds, startOff.pos)
           if (!aligned) throw new IllegalStateException(
             s"region $region: start offset $startOff is not a mutation boundary — " +
               "groupRawCells must resume from an aligned checkpoint or a " +
@@ -648,10 +495,6 @@ final case class WalInputPartition(
 final class WalReaderFactory(conf: WalSourceConf,
     required: StructType = WalDataSource.Schema)
     extends PartitionReaderFactory {
-
-  // column pruning: `value` (envelope serialization — the expensive
-  // column) is built only when the pruned schema asks for it
-  private val isDefault = required == WalDataSource.Schema
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[WalInputPartition]
@@ -702,59 +545,37 @@ final class WalReaderFactory(conf: WalSourceConf,
       // Position-intact: a filtered mutation's positions were already
       // consumed by the range read, so offsets advance identically
       // with or without the filter.
-      private val dbPat =
-        conf.databaseNamePattern.map(java.util.regex.Pattern.compile)
-      private val tblPat =
-        conf.tableNamePattern.map(java.util.regex.Pattern.compile)
+      private val cut = new RecordFilter(conf.log)
       private val it: Iterator[ChangelogRecord] =
-        if (dbPat.isEmpty && tblPat.isEmpty && conf.opFilter.isEmpty) grouped
-        else grouped.filter { r =>
-          dbPat.forall(_.matcher(Option(r.db).getOrElse("")).matches()) &&
-            tblPat.forall(_.matcher(Option(r.table).getOrElse("")).matches()) &&
-            conf.opFilter.forall(_.contains(r.op))
-        }
+        if (cut.passesAll) grouped else grouped.filter(cut.keeps)
       private var current: ChangelogRecord = _
 
       override def next(): Boolean =
         if (it.hasNext) { current = it.next(); true } else false
 
-      private def envelopeJson(): UTF8String = {
-        // HBase-family envelope: schema is null, row carries
-        // rowkey + family:qualifier cells (PutWriter.java:25-39).
-        // Raw tagged cells still convert through the kernels (null
-        // schema → BIT defaults to LongType), same options as the
-        // binlog path.
-        val row = TypeKernels.convertRow(current.row, null,
+      // HBase-family envelope: schema is null, row carries rowkey +
+      // family:qualifier cells (PutWriter.java:25-39). Raw tagged cells
+      // still convert through the kernels (null schema → BIT defaults to
+      // LongType), under the shared kernel options.
+      private def envelope(r: ChangelogRecord, offset: Long): UTF8String = {
+        val row = TypeKernels.convertRow(r.row, null,
           conf.sessionTimeZone, conf.fieldDecode)
-        val ev = CdcEvent(current.op, current.tsMillis, current.db, current.table,
-          schemaJson = null, row = row,
-          offset = BinlogOffset(p.fileId, current.pos).packed)
+        val ev = CdcEvent(r.op, r.tsMillis, r.db, r.table,
+          schemaJson = null, row = row, offset = offset)
         UTF8String.fromString(EnvelopeCodec.write(ev))
       }
 
-      // field→extractor resolution once per reader, not per row: the
-      // wide-mode emit path is a flat array loop over pre-bound
-      // closures instead of a per-record name match + Seq allocation
-      private val fieldGetters: Array[() => Any] =
-        required.fields.map[() => Any] { f =>
-          f.name match {
-            case "value" => () => envelopeJson()
-            case "region" => () => UTF8String.fromString(p.region)
-            case "db" => () => UTF8String.fromString(current.db)
-            case "table" => () => UTF8String.fromString(current.table)
-            case "op" => () => UTF8String.fromString(current.op)
-            case "offset" => () => BinlogOffset(p.fileId, current.pos).packed
-          }
-        }
+      // column pruning: `value` (envelope serialization — the expensive
+      // column) is built only when the pruned schema asks for it
+      private val out = new LogRows(required, WalDataSource.Schema,
+        envelope(_, _), {
+          case "region" =>
+            val region = UTF8String.fromString(p.region)
+            (_, _) => region
+        })
 
       override def get(): InternalRow =
-        if (isDefault) InternalRow(envelopeJson())
-        else {
-          val vals = new Array[Any](fieldGetters.length)
-          var i = 0
-          while (i < vals.length) { vals(i) = fieldGetters(i)(); i += 1 }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-        }
+        out.row(current, BinlogOffset(p.fileId, current.pos).packed)
       override def close(): Unit = raw.close()
     }
   }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -355,7 +356,7 @@ object CdcStream {
         else routed.repartition(col("__db"), col("__tbl"),
           pmod(crc32(col("value")), lit(filesPerTable)))
       clustered.write.partitionBy("__db", "__tbl").parquet(p)
-      (p, () => deleteRecursively(new java.io.File(p)))
+      (p, () => FileUtils.deleteQuietly(new java.io.File(p)))
     }
     val spark = envelopes.sparkSession
     def partitionValues(dir: java.io.File, prefix: String): Seq[String] =
@@ -1622,9 +1623,9 @@ object CdcStream {
     var n = 0
     feedVersions(replicaDir).filter(_ < beforeVersion).foreach { v =>
       val retired = new java.io.File(f"$replicaDir/_feed/v$v%09d")
-      if (retired.isDirectory) { deleteRecursively(retired); n += 1 }
+      if (retired.isDirectory) { FileUtils.deleteQuietly(retired); n += 1 }
       val live = new java.io.File(f"$replicaDir/v$v%09d/changes")
-      if (live.isDirectory) { deleteRecursively(live); n += 1 }
+      if (live.isDirectory) { FileUtils.deleteQuietly(live); n += 1 }
     }
     n
   }
@@ -2218,7 +2219,7 @@ object CdcStream {
       // keeping only the fence marker (lifted below)
       Option(new java.io.File(demotedDir).listFiles()).getOrElse(Array.empty)
         .filterNot(_.getName == FrozenMarker)
-        .foreach(deleteRecursively)
+        .foreach(FileUtils.deleteQuietly)
       seedMat.foreach { case (seed, _) =>
         applyNetToReplica(demotedDir, lastOpPerKey(seed, idCols, orderCols),
           seed.columns.toArray, idCols, opCol,
@@ -3702,7 +3703,7 @@ object CdcStream {
         Seq(f"v$vv%09d/data/__bucket=$k", f"v$vv%09d/delta/__bucket=$k")
           .foreach { rel =>
             if (!referenced(rel))
-              deleteRecursively(new java.io.File(s"$replicaDir/$rel"))
+              FileUtils.deleteQuietly(new java.io.File(s"$replicaDir/$rel"))
           }
       }
     }
@@ -3730,6 +3731,19 @@ object CdcStream {
         val df = spark.read.parquet(d.toString)
         if (idCols.forall(df.columns.contains)) Some((vv, d, df)) else None
       }
+    // the probe's cast must be a lossless widening: a feed entry whose
+    // key type is off the ladder (corrupt or hand-written) could cast to
+    // values the key set never matches, silently keeping the erased key
+    for ((vv, _, df) <- scrubbable; c <- idCols) {
+      val t = df.schema(c).dataType
+      if (t != keyTypes(c) && !isTypeWidening(t, keyTypes(c)))
+        throw new IllegalStateException(
+          f"eraseKeys: feed version v$vv%09d of $replicaDir stores key " +
+            s"column `$c` as ${t.simpleString}, which is neither the " +
+            s"store's ${keyTypes(c).simpleString} nor a widening of it — " +
+            "the scrub cannot match its keys exactly; repair that feed " +
+            "entry (or truncate the feed past it) and re-run the erase")
+    }
     if (scrubbable.nonEmpty) {
       val touchedVs: Set[Long] = scrubbable.map { case (vv, _, df) =>
         df.select(idCols.map(c => col(c).cast(keyTypes(c)).as(c)): _*)
@@ -3747,7 +3761,7 @@ object CdcStream {
             pool.submit(new java.util.concurrent.Callable[Unit] {
               def call(): Unit = {
                 val next = new java.io.File(d.toString + ".next")
-                deleteRecursively(next)
+                FileUtils.deleteQuietly(next)
                 df.join(keysM, idCols, "left_anti")
                   .write.parquet(next.toString)
                 val aside = new java.io.File(
@@ -3756,7 +3770,7 @@ object CdcStream {
                   java.nio.file.StandardCopyOption.ATOMIC_MOVE)
                 java.nio.file.Files.move(next.toPath, d.toPath,
                   java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                deleteRecursively(aside)
+                FileUtils.deleteQuietly(aside)
               }
             })
           }
@@ -3787,12 +3801,6 @@ object CdcStream {
       s".staging-${System.nanoTime()}-${stagingCounter.incrementAndGet()}")
     java.nio.file.Files.createDirectories(p)
     p.toString
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 
   /** Commit the version assembled in `stagingDir` as `nextName` —
@@ -3943,7 +3951,7 @@ object CdcStream {
     // a losing writer deletes ONLY its own staging — never the target
     // name, which past this point may belong to a competitor
     def conflict(msg: String): Nothing = {
-      deleteRecursively(new java.io.File(stagingDir))
+      FileUtils.deleteQuietly(new java.io.File(stagingDir))
       throw new ConcurrentReplicaWriteException(
         s"replica $replicaDir: $msg; re-run this batch against the new " +
           "current version")
@@ -3958,7 +3966,7 @@ object CdcStream {
       // so marker-write happens-before any commit that gets here after
       // the fence)
       if (forbidFrozen) replicaFrozen(replicaDir).foreach { r =>
-        deleteRecursively(new java.io.File(stagingDir))
+        FileUtils.deleteQuietly(new java.io.File(stagingDir))
         throw new IllegalStateException(
           s"replica $replicaDir is FROZEN ($r): writes are fenced during " +
             "failover — resyncAsFollower to rejoin as a follower, or " +
@@ -4007,7 +4015,7 @@ object CdcStream {
           java.nio.file.Files.deleteIfExists(lock)
       } catch { case _: java.io.IOException => () }
     }
-    orphanAside.foreach(p => deleteRecursively(p.toFile))
+    orphanAside.foreach(p => FileUtils.deleteQuietly(p.toFile))
     // a PREPARED commit changes no reader-visible state — the sweep
     // below reasons from a flipped pointer's view; the NEXT ordinary
     // commit's sweep collects whatever the prepared version supersedes
@@ -4055,7 +4063,7 @@ object CdcStream {
         // classification and stamping need — retires into `_feed/`.
         if (f.isDirectory && f.getName.matches("v[0-9]{9}"))
           retireVersionToFeed(replicaDir, f)
-        deleteRecursively(f)
+        FileUtils.deleteQuietly(f)
       }
   }
 
@@ -4397,7 +4405,7 @@ object CdcStream {
         .map(_.getName.stripPrefix("__bucket=").toInt)
       // net-empty batch: nothing to commit (same contract as eager)
       if (written.isEmpty) {
-        deleteRecursively(new java.io.File(staging))
+        FileUtils.deleteQuietly(new java.io.File(staging))
         return None
       }
       // per-bucket exclusivity for sequence-folded deltas (metadata-
@@ -4407,7 +4415,7 @@ object CdcStream {
         val clash = written.toSet.intersect(
           prev.map(_.tombstoneMins.keySet).getOrElse(Set.empty))
         if (clash.nonEmpty) {
-          deleteRecursively(new java.io.File(staging))
+          FileUtils.deleteQuietly(new java.io.File(staging))
           throw new IllegalStateException(
             s"deferMerge: bucket(s) ${clash.toSeq.sorted.mkString(",")} " +
               "hold conditional tombstones a sequence fold cannot order " +
@@ -4822,7 +4830,7 @@ object CdcStream {
     Option(new java.io.File(viewDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.matches("v[0-9]{9}") &&
         f.getName < curName.getOrElse(nextName))
-      .foreach(deleteRecursively)
+      .foreach(FileUtils.deleteQuietly)
     readView(nextName)
   }
 

@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -76,13 +77,6 @@ object DataScaleBench {
   private val HundredXGates: Set[String] =
     Gates.map(_._1).toSet
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory)
-      Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-    ()
-  }
-
   def main(args: Array[String]): Unit = {
     val base = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
@@ -145,7 +139,7 @@ object DataScaleBench {
       val fp = baseFingerprint()
       if (marker.exists() &&
           java.nio.file.Files.readString(marker.toPath) == fp) return dir
-      deleteRecursively(new java.io.File(dir))
+      FileUtils.deleteQuietly(new java.io.File(dir))
       new java.io.File(dir).mkdirs()
       val t = graft.Tables(spark, base)
       def write(df: DataFrame, name: String): Unit =
@@ -312,7 +306,7 @@ object DataScaleBench {
       val tC0 = System.nanoTime()
       CdcStream.cloneReplica(store, s"$store-clone")
       val cloneMs = (System.nanoTime() - tC0) / 1e6
-      deleteRecursively(new java.io.File(s"$store-clone"))
+      FileUtils.deleteQuietly(new java.io.File(s"$store-clone"))
       // ---- STREAMING SINK per-trigger cost vs store size (r16,
       // `sink_stream` family): a FIXED ~1000-row changelog (keys
       // confined to the same 2 buckets as the eager probe) drains
@@ -343,6 +337,7 @@ object DataScaleBench {
           org.apache.spark.sql.types.DoubleType),
         org.apache.spark.sql.types.StructField("props",
           org.apache.spark.sql.types.StringType)))
+      val sinkCk = s"$root/.sinkck-x$scale-${System.nanoTime()}"
       val sq = spark.readStream.format("graft-binlog")
         .option("path", streamLog)
         .option("maxEventsPerTrigger", "100")
@@ -356,8 +351,7 @@ object DataScaleBench {
             Seq(col("ms"), col("event_id")), deferMerge = true)
           ()
         }
-        .option("checkpointLocation",
-          s"$root/.sinkck-x$scale-${System.nanoTime()}")
+        .option("checkpointLocation", sinkCk)
         .start()
       try sq.processAllAvailable() finally sq.stop()
       val sinkProg = sq.recentProgress.toSeq.map { p =>
@@ -369,11 +363,12 @@ object DataScaleBench {
         if (xs.isEmpty) -1L else xs.sorted.apply(xs.size / 2)
       val sinkTrigP50 = p50(sinkProg.flatMap(_._2))
       val sinkAddP50 = p50(sinkProg.flatMap(_._3))
-      deleteRecursively(new java.io.File(streamLog))
+      FileUtils.deleteQuietly(new java.io.File(streamLog))
+      FileUtils.deleteQuietly(new java.io.File(sinkCk))
       System.err.println(f"[datascale] x$scale sink_stream: " +
         f"${sinkProg.size} steady triggers, trigger p50 ${sinkTrigP50}ms, " +
         f"addBatch p50 ${sinkAddP50}ms (100 rows/trigger, deferred merge)")
-      deleteRecursively(new java.io.File(store))
+      FileUtils.deleteQuietly(new java.io.File(store))
       // FAN-OUT curve (r13): the multi-table route-once + per-table
       // MERGE path whose scratch write was the r12 bench's one
       // I/O-sensitivity finding (now clustered before partitionBy —
@@ -408,7 +403,7 @@ object DataScaleBench {
         schemas = names.map(_ -> rowSchema).toMap,
         idCols = names.map(_ -> Seq("event_id")).toMap)
       val fanSec = (System.nanoTime() - tF0) / 1e9
-      deleteRecursively(new java.io.File(fanRoot))
+      FileUtils.deleteQuietly(new java.io.File(fanRoot))
       System.err.println(f"[datascale] x$scale fanout: $fanSec%.2fs " +
         f"(${fanSec * 1e6 / counts("events")}%.2f us/row over " +
         f"${counts("events")} events into $fanTables tables)")

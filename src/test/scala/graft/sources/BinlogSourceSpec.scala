@@ -239,6 +239,10 @@ class BinlogSourceSpec extends SparkSuite {
     assert(end1.tables === Map("shop.orders" -> 3L, "shop.users" -> 2L))
     // checkpoint round-trip of the map format
     assert(stream.deserializeOffset(end1.json()) === end1)
+    // on-disk format pin: sorted keys, bare long values
+    assert(end1.json() === """{"shop.orders":3,"shop.users":2}""")
+    assert(BinlogTableOffsets(Map("shop.users" -> 7L, "a.b" -> 0L)).json() ===
+      """{"a.b":0,"shop.users":7}""")
 
     // append a file containing ONLY orders: just that table's offset moves
     writeFile(2, Seq(rec(1, "orders", 4), rec(2, "orders", 5)))
@@ -318,6 +322,9 @@ class BinlogSourceSpec extends SparkSuite {
       new org.apache.spark.sql.util.CaseInsensitiveStringMap(Map("path" -> d).asJava))
     val stream = new BinlogMicroBatchStream(conf)
     val legacy = BinlogSourceOffset(BinlogOffset(1, 4).packed)
+    // on-disk format pin: the packed (fileId, pos) long as a decimal
+    assert(legacy.json() === "10000000000004")
+    assert(stream.deserializeOffset("10000000000004") === legacy)
     // default: refused with an actionable message — the upgrade changes
     // envelope offset semantics and would break downstream dedup state
     val ex = intercept[IllegalStateException] {

@@ -318,17 +318,26 @@ class CommitFaultSweepSpec extends SparkSuite {
     CdcStream.publishTestHook = () => { counter.incrementAndGet(); () }
   }
 
-  /** Crash at commit `n` (1-based), at the given intra-commit point. */
+  /** Crash at commit `n` (1-based), at the given intra-commit point.
+    * Index commits run concurrently, so by the time one commit reaches
+    * its claim or post point a sibling may already have moved `counter`
+    * on: each commit's ordinal is kept on its own thread instead.
+    * `publishVersion` runs all three hooks on the committing thread, and
+    * no swept operation reaches `flipPreparedVersion` (the one path that
+    * fires claim/post without a publish entry).
+    */
   private def armCrash(point: String, n: Int): Unit = {
     disarm()
+    val ordinal = ThreadLocal.withInitial[Int](() => 0)
     CdcStream.publishTestHook = () => {
       val c = counter.incrementAndGet()
+      ordinal.set(c)
       if (point == "entry" && c == n) throw new InjectedCrash
     }
     CdcStream.claimTestHook = () =>
-      if (point == "claim" && counter.get() == n) throw new InjectedCrash
+      if (point == "claim" && ordinal.get() == n) throw new InjectedCrash
     CdcStream.postPublishTestHook = () =>
-      if (point == "post" && counter.get() == n) throw new InjectedCrash
+      if (point == "post" && ordinal.get() == n) throw new InjectedCrash
   }
 
   private def isInjected(e: Throwable): Boolean =

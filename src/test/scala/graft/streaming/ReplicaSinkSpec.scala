@@ -824,6 +824,36 @@ class ReplicaSinkSpec extends SparkSuite {
     assert(feed.sorted === Seq(1L, 2L, 2L, 4L, 5L))
   }
 
+  test("eraseKeys refuses a feed entry whose key type is off the widening " +
+      "ladder instead of silently keeping the key") {
+    val replica = Files.createTempDirectory("graft-erase-type").toString
+    val sink = new ReplicaSink(ReplicaSinkConfig(Map(
+      "path" -> replica, "keys" -> "user_id", "orderColumns" -> "ord",
+      "changeFeed" -> "true")))
+    def batch(rows: (String, Long, String)*) =
+      rows.toSeq.toDF("user_id", "ord", "op")
+    sink.addBatch(0, batch(("1", 10L, "insert"), ("2", 10L, "insert")))
+    sink.addBatch(1, batch(("7", 20L, "insert"), ("8", 20L, "insert")))
+    // hand-written feed entry: version 2's string keys rewritten as
+    // doubles — the probe's cast would render key "7" as "7.0" and
+    // never match it
+    val changes = new java.io.File(replica, "v000000002/changes")
+    val doubled = Files.createTempDirectory("graft-erase-type-entry").toString
+    spark.read.parquet(changes.toString)
+      .withColumn("user_id", $"user_id".cast("double"))
+      .write.mode("overwrite").parquet(doubled)
+    org.apache.commons.io.FileUtils.deleteDirectory(changes)
+    org.apache.commons.io.FileUtils.moveDirectory(
+      new java.io.File(doubled), changes)
+    val e = intercept[IllegalStateException] {
+      CdcStream.eraseKeys(spark, replica, Seq("user_id"),
+        Seq("7").toDF("user_id"))
+    }
+    assert(e.getMessage.contains("v000000002"), e.getMessage)
+    assert(e.getMessage.contains("`user_id`"), e.getMessage)
+    assert(e.getMessage.contains("double"), e.getMessage)
+  }
+
   test("SQL DDL: CREATE TEMPORARY VIEW USING graft-replica serves SQL readers") {
     val replica = Files.createTempDirectory("graft-sql-view").toString
     val sink = new ReplicaSink(ReplicaSinkConfig(Map(
