@@ -6,6 +6,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType, TimestampNTZType}
 
 /** Materialized index tables for the LLM-pipeline operators.
   *
@@ -67,6 +68,58 @@ object IndexArtifacts {
     val p = tempRoot.resolve(s"$tag-${counter.incrementAndGet()}")
     df.write.parquet(p.toString)
     (s.read.parquet(p.toString), () => FileUtils.deleteQuietly(p.toFile))
+  }
+
+  private lazy val cleaner = java.lang.ref.Cleaner.create()
+
+  /** [[materializeOwned]] for an artifact whose last reader is a frame
+    * returned lazily to a caller: the deleter still deletes early, and
+    * the artifact also deletes itself once no plan can read it — a
+    * `Cleaner` watches the scan's relation, which every frame and
+    * physical plan derived from the returned scan shares.
+    */
+  def materializeScoped(s: SparkSession, df: DataFrame,
+      tag: String): (DataFrame, () => Unit) = {
+    val (m, drop) = materializeOwned(s, df, tag)
+    m.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation
+    }.foreach(r => cleaner.register(r, () => drop()))
+    (m, drop)
+  }
+
+  /** [[materializeOwned]] read back under the schema it was written
+    * with ([[readWritten]]) — no footer-inference job.
+    */
+  def materializeTyped(s: SparkSession, df: DataFrame,
+      tag: String): (DataFrame, () => Unit) = {
+    val p = tempRoot.resolve(s"$tag-${counter.incrementAndGet()}")
+    df.write.parquet(p.toString)
+    (readWritten(s, p.toString, df.schema),
+      () => FileUtils.deleteQuietly(p.toFile))
+  }
+
+  /** Read back a parquet dir this JVM just wrote under the schema it
+    * was written with: a plain `read.parquet` infers the schema from a
+    * footer, which costs a Spark job. Frames carrying TIMESTAMP_NTZ
+    * keep the inference — the session reads those columns back as
+    * TIMESTAMP, and a typed read would not. The path is read
+    * literally: glob metacharacters in it are escaped.
+    */
+  def readWritten(s: SparkSession, dir: String,
+      schema: StructType): DataFrame = {
+    val path = dir.flatMap(c =>
+      if ("\\{}[]*?".indexOf(c.toInt) >= 0) s"\\$c" else c.toString)
+    def ntz(t: DataType): Boolean = t match {
+      case TimestampNTZType => true
+      case st: StructType => st.fields.exists(f => ntz(f.dataType))
+      case a: ArrayType => ntz(a.elementType)
+      case m: MapType => ntz(m.keyType) || ntz(m.valueType)
+      case _ => false
+    }
+    if (ntz(schema)) s.read.parquet(path)
+    else s.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
+      .parquet(path)
   }
 
   /** [[materializeOwned]] plus the written row count, read from the

@@ -212,6 +212,7 @@ object QualityQueries {
         if (maxDepth <= 1L) 0
         else 64 - java.lang.Long.numberOfLeadingZeros(maxDepth - 1L)
       var clos = base
+      var dropClos: () => Unit = () => ()
       for (r <- 1 to rounds) {
         val doubled = clos.as("x").join(clos.as("y"),
             col("x.anc") === col("y.node"))
@@ -229,15 +230,23 @@ object QualityQueries {
         // deeper hierarchy (one more round per ~3 decades of keys)
         // cubes it again. From THREE rounds up (27+ copies) every
         // intermediate closure materializes
-        // (IndexArtifacts.materialize — per-invocation parquet, built
-        // inside every timed run, no cross-run reuse), capping the
-        // plan depth; measured 7.2 → 3.7 s / 26 → 21 jobs at the 10×
-        // decade (rounds = 3). A 2-round closure (9 copies — every
-        // bench-scale fixture) plans fine and pays no write; the last
-        // round always stays lazy so the downstream rollup fuses with
-        // it.
-        if (rounds >= 3 && r < rounds)
-          clos = graft.llm.IndexArtifacts.materialize(s, clos, "q49-clos")
+        // (per-invocation parquet, built inside every timed run, no
+        // cross-run reuse), capping the plan depth; measured 7.2 → 3.7
+        // s / 26 → 21 jobs at the 10× decade (rounds = 3). A 2-round
+        // closure (9 copies — every bench-scale fixture) plans fine and
+        // pays no write; the last round always stays lazy so the
+        // downstream rollup fuses with it. Each artifact is deleted as
+        // soon as the next closure's write has read it; the last one
+        // feeds the returned frame and goes once no plan can read it
+        // (IndexArtifacts.materializeScoped), so timed runs do not
+        // accrete scratch datasets.
+        if (rounds >= 3 && r < rounds) {
+          val (m, drop) =
+            graft.llm.IndexArtifacts.materializeScoped(s, clos, "q49-clos")
+          dropClos()
+          clos = m
+          dropClos = drop
+        }
       }
       val withSelf = clos.unionByName(
         c.select($"k".as("node"), $"k".as("anc"), lit(0L).as("dist")))

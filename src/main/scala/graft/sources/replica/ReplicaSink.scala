@@ -51,9 +51,15 @@ import graft.streaming.CdcStream
   * The sink layer adds only O(tables) marker checks per batch. The
   * batch DataFrame is re-wrapped from its already-planned physical RDD
   * ([[GraftColumnBridge.fromExecutedPlan]]) so the incremental plan is
-  * never re-analyzed, and each merge's single materialization pass is
+  * never re-analyzed, and the commit's one write of the per-key net is
   * the only full read of the batch (plus one bounded max() when
-  * `trackWatermark` is on).
+  * `trackWatermark` is on). That write also records the buckets the
+  * batch touches, so an eager commit is 4 Spark jobs (net, then the
+  * touched buckets' rewrite), and the net's files become the change
+  * feed entry. With `indexColumn` the index commits run beside the
+  * primary's stage and publish before it
+  * ([[graft.streaming.SecondaryIndex.applyBatchWithIndexes]]): 13 jobs
+  * with two indexes and `changeFeed`.
   */
 class ReplicaSinkProvider extends StreamSinkProvider with RelationProvider
     with StreamSourceProvider with DataSourceRegister {

@@ -1156,11 +1156,15 @@ object CdcStream {
     currentVersion(replicaDir).flatMap { case (_, name) =>
       readForKeysAt(spark, replicaDir, name, idCols, keys,
         keepDeletes = true)
-    }.map { df =>
-      if (df.columns.contains(Tombstone))
-        df.withColumn(Tombstone, coalesce(col(Tombstone), lit(false)))
-      else df.withColumn(Tombstone, lit(false))
-    }
+    }.map(withTombstoneFlag)
+
+  /** A non-null `__tombstone` flag on every row (false on stores that
+    * never merged conditionally).
+    */
+  private def withTombstoneFlag(df: DataFrame): DataFrame =
+    if (df.columns.contains(Tombstone))
+      df.withColumn(Tombstone, coalesce(col(Tombstone), lit(false)))
+    else df.withColumn(Tombstone, lit(false))
 
   /** Key-pruned read of a SPECIFIC version — the time-travel twin of
     * [[readReplicaForKeys]] (same exact hash-derived bucket pruning,
@@ -1168,10 +1172,14 @@ object CdcStream {
     * manifest instead of CURRENT. The delta-sized restore diff reads
     * the rollback target through this: O(touched buckets), not
     * O(store), even when the target is a historical version.
+    * `buckets`: the candidate buckets when the caller already knows
+    * them (an [[EagerCommit]]'s touched set) — skips the collect that
+    * derives them from the keys.
     */
   private def readForKeysAt(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, name: String, idCols: Seq[String],
-      keys: DataFrame, keepDeletes: Boolean = false): Option[DataFrame] = {
+      keys: DataFrame, keepDeletes: Boolean = false,
+      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
       readManifest(replicaDir, name) match {
         case Some(m) if m.buckets.nonEmpty || m.deltas.nonEmpty =>
           // same dangling-clone refusal as the full read: a pruned
@@ -1209,9 +1217,11 @@ object CdcStream {
             throw new IllegalArgumentException(
               s"readReplicaForKeys: replica routes by bucketCol '$c' " +
                 s"which is not among the lookup idCols $idCols"))
-          val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
-          val candidate = typedKeys.select(bucketOf.as("__bucket")).distinct()
-            .collect().map(_.getInt(0)).toSet
+          val candidate = buckets.getOrElse {
+            val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
+            typedKeys.select(bucketOf.as("__bucket")).distinct()
+              .collect().map(_.getInt(0)).toSet
+          }
           // reading with the explicit FULL schema both null-fills
           // columns a pruned bucket predates (additive evolution) and
           // avoids a per-lookup footer merge; pending deltas on the
@@ -2136,9 +2146,9 @@ object CdcStream {
         Some(stateDiff(want, have, idCols, opCol))
     }
     rewind.foreach { rw =>
-      applyNetToReplica(demotedDir,
-        lastOpPerKey(rw, idCols, orderCols), rw.columns,
-        idCols, opCol, DefaultReplicaBuckets, bypassFreeze = true)
+      applyNetToReplica(demotedDir, rw, rw.columns,
+        idCols, opCol, DefaultReplicaBuckets, bypassFreeze = true,
+        reduceBy = Some(orderCols))
     }
     unfreezeReplica(demotedDir)
     vp
@@ -2221,10 +2231,11 @@ object CdcStream {
         .filterNot(_.getName == FrozenMarker)
         .foreach(FileUtils.deleteQuietly)
       seedMat.foreach { case (seed, _) =>
-        applyNetToReplica(demotedDir, lastOpPerKey(seed, idCols, orderCols),
+        applyNetToReplica(demotedDir, seed,
           seed.columns.toArray, idCols, opCol,
           numBuckets = m.map(_.numBuckets).getOrElse(DefaultReplicaBuckets),
-          conditional = Some(orderCols), bypassFreeze = true)
+          conditional = Some(orderCols), bypassFreeze = true,
+          reduceBy = Some(orderCols))
       }
     } finally seedMat.foreach(_._2())
     unfreezeReplica(demotedDir)
@@ -4177,35 +4188,21 @@ object CdcStream {
       throw new IllegalArgumentException(
         s"applyBatchToReplica: bucketCol '$c' must be one of idCols $idCols")))
     // the DEFERRED path is a single write action over the net (plus an
-    // optional changes write) — materializing the net would cost more
-    // jobs than it saves, so it stays lazy there
-    if (deferMerge) {
-      return applyNetToReplica(replicaDir,
-        lastOpPerKey(batch, idCols, orderCols),
+    // optional changes write) — the per-key window stays lazy inside it.
+    // The EAGER path reduces the batch inside the routing shuffle
+    // ([[routeNet]]): one shuffle and one write materialize the net,
+    // already split by bucket.
+    val conditional = if (conditionalOrder) Some(orderCols) else None
+    if (deferMerge)
+      applyNetToReplica(replicaDir, lastOpPerKey(batch, idCols, orderCols),
         batch.columns, idCols, opCol, numBuckets, watermark, recordChanges,
-        conditional = if (conditionalOrder) Some(orderCols) else None,
-        bucketCols = bucketCols, defer = true, kind = kind,
-        prepareOnly = prepareOnly)
-    }
-    // materialize the per-key net ONCE: the merge below runs several
-    // actions over it (touched-bucket collect, keys broadcast, upsert
-    // union), and each would otherwise recompute the whole batch plan —
-    // which for a streaming micro-batch means re-reading and re-parsing
-    // the source's changelog files per action.
-    // (r15 measured detour, kept for the record: deriving the touched
-    // set via Dataset.observe on this write — saving the collect job —
-    // costs MORE than it saves: the CollectMetrics node adds ~130 ms
-    // to each materialization stage under the fan-out's concurrent
-    // merges, tripling src_binlog_fanout. The separate tiny collect
-    // stays.)
-    val spark = batch.sparkSession
-    val (netM, dropNet) = graft.llm.IndexArtifacts.materializeOwned(spark,
-      lastOpPerKey(batch, idCols, orderCols), "replica-net")
-    try applyNetToReplica(replicaDir, netM, batch.columns, idCols, opCol,
-      numBuckets, watermark, recordChanges,
-      conditional = if (conditionalOrder) Some(orderCols) else None,
-      bucketCols = bucketCols, kind = kind, prepareOnly = prepareOnly)
-    finally dropNet()
+        conditional = conditional, bucketCols = bucketCols, defer = true,
+        kind = kind, prepareOnly = prepareOnly)
+    else
+      applyNetToReplica(replicaDir, batch, batch.columns, idCols, opCol,
+        numBuckets, watermark, recordChanges, conditional = conditional,
+        bucketCols = bucketCols, kind = kind, prepareOnly = prepareOnly,
+        reduceBy = Some(orderCols))
   }
 
   /** TYPE-FAITHFUL NET: batch columns that arrived NARROWER than the
@@ -4233,46 +4230,42 @@ object CdcStream {
       case None => net
     }
 
-  /** Package-private for [[SecondaryIndex]]: its batch entry points
-    * already hold a MATERIALIZED per-key net, so routing the primary
-    * commit through [[applyBatchToReplica]] would re-run the per-key
-    * window and re-materialize an identical copy (one redundant write
-    * job per batch — r15). Callers here must pass a net that is
-    * already last-op-per-key.
+  /** What a commit resolves from the store's CURRENT manifest, once,
+    * before any Spark job: the base version, the type-faithful net
+    * ([[castNetToStore]]), the bucket count and routing columns (fixed
+    * at replica creation), and the order columns a conditional store
+    * is pinned to.
     */
-  private[streaming] def applyNetToReplica(
-      replicaDir: String,
-      net: DataFrame,
-      batchCols: Array[String],
-      idCols: Seq[String],
-      opCol: String,
-      numBuckets: Int,
-      watermark: Option[Long] = None,
-      recordChanges: Boolean = false,
-      conditional: Option[Seq[Column]] = None,
-      bucketCols: Option[Seq[String]] = None,
-      defer: Boolean = false,
-      bypassFreeze: Boolean = false,
-      /** Commit classification recorded in the manifest — "merge" for
-        * every ordinary batch; [[refreshClone]] stamps "refresh" so
-        * clone-divergence detection is metadata-exact. */
-      kind: String = "merge",
-      prepareOnly: Boolean = false): Option[Long] = {
+  private final case class CommitPlan(
+      cur: Option[(Long, String)],
+      prev: Option[ReplicaManifest],
+      netT: DataFrame,
+      dataCols: Array[String],
+      nb: Int,
+      resolvedBucketCols: Option[Seq[String]],
+      bc: Seq[String],
+      legacyFlat: Option[String],
+      metaOrd: Option[Seq[String]]) {
+    def bucketOf: Column = pmod(hash(bc.map(col): _*), lit(nb))
+  }
+
+  private def planCommit(replicaDir: String, net: DataFrame,
+      batchCols: Array[String], idCols: Seq[String], opCol: String,
+      numBuckets: Int, conditional: Option[Seq[Column]],
+      bucketCols: Option[Seq[String]], bypassFreeze: Boolean): CommitPlan = {
     // split-brain fence: a demoted store refuses writers until it
     // rejoins (resyncAsFollower sets bypassFreeze — the rewind itself
     // is the sanctioned write)
     if (!bypassFreeze) requireUnfrozen(replicaDir)
-    val spark = net.sparkSession
     val dataCols = batchCols.filterNot(_ == opCol)
 
     new java.io.File(replicaDir).mkdirs()
     val cur = currentVersion(replicaDir)
     val prev = cur.flatMap { case (_, name) => readManifest(replicaDir, name) }
     // type-faithful net — see [[castNetToStore]]. The cast runs HERE,
-    // for both entry points: applyBatchToReplica materializes its net
-    // uncast and this is the only castNetToStore call site (a net a
-    // caller pre-cast under an equal-or-narrower snapshot re-casts
-    // losslessly, the widening ladder being transitive)
+    // for every entry point (a net a caller pre-cast under an
+    // equal-or-narrower snapshot re-casts losslessly, the widening
+    // ladder being transitive)
     val netT = castNetToStore(net, prev)
     // a current version WITHOUT a manifest is the pre-bucket flat
     // layout: merge against the whole old version once (this batch
@@ -4297,8 +4290,6 @@ object CdcStream {
         p.bucketCols
       case None => bucketCols
     }
-    val bc = resolvedBucketCols.getOrElse(idCols)
-    val bucketOf = pmod(hash(bc.map(col): _*), lit(nb))
     // conditional merges pin the store's order columns at first use —
     // comparing stored rows written under one ordering against batches
     // ordered by another would be meaningless
@@ -4311,20 +4302,496 @@ object CdcStream {
         s"replica $replicaDir orders conditionally by " +
           s"(${rec.mkString(",")}) but the batch passed (${ns.mkString(",")})"))
     }
-    val metaOrd: Option[Seq[String]] =
-      prev.flatMap(_.condOrderCols).orElse(condNames)
+    CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols,
+      resolvedBucketCols.getOrElse(idCols), legacyFlat,
+      prev.flatMap(_.condOrderCols).orElse(condNames))
+  }
 
-    val upserts = netT.filter(col(opCol) =!= "delete").select(dataCols.map(col): _*)
-    val keys = netT.select(idCols.map(col): _*)
+  /** The bucket ids a write saw, recorded by the write's own tasks —
+    * the touched set with no driver collect and no per-bucket files.
+    * Set semantics: a retried task adding its ids again changes
+    * nothing.
+    */
+  private final class BucketSet
+      extends org.apache.spark.util.AccumulatorV2[Int, Set[Int]] {
+    private var ids = Set.empty[Int]
+    def isZero: Boolean = ids.isEmpty
+    def copy(): BucketSet = { val c = new BucketSet; c.ids = ids; c }
+    def reset(): Unit = ids = Set.empty
+    def add(v: Int): Unit = ids += v
+    def merge(o: org.apache.spark.util.AccumulatorV2[Int, Set[Int]]): Unit =
+      ids ++= o.value
+    def value: Set[Int] = ids
+  }
 
-    // -------- DEFERRED (merge-on-read) commit: append the net as
-    // per-bucket delta files — NO base read, NO base rewrite, and NO
-    // touched-bucket pre-collect (the write's own partition dirs say
-    // which buckets the batch hit). ONE write job + manifest — the
-    // latency floor a streaming upsert sink needs for small
-    // micro-batches; reads fold deltas newest-net-wins, compaction
-    // folds them back into base files.
-    if (defer) {
+  /** Bucket ids of a `partitionBy("__bucket")` write, from its
+    * partition dirs.
+    */
+  private def bucketDirs(dir: String): Set[Int] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
+      .map(_.getName.stripPrefix("__bucket=").toInt).toSet
+
+  /** Test seam: runs with the store's dir at the end of
+    * [[EagerCommit.stage]] — every Spark job done, nothing published.
+    * No-op in production.
+    */
+  private[streaming] var stageTestHook: String => Unit = _ => ()
+
+  /** One EAGER commit of a per-key net into one store, in three steps
+    * so a caller can run its Spark jobs beside other stores' commits
+    * and publish it later:
+    *
+    *  1. [[routeNet]] builds it: the net, reduced and cast to the
+    *     store's types, is written once into the commit's staging dir,
+    *     and that write records the buckets it touched (no driver
+    *     collect) — which [[readCommitKeys]] then prunes by;
+    *  2. [[stage]] runs every remaining Spark job into the same staging
+    *     dir: the touched buckets' rewrite, and the feed entry of a
+    *     conditional merge;
+    *  3. [[publish]] is metadata only: the net files become the feed
+    *     entry (or go), then [[publishVersion]] claims the version and
+    *     flips the pointer.
+    *
+    * [[abort]] deletes an unpublished staging dir. One a crashed writer
+    * leaves behind is debris the store's commits sweep once stale.
+    */
+  private[streaming] final class EagerCommit private[CdcStream] (
+      val replicaDir: String,
+      p: CommitPlan,
+      staging: String,
+      batchCols: Array[String],
+      val idCols: Seq[String],
+      opCol: String,
+      prevSchema: Option[StructType],
+      /** The net: one row per key, cast to the store's types. */
+      val net: DataFrame,
+      /** The buckets the net's rows route to. */
+      val touched: Set[Int],
+      watermark: Option[Long],
+      recordChanges: Boolean,
+      conditional: Option[Seq[Column]],
+      bypassFreeze: Boolean,
+      kind: String,
+      prepareOnly: Boolean) {
+
+    private[CdcStream] def curName: Option[String] = p.cur.map(_._2)
+
+    @volatile private var staged: Option[ReplicaManifest] = None
+    @volatile private var published = false
+
+    def stage(): Unit = {
+      val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
+        legacyFlat, metaOrd) = p
+      val spark = net.sparkSession
+      val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
+      val touchedPaths = prevBuckets.collect {
+        case (k, path) if touched(k) => resolveStorePath(replicaDir, path)
+      }.toSeq.sorted
+      val prevHasDeltas =
+        prev.exists(_.deltas.keys.exists(touched))
+      // a SEQUENCE (unconditional) eager merge cannot fold CONDITIONAL
+      // pending deltas: its merge keeps no order compare, so a folded
+      // delete-winner's late-loser protection would silently drop. A
+      // conditional eager merge folds either mode (the fold surfaces
+      // delete state as tombstones; see below).
+      if (prevHasDeltas && conditional.isEmpty &&
+          prev.exists(_.deltasConditional))
+        throw new IllegalStateException(
+          s"replica $replicaDir holds order-conditional pending deltas; " +
+            "an unconditional merge cannot fold them — run compactReplica " +
+            "first or merge with conditionalOrder")
+      val noBase = netT.select(dataCols.map(col): _*).limit(0)
+      val base = legacyFlat match {
+        case Some(flat) => spark.read.parquet(flat)
+        // an EAGER merge over buckets with pending deltas folds them in:
+        // keepDeletes preserves delete state across the rewrite —
+        // sequence-folded stores pass stored tombstones through
+        // untouched, conditional-folded stores materialize delete-
+        // winners AS tombstones so the conditional compare below (and
+        // any late batch after it) still loses to them. The rewritten
+        // buckets drop their delta lists.
+        case None if prevHasDeltas =>
+          mergedBucketRead(spark, replicaDir, prev.get, touched,
+              keepDeletes = true)
+            .getOrElse(noBase)
+        case None if touchedPaths.isEmpty => noBase
+        case None => prev.flatMap(manifestSchema) match {
+          // manifest union schema: null-fills evolution gaps without a
+          // per-merge footer scan; pre-schema manifests merge footers once
+          case Some(sc) => spark.read.schema(sc).parquet(touchedPaths: _*)
+          case None => spark.read.option("mergeSchema", "true")
+            .parquet(touchedPaths: _*)
+        }
+      }
+      // ONE window per (bucket, key) over the touched buckets' rows ∪
+      // the net picks each key's survivor. The rows are hash-routed to
+      // their bucket's writer FIRST — one task and ONE output file per
+      // touched bucket, instead of every shuffle partition spraying a
+      // small file into every bucket dir (exactly the fragmentation
+      // compactReplica exists to undo) — and the window's (bucket, key)
+      // clustering rides that same shuffle. Unconditional: the incoming
+      // row wins every key it names; base rows of other keys pass
+      // through (stored tombstones included); incoming deletes drop.
+      // ADDITIVE SCHEMA EVOLUTION: a batch introducing a new column
+      // widens the replica (carried-over rows read back NULL for it); a
+      // batch missing a replica column null-fills it.
+      val baseB = base.withColumn("__bucket", p.bucketOf)
+      val incoming = net.withColumn("__bucket", p.bucketOf)
+      val (all, ord) = conditional match {
+        case Some(ord) =>
+          // order-conditional merge: greatest orderCols value per key
+          // wins across {stored, incoming}; incoming wins exact ties. A
+          // WINNING delete is stored as a TOMBSTONE row (`__tombstone =
+          // true`, filtered by every read path): without it, a
+          // later-arriving LOWER-order update would find no stored row
+          // to lose against and resurrect the key. Tombstones carry the
+          // delete's order value, so the compare keeps working; they
+          // persist until [[compactReplica]]'s `tombstoneHorizon` ages
+          // them out (same trade Kafka compaction and Cassandra make).
+          val baseLive = baseB.columns.find(_ == Tombstone) match {
+            case Some(_) => baseB.withColumn(Tombstone,
+              coalesce(col(Tombstone), lit(false)))
+            case None => baseB.withColumn(Tombstone, lit(false))
+          }
+          (baseLive
+            .withColumn(opCol, when(col(Tombstone), "delete").otherwise("update"))
+            .withColumn("__incoming", lit(0))
+            .unionByName(
+              incoming.withColumn(Tombstone, col(opCol) === "delete")
+                .withColumn("__incoming", lit(1)),
+              allowMissingColumns = true), ord)
+        case None =>
+          (baseB.withColumn("__incoming", lit(0))
+            .unionByName(incoming.withColumn("__incoming", lit(1)),
+              allowMissingColumns = true), Nil)
+      }
+      val writeBuckets = // flat-layout migration rewrites ALL buckets
+        if (legacyFlat.isDefined) nb else math.max(touched.size, 1)
+      val w = Window.partitionBy((col("__bucket") +: idCols.map(col)): _*)
+        .orderBy((ord.map(_.desc) :+ col("__incoming").desc): _*)
+      val winners = all.repartition(writeBuckets, col("__bucket"))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1)
+      val mergedB = (conditional match {
+        case Some(_) => winners
+        case None =>
+          winners.filter(!(col("__incoming") === 1 && col(opCol) === "delete"))
+      }).drop("__rn", "__incoming", opCol)
+      val merged = mergedB.drop("__bucket")
+      // SCHEMA EVOLUTION: additive columns always; TYPE changes only
+      // along the safe WIDENING ladder, checked in [[routeNet]]. Widening
+      // works because every read path serves files through the
+      // manifest's recorded union schema (`spark.read.schema(...)`) and
+      // Spark 4's parquet readers upcast a narrower physical type into
+      // the requested wider one — so the UNTOUCHED buckets' int32 files
+      // read back as longs with no rewrite, while this commit's touched
+      // buckets write the wide type directly (`unionByName` already
+      // coerced `merged`). The manifest records the replica's UNION
+      // schema so the pruned lookup path never needs a footer-merge over
+      // every bucket file; `merged` only covers touched buckets, so the
+      // previous union widens.
+      val unionSchema = prevSchema match {
+        case Some(ps) =>
+          StructType(ps.fields.map { pf =>
+            netT.schema.fields.find(_.name == pf.name) match {
+              case Some(f) if !org.apache.spark.sql.GraftColumnBridge
+                  .sameTypeIgnoreNullability(pf.dataType, f.dataType) &&
+                  isTypeWidening(pf.dataType, f.dataType) =>
+                pf.copy(dataType = f.dataType) // record the WIDENED type
+              case _ => pf
+            }
+          } ++
+            merged.schema.fields.filterNot(f => ps.fieldNames.contains(f.name)))
+        case None => merged.schema
+      }
+      mergedB.write.mode("overwrite").partitionBy("__bucket")
+        .parquet(s"$staging/data")
+      // CHANGE FEED (opt-in, Delta-CDF shape): the version records its
+      // own per-key NET — exactly the rows this commit applied, op
+      // included — inside the version dir, so changes commit atomically
+      // with the data in the same rename. An unconditional merge applied
+      // the net as written: its files become the entry at [[publish]], at
+      // no cost. Under a conditional merge the feed records the OUTCOME
+      // (incoming winners), not the batch's intent — otherwise feed
+      // replay would re-apply conditionally-LOST rows. Retention: a
+      // version's changes live as long as its dir — indefinitely while
+      // any of its buckets is still current, and at least the GC
+      // reader-grace window after a full rewrite (readReplicaChanges
+      // FAILS on a gap, never skips).
+      if (recordChanges && conditional.nonEmpty)
+        winners.filter(col("__incoming") === 1)
+          .select(batchCols.toSeq.map(col): _*)
+          .write.parquet(s"$staging/changes")
+
+      // buckets actually written (a delete can empty one entirely) —
+      // never outside the touched set the base read covered
+      val written = bucketDirs(s"$staging/data")
+      if (legacyFlat.isEmpty && !written.subsetOf(touched))
+        throw new IllegalStateException(s"replica $replicaDir: merge wrote " +
+          s"bucket(s) ${(written -- touched).toSeq.sorted.mkString(",")} " +
+          "outside the net's recorded touched set")
+      val nextName = f"v${cur.map(_._1 + 1).getOrElse(1L)}%09d"
+      val newBuckets = (prevBuckets -- touched) ++
+        written.map(k => k -> s"$nextName/data/__bucket=$k")
+      // tombstone metadata for the rewritten buckets: one column-pruned
+      // agg over the files just written (never the store); untouched
+      // buckets keep their recorded mins. Only maintained once the store
+      // has an order-column record — legacy tombstone stores keep the
+      // scan-based detection until their next conditional merge, whose
+      // None→Some condOrderCols transition backfills the UNTOUCHED
+      // legacy buckets too (one pruned job, once) so the recorded mins
+      // are complete from the first version that carries them.
+      val newMins: Map[Int, String] = metaOrd match {
+        case Some(ocs)
+          if conditional.nonEmpty ||
+            unionSchema.fieldNames.contains(Tombstone) =>
+          val transition = prev.exists(_.condOrderCols.isEmpty)
+          val backfill =
+            if (transition)
+              legacyTombstoneMins(spark, replicaDir,
+                prevBuckets.filter { case (k, _) => !touched(k) },
+                prevSchema, ocs)
+            else Map.empty[Int, String]
+          // at the transition, prior mins (possibly sweep-recorded under
+          // tombstoneMinCols) are re-keyed by the backfill — don't carry
+          val carried =
+            if (transition) Map.empty[Int, String]
+            else prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
+          backfill ++ carried ++
+            stagedTombstoneMins(spark, s"$staging/data", ocs)
+        case _ =>
+          // store without order columns: rewritten buckets refresh their
+          // sweep-recorded mins (keyed by tombstoneMinCols) off the
+          // staged files — dropping without refresh would hide their
+          // tombstones from metadata-decided expiry forever
+          prev.flatMap(_.tombstoneMinCols) match {
+            case Some(mcs) =>
+              (prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched) ++
+                stagedTombstoneMins(spark, s"$staging/data", mcs)
+            case None =>
+              prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
+          }
+      }
+      val remainingDeltas = prev.map(_.deltas -- touched).getOrElse(Map.empty)
+      staged = Some(ReplicaManifest(nb, newBuckets, Some(unionSchema.json),
+        watermark, resolvedBucketCols,
+        // an eager rewrite FOLDS the touched buckets' deltas (the base
+        // read merged them); untouched buckets keep theirs
+        keyCols = prev.flatMap(_.keyCols).orElse(Some(idCols)),
+        opColName = prev.flatMap(_.opColName).orElse(Some(opCol)),
+        deltas = remainingDeltas,
+        condOrderCols = metaOrd,
+        deltasConditional = remainingDeltas.nonEmpty &&
+          prev.exists(_.deltasConditional),
+        tombstoneMins = newMins,
+        tombstoneMinCols = if (metaOrd.nonEmpty) None
+          else prev.flatMap(_.tombstoneMinCols)))
+      stageTestHook(replicaDir)
+    }
+
+    /** Publish the staged version; returns its number. */
+    def publish(): Option[Long] = {
+      val next = staged.getOrElse(throw new IllegalStateException(
+        s"replica $replicaDir: publish before stage"))
+      val netDir = java.nio.file.Paths.get(staging, "net")
+      if (recordChanges && conditional.isEmpty)
+        java.nio.file.Files.move(netDir, netDir.resolveSibling("changes"),
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      else FileUtils.deleteQuietly(netDir.toFile)
+      val nextV = p.cur.map(_._1 + 1).getOrElse(1L)
+      publishVersion(replicaDir, staging, f"v$nextV%09d", next, p.prev,
+        curName, forbidFrozen = !bypassFreeze, kind = kind,
+        flipPointer = !prepareOnly)
+      published = true
+      Some(nextV)
+    }
+
+    def abort(): Unit =
+      if (!published) FileUtils.deleteQuietly(new java.io.File(staging))
+  }
+
+  /** Start an eager commit ([[EagerCommit]]): resolve the manifest
+    * ([[planCommit]]), refuse a batch the schema contract rejects —
+    * before any job, so a refused batch leaves nothing behind — and
+    * write the net into a fresh staging dir, recording the buckets its
+    * rows hash to as the write runs: the touched set with no driver
+    * collect and no per-bucket files. With `reduceBy` the batch is
+    * reduced to its last op per key on the way (one shuffle); without
+    * it the caller's frame must already hold one row per key. `defer`
+    * builds the net for a caller that commits it through the deferred
+    * path instead, which checks its own schema contract.
+    *
+    * The commit's base version is read AFTER the write: evaluating the
+    * batch may itself commit to the store, and the merge builds on
+    * whatever that left. Should the store have changed its routing
+    * meanwhile (a reshard), the written net routes again.
+    */
+  private[streaming] def routeNet(
+      replicaDir: String,
+      net: DataFrame,
+      batchCols: Array[String],
+      idCols: Seq[String],
+      opCol: String,
+      numBuckets: Int,
+      watermark: Option[Long] = None,
+      recordChanges: Boolean = false,
+      conditional: Option[Seq[Column]] = None,
+      bucketCols: Option[Seq[String]] = None,
+      bypassFreeze: Boolean = false,
+      kind: String = "merge",
+      prepareOnly: Boolean = false,
+      reduceBy: Option[Seq[Column]] = None,
+      defer: Boolean = false): EagerCommit = {
+    val spark = net.sparkSession
+    def plan(in: DataFrame) = planCommit(replicaDir, in, batchCols, idCols,
+      opCol, numBuckets, conditional, bucketCols, bypassFreeze)
+    // returns the store's previous union schema
+    def checked(p: CommitPlan): Option[StructType] = {
+      // the previous union schema (upgrading a pre-schema manifest with
+      // one footer-merge over its buckets — a one-time write-side cost)
+      val prevSchema: Option[StructType] = p.prev.flatMap { m =>
+        manifestSchema(m)
+          .orElse(if (m.buckets.isEmpty) None
+          else Some(spark.read.option("mergeSchema", "true").parquet(
+            m.buckets.values.toSeq.sorted
+              .map(path => resolveStorePath(replicaDir, path)): _*).schema))
+      }
+      // SCHEMA EVOLUTION: TYPE changes only along the safe WIDENING ladder
+      // ([[isTypeWidening]] — int→long, float→double …), and only on
+      // NON-ROUTING columns. This is where the contract is ENFORCED, not
+      // assumed. A ROUTING column (bucketCols / keyCols) must refuse: the
+      // bucket hash is TYPE-SENSITIVE (hash(5: int) != hash(5L: long)), so
+      // a widened routing column would silently send every later pruned
+      // lookup to the wrong bucket — the named migration is a
+      // clone-rewrite into a fresh store with the widened key type.
+      // Anything off the ladder (narrowing, int→string, …) rejects loudly
+      // instead of corrupting. The check compares the BATCH's own types
+      // (netT), never a union's: union type-coercion would blur the
+      // distinction (int ⋈ string resolves to a runtime cast that would
+      // masquerade as a "widening" here and then blow up mid-write).
+      if (!defer) prevSchema.foreach { ps =>
+        p.netT.schema.fields.filter(f => p.dataCols.contains(f.name))
+          .foreach { f =>
+          ps.fields.find(_.name == f.name).foreach { pf =>
+            val same = org.apache.spark.sql.GraftColumnBridge
+              .sameTypeIgnoreNullability(pf.dataType, f.dataType)
+            if (!same && p.bc.contains(f.name))
+              throw new IllegalArgumentException(
+                s"replica $replicaDir: batch changes ROUTING column " +
+                  s"'${f.name}' from ${pf.dataType.catalogString} to " +
+                  s"${f.dataType.catalogString}; the bucket hash is " +
+                  "type-sensitive, so widening a routing column would " +
+                  "mis-route every later pruned lookup — migrate via " +
+                  "cloneReplica into a new store with the widened key type")
+            if (!same && !isTypeWidening(pf.dataType, f.dataType))
+              throw new IllegalArgumentException(
+                s"replica $replicaDir: batch changes column '${f.name}' from " +
+                  s"${pf.dataType.catalogString} to ${f.dataType.catalogString}; " +
+                  "replica schema evolution is additive columns and safe " +
+                  "type WIDENING (int→long, float→double), never " +
+                  "narrowing or type replacement")
+          }
+        }
+      }
+      prevSchema
+    }
+    def routing(p: CommitPlan) =
+      (p.nb, p.bc, p.bc.map(c => p.netT.schema(c).dataType))
+    val p0 = plan(net)
+    val prevSchema0 = checked(p0)
+    val staging = newStagingDir(replicaDir)
+    try {
+      val touched = new BucketSet
+      spark.sparkContext.register(touched)
+      val record = udf((b: Int) => { touched.add(b); true }).asNondeterministic()
+      val reduced = reduceBy.fold(p0.netT)(lastOpPerKey(p0.netT, idCols, _))
+      reduced.filter(record(p0.bucketOf)).write.parquet(s"$staging/net")
+      val written = graft.llm.IndexArtifacts.readWritten(spark,
+        s"$staging/net", reduced.schema)
+      val p = plan(written)
+      if (routing(p) != routing(p0)) {
+        val again = routeNet(replicaDir, written, batchCols, idCols, opCol,
+          numBuckets, watermark, recordChanges, conditional, bucketCols,
+          bypassFreeze, kind, prepareOnly, defer = defer)
+        FileUtils.deleteQuietly(new java.io.File(staging))
+        again
+      } else {
+        val prevSchema = if (p.cur == p0.cur) prevSchema0 else checked(p)
+        new EagerCommit(replicaDir, p, staging, batchCols, idCols, opCol,
+          prevSchema, p.netT, touched.value, watermark, recordChanges,
+          conditional, bypassFreeze, kind, prepareOnly)
+      }
+    } catch {
+      case e: Throwable =>
+        FileUtils.deleteQuietly(new java.io.File(staging))
+        throw e
+    }
+  }
+
+  /** The store's rows for exactly an [[EagerCommit]]'s net keys, read
+    * from the version the commit routed against and pruned to its
+    * touched buckets — the key-pruned read with no key distinct and no
+    * bucket collect. `keepDeletes` keeps conditional delete state as
+    * `__tombstone` rows ([[readReplicaForKeysWithTombstones]]).
+    */
+  private[streaming] def readCommitKeys(
+      spark: org.apache.spark.sql.SparkSession, c: EagerCommit,
+      keepDeletes: Boolean): Option[DataFrame] =
+    c.curName.flatMap { name =>
+      readForKeysAt(spark, c.replicaDir, name, c.idCols,
+        c.net.select(c.idCols.map(col): _*), keepDeletes,
+        buckets = Some(c.touched))
+    }.map(df => if (keepDeletes) withTombstoneFlag(df) else df)
+
+  /** Package-private for [[SecondaryIndex]] and the failover paths: a
+    * net that is already last-op-per-key commits without a second
+    * per-key window; `reduceBy` reduces a raw batch inside the eager
+    * routing shuffle instead (deferred callers reduce before calling).
+    */
+  private[streaming] def applyNetToReplica(
+      replicaDir: String,
+      net: DataFrame,
+      batchCols: Array[String],
+      idCols: Seq[String],
+      opCol: String,
+      numBuckets: Int,
+      watermark: Option[Long] = None,
+      recordChanges: Boolean = false,
+      conditional: Option[Seq[Column]] = None,
+      bucketCols: Option[Seq[String]] = None,
+      defer: Boolean = false,
+      bypassFreeze: Boolean = false,
+      /** Commit classification recorded in the manifest — "merge" for
+        * every ordinary batch; [[refreshClone]] stamps "refresh" so
+        * clone-divergence detection is metadata-exact. */
+      kind: String = "merge",
+      prepareOnly: Boolean = false,
+      reduceBy: Option[Seq[Column]] = None): Option[Long] = {
+    if (!defer) {
+      val c = routeNet(replicaDir, net, batchCols, idCols, opCol, numBuckets,
+        watermark, recordChanges, conditional, bucketCols, bypassFreeze,
+        kind, prepareOnly, reduceBy)
+      // a net-empty batch commits nothing: bumping the version would only
+      // churn the manifest, and recording the batch's DataFrame columns
+      // in the union schema would advertise columns no parquet file
+      // carries (the pruned and full read paths must agree)
+      try if (c.touched.isEmpty) None else { c.stage(); c.publish() }
+      finally c.abort()
+    } else {
+      val spark = net.sparkSession
+      val p = planCommit(replicaDir, net, batchCols, idCols, opCol,
+        numBuckets, conditional, bucketCols, bypassFreeze)
+      val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
+        legacyFlat, metaOrd) = p
+      val bucketOf = p.bucketOf
+      // -------- DEFERRED (merge-on-read) commit: append the net as
+      // per-bucket delta files — NO base read, NO base rewrite, and NO
+      // touched-bucket pre-collect (the write's own partition dirs say
+      // which buckets the batch hit). ONE write job + manifest — the
+      // latency floor a streaming upsert sink needs for small
+      // micro-batches; reads fold deltas newest-net-wins, compaction
+      // folds them back into base files.
       require(legacyFlat.isEmpty,
         "deferMerge: flat-layout replicas must migrate via one eager merge")
       val prevSc = prev.flatMap(manifestSchema)
@@ -4453,266 +4920,8 @@ object CdcStream {
             else prev.flatMap(_.tombstoneMinCols)),
         prev, cur.map(_._2), forbidFrozen = !bypassFreeze, kind = kind,
         flipPointer = !prepareOnly)
-      return Some(nextV)
+      Some(nextV)
     }
-
-    // buckets touched by this batch — bounded by nb, driver-side
-    val touched = keys.select(bucketOf.as("__bucket")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    // a net-empty batch commits nothing: bumping the version would only
-    // churn the manifest, and recording the batch's DataFrame columns
-    // in the union schema would advertise columns no parquet file
-    // carries (the pruned and full read paths must agree)
-    if (touched.isEmpty) return None
-    val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
-
-    val touchedPaths = prevBuckets.collect {
-      case (k, p) if touched(k) => resolveStorePath(replicaDir, p)
-    }.toSeq.sorted
-    val prevHasDeltas =
-      prev.exists(_.deltas.keys.exists(touched))
-    // a SEQUENCE (unconditional) eager merge cannot fold CONDITIONAL
-    // pending deltas: its anti-join keeps no order compare, so a
-    // folded delete-winner's late-loser protection would silently
-    // drop. A conditional eager merge folds either mode (the fold
-    // surfaces delete state as tombstones; see below).
-    if (prevHasDeltas && conditional.isEmpty &&
-        prev.exists(_.deltasConditional))
-      throw new IllegalStateException(
-        s"replica $replicaDir holds order-conditional pending deltas; " +
-          "an unconditional merge cannot fold them — run compactReplica " +
-          "first or merge with conditionalOrder")
-    val base = legacyFlat match {
-      case Some(flat) => spark.read.parquet(flat)
-      // an EAGER merge over buckets with pending deltas folds them in:
-      // keepDeletes preserves delete state across the rewrite —
-      // sequence-folded stores pass stored tombstones through
-      // untouched, conditional-folded stores materialize delete-
-      // winners AS tombstones so the conditional compare below (and
-      // any late batch after it) still loses to them. The rewritten
-      // buckets drop their delta lists.
-      case None if prevHasDeltas =>
-        mergedBucketRead(spark, replicaDir, prev.get, touched,
-            keepDeletes = true)
-          .getOrElse(upserts.limit(0))
-      case None if touchedPaths.isEmpty => upserts.limit(0)
-      case None => prev.flatMap(manifestSchema) match {
-        // manifest union schema: null-fills evolution gaps without a
-        // per-merge footer scan; pre-schema manifests merge footers once
-        case Some(sc) => spark.read.schema(sc).parquet(touchedPaths: _*)
-        case None => spark.read.option("mergeSchema", "true")
-          .parquet(touchedPaths: _*)
-      }
-    }
-    // ADDITIVE SCHEMA EVOLUTION: a batch introducing a new column
-    // widens the replica (carried-over rows read back NULL for it); a
-    // batch missing a replica column null-fills it. Readers merge
-    // footer schemas across buckets written at different versions.
-    // Under a conditional merge the change feed must record the
-    // OUTCOME (incoming winners), not the batch's intent — otherwise
-    // feed replay would re-apply conditionally-LOST rows.
-    var conditionalWinners: Option[DataFrame] = None
-    val merged = conditional match {
-      case Some(ord) =>
-        // order-conditional merge: greatest orderCols value per key
-        // wins across {stored, incoming}; incoming wins exact ties.
-        // One window over the touched buckets' rows ∪ the net — the
-        // same data the unconditional path reads. A WINNING delete is
-        // stored as a TOMBSTONE row (`__tombstone = true`, filtered by
-        // every read path): without it, a later-arriving LOWER-order
-        // update would find no stored row to lose against and
-        // resurrect the key. Tombstones carry the delete's order
-        // value, so the compare keeps working; they persist until
-        // [[compactReplica]]'s `tombstoneHorizon` ages them out
-        // (same trade Kafka
-        // compaction and Cassandra make).
-        val baseLive = base.columns.find(_ == Tombstone) match {
-          case Some(_) => base.withColumn(Tombstone,
-            coalesce(col(Tombstone), lit(false)))
-          case None => base.withColumn(Tombstone, lit(false))
-        }
-        val all = baseLive
-          .withColumn(opCol, when(col(Tombstone), "delete").otherwise("update"))
-          .withColumn("__incoming", lit(0))
-          .unionByName(
-            netT.select(batchCols.toSeq.map(col): _*)
-              .withColumn(Tombstone, col(opCol) === "delete")
-              .withColumn("__incoming", lit(1)),
-            allowMissingColumns = true)
-        val w = Window.partitionBy(idCols.map(col): _*)
-          .orderBy((ord.map(_.desc) :+ col("__incoming").desc): _*)
-        val winners = all.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1)
-        conditionalWinners = Some(winners
-          .filter(col("__incoming") === 1)
-          .select(batchCols.toSeq.map(col): _*))
-        winners.drop("__rn", "__incoming", opCol)
-      case None =>
-        base.join(broadcast(keys), idCols, "left_anti")
-          .unionByName(upserts, allowMissingColumns = true)
-    }
-    // the manifest records the replica's UNION schema so the pruned
-    // lookup path never needs a footer-merge over every bucket file.
-    // `merged` only covers touched buckets, so widen the previous
-    // union (upgrading a pre-schema manifest with one footer-merge over
-    // its buckets — a one-time write-side cost)
-    val prevSchema: Option[StructType] = prev.flatMap { m =>
-      manifestSchema(m)
-        .orElse(if (m.buckets.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(
-          m.buckets.values.toSeq.sorted
-            .map(p => resolveStorePath(replicaDir, p)): _*).schema))
-    }
-    // SCHEMA EVOLUTION: additive columns always; TYPE changes only
-    // along the safe WIDENING ladder ([[isTypeWidening]] — int→long,
-    // float→double …), and only on NON-ROUTING columns. This is where
-    // the contract is ENFORCED, not assumed. Widening works because
-    // every read path serves files through the manifest's recorded
-    // union schema (`spark.read.schema(...)`) and Spark 4's parquet
-    // readers upcast a narrower physical type into the requested wider
-    // one — so the UNTOUCHED buckets' int32 files read back as longs
-    // with no rewrite, while this commit's touched buckets write the
-    // wide type directly (`unionByName` already coerced `merged`).
-    // A ROUTING column (bucketCols / keyCols) must refuse: the bucket
-    // hash is TYPE-SENSITIVE (hash(5: int) != hash(5L: long)), so a
-    // widened routing column would silently send every later pruned
-    // lookup to the wrong bucket — the named migration is a
-    // clone-rewrite into a fresh store with the widened key schema.
-    // Anything off the ladder (narrowing, int→string, …) rejects
-    // loudly instead of corrupting.
-    val unionSchema = prevSchema match {
-      case Some(ps) =>
-        // the check compares the BATCH's own types (netT) against the
-        // store, never `merged`'s: union type-coercion already blurred
-        // the distinction there (int ⋈ string resolves to a runtime
-        // cast that would masquerade as a "widening" here and then
-        // blow up mid-write)
-        netT.schema.fields.filter(f => dataCols.contains(f.name))
-          .foreach { f =>
-          ps.fields.find(_.name == f.name).foreach { pf =>
-            val same = org.apache.spark.sql.GraftColumnBridge
-              .sameTypeIgnoreNullability(pf.dataType, f.dataType)
-            if (!same && bc.contains(f.name))
-              throw new IllegalArgumentException(
-                s"replica $replicaDir: batch changes ROUTING column " +
-                  s"'${f.name}' from ${pf.dataType.catalogString} to " +
-                  s"${f.dataType.catalogString}; the bucket hash is " +
-                  "type-sensitive, so widening a routing column would " +
-                  "mis-route every later pruned lookup — migrate via " +
-                  "cloneReplica into a new store with the widened key type")
-            if (!same && !isTypeWidening(pf.dataType, f.dataType))
-              throw new IllegalArgumentException(
-                s"replica $replicaDir: batch changes column '${f.name}' from " +
-                  s"${pf.dataType.catalogString} to ${f.dataType.catalogString}; " +
-                  "replica schema evolution is additive columns and safe " +
-                  "type WIDENING (int→long, float→double), never " +
-                  "narrowing or type replacement")
-          }
-        }
-        StructType(ps.fields.map { pf =>
-          netT.schema.fields.find(_.name == pf.name) match {
-            case Some(f) if !org.apache.spark.sql.GraftColumnBridge
-                .sameTypeIgnoreNullability(pf.dataType, f.dataType) &&
-                isTypeWidening(pf.dataType, f.dataType) =>
-              pf.copy(dataType = f.dataType) // record the WIDENED type
-            case _ => pf
-          }
-        } ++
-          merged.schema.fields.filterNot(f => ps.fieldNames.contains(f.name)))
-      case None => merged.schema
-    }
-
-    val nextV = cur.map(_._1 + 1).getOrElse(1L)
-    val nextName = f"v$nextV%09d"
-    // assemble in a private staging dir; the rename in publishVersion
-    // is the commit point (and the optimistic-concurrency lock)
-    val staging = newStagingDir(replicaDir)
-    // hash-route rows to their bucket's writer: one task and ONE output
-    // file per touched bucket, instead of every shuffle partition
-    // spraying a small file into every bucket dir (up to partitions×
-    // buckets files per batch — exactly the fragmentation compactReplica
-    // exists to undo)
-    val writeBuckets = // flat-layout migration rewrites ALL buckets
-      if (legacyFlat.isDefined) nb else math.max(touched.size, 1)
-    merged.withColumn("__bucket", bucketOf)
-      .repartition(writeBuckets, col("__bucket"))
-      .write.mode("overwrite").partitionBy("__bucket")
-      .parquet(s"$staging/data")
-    // CHANGE FEED (opt-in, Delta-CDF shape): the version records its
-    // own per-key NET — exactly the rows this commit applied, op
-    // included — inside the version dir, so changes commit atomically
-    // with the data in the same rename. Cost: one net-sized write (the
-    // net is already materialized). Retention: a version's changes live
-    // as long as its dir — indefinitely while any of its buckets is
-    // still current, and at least the GC reader-grace window after a
-    // full rewrite (readReplicaChanges FAILS on a gap, never skips).
-    if (recordChanges)
-      conditionalWinners.getOrElse(netT).write.parquet(s"$staging/changes")
-
-    // buckets actually written (a delete can empty one entirely)
-    val written = Option(new java.io.File(s"$staging/data").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(_.getName.stripPrefix("__bucket=").toInt)
-    val newBuckets = (prevBuckets -- touched) ++
-      written.map(k => k -> s"$nextName/data/__bucket=$k")
-    // tombstone metadata for the rewritten buckets: one column-pruned
-    // agg over the files just written (never the store); untouched
-    // buckets keep their recorded mins. Only maintained once the store
-    // has an order-column record — legacy tombstone stores keep the
-    // scan-based detection until their next conditional merge, whose
-    // None→Some condOrderCols transition backfills the UNTOUCHED
-    // legacy buckets too (one pruned job, once) so the recorded mins
-    // are complete from the first version that carries them.
-    val newMins: Map[Int, String] = metaOrd match {
-      case Some(ocs)
-        if conditional.nonEmpty ||
-          unionSchema.fieldNames.contains(Tombstone) =>
-        val transition = prev.exists(_.condOrderCols.isEmpty)
-        val backfill =
-          if (transition)
-            legacyTombstoneMins(spark, replicaDir,
-              prevBuckets.filter { case (k, _) => !touched(k) },
-              prevSchema, ocs)
-          else Map.empty[Int, String]
-        // at the transition, prior mins (possibly sweep-recorded under
-        // tombstoneMinCols) are re-keyed by the backfill — don't carry
-        val carried =
-          if (transition) Map.empty[Int, String]
-          else prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
-        backfill ++ carried ++
-          stagedTombstoneMins(spark, s"$staging/data", ocs)
-      case _ =>
-        // store without order columns: rewritten buckets refresh their
-        // sweep-recorded mins (keyed by tombstoneMinCols) off the
-        // staged files — dropping without refresh would hide their
-        // tombstones from metadata-decided expiry forever
-        prev.flatMap(_.tombstoneMinCols) match {
-          case Some(mcs) =>
-            (prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched) ++
-              stagedTombstoneMins(spark, s"$staging/data", mcs)
-          case None =>
-            prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
-        }
-    }
-    val remainingDeltas = prev.map(_.deltas -- touched).getOrElse(Map.empty)
-    publishVersion(replicaDir, staging, nextName,
-      ReplicaManifest(nb, newBuckets, Some(unionSchema.json), watermark,
-        resolvedBucketCols,
-        // an eager rewrite FOLDS the touched buckets' deltas (the base
-        // read merged them); untouched buckets keep theirs
-        keyCols = prev.flatMap(_.keyCols).orElse(Some(idCols)),
-        opColName = prev.flatMap(_.opColName).orElse(Some(opCol)),
-        deltas = remainingDeltas,
-        condOrderCols = metaOrd,
-        deltasConditional = remainingDeltas.nonEmpty &&
-          prev.exists(_.deltasConditional),
-        tombstoneMins = newMins,
-        tombstoneMinCols = if (metaOrd.nonEmpty) None
-          else prev.flatMap(_.tombstoneMinCols)), prev,
-      cur.map(_._2), forbidFrozen = !bypassFreeze, kind = kind,
-      flipPointer = !prepareOnly)
-    Some(nextV)
   }
 
   // ------------------------------------------- incremental view (IVM)

@@ -72,36 +72,66 @@ object SecondaryIndex {
 
   private val CursorFile = "_applied_primary_version"
 
-  /** Run one independent commit per index spec as CONCURRENT Spark
-    * jobs when there is more than one (guide §2.6) — index stores are
-    * distinct dirs, each commit its own staging + lock, and every
-    * caller's crash-recovery argument is per-index (a replay converges
-    * ANY subset of already-committed indexes; nothing requires the
-    * commits to land in spec order). Single-spec calls stay inline —
-    * no pool churn on the common path. On failure the surviving
-    * threads are cancelled and awaited before the rethrow, so no index
-    * commit outlives the call.
+  /** Seconds a failed concurrent commit waits for its siblings to
+    * unwind after their Spark jobs are cancelled.
     */
-  private def eachConcurrently(specs: Seq[IndexSpec])(
-      commit: IndexSpec => Unit): Unit =
-    if (specs.size <= 1) specs.foreach(commit)
+  private val DrainTimeoutSec = 120L
+
+  /** Run independent commit tasks — one per index store, plus the
+    * primary's stage — as CONCURRENT Spark jobs (guide §2.6). Every
+    * task writes its own store's staging dir under its own commit
+    * lock, and every caller's crash-recovery argument is per store (a
+    * replay converges ANY subset of already-committed indexes; nothing
+    * requires the commits to land in order). A single task runs
+    * inline — no pool churn on the common path.
+    *
+    * Each task runs under its own Spark job group. The first failure —
+    * or an interrupt of the calling thread, e.g. a stopping stream —
+    * cancels every task's group, running and future jobs alike, with
+    * `interruptOnCancel` so running tasks stop; tasks not yet started
+    * never start. The call then waits for every thread to unwind and
+    * rethrows the first failure, so no commit outlives it; a drain
+    * that times out throws instead of leaving work running unseen.
+    * Driver threads are not interrupted: a commit thread inside
+    * [[CdcStream]]'s metadata-only publish finishes it.
+    */
+  private def runConcurrently(spark: SparkSession,
+      tasks: Seq[() => Unit]): Unit =
+    if (tasks.size <= 1) tasks.foreach(_())
     else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(math.min(4, specs.size))
-      try {
-        val fs = specs.map(sp =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = commit(sp)
-          }))
-        try fs.foreach(_.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            pool.shutdownNow()
-            pool.awaitTermination(60,
-              java.util.concurrent.TimeUnit.SECONDS)
-            throw e.getCause
-        }
-      } finally { pool.shutdown(); () }
+      import java.util.concurrent._
+      val sc = spark.sparkContext
+      val groups = tasks.indices.map(i =>
+        s"graft-commit-${java.util.UUID.randomUUID()}-$i")
+      // threads are created per call, so each inherits the caller's
+      // Spark local properties (streaming batch id, SQL execution id)
+      val pool = Executors.newFixedThreadPool(math.min(4, tasks.size))
+      val done = new ExecutorCompletionService[Unit](pool)
+      val fs = tasks.zip(groups).map { case (t, g) =>
+        done.submit(new Callable[Unit] {
+          def call(): Unit = {
+            // the inherited description keeps the jobs' attribution
+            sc.setJobGroup(g, sc.getLocalProperty("spark.job.description"),
+              interruptOnCancel = true)
+            try t() finally sc.clearJobGroup()
+          }
+        })
+      }
+      try tasks.foreach(_ => done.take().get())
+      catch {
+        case e @ (_: ExecutionException | _: InterruptedException) =>
+          groups.foreach(g => sc.cancelJobGroupAndFutureJobs(g))
+          fs.foreach(_.cancel(false))
+          pool.shutdown()
+          if (!pool.awaitTermination(DrainTimeoutSec, TimeUnit.SECONDS))
+            throw new IllegalStateException(
+              s"concurrent commit tasks did not drain within " +
+                s"${DrainTimeoutSec}s after a failure", e)
+          e match {
+            case ee: ExecutionException => throw ee.getCause
+            case ie => throw ie
+          }
+      } finally pool.shutdown()
     }
 
   /** The primary version this index store reflects (None: never
@@ -149,24 +179,6 @@ object SecondaryIndex {
           "(Range), or rebuild via buildIndex")
     }
 
-  /** Apply one CDC micro-batch to the primary replica AND keep the
-    * value index synchronized. `idxExpr` derives the indexed value
-    * from a row's stored columns (must be deterministic); `idxName`
-    * is the index key column; `orderColNames` must name stored batch
-    * columns (they order the index merge exactly like the primary's).
-    */
-  /** @param deferIndexMerge apply the index's own merge as a
-    *   MERGE-ON-READ deferred commit (`CdcStream.applyBatchToReplica
-    *   (deferMerge)`): the index batch is delta-sized by construction,
-    *   so appending it as per-bucket delta files — one write job, no
-    *   index-bucket rewrite — is the natural shape; lookups fold the
-    *   deltas, and index compaction runs at whatever cadence the store
-    *   owner picks. `deferPrimaryMerge` defers the primary's merge the
-    *   same way — safe because the old-value read resolves against the
-    *   pre-commit FOLD (key-pruned reads fold pending deltas), so
-    *   stale-pointer detection sees exactly the state an eager merge
-    *   would have stored.
-    */
   /** One secondary index's definition for the multi-index apply:
     * where it lives, the indexed expression over batch/primary
     * columns, its stored column name, optional covering projection,
@@ -179,6 +191,26 @@ object SecondaryIndex {
       includeCols: Seq[String] = Nil,
       defer: Boolean = false)
 
+  /** Apply one CDC micro-batch to the primary replica AND keep the
+    * value index synchronized. `idxExpr` derives the indexed value
+    * from a row's stored columns (must be deterministic); `idxName`
+    * is the index key column; `orderColNames` must name stored batch
+    * columns (they order the batch's per-key reduce exactly like the
+    * primary's merge). The single-index form of
+    * [[applyBatchWithIndexes]].
+    *
+    * @param deferIndexMerge apply the index's own merge as a
+    *   MERGE-ON-READ deferred commit (`CdcStream.applyBatchToReplica
+    *   (deferMerge)`): the index batch is delta-sized by construction,
+    *   so appending it as per-bucket delta files — one write job, no
+    *   index-bucket rewrite — is the natural shape; lookups fold the
+    *   deltas, and index compaction runs at whatever cadence the store
+    *   owner picks. `deferPrimaryMerge` defers the primary's merge the
+    *   same way — safe because the old-value read resolves against the
+    *   pre-commit FOLD (key-pruned reads fold pending deltas), so
+    *   stale-pointer detection sees exactly the state an eager merge
+    *   would have stored.
+    */
   def applyBatchWithIndex(
       spark: SparkSession,
       primaryDir: String,
@@ -204,16 +236,34 @@ object SecondaryIndex {
 
   /** N-index maintenance — the real deployment shape (a store rarely
     * stops at one GSI). ONE key-pruned old-value read serves every
-    * index (the touched keys' current rows are materialized once, each
-    * index derives its old value from them), and ALL index commits
-    * land before the primary's: a crash anywhere in the commit phase
-    * leaves some subset of the indexes ahead by one batch (the
-    * commits run concurrently — r16), and the replay — whose
-    * old-value read still sees the unmerged primary — recomputes
-    * identical delete/upsert sets for every index, so
-    * already-committed indexes re-apply idempotent content and the
-    * rest catch up. (Primary-first would be unrecoverable for every
-    * index at once; see the ordering note below.)
+    * index, and ALL index commits land before the primary's: a crash
+    * anywhere in the commit phase leaves some subset of the indexes
+    * ahead by one batch, and the replay — whose old-value read still
+    * sees the unmerged primary — recomputes identical delete/upsert
+    * sets for every index, so already-committed indexes re-apply
+    * idempotent content and the rest catch up. (Primary-first would be
+    * unrecoverable for every index at once; see the ordering note
+    * below.)
+    *
+    * Commit shape (eager primary):
+    *  1. the batch is reduced to its last op per key and written once
+    *     into the primary's staging dir ([[CdcStream.routeNet]]); the
+    *     write records the buckets it touches, so no driver `collect`
+    *     runs;
+    *  2. the touched keys' OLD rows are read, pruned to those buckets,
+    *     and paired with the net — each index's old value as one
+    *     column ([[withOldValues]]) — in one materialization;
+    *  3. CONCURRENTLY: every index commits its delta (at most one row
+    *     per (value, key), so it routes without a per-key window), and
+    *     the primary STAGES its merge — every Spark job, nothing
+    *     published;
+    *  4. once every index has published, the cursors are pre-stamped
+    *     and the primary publishes from the calling thread (metadata
+    *     only; the net's files become its feed entry).
+    * With two eager indexes and a change feed that is 13 Spark jobs
+    * (`SecondaryIndexSpec` guards the count). A failed step cancels
+    * the concurrent jobs and deletes the primary's staging dir; a
+    * crashed writer's staging dir is debris the next commits sweep.
     *
     * `conditionalOrder` composes GSI maintenance with the ORDER-
     * CONDITIONAL merge (out-of-order batches: replays, backfills,
@@ -259,167 +309,163 @@ object SecondaryIndex {
     specs.foreach(sp => checkCursor(primaryDir, sp.dir,
       expectedAt = curV, redoAt = curV + 1, op = "applyBatchWithIndexes"))
     val orderCols = orderColNames.map(col)
-    // materialize the per-key net ONCE: the old-value read, the primary
-    // merge, and every index batch derive from it — each would
-    // otherwise recompute the whole batch window per action
-    val (net, dropNet) = graft.llm.IndexArtifacts.materializeOwned(spark,
-      CdcStream.lastOpPerKey(batch, idCols, orderCols), "gsi-net")
-    // OLD rows for exactly the touched keys (key-pruned read, O(batch
-    // keys)) — read BEFORE the primary merge overwrites them, and
-    // materialized once so N indexes don't re-run the pruned read.
-    // Under conditionalOrder the read KEEPS tombstones: their recorded
-    // order values must join the winner compare below, or a losing
-    // late update on a dead key would look like a fresh insert.
-    val touchedKeys = net.select(idCols.map(col): _*).distinct()
-    val pruned: Option[DataFrame] =
-      if (conditionalOrder)
-        CdcStream.readReplicaForKeysWithTombstones(spark, primaryDir,
-          idCols, touchedKeys)
-      else
-        CdcStream.readReplicaForKeys(spark, primaryDir, idCols,
-          touchedKeys)
-    // arrival-order mode: materialize the old rows once when several
-    // indexes will read them (conditionalOrder materializes the fused
-    // compare artifact below instead — r15)
-    val oldMat: Option[(DataFrame, () => Unit)] =
-      if (conditionalOrder) None
-      else pruned.map { o =>
-        if (specs.size > 1)
-          graft.llm.IndexArtifacts.materializeOwned(spark, o, "gsi-old")
-        else (o, () => ())
-      }
-    // the rows whose arrival CHANGES the post-state — everything, in
-    // arrival-order mode; under conditionalOrder only the net rows that
-    // win the merge's exact order compare (greatest order tuple across
-    // {stored live row | tombstone, incoming}, incoming wins exact
-    // ties — the same window the eager merge runs). Losing rows leave
-    // every index untouched. oldLive is the live pre-state the
-    // stale-delete derivation reads old values from.
-    //
-    // ONE fused materialization (r15): the windowed (stored ∪ net)
-    // table carries BOTH consumers' rows — the winner set (incoming
-    // rows with rank 1) and the live pre-state (stored, non-tombstone
-    // rows) — so the old separate `gsi-old` + `gsi-cond-net` writes
-    // (two jobs, the pruned read paid twice) collapse into one write.
-    // oldLive casts back to the pruned read's exact column types: the
-    // union may have widened a column (type coercion), and the
-    // stale-delete derivation must see the store's own types.
-    val (effNet, dropEff, oldLive) =
-      if (!conditionalOrder)
-        (net, () => (), oldMat.map(_._1))
-      else pruned match {
-        case None => (net, () => (), None) // fresh store: all rows win
-        case Some(o) =>
-          val ts = CdcStream.Tombstone
-          val oCols = o.columns.filterNot(_ == ts).toSeq
-          val oTypes = o.schema.fields.map(f => f.name -> f.dataType).toMap
-          val stored = o
-            .withColumn(opCol, when(col(ts), "delete").otherwise("update"))
-            .drop(ts)
-            .withColumn("__incoming", lit(0))
-          val all = stored.unionByName(
-            net.withColumn("__incoming", lit(1)),
-            allowMissingColumns = true)
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(idCols.map(col): _*)
-            .orderBy((orderColNames.map(c => col(c).desc) :+
-              col("__incoming").desc): _*)
-          val (allM, drop) = graft.llm.IndexArtifacts.materializeOwned(
-            spark, all.withColumn("__rn", row_number().over(w)),
-            "gsi-cond-all")
-          val winners = allM
-            .filter(col("__rn") === 1 && col("__incoming") === 1)
-            .select(net.columns.toSeq.map(col): _*)
-          val live = allM
-            .filter(col("__incoming") === 0 && col(opCol) =!= "delete")
-            .select(oCols.map(c => col(c).cast(oTypes(c)).as(c)): _*)
-          (winners, drop, Some(live))
-      }
+    val conditional = if (conditionalOrder) Some(orderCols) else None
+    // the ROUTED net serves every consumer: the old-value read, the
+    // primary merge, and every index batch derive from it. A batch the
+    // primary's schema contract refuses fails here, before any store
+    // commits.
+    val primary = CdcStream.routeNet(primaryDir, batch, batch.columns,
+      idCols, opCol, numBuckets, watermark, recordChanges, conditional,
+      reduceBy = Some(orderCols), defer = deferPrimaryMerge)
     try {
-      // INDEXES COMMIT FIRST. A crash during the commits then leaves
-      // a SUBSET of indexes AHEAD by one batch — the replay recomputes
-      // the SAME dels/ups from the still-unmerged primary and each
-      // index re-apply converges (idempotent content); the recovery
-      // argument is per-index, so the commits need no mutual order and
-      // run as CONCURRENT Spark jobs (guide §2.6, r16 — distinct
-      // stores, each its own staging + commit lock; cursor stamps
-      // still happen only after ALL commits land, below).
-      // Committing the primary first would be the unrecoverable
-      // order: the replay's old-value read would run against the
-      // already-merged primary, see old == new, compute an EMPTY
-      // stale-delete set, and the pre-batch (old value, key) entries
-      // would accrete forever — read-repair hides them from
-      // [[lookupByIndex]], but [[lookupCovered]] would serve them.
-      // Forward entries in the crash window are the benign
-      // direction: the verified lookup drops them (no primary row to
-      // confirm against) and the replay erases the window.
-      eachConcurrently(specs) { sp =>
-        val oldIdx = oldLive.map { o =>
-          o.select(idCols.map(col) :+ sp.expr.as("__old_idx"): _*)
-        }
-        CdcStream.applyBatchToReplica(sp.dir,
-          indexDelta(effNet, oldIdx, sp, idCols, orderColNames, opCol),
-          idCols = sp.name +: idCols, orderCols = orderCols, opCol = opCol,
-          bucketCols = Some(Seq(sp.name)), deferMerge = sp.defer)
+      if (primary.touched.nonEmpty) {
+        // OLD rows for exactly the touched keys (key-pruned read, O(batch
+        // keys)) — read BEFORE the primary merge overwrites them. Under
+        // conditionalOrder the read KEEPS tombstones: their recorded
+        // order values must join the winner compare, or a losing late
+        // update on a dead key would look like a fresh insert.
+        val pairs = withOldValues(primary.net,
+          CdcStream.readCommitKeys(spark, primary,
+            keepDeletes = conditionalOrder),
+          specs, idCols, orderColNames, conditionalOrder)
+        // INDEXES COMMIT FIRST. A crash during the commits then leaves
+        // a SUBSET of indexes AHEAD by one batch — the replay recomputes
+        // the SAME dels/ups from the still-unmerged primary and each
+        // index re-apply converges (idempotent content); the recovery
+        // argument is per-index, so the commits need no mutual order.
+        // The primary's stage runs beside them: it publishes nothing, so
+        // the index-first order holds. Committing the primary first would
+        // be the unrecoverable order: the replay's old-value read would
+        // run against the already-merged primary, see old == new, compute
+        // an EMPTY stale-delete set, and the pre-batch (old value, key)
+        // entries would accrete forever — read-repair hides them from
+        // [[lookupByIndex]], but [[lookupCovered]] would serve them.
+        // Forward entries in the crash window are the benign direction:
+        // the verified lookup drops them (no primary row to confirm
+        // against) and the replay erases the window.
+        commitIndexes(spark, pairs, specs, idCols, orderColNames, opCol,
+          alongside = if (deferPrimaryMerge) Nil else Seq(() => primary.stage()))
+        // cursor: pre-stamp the version the primary commit below will
+        // create — a crash between here and that commit leaves the
+        // cursor one AHEAD, the redo window the entry check allows
+        specs.foreach(sp => recordAppliedPrimaryVersion(sp.dir, curV + 1))
+        // the primary may defer: the old-value read above already
+        // resolved against the pre-commit fold, and the NEXT batch's
+        // old-value read folds this commit's delta like any reader
+        if (deferPrimaryMerge)
+          CdcStream.applyNetToReplica(primaryDir, primary.net,
+            primary.net.columns, idCols, opCol, numBuckets = numBuckets,
+            watermark = watermark, recordChanges = recordChanges,
+            conditional = conditional, defer = true)
+        else primary.publish()
       }
-      // cursor: pre-stamp the version the primary commit below will
-      // create — a crash between here and that commit leaves the
-      // cursor one AHEAD, the redo window the entry check allows
-      specs.foreach(sp => recordAppliedPrimaryVersion(sp.dir, curV + 1))
-      // the net IS the batch's last-op-per-key AND already
-      // materialized — commit it through the direct net entry point,
-      // skipping applyBatchToReplica's redundant per-key window and
-      // its re-materialization of an identical copy (one write job per
-      // batch saved — r15). The primary may defer too: the old-value
-      // read above already resolved against the pre-commit fold, and
-      // the NEXT batch's old-value read folds this commit's delta like
-      // any reader.
-      CdcStream.applyNetToReplica(primaryDir, net, net.columns, idCols,
-        opCol, numBuckets = numBuckets, watermark = watermark,
-        recordChanges = recordChanges,
-        conditional = if (conditionalOrder) Some(orderCols) else None,
-        defer = deferPrimaryMerge)
       // re-stamp with the primary's ACTUAL current version: fixes the
-      // pre-stamp after a net-empty batch (no commit happened) and
-      // after an interleaved maintenance commit took the pre-stamped
-      // number (the cursor must point at real, reconcilable state)
+      // pre-stamp after an interleaved maintenance commit took the
+      // pre-stamped number, and stamps a net-empty batch (nothing
+      // committed anywhere) at the current version — the cursor must
+      // point at real, reconcilable state
       val landed = CdcStream.replicaCurrentVersion(primaryDir).getOrElse(0L)
       specs.foreach(sp => recordAppliedPrimaryVersion(sp.dir, landed))
-    } finally {
-      dropEff()
-      oldMat.foreach(_._2())
-      dropNet()
+    } finally primary.abort()
+  }
+
+  /** The net's rows, each paired with every index's OLD value — the
+    * indexed expression over the key's stored live row, as column
+    * `__old_<i>` for `specs(i)` (null: no live stored row). `old` holds
+    * the stored rows of the net's keys (None: nothing stored, e.g. a
+    * fresh store). One window per key over (stored ∪ net) does the
+    * pairing. Under `conditional` it also keeps only the net rows
+    * whose arrival CHANGES the post-state: those that win the merge's
+    * exact order compare (greatest order tuple across {stored live row
+    * | tombstone, incoming}, incoming wins exact ties — the same window
+    * the eager merge runs); losing rows leave every index untouched.
+    */
+  private def withOldValues(net: DataFrame, old: Option[DataFrame],
+      specs: Seq[IndexSpec], idCols: Seq[String], orderColNames: Seq[String],
+      conditional: Boolean): DataFrame = {
+    val olds = specs.indices.map(i => s"__old_$i")
+    old match {
+      case None =>
+        net.select(net.columns.toSeq.map(col) ++
+          specs.zip(olds).map { case (sp, o) =>
+            lit(null).cast(net.select(sp.expr).schema.head.dataType).as(o)
+          }: _*)
+      case Some(o) =>
+        // the old values derive from the stored rows' OWN types, before
+        // the union can widen a column
+        val live = if (conditional) !col(CdcStream.Tombstone) else lit(true)
+        val stored = o.select(idCols.map(col) ++
+          (if (conditional) orderColNames.map(col) else Nil) ++
+          specs.zip(olds).map { case (sp, n) => when(live, sp.expr).as(n) } :+
+          lit(0).as("__incoming"): _*)
+        val all = stored.unionByName(net.withColumn("__incoming", lit(1)),
+          allowMissingColumns = true)
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(idCols.map(col): _*)
+          .orderBy(((if (conditional) orderColNames.map(c => col(c).desc)
+            else Nil) :+ col("__incoming").desc): _*)
+        val whole = w.rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.unboundedFollowing)
+        all
+          .select(all.columns.toSeq.filterNot(olds.contains).map(col) ++
+            olds.map(n => first(col(n), ignoreNulls = true).over(whole).as(n)) :+
+            row_number().over(w).as("__rn"): _*)
+          .filter(col("__rn") === 1 && col("__incoming") === 1)
+          .select((net.columns.toSeq ++ olds).map(col): _*)
     }
   }
 
-  /** One index's delete/upsert batch for a per-key net: a DELETE of
-    * `(old value, key)` wherever the key's indexed value moved or the
-    * key died (stale-pointer removal), an UPSERT of `(new value, key)`
-    * for every surviving key. `oldIdx` carries the touched keys' OLD
-    * indexed values (absent = nothing stored, e.g. a fresh store).
-    * includeCols makes the index COVERING (the DynamoDB projected-
-    * attributes shape): the listed batch columns are stored in the
-    * index entry, so [[lookupCovered]] answers from the index alone.
+  /** One index's delete/upsert batch from [[withOldValues]]' rows: a
+    * DELETE of `(old value, key)` wherever the key's indexed value
+    * moved or the key died (stale-pointer removal), an UPSERT of `(new
+    * value, key)` for every surviving key. The net holds one row per
+    * key, so the batch holds at most one row per `(value, key)` — a
+    * delete is only emitted when old ≠ new — and commits without a
+    * per-key window. includeCols makes the index COVERING (the
+    * DynamoDB projected-attributes shape): the listed batch columns
+    * are stored in the index entry, so [[lookupCovered]] answers from
+    * the index alone.
     */
-  private def indexDelta(net: DataFrame, oldIdx: Option[DataFrame],
-      sp: IndexSpec, idCols: Seq[String], orderColNames: Seq[String],
+  private def indexDelta(rows: DataFrame, i: Int, sp: IndexSpec,
+      idCols: Seq[String], orderColNames: Seq[String],
       opCol: String): DataFrame = {
-    val n = net.withColumn("__new_idx",
-      when(col(opCol) =!= "delete", sp.expr))
-    val j = oldIdx match {
-      case Some(o) => n.join(o, idCols, "left")
-      case None => n.withColumn("__old_idx", lit(null).cast(
-        n.select(sp.expr).schema.head.dataType))
-    }
+    val j = rows.withColumn("__new_idx", when(col(opCol) =!= "delete", sp.expr))
+    val oldIdx = col(s"__old_$i")
     val carry = (idCols ++ orderColNames ++ sp.includeCols).distinct
-    val dels = j.filter(col("__old_idx").isNotNull &&
-        (col("__new_idx").isNull || col("__new_idx") =!= col("__old_idx")))
-      .select((col("__old_idx").as(sp.name) +: carry.map(col)) :+
+    val dels = j.filter(oldIdx.isNotNull &&
+        (col("__new_idx").isNull || col("__new_idx") =!= oldIdx))
+      .select((oldIdx.as(sp.name) +: carry.map(col)) :+
         lit("delete").as(opCol): _*)
     val ups = j.filter(col("__new_idx").isNotNull)
       .select((col("__new_idx").as(sp.name) +: carry.map(col)) :+
         lit("update").as(opCol): _*)
     dels.unionByName(ups)
+  }
+
+  /** Commit every index's delta batch ([[indexDelta]] over `pairs`,
+    * from [[withOldValues]]): value-routed (`bucketCols = [name]`),
+    * eager or deferred per spec, CONCURRENTLY beside the `alongside`
+    * tasks ([[runConcurrently]]). `pairs` is materialized once when
+    * several indexes read it; `after` runs once an index's commit has
+    * landed.
+    */
+  private def commitIndexes(spark: SparkSession, pairs: DataFrame,
+      specs: Seq[IndexSpec], idCols: Seq[String], orderColNames: Seq[String],
+      opCol: String, alongside: Seq[() => Unit] = Nil,
+      after: IndexSpec => Unit = _ => ()): Unit = {
+    val (rows, drop) =
+      if (specs.size > 1)
+        graft.llm.IndexArtifacts.materializeTyped(spark, pairs, "gsi-net-old")
+      else (pairs, () => ())
+    try runConcurrently(spark, specs.zipWithIndex.map { case (sp, i) => () =>
+      val delta = indexDelta(rows, i, sp, idCols, orderColNames, opCol)
+      CdcStream.applyNetToReplica(sp.dir, delta, delta.columns,
+        sp.name +: idCols, opCol, CdcStream.DefaultReplicaBuckets,
+        bucketCols = Some(Seq(sp.name)), defer = sp.defer)
+      after(sp)
+    } ++ alongside)
+    finally drop()
   }
 
   /** FEED-DRIVEN index maintenance: catch index(es) up by replaying
@@ -473,34 +519,22 @@ object SecondaryIndex {
       throw new IllegalStateException(
         s"maintainIndexesFromFeed: version $version of $primaryDir " +
           "recorded no changes — rebuild via buildIndex instead"))
-    val orderCols = orderColNames.map(col)
     val (net, dropNet) = graft.llm.IndexArtifacts.materializeOwned(spark,
       feed.drop("_commit_version", "_commit_watermark"), "gsi-feed-net")
     try {
       val keys = net.select(idCols.map(col): _*).distinct()
-      val oldMat: Option[(DataFrame, () => Unit)] =
-        CdcStream.readReplicaForKeysAt(spark, primaryDir, version - 1,
-            idCols, keys)
-          .map { o =>
-            if (specs.size > 1)
-              graft.llm.IndexArtifacts.materializeOwned(spark, o, "gsi-feed-old")
-            else (o, () => ())
-          }
       // concurrent per-index commits (r16): each index stamps right
       // after ITS OWN commit, so a crash mid-way leaves applied
       // indexes at `version` (redo-allowed) and unapplied ones at
       // `version - 1` (catch up) — exactly the serial loop's states,
       // just reachable in any subset order
-      try eachConcurrently(specs) { sp =>
-        val oldIdx = oldMat.map { case (o, _) =>
-          o.select(idCols.map(col) :+ sp.expr.as("__old_idx"): _*)
-        }
-        CdcStream.applyBatchToReplica(sp.dir,
-          indexDelta(net, oldIdx, sp, idCols, orderColNames, opCol),
-          idCols = sp.name +: idCols, orderCols = orderCols, opCol = opCol,
-          bucketCols = Some(Seq(sp.name)), deferMerge = sp.defer)
-        recordAppliedPrimaryVersion(sp.dir, version)
-      } finally oldMat.foreach(_._2())
+      commitIndexes(spark,
+        withOldValues(net,
+          CdcStream.readReplicaForKeysAt(spark, primaryDir, version - 1,
+            idCols, keys),
+          specs, idCols, orderColNames, conditional = false),
+        specs, idCols, orderColNames, opCol,
+        after = sp => recordAppliedPrimaryVersion(sp.dir, version))
     } finally dropNet()
   }
 
@@ -575,29 +609,16 @@ object SecondaryIndex {
             .drop("_commit_version", "_commit_watermark"), "gsi-range-net")
         try {
           val keys = net.select(idCols.map(col): _*).distinct()
-          val oldMat: Option[(DataFrame, () => Unit)] =
-            (if (fromVersionExclusive == 0) None
-             else CdcStream.readReplicaForKeysAt(spark, primaryDir,
-               fromVersionExclusive, idCols, keys))
-              .map { o =>
-                if (specs.size > 1)
-                  graft.llm.IndexArtifacts.materializeOwned(spark, o,
-                    "gsi-range-old")
-                else (o, () => ())
-              }
           // same concurrent shape as the single-version replay: each
           // index stamps after its own commit (r16)
-          try eachConcurrently(specs) { sp =>
-            val oldIdx = oldMat.map { case (o, _) =>
-              o.select(idCols.map(col) :+ sp.expr.as("__old_idx"): _*)
-            }
-            CdcStream.applyBatchToReplica(sp.dir,
-              indexDelta(net, oldIdx, sp, idCols, orderColNames, opCol),
-              idCols = sp.name +: idCols, orderCols = orderCols,
-              opCol = opCol, bucketCols = Some(Seq(sp.name)),
-              deferMerge = sp.defer)
-            recordAppliedPrimaryVersion(sp.dir, toVersion)
-          } finally oldMat.foreach(_._2())
+          commitIndexes(spark,
+            withOldValues(net,
+              if (fromVersionExclusive == 0) None
+              else CdcStream.readReplicaForKeysAt(spark, primaryDir,
+                fromVersionExclusive, idCols, keys),
+              specs, idCols, orderColNames, conditional = false),
+            specs, idCols, orderColNames, opCol,
+            after = sp => recordAppliedPrimaryVersion(sp.dir, toVersion))
         } finally dropNet()
     }
   }

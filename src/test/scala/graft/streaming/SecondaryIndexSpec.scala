@@ -631,4 +631,284 @@ class SecondaryIndexSpec extends SparkSuite {
     assert(liveIndex(ix) == Seq(("oslo", 1L), ("oslo", 2L)),
       "conditional crash replay left stale or phantom index entries")
   }
+
+  // ------------------------------------------ routed, concurrent commit
+
+  // (id, grp, score, seq, op) — two indexed columns, for the 2-GSI shape
+  private def wide(rows: Seq[(Long, Long, Long, Long, String)]) =
+    rows.toDF("id", "grp", "score", "seq", "op")
+
+  private def twoSpecs(root: String) = Seq(
+    SecondaryIndex.IndexSpec(s"$root/i1", col("grp"), "grp"),
+    SecondaryIndex.IndexSpec(s"$root/i2", col("score"), "score"))
+
+  private def applyTwo(root: String, batch: org.apache.spark.sql.DataFrame,
+      recordChanges: Boolean = false): Unit =
+    SecondaryIndex.applyBatchWithIndexes(spark, s"$root/p", twoSpecs(root),
+      batch, Seq("id"), Seq("seq"), recordChanges = recordChanges)
+
+  /** Live `(value, id)` entries of an index store on column `c`. */
+  private def entries(dir: String, c: String): Seq[(Long, Long)] =
+    CdcStream.readReplica(spark, dir).map(_.select(col(c).cast("long"), $"id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted)
+      .getOrElse(Nil)
+
+  /** Fold of `(id, grp, score, seq, op)` batches: id -> (grp, score). */
+  private def fold(batches: Seq[Seq[(Long, Long, Long, Long, String)]])
+      : Map[Long, (Long, Long)] =
+    batches.flatten.groupBy(_._1).flatMap { case (id, rs) =>
+      val last = rs.maxBy(_._4)
+      if (last._5 == "delete") None else Some(id -> (last._2, last._3))
+    }
+
+  private def stagingDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir).list()).getOrElse(Array.empty[String])
+      .filter(_.startsWith(".staging-")).toSeq
+
+  /** Spark jobs run by `body`, counted by a listener between two drains
+    * of the listener bus.
+    */
+  private def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  private def rows(seed: Long, n: Int) = (0 until n).map { i =>
+    val id = (i * 7919L + seed * 31L) % 2000L
+    (id, id % 64, (id * 13 + seed) % 1000, seed * 10000L + i,
+      if (i % 10 == 0) "delete" else "update")
+  }
+
+  test("job budget: an eager commit with two GSIs and a change feed runs " +
+      "at most 13 Spark jobs; a plain eager commit at most 4") {
+    // measured: 13 jobs for the indexed commit (2 route the net, 3 pair
+    // the old values, 1 routes each index's delta, 2 merge each store)
+    // against 35 before the routed commit; 4 for the plain commit (2
+    // route, 2 merge) against 8. A wall-time creep hides in noise; a
+    // job count does not.
+    val root = freshDir()
+    applyTwo(root, wide(rows(1, 700)), recordChanges = true) // warm
+    val indexed = countJobs(
+      applyTwo(root, wide(rows(2, 700)), recordChanges = true))
+    assert(indexed <= 13, s"indexed eager commit ran $indexed jobs")
+    val expect = fold(Seq(rows(1, 700), rows(2, 700)))
+    assert(entries(s"$root/i1", "grp") ==
+      expect.toSeq.map { case (id, (g, _)) => (g, id) }.sorted)
+    val plainDir = s"$root/plain"
+    CdcStream.applyBatchToReplica(plainDir, wide(rows(1, 700)), Seq("id"),
+      Seq(col("seq")), recordChanges = true)
+    val plain = countJobs(CdcStream.applyBatchToReplica(plainDir,
+      wide(rows(2, 700)), Seq("id"), Seq(col("seq")), recordChanges = true))
+    assert(plain <= 4, s"plain eager commit ran $plain jobs")
+  }
+
+  test("an int-keyed batch into a long-keyed indexed store routes by the " +
+      "store's type: primary, GSIs and pruned reads match the fold") {
+    val root = freshDir()
+    val b1 = Seq((1L, 3L, 30L, 1L, "update"), (2L, 4L, 40L, 1L, "update"),
+      (3L, 3L, 50L, 1L, "update"))
+    applyTwo(root, wide(b1))
+    // the same keys arrive as INT: hash(5: int) != hash(5L: long), so an
+    // uncast net would route them to other buckets than their rows
+    val b2 = Seq((1L, 4L, 31L, 2L, "update"), (3L, 3L, 50L, 2L, "delete"),
+      (4L, 3L, 60L, 2L, "update"))
+    applyTwo(root, wide(b2).withColumn("id", col("id").cast("int"))
+      .withColumn("grp", col("grp").cast("int")))
+    val expect = fold(Seq(b1, b2))
+    val primary = CdcStream.readReplica(spark, s"$root/p").get
+    assert(primary.schema("id").dataType == org.apache.spark.sql.types.LongType)
+    assert(primary.select($"id", $"grp", $"score").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == expect)
+    assert(entries(s"$root/i1", "grp") ==
+      expect.toSeq.map { case (id, (g, _)) => (g, id) }.sorted)
+    assert(entries(s"$root/i2", "score") ==
+      expect.toSeq.map { case (id, (_, sc)) => (sc, id) }.sorted)
+    // each key lives in exactly one bucket: the pruned read finds all
+    expect.keys.foreach { k =>
+      assert(CdcStream.readReplicaForKeys(spark, s"$root/p", Seq("id"),
+        Seq(k).toDF("id")).get.count() == 1L, s"key $k")
+    }
+    assert(SecondaryIndex.lookupByIndex(spark, s"$root/p", s"$root/i1",
+      Seq("id"), col("grp"), "grp", Seq(3L).toDF("grp"))
+      .select($"id").as[Long].collect().sorted.toSeq == Seq(4L))
+  }
+
+  test("a batch with zero net rows commits nothing and re-stamps the " +
+      "cursors at the primary's current version") {
+    val root = freshDir()
+    applyTwo(root, wide(Seq((1L, 3L, 30L, 1L, "update"))))
+    val empty = wide(Seq((9L, 0L, 0L, 0L, "update"))).limit(0)
+    assert(CdcStream.applyBatchToReplica(s"$root/p", empty, Seq("id"),
+      Seq(col("seq"))).isEmpty)
+    // a crash-redo cursor one ahead must come back to the real version
+    twoSpecs(root).foreach(sp => java.nio.file.Files.write(
+      java.nio.file.Paths.get(sp.dir, "_applied_primary_version"),
+      "2".getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    applyTwo(root, empty)
+    assert(CdcStream.replicaVersions(s"$root/p") == Seq(1L))
+    twoSpecs(root).foreach { sp =>
+      assert(CdcStream.replicaVersions(sp.dir) == Seq(1L))
+      assert(SecondaryIndex.appliedPrimaryVersion(sp.dir).contains(1L))
+    }
+    assert(stagingDirs(s"$root/p").isEmpty)
+  }
+
+  test("a batch that widens a routing column refuses before any store " +
+      "commits and leaves no staging behind") {
+    val root = freshDir()
+    val b1 = Seq((1L, 3L, 30L, 1L, "update"))
+    applyTwo(root, wide(b1).withColumn("id", col("id").cast("int")))
+    val e = intercept[IllegalArgumentException] {
+      applyTwo(root, wide(Seq((1L, 4L, 31L, 2L, "update"))))
+    }
+    assert(e.getMessage.contains("batch changes ROUTING column 'id' from " +
+      "int to bigint"), e.getMessage)
+    (s"$root/p" +: twoSpecs(root).map(_.dir)).foreach { d =>
+      assert(CdcStream.replicaVersions(d) == Seq(1L), d)
+      assert(stagingDirs(d).isEmpty, d)
+    }
+  }
+
+  test("a failure in the primary's stage after both GSIs committed: the " +
+      "replay converges and the next commit sweeps a crashed writer's " +
+      "staging debris") {
+    val root = freshDir()
+    val b1 = Seq((1L, 3L, 30L, 1L, "update"), (2L, 4L, 40L, 1L, "update"))
+    applyTwo(root, wide(b1), recordChanges = true)
+    val b2 = Seq((1L, 5L, 30L, 2L, "update"), (2L, 4L, 40L, 2L, "delete"),
+      (3L, 6L, 60L, 2L, "update"))
+    val primary = new java.io.File(s"$root/p").getCanonicalPath
+    CdcStream.stageTestHook = dir =>
+      if (new java.io.File(dir).getCanonicalPath == primary) {
+        // both index commits land first: the stage runs beside them
+        val deadline = System.currentTimeMillis() + 60000
+        while (twoSpecs(root).exists(sp =>
+            !CdcStream.replicaCurrentVersion(sp.dir).contains(2L)) &&
+            System.currentTimeMillis() < deadline) Thread.sleep(20)
+        // a crashed writer's staging dir, an hour stale
+        val debris = new java.io.File(primary, ".staging-crashed")
+        new java.io.File(debris, "data").mkdirs()
+        val old = System.currentTimeMillis() - 2 * 3600L * 1000
+        Seq(new java.io.File(debris, "data"), debris).foreach(_.setLastModified(old))
+        throw new IllegalStateException("injected stage failure")
+      }
+    try {
+      val e = intercept[IllegalStateException](
+        applyTwo(root, wide(b2), recordChanges = true))
+      assert(e.getMessage == "injected stage failure")
+    } finally CdcStream.stageTestHook = _ => ()
+    // index-first window: both indexes ahead, the primary not published,
+    // and the failed commit's own staging already gone
+    twoSpecs(root).foreach(sp =>
+      assert(CdcStream.replicaCurrentVersion(sp.dir).contains(2L)))
+    assert(CdcStream.replicaCurrentVersion(s"$root/p").contains(1L))
+    assert(stagingDirs(s"$root/p") == Seq(".staging-crashed"))
+    // the replay converges every store to the fold
+    applyTwo(root, wide(b2), recordChanges = true)
+    val expect = fold(Seq(b1, b2))
+    assert(CdcStream.readReplica(spark, s"$root/p").get
+      .select($"id", $"grp", $"score").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap == expect)
+    assert(entries(s"$root/i1", "grp") ==
+      expect.toSeq.map { case (id, (g, _)) => (g, id) }.sorted)
+    assert(entries(s"$root/i2", "score") ==
+      expect.toSeq.map { case (id, (_, sc)) => (sc, id) }.sorted)
+    assert(CdcStream.readReplicaChanges(spark, s"$root/p", 1L).get
+      .select($"id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    assert(stagingDirs(s"$root/p").isEmpty,
+      "the replay's commit must sweep the stale staging debris")
+  }
+
+  test("a failed index commit cancels the sibling's running Spark job and " +
+      "leaves no published version") {
+    import SecondaryIndexSpec.Gate
+    val root = freshDir()
+    Gate.reset()
+    // index A fails only once index B's job is running; B would sleep
+    // far past the test's patience unless its job is cancelled
+    val failing = udf { (g: Long) =>
+      Gate.bRunning.await(60, java.util.concurrent.TimeUnit.SECONDS)
+      if (g >= 0) throw new IllegalStateException("index A failed")
+      g
+    }
+    val slow = udf { (v: Long) =>
+      Gate.bStages.add(org.apache.spark.TaskContext.get().stageId())
+      Gate.bRunning.countDown()
+      Thread.sleep(30000)
+      v
+    }
+    val specs = Seq(
+      SecondaryIndex.IndexSpec(s"$root/a", failing(col("grp")), "a"),
+      SecondaryIndex.IndexSpec(s"$root/b", slow(col("score")), "b"))
+    val ends = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val stagesOf = new java.util.concurrent.ConcurrentHashMap[Int, Seq[Int]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        stagesOf.put(e.jobId, e.stageIds); ()
+      }
+      override def onJobEnd(
+          e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
+        ends.put(e.jobId, e.jobResult.toString); ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    val t0 = System.nanoTime()
+    try {
+      val e = intercept[Exception] {
+        SecondaryIndex.applyBatchWithIndexes(spark, s"$root/p", specs,
+          wide(Seq((1L, 3L, 30L, 1L, "update"), (2L, 4L, 40L, 1L, "update"))),
+          Seq("id"), Seq("seq"), recordChanges = true)
+      }
+      def chain(t: Throwable): Seq[Throwable] =
+        if (t == null) Nil else t +: chain(t.getCause)
+      assert(chain(e).exists(c => String.valueOf(c.getMessage)
+        .contains("index A failed")), e.toString)
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    assert((System.nanoTime() - t0) / 1e9 < 30,
+      "the sibling's sleeping task ran to the end: not cancelled")
+    import scala.jdk.CollectionConverters._
+    val bJobs = stagesOf.asScala.collect {
+      case (job, stages) if stages.exists(Gate.bStages.contains) => job
+    }
+    assert(bJobs.nonEmpty, "index B's job never ran")
+    bJobs.foreach { job =>
+      assert(ends.containsKey(job) && ends.get(job) != "JobSucceeded",
+        s"index B's job $job ended ${ends.get(job)}, not cancelled")
+    }
+    Seq(s"$root/p", s"$root/a", s"$root/b").foreach { d =>
+      assert(CdcStream.replicaCurrentVersion(d).isEmpty, d)
+      assert(stagingDirs(d).isEmpty, d)
+    }
+  }
+}
+
+object SecondaryIndexSpec {
+  /** Cross-thread signals for the cancellation spec's UDFs (tasks run
+    * in this JVM's executor threads).
+    */
+  object Gate {
+    @volatile var bRunning = new java.util.concurrent.CountDownLatch(1)
+    val bStages: java.util.Set[Int] =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def reset(): Unit = {
+      bRunning = new java.util.concurrent.CountDownLatch(1)
+      bStages.clear()
+    }
+  }
 }
