@@ -100,6 +100,32 @@ object Bench {
       java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")(0).toDouble)
     catch { case _: Throwable => None }
 
+  /** The host's `file://` stack: whether libhadoop loaded (without it
+    * stock Hadoop forks a `chmod` per written file and dir), and the
+    * FileSystem / FileContext classes `file://` resolves to — from the
+    * live session's Hadoop conf, else from [[Tables.sessionConfigs]]'
+    * `spark.hadoop.*` entries, which every session applies.
+    */
+  private def localFsJson(): String = {
+    import org.apache.hadoop.conf.Configuration
+    val conf = SparkSession.getActiveSession
+      .orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.hadoopConfiguration)
+      .getOrElse {
+        val c = new Configuration()
+        Tables.sessionConfigs.foreach { case (k, v) =>
+          if (k.startsWith("spark.hadoop.")) c.set(k.stripPrefix("spark.hadoop."), v)
+        }
+        c
+      }
+    val file = java.net.URI.create("file:///")
+    def className(f: => AnyRef): String =
+      try "\"" + f.getClass.getName + "\"" catch { case _: Throwable => "null" }
+    s""""hadoop_native":${org.apache.hadoop.io.nativeio.NativeIO.isAvailable},""" +
+      s""""file_fs_class":${className(org.apache.hadoop.fs.FileSystem.get(file, conf))},""" +
+      s""""file_fc_class":${className(org.apache.hadoop.fs.AbstractFileSystem.get(file, conf))}"""
+  }
+
   /** Host-environment snapshot (from /proc) — loadavg, uptime,
     * IO-wait share over a short sample window, free memory. Recorded
     * into the bench artifacts at run start and again before the
@@ -108,7 +134,9 @@ object Bench {
     * adjudicable from the artifacts alone: the r12 record showed one
     * I/O-bound query inflating ~5× purely under ambient disk pressure,
     * and nothing in the artifact could say so. Best-effort: any
-    * missing /proc file records null for that field.
+    * missing /proc file records null for that field. The `file://`
+    * stack ([[localFsJson]]) rides along, so records from hosts with
+    * and without libhadoop are not compared blind.
     */
   private[graft] def envJson(): String = {
     def readFile(p: String): Option[String] =
@@ -146,7 +174,8 @@ object Bench {
     s"""{"loadavg":$loadStr,"uptime_sec":${num(uptime)},""" +
       s""""io_wait_pct":${num(ioWaitPct)},""" +
       s""""mem_available_mb":${memAvailMb.getOrElse("null")},""" +
-      s""""cpus":${Runtime.getRuntime.availableProcessors()}}"""
+      s""""cpus":${Runtime.getRuntime.availableProcessors()},""" +
+      localFsJson() + "}"
   }
 
   def main(args: Array[String]): Unit = {

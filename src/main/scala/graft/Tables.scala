@@ -62,5 +62,11 @@ object Tables {
     "spark.sql.adaptive.enabled" -> "true",
     // native function + optimizer-rule injection (static conf read at
     // session creation; harmless if the session pre-exists)
-    "spark.sql.extensions" -> "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // file:// whose setPermission is a chmod syscall, not a forked
+    // chmod process per written file and dir (graft.io.LocalFs);
+    // FileSystem side for writers/readers, FileContext side for
+    // streaming checkpoints
+    "spark.hadoop.fs.file.impl" -> "graft.io.GraftLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.GraftLocalFs")
 }

@@ -231,29 +231,14 @@ object IncrementalClusters {
                 Seq("doc_a"), "left_anti")
               .join(broadcast(ret.select($"doc_id".as("doc_b"))),
                 Seq("doc_b"), "left_anti")))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        try {
-          val fs = rewrites.map(f => pool.submit(
-            new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = f()
-            }))
-          try fs.foreach(_.get())
-          catch { // surface the rewrite's own exception, not the wrapper
-            case e: java.util.concurrent.ExecutionException =>
-              // a failed rewrite must not leave the sibling rewrite
-              // threads running past retire(): the enclosing finallys
-              // delete the ret/mem artifacts they read, and an orphan
-              // mid two-phase swap would break the single-writer
-              // invariant on the error path — cancel and AWAIT before
-              // rethrowing (the swap itself is replay-safe:
-              // recoverSwap handles a torn .next/.trash on the next
-              // retire)
-              pool.shutdownNow()
-              pool.awaitTermination(60,
-                java.util.concurrent.TimeUnit.SECONDS)
-              throw e.getCause
-          }
-        } finally { pool.shutdown(); () }
+        // a failed rewrite must not leave the sibling rewrites running
+        // past retire(): the enclosing finallys delete the ret/mem
+        // artifacts they read, and an orphan mid two-phase swap would
+        // break the single-writer invariant on the error path — the
+        // runner cancels and awaits them before rethrowing (the swap
+        // itself is replay-safe: recoverSwap handles a torn
+        // .next/.trash on the next retire)
+        graft.streaming.ConcurrentJobs.run(s, rewrites)
         if (nMem > 0L) {
           // recompute the affected subgraph over the REMAINING edges;
           // component closure means one-endpoint membership implies both

@@ -66,27 +66,17 @@ object EventQueries {
     * calls them sequentially). Used where a gate drives the same
     * mutation against two disjoint stores (SQL copy vs API copy) and
     * only compares AFTER both land — the second op back-fills the
-    * executor tail the first leaves idle. On failure the surviving
-    * thread is cancelled and awaited before the rethrow, so no
-    * mutation outlives the call.
+    * executor tail the first leaves idle. On failure the other side's
+    * Spark jobs are cancelled and its thread awaited before the
+    * rethrow ([[graft.streaming.ConcurrentJobs.run]]), so no mutation
+    * outlives the call.
     */
-  private def par2[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = a
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = b
-      })
-      try (fa.get(), fb.get())
-      catch {
-        case e: java.util.concurrent.ExecutionException =>
-          pool.shutdownNow()
-          pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          throw e.getCause
-      }
-    } finally { pool.shutdown(); () }
+  private[queries] def par2[A, B](s: SparkSession)(a: => A, b: => B): (A, B) = {
+    var ra: Option[A] = None
+    var rb: Option[B] = None
+    graft.streaming.ConcurrentJobs.run(s,
+      Seq(() => ra = Some(a), () => rb = Some(b)))
+    (ra.get, rb.get)
   }
 
   private[queries] def sharedReplica(s: SparkSession, dir: String): String =
@@ -220,7 +210,7 @@ object EventQueries {
       // the two tables are independent stores — their commit chains
       // (each internally version-ordered) overlap as concurrent jobs
       // (guide §2.6, r16)
-      par2({
+      par2(s)({
         CdcStream.applyBatchToReplica(s"$out/clicks",
           x.filter($"ms" < cuts(0)), Seq("user_id"), orderCols,
           watermark = Some(cuts(0)))
@@ -266,7 +256,7 @@ object EventQueries {
       val y = ev.filter(!$"event_type".isin("click", "view"))
         .drop("event_type")
       // independent stores: the two commit chains overlap (§2.6, r16)
-      par2({
+      par2(s)({
         CdcStream.applyBatchToReplica(s"$out/clicks",
           x.filter($"ms" < cuts(0)), Seq("user_id"), orderCols,
           watermark = Some(cuts(0)))
@@ -1588,7 +1578,7 @@ object EventQueries {
       // (guide §2.6, r16) — same ops, same compares, half the serial
       // job-latency chain
       val shared = new java.io.File(sharedReplica(s, dir))
-      par2(copyDir(shared, new java.io.File(viaSql)),
+      par2(s)(copyDir(shared, new java.io.File(viaSql)),
         copyDir(shared, new java.io.File(viaApi)))
       val toErase = Tables(s, dir).events
         .select($"user_id").distinct().filter($"user_id" % 97 === 0)
@@ -1598,15 +1588,15 @@ object EventQueries {
         .orderBy($"user_id", $"event_id")
       def statesMatch(): (Seq[org.apache.spark.sql.Row],
           Seq[org.apache.spark.sql.Row]) =
-        par2(state(viaSql).collect().toSeq, state(viaApi).collect().toSeq)
-      par2(
+        par2(s)(state(viaSql).collect().toSeq, state(viaApi).collect().toSeq)
+      par2(s)(
         s.sql(s"ERASE KEYS (user_id) FROM REPLICA '$viaSql' " +
           "USING (SELECT user_id FROM __sqlops_erase_keys)").collect(),
         CdcStream.eraseKeys(s, viaApi, Seq("user_id"), toErase))
       require(statesMatch() match { case (a, b) => a == b },
         "ERASE KEYS via SQL diverged from the Scala API")
       val nb = CdcStream.DefaultReplicaBuckets * 3
-      par2(
+      par2(s)(
         s.sql(s"REBUCKET REPLICA '$viaSql' KEYS (user_id) TO $nb BUCKETS")
           .collect(),
         CdcStream.rebucketReplica(s, viaApi, Seq("user_id"), nb))

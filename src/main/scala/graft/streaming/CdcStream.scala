@@ -3764,41 +3764,23 @@ object CdcStream {
         .select(col("__v")).distinct()
         .collect().map(_.getLong(0)).toSet
       val jobs = scrubbable.filter { case (vv, _, _) => touchedVs(vv) }
-      if (jobs.nonEmpty) {
-        val pool = java.util.concurrent.Executors
-          .newFixedThreadPool(math.min(4, jobs.size))
-        try {
-          val fs = jobs.map { case (_, d, df) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                val next = new java.io.File(d.toString + ".next")
-                FileUtils.deleteQuietly(next)
-                df.join(keysM, idCols, "left_anti")
-                  .write.parquet(next.toString)
-                val aside = new java.io.File(
-                  d.getParent, s".changes-erased-${System.nanoTime()}")
-                java.nio.file.Files.move(d.toPath, aside.toPath,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                java.nio.file.Files.move(next.toPath, d.toPath,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                FileUtils.deleteQuietly(aside)
-              }
-            })
-          }
-          try fs.foreach(_.get())
-          catch {
-            case e: java.util.concurrent.ExecutionException =>
-              // a failed scrub must not leave sibling scrub threads
-              // racing the caller's cleanup (keysM drops below): cancel
-              // and AWAIT before rethrowing — the swap is replay-safe
-              // (a re-run erase re-derives the same anti-join)
-              pool.shutdownNow()
-              pool.awaitTermination(60,
-                java.util.concurrent.TimeUnit.SECONDS)
-              throw e.getCause
-          }
-        } finally { pool.shutdown(); () }
-      }
+      // a failed scrub must not leave sibling scrub jobs racing the
+      // caller's cleanup (keysM drops below): the runner cancels and
+      // awaits them before rethrowing — the swap is replay-safe (a
+      // re-run erase re-derives the same anti-join)
+      ConcurrentJobs.run(spark, jobs.map { case (_, d, df) => () =>
+        val next = new java.io.File(d.toString + ".next")
+        FileUtils.deleteQuietly(next)
+        df.join(keysM, idCols, "left_anti")
+          .write.parquet(next.toString)
+        val aside = new java.io.File(
+          d.getParent, s".changes-erased-${System.nanoTime()}")
+        java.nio.file.Files.move(d.toPath, aside.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        java.nio.file.Files.move(next.toPath, d.toPath,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        FileUtils.deleteQuietly(aside)
+      })
     }
     } finally dropKeys()
   }

@@ -72,68 +72,6 @@ object SecondaryIndex {
 
   private val CursorFile = "_applied_primary_version"
 
-  /** Seconds a failed concurrent commit waits for its siblings to
-    * unwind after their Spark jobs are cancelled.
-    */
-  private val DrainTimeoutSec = 120L
-
-  /** Run independent commit tasks — one per index store, plus the
-    * primary's stage — as CONCURRENT Spark jobs (guide §2.6). Every
-    * task writes its own store's staging dir under its own commit
-    * lock, and every caller's crash-recovery argument is per store (a
-    * replay converges ANY subset of already-committed indexes; nothing
-    * requires the commits to land in order). A single task runs
-    * inline — no pool churn on the common path.
-    *
-    * Each task runs under its own Spark job group. The first failure —
-    * or an interrupt of the calling thread, e.g. a stopping stream —
-    * cancels every task's group, running and future jobs alike, with
-    * `interruptOnCancel` so running tasks stop; tasks not yet started
-    * never start. The call then waits for every thread to unwind and
-    * rethrows the first failure, so no commit outlives it; a drain
-    * that times out throws instead of leaving work running unseen.
-    * Driver threads are not interrupted: a commit thread inside
-    * [[CdcStream]]'s metadata-only publish finishes it.
-    */
-  private def runConcurrently(spark: SparkSession,
-      tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
-    else {
-      import java.util.concurrent._
-      val sc = spark.sparkContext
-      val groups = tasks.indices.map(i =>
-        s"graft-commit-${java.util.UUID.randomUUID()}-$i")
-      // threads are created per call, so each inherits the caller's
-      // Spark local properties (streaming batch id, SQL execution id)
-      val pool = Executors.newFixedThreadPool(math.min(4, tasks.size))
-      val done = new ExecutorCompletionService[Unit](pool)
-      val fs = tasks.zip(groups).map { case (t, g) =>
-        done.submit(new Callable[Unit] {
-          def call(): Unit = {
-            // the inherited description keeps the jobs' attribution
-            sc.setJobGroup(g, sc.getLocalProperty("spark.job.description"),
-              interruptOnCancel = true)
-            try t() finally sc.clearJobGroup()
-          }
-        })
-      }
-      try tasks.foreach(_ => done.take().get())
-      catch {
-        case e @ (_: ExecutionException | _: InterruptedException) =>
-          groups.foreach(g => sc.cancelJobGroupAndFutureJobs(g))
-          fs.foreach(_.cancel(false))
-          pool.shutdown()
-          if (!pool.awaitTermination(DrainTimeoutSec, TimeUnit.SECONDS))
-            throw new IllegalStateException(
-              s"concurrent commit tasks did not drain within " +
-                s"${DrainTimeoutSec}s after a failure", e)
-          e match {
-            case ee: ExecutionException => throw ee.getCause
-            case ie => throw ie
-          }
-      } finally pool.shutdown()
-    }
-
   /** The primary version this index store reflects (None: never
     * recorded — pre-cursor index stores, or a dir that isn't one).
     */
@@ -446,7 +384,7 @@ object SecondaryIndex {
   /** Commit every index's delta batch ([[indexDelta]] over `pairs`,
     * from [[withOldValues]]): value-routed (`bucketCols = [name]`),
     * eager or deferred per spec, CONCURRENTLY beside the `alongside`
-    * tasks ([[runConcurrently]]). `pairs` is materialized once when
+    * tasks ([[ConcurrentJobs.run]]). `pairs` is materialized once when
     * several indexes read it; `after` runs once an index's commit has
     * landed.
     */
@@ -458,7 +396,7 @@ object SecondaryIndex {
       if (specs.size > 1)
         graft.llm.IndexArtifacts.materializeTyped(spark, pairs, "gsi-net-old")
       else (pairs, () => ())
-    try runConcurrently(spark, specs.zipWithIndex.map { case (sp, i) => () =>
+    try ConcurrentJobs.run(spark, specs.zipWithIndex.map { case (sp, i) => () =>
       val delta = indexDelta(rows, i, sp, idCols, orderColNames, opCol)
       CdcStream.applyNetToReplica(sp.dir, delta, delta.columns,
         sp.name +: idCols, opCol, CdcStream.DefaultReplicaBuckets,
