@@ -7,21 +7,28 @@ import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants,
-  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus,
+  FSLinkResolver, FsConstants, FsServerDefaults, LocalFileSystem, Path,
+  RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.{FsAction, FsPermission}
 
-/** The stock raw local filesystem with one change: `setPermission` is
-  * a `chmod` syscall through NIO instead of a forked process.
+/** The stock raw local filesystem with two changes, each a syscall
+  * through NIO instead of a forked process:
   *
-  * Without the native Hadoop library, `RawLocalFileSystem` sets a
-  * mode by running `chmod` in a child process — for every file, `.crc`
-  * side file and directory it creates with an explicit permission.
-  * That fork costs about 4 ms, a hundred times the syscall, and a
-  * store commit creates hundreds of files and dirs. The bits set are
-  * the same: user/group/other read-write-execute. A sticky-bit mode,
-  * which NIO cannot express, still goes through the stock path.
+  *  - `setPermission`. Without the native Hadoop library,
+  *    `RawLocalFileSystem` sets a mode by running `chmod` in a child
+  *    process — for every file, `.crc` side file and directory it
+  *    creates with an explicit permission. That fork costs about 4 ms,
+  *    a hundred times the syscall, and a store commit creates hundreds
+  *    of files and dirs. The bits set are the same: user/group/other
+  *    read-write-execute. A sticky-bit mode, which NIO cannot express,
+  *    still goes through the stock path.
+  *  - `getFileLinkStatus`. Stock reads a link target by running
+  *    `readlink`, and `FileSystem.rename(src, dst, options)` asks for
+  *    both sides' link status: the streaming checkpoint manager renames
+  *    every `offsets/` and `commits/` file (and its `.crc`) that way.
+  *    The status returned is the stock one.
   */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit =
@@ -35,6 +42,29 @@ class NioRawLocalFileSystem extends RawLocalFileSystem {
           throw new FileNotFoundException(s"File $f does not exist")
       }
     }
+
+  override def getFileLinkStatus(f: Path): FileStatus = {
+    // the file stock hands `readlink`: a scheme-qualified path names no
+    // file there, so stock never reads one as a link
+    val nio = new java.io.File(f.toString).toPath
+    // a file, a directory, or a missing path (which throws)
+    if (!Files.isSymbolicLink(nio)) return getFileStatus(f)
+    val target = new Path(Files.readSymbolicLink(nio).toString)
+    val link =
+      try {
+        val s = getFileStatus(f) // the link's target
+        new FileStatus(s.getLen, false, s.getReplication, s.getBlockSize,
+          s.getModificationTime, s.getAccessTime, s.getPermission,
+          s.getOwner, s.getGroup, target, f)
+      } catch {
+        case _: FileNotFoundException => // a dangling link
+          new FileStatus(0, false, 0, 0, 0, 0, FsPermission.getDefault,
+            "", "", target, f)
+      }
+    link.setSymlink(
+      FSLinkResolver.qualifySymlinkTarget(getUri, link.getPath, link.getSymlink))
+    link
+  }
 }
 
 object NioRawLocalFileSystem {

@@ -391,9 +391,12 @@ object CdcStream {
     // per-table merges target DISJOINT replica dirs — schedule them as
     // concurrent Spark jobs (a fan-out over T tables is T independent
     // merges; running them serially would leave the cluster idle
-    // between each table's small stages). Bounded pool; result order
-    // stays `present` order.
-    val jobs = present.map { case (db, tbl) =>
+    // between each table's small stages). Result order stays `present`
+    // order. A failed merge cancels its siblings' jobs and waits for
+    // them before rethrowing, so no sibling races a caller's retry of
+    // the same batch (the atomic path's replay re-prepares the same
+    // stores).
+    val jobs = present.flatMap { case (db, tbl) =>
       val key = s"$db.$tbl"
       // a table needs BOTH a schema and id columns to materialize;
       // surface config skew instead of a bare NoSuchElementException
@@ -421,41 +424,7 @@ object CdcStream {
         case (None, _) => None
       }
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(8, jobs.count(_.isDefined))))
-    var primary: Throwable = null
-    try {
-      val futures = jobs.map(_.map(f => pool.submit(
-        new java.util.concurrent.Callable[(String, Option[Long])] {
-          def call(): (String, Option[Long]) = f()
-        })))
-      try futures.flatMap(_.map(_.get()))
-      catch { // surface the merge's own exception, not the wrapper
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    } catch {
-      case e: Throwable => primary = e; throw e
-    } finally {
-      // drain before returning OR propagating a failure: in-flight
-      // sibling merges must not race a caller's retry of the same
-      // batch (the atomic path's replay re-prepares the same stores).
-      // A drain that TIMES OUT must not fall through silently — a
-      // still-running merge would re-open exactly the
-      // retry-races-in-flight-commit window this block closes — so it
-      // interrupts the stragglers and fails loudly: thrown when the
-      // fan-out was otherwise succeeding, attached as SUPPRESSED when
-      // a merge exception is already in flight (a throw from finally
-      // would silently REPLACE the primary failure).
-      pool.shutdown()
-      if (!pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)) {
-        pool.shutdownNow()
-        val drain = new IllegalStateException(
-          "fanOutToReplicas: worker pool failed to drain within 10 " +
-            "minutes — sibling merges may still be in flight; do NOT " +
-            "retry this batch until the JVM's merge threads are gone")
-        if (primary != null) primary.addSuppressed(drain) else throw drain
-      }
-    }
+    ConcurrentJobs.runAll(spark, jobs)
   }
 
   /** Reduce a CDC micro-batch to its net effect: the last op per key in
@@ -539,6 +508,17 @@ object CdcStream {
     if (!df.columns.contains(Tombstone)) df
     else df.filter(!coalesce(col(Tombstone), lit(false))).drop(Tombstone)
 
+  /** `sc` widened by the tombstone column when a rewrite's conditional
+    * fold `folded` carries it: the fold may materialize a store's first
+    * tombstones, and the recorded schema must advertise the column or
+    * schema-pruned readers would read those rows back as live.
+    */
+  private def withTombstoneIn(sc: StructType,
+      folded: Option[DataFrame]): StructType =
+    if (sc.fieldNames.contains(Tombstone) ||
+        !folded.exists(_.columns.contains(Tombstone))) sc
+    else sc.add(Tombstone, BooleanType)
+
   /** Reserved column carrying a delta file's commit version during a
     * merge-on-read scan (never stored).
     */
@@ -553,9 +533,8 @@ object CdcStream {
     * join the compare as deletes at their recorded order — the
     * deferred twin of the eager order-conditional merge. A manifest
     * without deltas reads exactly as before — no window, no op column,
-    * zero overhead on the eager path. Keys/op come from the manifest
-    * (recorded at the first deferred commit). None when the selected
-    * buckets hold no files at all.
+    * zero overhead on the eager path. Keys/op come from the manifest.
+    * None when the selected buckets hold no files at all.
     *
     * `keepDeletes = false` (read paths) returns the LIVE view: winning
     * deletes and tombstones drop. `keepDeletes = true` (write paths —
@@ -568,7 +547,6 @@ object CdcStream {
   private def mergedBucketRead(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, m: ReplicaManifest,
       keep: Int => Boolean = _ => true,
-      schemaOverride: Option[StructType] = None,
       keepDeletes: Boolean = false): Option[DataFrame] = {
     val basePaths = m.buckets.collect {
       case (k, p) if keep(k) => resolveStorePath(replicaDir, p)
@@ -577,20 +555,13 @@ object CdcStream {
       case (k, ps) if keep(k) => ps
     }.flatten
     if (basePaths.isEmpty && deltaPaths.isEmpty) return None
-    val sc = schemaOverride.orElse(manifestSchema(m))
-    def readBase(): DataFrame = sc match {
-      case Some(s) => spark.read.schema(s).parquet(basePaths: _*)
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(basePaths: _*)
-    }
+    val sc = m.schema
+    def readBase(): DataFrame = spark.read.schema(sc).parquet(basePaths: _*)
     if (deltaPaths.isEmpty) return Some(
       if (keepDeletes) readBase() else filterTombstones(readBase()))
-    val kc = m.keyCols.getOrElse(throw new IllegalStateException(
-      s"replica $replicaDir: manifest has deltas but no recorded keyCols"))
-    val oc = m.opColName.getOrElse("op")
-    val baseSc = sc.getOrElse(throw new IllegalStateException(
-      s"replica $replicaDir: deferred manifests always record a schema"))
-    val deltaSc = StructType(baseSc.fields :+ StructField(oc, StringType))
+    val kc = m.keyCols
+    val oc = m.opColName
+    val deltaSc = StructType(sc.fields :+ StructField(oc, StringType))
     val condOrd: Option[Seq[String]] =
       if (m.deltasConditional) Some(m.condOrderCols.getOrElse(
         throw new IllegalStateException(s"replica $replicaDir: conditional " +
@@ -599,7 +570,7 @@ object CdcStream {
     val rawBase =
       if (basePaths.isEmpty)
         spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), baseSc)
+          new java.util.ArrayList[org.apache.spark.sql.Row](), sc)
       else readBase()
     val hasTs = rawBase.columns.contains(Tombstone)
     // base rows enter the fold: under the CONDITIONAL fold a stored
@@ -655,8 +626,6 @@ object CdcStream {
   /** Recorded-min value for a bucket whose only tombstones carry NULL
     * order values: unorderable against any horizon (never expires),
     * recorded so the bucket stays in the exclusivity clash set.
-    * Distinct from the legacy `{}` shape (a pre-fix null-polluted min,
-    * which IS swept once to converge).
     */
   private val NullOrderSentinel = """{"__null_order":true}"""
 
@@ -696,50 +665,6 @@ object CdcStream {
       .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
   }
 
-  /** One-time backfill of per-bucket tombstone mins for LEGACY buckets
-    * — buckets written before the store recorded `condOrderCols`. Runs
-    * ONLY at the None→Some transition of `condOrderCols` (the first
-    * conditional merge on a pre-metadata store), as one column-pruned
-    * job over just the given buckets' tombstone + order columns.
-    * Without it the upgraded manifest's `tombstoneMins` would be
-    * incomplete — [[expiredFromMeta]] would hide the unrecorded
-    * buckets' tombstones from age-out forever, and the per-bucket
-    * sequence-fold exclusivity check would admit a sequence deferred
-    * commit into a bucket whose conditional tombstones it cannot order
-    * against.
-    */
-  private def legacyTombstoneMins(spark: org.apache.spark.sql.SparkSession,
-      replicaDir: String, buckets: Map[Int, String],
-      sc: Option[StructType], ordNames: Seq[String]): Map[Int, String] = {
-    val schema = sc.getOrElse(return Map.empty)
-    if (buckets.isEmpty || !schema.fieldNames.contains(Tombstone) ||
-        !ordNames.forall(schema.fieldNames.contains)) return Map.empty
-    val pruned = StructType(schema.fields.filter(f =>
-      f.name == Tombstone || ordNames.contains(f.name)))
-    buckets.toSeq.sortBy(_._1).map { case (k, p) =>
-      spark.read.schema(pruned).parquet(resolveStorePath(replicaDir, p))
-        .select(lit(k).as("__b") +: (Tombstone +: ordNames).map(col): _*)
-    }.reduce(_.unionByName(_))
-      // same null-order exclusion + sentinel as [[stagedTombstoneMins]]
-      .filter(coalesce(col(Tombstone), lit(false)))
-      .groupBy(col("__b"))
-      .agg(min(when(ordNames.map(c => col(c).isNotNull).reduce(_ && _),
-        struct(ordNames.map(col): _*))).as("m"))
-      .select(col("__b"),
-        coalesce(to_json(col("m")), lit(NullOrderSentinel)).as("j"))
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
-  }
-
-  /** Buckets holding at least one tombstone EXPIRED under `horizon`,
-    * decided from manifest metadata alone: the recorded per-bucket min
-    * order tuples re-hydrate as ≤ numBuckets driver-local rows and the
-    * horizon predicate evaluates over them — O(manifest), no bucket
-    * file is read. None when the store predates the metadata (caller
-    * falls back to the full column-pruned sweep). Sound because an
-    * age-out horizon is DOWNWARD-CLOSED in the order (a row is expired
-    * ⇒ every lower-order row is too), so a bucket has an expired
-    * tombstone iff its MIN tombstone is expired.
-    */
   /** The column names a horizon predicate references (resolved or
     * not — callers hand unresolved `col(...)` trees). Multi-part names
     * compare by their last segment.
@@ -752,42 +677,42 @@ object CdcStream {
         a.name
     }.distinct
 
+  /** Buckets holding at least one tombstone EXPIRED under `horizon`,
+    * decided from manifest metadata alone: the recorded per-bucket min
+    * order tuples re-hydrate as ≤ numBuckets driver-local rows and the
+    * horizon predicate evaluates over them — O(manifest), no bucket
+    * file is read. None when the horizon references columns outside
+    * the recorded order columns (the caller falls back to the full
+    * column-pruned sweep). Sound because an age-out horizon is
+    * DOWNWARD-CLOSED in the order (a row is expired ⇒ every lower-order
+    * row is too), so a bucket has an expired tombstone iff its MIN
+    * tombstone is expired.
+    */
   private def expiredFromMeta(spark: org.apache.spark.sql.SparkSession,
-      m: ReplicaManifest, unionSc: Option[StructType],
-      horizon: Column): Option[Set[Int]] = {
-    val minCols = m.condOrderCols.orElse(m.tombstoneMinCols)
+      m: ReplicaManifest, horizon: Column): Option[Set[Int]] = {
     val refs = horizonRefNames(horizon)
     // a horizon referencing columns outside the recorded min key
     // cannot be decided from metadata — None sends the caller to the
     // full column-pruned sweep instead of throwing AnalysisException
     // against the min-struct schema
-    minCols
+    m.condOrderCols
       .filter(ocs => refs.forall(r => ocs.exists(_.equalsIgnoreCase(r))))
       .map { ocs =>
       if (m.tombstoneMins.isEmpty) Set.empty
       else {
-        val types = unionSc.map(_.fields.map(f => f.name -> f.dataType).toMap)
-          .getOrElse(Map.empty[String, org.apache.spark.sql.types.DataType])
+        val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
         val minSchema = StructType(ocs.map(c =>
           StructField(c, types.getOrElse(c, StringType))))
         import spark.implicits._
-        // null handling, two distinct cases:
-        //  - the [[NullOrderSentinel]] marks a bucket whose only
-        //    tombstones are null-order — unorderable, can NEVER
-        //    expire, recorded only to keep the bucket in the
-        //    exclusivity clash set → filtered before parsing (no
-        //    sweep churn);
-        //  - a parsed min with null fields is a LEGACY record written
-        //    before nulls were excluded from the min aggregation: the
-        //    horizon evaluates to null over it, so flag the bucket
-        //    once — the sweep's rewrite re-records a null-free min
-        //    (or the sentinel) and the store converges.
-        val anyNull = ocs.map(c => col(c).isNull).reduce(_ || _)
+        // the [[NullOrderSentinel]] marks a bucket whose only tombstones
+        // are null-order — unorderable, it can NEVER expire, and is
+        // recorded only to keep the bucket in the exclusivity clash set
+        // → filtered before parsing (no sweep churn)
         m.tombstoneMins.toSeq.toDF("__b", "j")
           .filter(col("j") =!= NullOrderSentinel)
           .select(col("__b"), from_json(col("j"), minSchema).as("m"))
           .select(col("__b"), col("m.*"))
-          .filter(horizon || anyNull)
+          .filter(horizon)
           .select("__b").collect().map(_.getInt(0)).toSet
       }
     }
@@ -799,13 +724,6 @@ object CdcStream {
     */
   private def orderColNames(df: DataFrame, ord: Seq[Column]): Seq[String] =
     ord.map(c => df.select(c).schema.head.name)
-
-  /** The union schema a manifest records (absent on pre-schema
-    * manifests) — the ONE parse both the write path and the pruned
-    * read path share.
-    */
-  private def manifestSchema(m: ReplicaManifest): Option[StructType] =
-    m.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Is `from → to` a SAFE type widening — one Spark 4's parquet
     * readers serve losslessly when a file holding the narrow physical
@@ -893,7 +811,7 @@ object CdcStream {
   private[streaming] var postPublishTestHook: () => Unit = () => ()
 
   /** `bucketCols`: the key subset rows hash-route by — defaults to the
-    * full key (`idCols`). A PROPER subset turns the replica into a
+    * full key (`keyCols`). A PROPER subset turns the replica into a
     * value-clustered store: every row sharing the subset's values lands
     * in one bucket, so an equality lookup on just those columns prunes
     * exactly — the layout a secondary index needs (partition key =
@@ -901,13 +819,19 @@ object CdcStream {
     * replica creation, recorded here so every reader and writer derives
     * the same routing.
     */
-  /** `keyCols`/`opColName`/`deltas`: the merge-on-read surface. A
+  /** `schema`/`keyCols`/`opColName`/`commitKind` are REQUIRED: every
+    * commit records them, and a version whose manifest lacks one is in
+    * a format [[upgradeReplica]] rewrites (see [[currentFormat]]).
+    * `schema` is the store's UNION schema, so every read serves bucket
+    * files written under different evolution steps through one
+    * explicit schema, with no footer merge.
+    *
+    * `keyCols`/`opColName`/`deltas`: the merge-on-read surface. A
     * DEFERRED commit appends its per-key net as per-bucket delta files
     * (no base read, no base rewrite) and records them here in commit
     * order; read paths fold base ∪ deltas newest-net-wins, and
-    * compaction folds deltas back into base files. keyCols and the op
-    * column name are recorded at the first deferred commit so readers
-    * can run the fold without caller-provided metadata.
+    * compaction folds deltas back into base files, with no
+    * caller-provided metadata.
     *
     * `condOrderCols`/`deltasConditional`/`tombstoneMins`: the
     * order-conditional surface. `condOrderCols` names the stored
@@ -925,154 +849,122 @@ object CdcStream {
     * the map holds no tombstones.
     */
   private final case class ReplicaManifest(numBuckets: Int,
-      buckets: Map[Int, String], schemaJson: Option[String] = None,
+      buckets: Map[Int, String],
+      schema: StructType,
+      keyCols: Seq[String],
+      opColName: String,
+      /** WHAT KIND of commit produced this version — "merge",
+        * "compact", "reshard", "upgrade", "erase", "restore", "clone",
+        * "refresh". Lets feed consumers distinguish a changeless
+        * version that is CONTENT-IDENTICAL ([[IdenticalKinds]] —
+        * correctly contributes an empty change set) from one that
+        * MUTATED content without a feed entry (an erasure, or a merge
+        * with recordChanges=false) — the latter must refuse a follower
+        * drain instead of silently losing the commit.
+        */
+      commitKind: String,
       watermark: Option[Long] = None,
       bucketCols: Option[Seq[String]] = None,
-      keyCols: Option[Seq[String]] = None,
-      opColName: Option[String] = None,
       deltas: Map[Int, Seq[String]] = Map.empty,
       condOrderCols: Option[Seq[String]] = None,
       deltasConditional: Boolean = false,
-      tombstoneMins: Map[Int, String] = Map.empty,
-      /** Min-key columns for `tombstoneMins` on stores WITHOUT
-        * `condOrderCols` — recorded by [[compactReplica]]'s fallback
-        * sweep from the horizon's own referenced columns, so a legacy
-        * tombstone store pays the full column-pruned sweep exactly
-        * once and is metadata-decided afterwards. Cleared at the
-        * None→Some `condOrderCols` transition (the conditional
-        * backfill re-keys every bucket's min by the order columns).
-        */
-      tombstoneMinCols: Option[Seq[String]] = None,
-      /** WHAT KIND of commit produced this version — "merge",
-        * "compact", "reshard", "erase", "restore". Lets feed
-        * consumers distinguish a changeless version that is
-        * CONTENT-IDENTICAL (compact/reshard — correctly contributes
-        * an empty change set) from one that MUTATED content without a
-        * feed entry (an erasure, or a merge with recordChanges=false)
-        * — the latter must refuse a follower drain instead of
-        * silently losing the commit. None on manifests predating the
-        * field (their changeless versions keep the historical
-        * skip-silently behavior — unknowable after the fact).
-        */
-      commitKind: Option[String] = None)
-
-  private def readManifest(replicaDir: String, version: String): Option[ReplicaManifest] = {
-    val f = new java.io.File(s"$replicaDir/$version", "manifest.json")
-    if (!f.exists()) return None
-    import com.fasterxml.jackson.core.JsonToken
-    val p = new com.fasterxml.jackson.core.JsonFactory()
-      .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-    var nb = DefaultReplicaBuckets
-    var schemaJson: Option[String] = None
-    var watermark: Option[Long] = None
-    var bucketCols: Option[Seq[String]] = None
-    var keyCols: Option[Seq[String]] = None
-    var opColName: Option[String] = None
-    var condOrderCols: Option[Seq[String]] = None
-    var tombstoneMinCols: Option[Seq[String]] = None
-    var commitKind: Option[String] = None
-    var deltasConditional = false
-    val buckets = scala.collection.mutable.LinkedHashMap.empty[Int, String]
-    val deltas = scala.collection.mutable.LinkedHashMap.empty[Int, Seq[String]]
-    val tombstoneMins = scala.collection.mutable.LinkedHashMap.empty[Int, String]
-    def readStringArray(): Seq[String] = {
-      val cs = scala.collection.mutable.ArrayBuffer.empty[String]
-      while (p.nextToken() != JsonToken.END_ARRAY) cs += p.getText
-      cs.toSeq
-    }
-    require(p.nextToken() == JsonToken.START_OBJECT)
-    while (p.nextToken() != JsonToken.END_OBJECT) {
-      p.currentName() match {
-        case "numBuckets" => p.nextToken(); nb = p.getIntValue
-        case "schema" => p.nextToken(); schemaJson = Some(p.getText)
-        case "watermark" => p.nextToken(); watermark = Some(p.getLongValue)
-        case "bucketCols" => p.nextToken(); bucketCols = Some(readStringArray())
-        case "keyCols" => p.nextToken(); keyCols = Some(readStringArray())
-        case "opCol" => p.nextToken(); opColName = Some(p.getText)
-        case "commitKind" => p.nextToken(); commitKind = Some(p.getText)
-        case "condOrderCols" => p.nextToken(); condOrderCols = Some(readStringArray())
-        case "tombstoneMinCols" => p.nextToken(); tombstoneMinCols = Some(readStringArray())
-        case "deltasConditional" => p.nextToken(); deltasConditional = p.getBooleanValue
-        case "tombstoneMins" =>
-          p.nextToken()
-          while (p.nextToken() != JsonToken.END_OBJECT) {
-            val k = p.currentName().toInt; p.nextToken()
-            tombstoneMins += k -> p.getText
-          }
-        case "buckets" =>
-          p.nextToken()
-          while (p.nextToken() != JsonToken.END_OBJECT) {
-            val k = p.currentName().toInt; p.nextToken(); buckets += k -> p.getText
-          }
-        case "deltas" =>
-          p.nextToken()
-          while (p.nextToken() != JsonToken.END_OBJECT) {
-            val k = p.currentName().toInt; p.nextToken()
-            deltas += k -> readStringArray()
-          }
-        case _ => p.nextToken(); p.skipChildren()
-      }
-    }
-    p.close()
-    Some(ReplicaManifest(nb, buckets.toMap, schemaJson, watermark, bucketCols,
-      keyCols, opColName, deltas.toMap, condOrderCols, deltasConditional,
-      tombstoneMins.toMap, tombstoneMinCols, commitKind))
+      tombstoneMins: Map[Int, String] = Map.empty) {
+    def routing: Seq[String] = bucketCols.getOrElse(keyCols)
   }
 
-  private def writeManifestTo(dir: java.nio.file.Path, m: ReplicaManifest): Unit = {
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    g.writeNumberField("numBuckets", m.numBuckets)
-    m.schemaJson.foreach(g.writeStringField("schema", _))
-    m.watermark.foreach(g.writeNumberField("watermark", _))
-    m.bucketCols.foreach { cs =>
-      g.writeArrayFieldStart("bucketCols")
-      cs.foreach(g.writeString)
-      g.writeEndArray()
-    }
-    m.keyCols.foreach { cs =>
-      g.writeArrayFieldStart("keyCols")
-      cs.foreach(g.writeString)
-      g.writeEndArray()
-    }
-    m.opColName.foreach(g.writeStringField("opCol", _))
-    m.commitKind.foreach(g.writeStringField("commitKind", _))
-    m.condOrderCols.foreach { cs =>
-      g.writeArrayFieldStart("condOrderCols")
-      cs.foreach(g.writeString)
-      g.writeEndArray()
-    }
-    m.tombstoneMinCols.foreach { cs =>
-      g.writeArrayFieldStart("tombstoneMinCols")
-      cs.foreach(g.writeString)
-      g.writeEndArray()
-    }
-    if (m.deltasConditional) g.writeBooleanField("deltasConditional", true)
-    if (m.tombstoneMins.nonEmpty) {
-      g.writeObjectFieldStart("tombstoneMins")
-      m.tombstoneMins.toSeq.sortBy(_._1).foreach { case (k, v) =>
-        g.writeStringField(k.toString, v) }
-      g.writeEndObject()
-    }
-    g.writeObjectFieldStart("buckets")
-    m.buckets.toSeq.sortBy(_._1).foreach { case (k, v) => g.writeStringField(k.toString, v) }
-    g.writeEndObject()
-    if (m.deltas.nonEmpty) {
-      g.writeObjectFieldStart("deltas")
-      m.deltas.toSeq.sortBy(_._1).foreach { case (k, ps) =>
-        g.writeArrayFieldStart(k.toString)
-        ps.foreach(g.writeString)
-        g.writeEndArray()
+  /** Commit kinds that leave the store's content unchanged. */
+  private val IdenticalKinds = Set("compact", "reshard", "upgrade")
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** A version's manifest as written — in any format, an older graft's
+    * too: a required field it lacks reads EMPTY. None when the version
+    * dir holds no manifest (the pre-bucket flat layout, or GC'd). Only
+    * [[upgradeReplica]] reads through this; everything else reads
+    * [[readManifest]].
+    */
+  private def parseManifest(replicaDir: String,
+      version: String): Option[ReplicaManifest] = {
+    import scala.jdk.CollectionConverters._
+    val f = new java.io.File(s"$replicaDir/$version", "manifest.json")
+    if (!f.exists()) return None
+    val n = Json.readTree(f)
+    def str(k: String) = Option(n.get(k)).map(_.asText)
+    def strs(j: com.fasterxml.jackson.databind.JsonNode) =
+      j.elements.asScala.map(_.asText).toSeq
+    def byBucket[A](k: String)(v: com.fasterxml.jackson.databind.JsonNode => A) =
+      Option(n.get(k)).map(_.fields.asScala
+        .map(e => e.getKey.toInt -> v(e.getValue)).toMap).getOrElse(Map.empty[Int, A])
+    Some(ReplicaManifest(
+      numBuckets = Option(n.get("numBuckets")).map(_.asInt)
+        .getOrElse(DefaultReplicaBuckets),
+      buckets = byBucket("buckets")(_.asText),
+      schema = str("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new StructType()),
+      keyCols = Option(n.get("keyCols")).map(strs).getOrElse(Nil),
+      opColName = str("opCol").getOrElse(""),
+      commitKind = str("commitKind").getOrElse(""),
+      watermark = Option(n.get("watermark")).map(_.asLong),
+      bucketCols = Option(n.get("bucketCols")).map(strs),
+      deltas = byBucket("deltas")(strs),
+      condOrderCols = Option(n.get("condOrderCols")).map(strs),
+      deltasConditional = Option(n.get("deltasConditional")).exists(_.asBoolean),
+      tombstoneMins = byBucket("tombstoneMins")(_.asText)))
+  }
+
+  /** Is `m` the manifest every current writer writes? Schema, key
+    * columns, op column and kind are recorded; a store holding
+    * tombstones records the order columns they compare by; and every
+    * recorded tombstone min carries each order column (older writers
+    * recorded a min with a null field, which no horizon can judge).
+    */
+  private def currentFormat(m: ReplicaManifest): Boolean =
+    m.schema.nonEmpty && m.keyCols.nonEmpty && m.opColName.nonEmpty &&
+      m.commitKind.nonEmpty &&
+      (m.condOrderCols.nonEmpty || !m.schema.fieldNames.contains(Tombstone)) &&
+      m.tombstoneMins.values.forall { j =>
+        j == NullOrderSentinel || m.condOrderCols.exists { ocs =>
+          val t = Json.readTree(j)
+          ocs.forall(t.hasNonNull)
+        }
       }
-      g.writeEndObject()
+
+  /** A version's manifest in the current format. None when the version
+    * was never committed, was GC'd, or was written in an older format —
+    * a historical version is then simply gone; a CURRENT one is refused
+    * by [[currentManifest]].
+    */
+  private def readManifest(replicaDir: String, version: String): Option[ReplicaManifest] =
+    parseManifest(replicaDir, version).filter(currentFormat)
+
+  private def writeManifestTo(dir: java.nio.file.Path, m: ReplicaManifest): Unit = {
+    val n = Json.createObjectNode()
+    def strings(k: String, cs: Seq[String]): Unit = {
+      val a = n.putArray(k); cs.foreach(a.add)
     }
-    g.writeEndObject()
-    g.close()
+    def byBucket[A](k: String, kv: Map[Int, A])(
+        put: (com.fasterxml.jackson.databind.node.ObjectNode, String, A) => Unit): Unit = {
+      val o = n.putObject(k)
+      kv.toSeq.sortBy(_._1).foreach { case (b, v) => put(o, b.toString, v) }
+    }
+    n.put("numBuckets", m.numBuckets)
+    n.put("schema", m.schema.json)
+    m.watermark.foreach(n.put("watermark", _))
+    m.bucketCols.foreach(strings("bucketCols", _))
+    strings("keyCols", m.keyCols)
+    n.put("opCol", m.opColName)
+    n.put("commitKind", m.commitKind)
+    m.condOrderCols.foreach(strings("condOrderCols", _))
+    if (m.deltasConditional) n.put("deltasConditional", true)
+    if (m.tombstoneMins.nonEmpty)
+      byBucket("tombstoneMins", m.tombstoneMins)(_.put(_, _))
+    byBucket("buckets", m.buckets)(_.put(_, _))
+    if (m.deltas.nonEmpty)
+      byBucket("deltas", m.deltas) { (o, b, ps) =>
+        val a = o.putArray(b); ps.foreach(a.add)
+      }
     java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("manifest.json"),
-      sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    java.nio.file.Files.write(dir.resolve("manifest.json"), Json.writeValueAsBytes(n))
   }
 
   private def currentVersion(replicaDir: String): Option[(Long, String)] = {
@@ -1085,28 +977,38 @@ object CdcStream {
     else None
   }
 
+  /** CURRENT with its manifest — None when nothing was ever committed.
+    * Every entry point resolves the live state through here, so this is
+    * the ONE place a store in an older format is refused: a current
+    * version without a current-format manifest ([[currentFormat]]).
+    */
+  private def currentManifest(replicaDir: String)
+      : Option[(Long, String, ReplicaManifest)] =
+    currentVersion(replicaDir).map { case (v, name) =>
+      (v, name, readManifest(replicaDir, name).getOrElse(
+        throw new IllegalStateException(olderFormat(replicaDir, name))))
+    }
+
+  private def olderFormat(replicaDir: String, name: String): String =
+    s"replica $replicaDir: current version $name is in an older store " +
+      "format (a flat layout, or a manifest without a schema, keyCols, " +
+      "opCol, commitKind, the order columns of its tombstones or a " +
+      "complete tombstone min) — rewrite it once with " +
+      "CdcStream.upgradeReplica(spark, dir, idCols, orderCols)"
+
   /** Read the live replica (the current manifest's bucket union).
     * None when no version was ever committed or the replica is empty.
-    * A version dir WITHOUT a manifest is the pre-bucket flat layout and
-    * reads whole — existing replicas stay readable across the upgrade.
+    * The union schema comes from the MANIFEST (recorded at write time):
+    * buckets written at different versions may differ after additive
+    * evolution, and the explicit schema both null-fills missing columns
+    * and skips a footer merge. Pending deltas (merge-on-read) fold
+    * newest-net-wins inside [[mergedBucketRead]].
     */
   def readReplica(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String): Option[DataFrame] =
-    currentVersion(replicaDir).flatMap { case (_, name) =>
-      readManifest(replicaDir, name) match {
-        // union schema from the MANIFEST (recorded at write time):
-        // buckets written at different versions may differ after
-        // additive evolution, and the explicit schema both null-fills
-        // missing columns and skips the per-read footer-merge job.
-        // Pre-schema manifests fall back to footer merging. Pending
-        // deltas (merge-on-read) fold newest-net-wins inside
-        // mergedBucketRead.
-        case Some(m) =>
-          requireInheritedRefsLive(replicaDir, m)
-          mergedBucketRead(spark, replicaDir, m)
-        case None => Some(filterTombstones(
-          spark.read.parquet(s"$replicaDir/$name")))
-      }
+    currentManifest(replicaDir).flatMap { case (_, _, m) =>
+      requireInheritedRefsLive(replicaDir, m)
+      mergedBucketRead(spark, replicaDir, m)
     }
 
   /** Key-predicate read path — the read-side half of the
@@ -1123,13 +1025,12 @@ object CdcStream {
     * pruned scan. A point lookup on a 16-bucket replica reads one
     * bucket's files, not 16.
     *
-    * None when no version was ever committed or the replica is empty;
-    * the pre-bucket flat layout falls back to a full scan + semi-join.
+    * None when no version was ever committed or the replica is empty.
     */
   def readReplicaForKeys(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, idCols: Seq[String], keys: DataFrame): Option[DataFrame] =
-    currentVersion(replicaDir).flatMap { case (_, name) =>
-      readForKeysAt(spark, replicaDir, name, idCols, keys)
+    currentManifest(replicaDir).flatMap { case (_, _, m) =>
+      readForKeysAt(spark, replicaDir, m, idCols, keys)
     }
 
   /** Key-pruned read that PRESERVES conditional delete state: a key
@@ -1141,20 +1042,15 @@ object CdcStream {
     * `conditionalOrder` — need the tombstones' late-loser protection in
     * the compare, or a losing late update would look like a fresh
     * insert and plant a stale index entry on a dead key. Rows from
-    * stores that never merged conditionally carry `__tombstone = false`
-    * — including pre-bucket FLAT layouts, where false is exact, not a
-    * degradation: a conditional merge's first touch migrates a flat
-    * store into the bucketed layout, so a still-flat store can hold no
-    * tombstone (its legacy deletes removed rows without order
-    * metadata; nothing exists for the compare to protect).
+    * stores that never merged conditionally carry `__tombstone = false`.
     * Same bucket pruning and cost shape as [[readReplicaForKeys]].
     */
   def readReplicaForKeysWithTombstones(
       spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, idCols: Seq[String],
       keys: DataFrame): Option[DataFrame] =
-    currentVersion(replicaDir).flatMap { case (_, name) =>
-      readForKeysAt(spark, replicaDir, name, idCols, keys,
+    currentManifest(replicaDir).flatMap { case (_, _, m) =>
+      readForKeysAt(spark, replicaDir, m, idCols, keys,
         keepDeletes = true)
     }.map(withTombstoneFlag)
 
@@ -1166,79 +1062,66 @@ object CdcStream {
       df.withColumn(Tombstone, coalesce(col(Tombstone), lit(false)))
     else df.withColumn(Tombstone, lit(false))
 
-  /** Key-pruned read of a SPECIFIC version — the time-travel twin of
-    * [[readReplicaForKeys]] (same exact hash-derived bucket pruning,
-    * same broadcast semi-join), reading through the given version's
-    * manifest instead of CURRENT. The delta-sized restore diff reads
-    * the rollback target through this: O(touched buckets), not
+  /** Key-pruned read of one version's manifest `m` — CURRENT's, or a
+    * historical one for time travel (same exact hash-derived bucket
+    * pruning, same broadcast semi-join). The delta-sized restore diff
+    * reads the rollback target through this: O(touched buckets), not
     * O(store), even when the target is a historical version.
     * `buckets`: the candidate buckets when the caller already knows
     * them (an [[EagerCommit]]'s touched set) — skips the collect that
-    * derives them from the keys.
+    * derives them from the keys. None when `m` is committed-but-empty.
     */
   private def readForKeysAt(spark: org.apache.spark.sql.SparkSession,
-      replicaDir: String, name: String, idCols: Seq[String],
+      replicaDir: String, m: ReplicaManifest, idCols: Seq[String],
       keys: DataFrame, keepDeletes: Boolean = false,
-      buckets: Option[Set[Int]] = None): Option[DataFrame] = {
-      readManifest(replicaDir, name) match {
-        case Some(m) if m.buckets.nonEmpty || m.deltas.nonEmpty =>
-          // same dangling-clone refusal as the full read: a pruned
-          // lookup (the GSI hot path) must name the recovery too, not
-          // throw FileNotFoundException from a scan task
-          requireInheritedRefsLive(replicaDir, m)
-          val allPaths = m.buckets.values.toSeq.sorted
-            .map(p => resolveStorePath(replicaDir, p))
-          // Catalyst hash() is TYPE-sensitive (hash(5) != hash(5L)): the
-          // lookup keys must be cast to the replica's column types
-          // before bucket derivation, or a type-skewed caller would be
-          // pruned to the WRONG bucket and silently get no rows (the
-          // semi-join alone would have coerced and matched). The union
-          // schema comes from the MANIFEST (recorded at write time) —
-          // a footer-merge over every bucket file here would cost a
-          // full-index metadata scan per lookup, the exact amplification
-          // the pruned path exists to avoid. Pre-schema manifests fall
-          // back to that merge once (their next write upgrades them).
-          val fullSchema = manifestSchema(m)
-            .getOrElse(spark.read.option("mergeSchema", "true")
-              .parquet(allPaths: _*).schema)
-          val replicaTypes =
-            fullSchema.fields.map(f => f.name -> f.dataType).toMap
-          val typedKeys = keys.select(idCols.map { c =>
-            val t = replicaTypes.getOrElse(c, throw new IllegalArgumentException(
-              s"readReplicaForKeys: idCol $c not in replica schema " +
-                replicaTypes.keys.mkString("[", ",", "]")))
-            keys(c).cast(t).as(c)
-          }: _*)
-          // a bucketCols-routed replica (secondary-index layout) prunes
-          // by the recorded subset — the caller's key tuples must carry
-          // those columns (they do whenever bucketCols ⊆ idCols)
-          val bc = m.bucketCols.getOrElse(idCols)
-          bc.filterNot(idCols.contains).foreach(c =>
-            throw new IllegalArgumentException(
-              s"readReplicaForKeys: replica routes by bucketCol '$c' " +
-                s"which is not among the lookup idCols $idCols"))
-          val candidate = buckets.getOrElse {
-            val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
-            typedKeys.select(bucketOf.as("__bucket")).distinct()
-              .collect().map(_.getInt(0)).toSet
-          }
-          // reading with the explicit FULL schema both null-fills
-          // columns a pruned bucket predates (additive evolution) and
-          // avoids a per-lookup footer merge; pending deltas on the
-          // candidate buckets fold newest-net-wins inside
-          // mergedBucketRead (the pruning itself is unchanged — delta
-          // rows route by the same hash)
-          val base = mergedBucketRead(spark, replicaDir, m, candidate,
-              schemaOverride = Some(fullSchema), keepDeletes = keepDeletes)
-            .getOrElse(spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](), fullSchema))
-          val folded = if (keepDeletes) base else filterTombstones(base)
-          Some(folded.join(broadcast(typedKeys), idCols, "left_semi"))
-        case Some(_) => None // committed but empty
-        case None => // pre-bucket flat layout: no pruning metadata
-          Some(filterTombstones(spark.read.parquet(s"$replicaDir/$name"))
-            .join(broadcast(keys), idCols, "left_semi"))
+      buckets: Option[Set[Int]] = None): Option[DataFrame] =
+    if (m.buckets.isEmpty && m.deltas.isEmpty) None
+    else {
+      // same dangling-clone refusal as the full read: a pruned
+      // lookup (the GSI hot path) must name the recovery too, not
+      // throw FileNotFoundException from a scan task
+      requireInheritedRefsLive(replicaDir, m)
+      // Catalyst hash() is TYPE-sensitive (hash(5) != hash(5L)): the
+      // lookup keys must be cast to the replica's column types
+      // before bucket derivation, or a type-skewed caller would be
+      // pruned to the WRONG bucket and silently get no rows (the
+      // semi-join alone would have coerced and matched). The union
+      // schema comes from the MANIFEST (recorded at write time) —
+      // a footer-merge over every bucket file here would cost a
+      // full-index metadata scan per lookup, the exact amplification
+      // the pruned path exists to avoid.
+      val replicaTypes = m.schema.fields.map(f => f.name -> f.dataType).toMap
+      val typedKeys = keys.select(idCols.map { c =>
+        val t = replicaTypes.getOrElse(c, throw new IllegalArgumentException(
+          s"readReplicaForKeys: idCol $c not in replica schema " +
+            replicaTypes.keys.mkString("[", ",", "]")))
+        keys(c).cast(t).as(c)
+      }: _*)
+      // a bucketCols-routed replica (secondary-index layout) prunes
+      // by the recorded subset — the caller's key tuples must carry
+      // those columns (they do whenever bucketCols ⊆ idCols)
+      val bc = m.bucketCols.getOrElse(idCols)
+      bc.filterNot(idCols.contains).foreach(c =>
+        throw new IllegalArgumentException(
+          s"readReplicaForKeys: replica routes by bucketCol '$c' " +
+            s"which is not among the lookup idCols $idCols"))
+      val candidate = buckets.getOrElse {
+        val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
+        typedKeys.select(bucketOf.as("__bucket")).distinct()
+          .collect().map(_.getInt(0)).toSet
       }
+      // reading with the explicit FULL schema both null-fills
+      // columns a pruned bucket predates (additive evolution) and
+      // avoids a per-lookup footer merge; pending deltas on the
+      // candidate buckets fold newest-net-wins inside
+      // mergedBucketRead (the pruning itself is unchanged — delta
+      // rows route by the same hash)
+      val base = mergedBucketRead(spark, replicaDir, m, candidate,
+          keepDeletes = keepDeletes)
+        .getOrElse(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema))
+      val folded = if (keepDeletes) base else filterTombstones(base)
+      Some(folded.join(broadcast(typedKeys), idCols, "left_semi"))
     }
 
   /** Public face of [[readForKeysAt]]: key-pruned read of a specific
@@ -1249,11 +1132,9 @@ object CdcStream {
     */
   def readReplicaForKeysAt(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, version: Long, idCols: Seq[String],
-      keys: DataFrame): Option[DataFrame] = {
-    val name = f"v$version%09d"
-    if (!new java.io.File(replicaDir, name).isDirectory) None
-    else readForKeysAt(spark, replicaDir, name, idCols, keys)
-  }
+      keys: DataFrame): Option[DataFrame] =
+    readManifest(replicaDir, f"v$version%09d")
+      .flatMap(readForKeysAt(spark, replicaDir, _, idCols, keys))
 
   /** ZONE-MAP range read: serve `column ∈ [lo, hi]` over the replica's
     * CURRENT state while SKIPPING bucket files whose parquet-footer
@@ -1314,103 +1195,83 @@ object CdcStream {
       atVersion: Option[Long] = None)
       : Option[(DataFrame, Int, Int)] = {
     require(colBounds.nonEmpty, "readReplicaRangeMulti: no bounds given")
-    val resolved: Option[(Long, String)] = atVersion match {
-      case Some(v) =>
-        val name = f"v$v%09d"
-        if (new java.io.File(replicaDir, name).isDirectory) Some((v, name))
-        else None
-      case None => currentVersion(replicaDir)
+    val resolved: Option[ReplicaManifest] = atVersion match {
+      case Some(v) => readManifest(replicaDir, f"v$v%09d")
+      case None => currentManifest(replicaDir).map(_._3)
     }
     val (column, lo, hi) = colBounds.head
-    resolved.flatMap { case (_, name) =>
-      readManifest(replicaDir, name) match {
-        case Some(m) if m.buckets.nonEmpty || m.deltas.nonEmpty =>
-          // liveness: current-version reads enforce inherited refs
-          // loudly; a historical read's GC'd references mean "gone"
-          // (None), matching readReplicaAt
-          val live = if (atVersion.isEmpty) {
-            requireInheritedRefsLive(replicaDir, m); true
-          } else (m.buckets.values ++ m.deltas.values.flatten).toSeq
-            .map(p => resolveStorePath(replicaDir, p))
-            .forall(p => new java.io.File(p).exists())
-          if (!live) None else {
-          val fullSchema = manifestSchema(m).getOrElse {
-            val all = m.buckets.values.toSeq.sorted
-              .map(p => resolveStorePath(replicaDir, p))
-            spark.read.option("mergeSchema", "true").parquet(all: _*).schema
-          }
-          def colType(c: String) =
-            fullSchema.fields.find(_.name == c).map(_.dataType)
-          // UNIT PARITY with the footer stats: a TimestampType column's
-          // parquet min/max are epoch MICROS, so the residual predicate
-          // must compare micros too — cast("long") on a timestamp
-          // yields SECONDS and would silently empty the result
-          def asLong(c: String) =
-            if (colType(c).contains(org.apache.spark.sql.types.TimestampType))
-              unix_micros(col(c))
-            else col(c).cast("long")
-          def longTyped(c: String) = colType(c).exists(t =>
-            t == org.apache.spark.sql.types.LongType ||
-              t == org.apache.spark.sql.types.TimestampType)
-          // the exact CONJUNCTION re-applies to every surviving row
-          val pred = colBounds.map { case (c, l, h) =>
-            asLong(c).between(l, h) }.reduce(_ && _)
-          val deltaBuckets = m.deltas.keySet
-          // delta-carrying buckets: full fold, no file pruning (see
-          // scaladoc — a pruned base row could flip a fold winner)
-          val foldSide: Option[DataFrame] =
-            if (deltaBuckets.isEmpty) None
-            else mergedBucketRead(spark, replicaDir, m,
-              keep = deltaBuckets.contains,
-              schemaOverride = Some(fullSchema))
-          val scannable = m.buckets.collect {
-            case (k, p) if !deltaBuckets(k) =>
-              resolveStorePath(replicaDir, p)
-          }.toSeq.sorted
-          // per-column zones over the same file universe; a column
-          // without footer-scannable stats yields stat-less zones
-          // (keeps every file — no pruning, never wrong results)
-          def zonesFor(c: String): Seq[graft.operators.ZoneMaps.FileZone] =
-            if (longTyped(c))
-              // cached: committed bucket dirs are immutable, so
-              // repeated range scans pay the footer pass once
-              scannable.flatMap(d =>
-                graft.operators.ZoneMaps.fileZonesLongCached(d, c))
-            else scannable.flatMap(d => Option(new java.io.File(d)
-                .listFiles()).getOrElse(Array.empty).toSeq
-              .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-              .map(f => graft.operators.ZoneMaps.FileZone(
-                f.getPath, 0L, None, None)))
-          val zones = zonesFor(column)
-          // INTERSECTION across bounds: a file survives only if every
-          // bounded column's zone overlaps that column's range
-          val otherBounds = colBounds.tail.map { case (c, l, h) =>
-            (zonesFor(c).map(z => z.path -> z).toMap, l, h) }
-          val keep = graft.operators.ZoneMaps.overlapping(zones, lo, hi)
-            .filter(z => otherBounds.forall { case (zm, l, h) =>
-              zm.get(z.path).forall(zz =>
-                graft.operators.ZoneMaps.overlaps(zz, l, h)) })
-          val baseSide: Option[DataFrame] =
-            if (keep.isEmpty) None
-            else Some(filterTombstones(
-              spark.read.schema(fullSchema).parquet(keep.map(_.path): _*)))
-          val rows = (baseSide.toSeq ++ foldSide.toSeq)
-            .reduceOption(_.unionByName(_, allowMissingColumns = true))
-            .getOrElse(spark.createDataFrame(
-              new java.util.ArrayList[org.apache.spark.sql.Row](),
-              fullSchema))
-            .filter(pred)
-          Some((rows.drop(Tombstone), keep.size, zones.size))
-          }
-        case Some(_) => None // committed but empty
-        case None => // pre-bucket flat layout: no per-bucket metadata
-          val df = filterTombstones(
-            spark.read.parquet(s"$replicaDir/$name"))
-            .filter(colBounds.map { case (c, l, h) =>
-              col(c).cast("long").between(l, h) }.reduce(_ && _))
-          Some((df, 0, 0))
+    resolved.filter(m => m.buckets.nonEmpty || m.deltas.nonEmpty)
+      // liveness: current-version reads enforce inherited refs loudly;
+      // a historical read's GC'd references mean "gone" (None),
+      // matching readReplicaAt
+      .filter { m =>
+        if (atVersion.isEmpty) { requireInheritedRefsLive(replicaDir, m); true }
+        else (m.buckets.values ++ m.deltas.values.flatten)
+          .forall(p => new java.io.File(resolveStorePath(replicaDir, p)).exists())
       }
-    }
+      .map { m =>
+        def colType(c: String) =
+          m.schema.fields.find(_.name == c).map(_.dataType)
+        // UNIT PARITY with the footer stats: a TimestampType column's
+        // parquet min/max are epoch MICROS, so the residual predicate
+        // must compare micros too — cast("long") on a timestamp
+        // yields SECONDS and would silently empty the result
+        def asLong(c: String) =
+          if (colType(c).contains(org.apache.spark.sql.types.TimestampType))
+            unix_micros(col(c))
+          else col(c).cast("long")
+        def longTyped(c: String) = colType(c).exists(t =>
+          t == org.apache.spark.sql.types.LongType ||
+            t == org.apache.spark.sql.types.TimestampType)
+        // the exact CONJUNCTION re-applies to every surviving row
+        val pred = colBounds.map { case (c, l, h) =>
+          asLong(c).between(l, h) }.reduce(_ && _)
+        val deltaBuckets = m.deltas.keySet
+        // delta-carrying buckets: full fold, no file pruning (see
+        // scaladoc — a pruned base row could flip a fold winner)
+        val foldSide: Option[DataFrame] =
+          if (deltaBuckets.isEmpty) None
+          else mergedBucketRead(spark, replicaDir, m,
+            keep = deltaBuckets.contains)
+        val scannable = m.buckets.collect {
+          case (k, p) if !deltaBuckets(k) =>
+            resolveStorePath(replicaDir, p)
+        }.toSeq.sorted
+        // per-column zones over the same file universe; a column
+        // without footer-scannable stats yields stat-less zones
+        // (keeps every file — no pruning, never wrong results)
+        def zonesFor(c: String): Seq[graft.operators.ZoneMaps.FileZone] =
+          if (longTyped(c))
+            // cached: committed bucket dirs are immutable, so
+            // repeated range scans pay the footer pass once
+            scannable.flatMap(d =>
+              graft.operators.ZoneMaps.fileZonesLongCached(d, c))
+          else scannable.flatMap(d => Option(new java.io.File(d)
+              .listFiles()).getOrElse(Array.empty).toSeq
+            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+            .map(f => graft.operators.ZoneMaps.FileZone(
+              f.getPath, 0L, None, None)))
+        val zones = zonesFor(column)
+        // INTERSECTION across bounds: a file survives only if every
+        // bounded column's zone overlaps that column's range
+        val otherBounds = colBounds.tail.map { case (c, l, h) =>
+          (zonesFor(c).map(z => z.path -> z).toMap, l, h) }
+        val keep = graft.operators.ZoneMaps.overlapping(zones, lo, hi)
+          .filter(z => otherBounds.forall { case (zm, l, h) =>
+            zm.get(z.path).forall(zz =>
+              graft.operators.ZoneMaps.overlaps(zz, l, h)) })
+        val baseSide: Option[DataFrame] =
+          if (keep.isEmpty) None
+          else Some(filterTombstones(
+            spark.read.schema(m.schema).parquet(keep.map(_.path): _*)))
+        val rows = (baseSide.toSeq ++ foldSide.toSeq)
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
+          .getOrElse(spark.createDataFrame(
+            new java.util.ArrayList[org.apache.spark.sql.Row](),
+            m.schema))
+          .filter(pred)
+        (rows.drop(Tombstone), keep.size, zones.size)
+      }
   }
 
   /** Stream-side dimension enrichment — the "lookup join" every CDC
@@ -1444,34 +1305,25 @@ object CdcStream {
     * buckets keep old version dirs alive indefinitely; fully-rewritten
     * ones survive exactly one GC grace window, so the PREVIOUS version
     * is always readable). None when the version was GC'd, never
-    * committed, or is committed-but-empty.
+    * committed, is committed-but-empty, or predates the current store
+    * format.
     */
   def readReplicaAt(spark: org.apache.spark.sql.SparkSession,
-      replicaDir: String, version: Long): Option[DataFrame] = {
-    val name = f"v$version%09d"
-    if (!new java.io.File(replicaDir, name).isDirectory) None
-    else readManifest(replicaDir, name) match {
-      case Some(m) if m.buckets.nonEmpty || m.deltas.nonEmpty =>
-        // a referenced older version dir may itself have been GC'd only
-        // if nothing points at it — verify the files are still present
-        val paths = (m.buckets.values ++ m.deltas.values.flatten).toSeq
-          .sorted.map(p => resolveStorePath(replicaDir, p))
-        if (paths.forall(p => new java.io.File(p).exists()))
-          mergedBucketRead(spark, replicaDir, m)
-        else None
-      case Some(_) => None // committed but empty
-      case None => Some(filterTombstones(
-        spark.read.parquet(s"$replicaDir/$name")))
-    }
-  }
+      replicaDir: String, version: Long): Option[DataFrame] =
+    readManifest(replicaDir, f"v$version%09d")
+      // a referenced older version dir may itself have been GC'd only
+      // if nothing points at it — verify the files are still present
+      .filter(m => (m.buckets.values ++ m.deltas.values.flatten)
+        .forall(p => new java.io.File(resolveStorePath(replicaDir, p)).exists()))
+      .flatMap(mergedBucketRead(spark, replicaDir, _))
 
   /** Change-feed read (the Delta-CDF analog): the committed per-key
     * NETS of versions in `(fromVersionExclusive, toVersion]`, each row
     * stamped `_commit_version` / `_commit_watermark`. Requires the
     * writer to have merged with `recordChanges = true`; versions
-    * without a changes dir (compaction rewrites, the flat-layout
-    * migration, pre-CDF merges) contribute NO rows — compaction is
-    * content-identical, so that is the correct empty change set.
+    * without a changes dir (compaction rewrites, reshards, upgrades)
+    * contribute NO rows — they are content-identical, so that is the
+    * correct empty change set.
     *
     * Version numbers are DENSE (each commit increments by one), so a
     * missing version dir in the requested range is provably a GC'd
@@ -1490,9 +1342,9 @@ object CdcStream {
     * REFUSE instead of letting the consumer silently diverge. This
     * guards EVERY feed surface: the batch drain ([[replayFeedInto]]),
     * the batch change-feed relation, and the streaming feed source's
-    * `getBatch`. Manifests predating the classification (None) keep
-    * the historical silent-skip — after the fact a changeless legacy
-    * version is indistinguishable from a compaction. `strict = false`
+    * `getBatch`. A changeless version with no classification at all
+    * (its manifest GC'd without a `_feed` meta, or in an older store
+    * format) refuses like a gap. `strict = false`
     * opts out for reads that INSPECT scrubbed history rather than
     * replay it (erasure-compliance verification, schema inference).
     *
@@ -1583,10 +1435,14 @@ object CdcStream {
         // changeless version: classify by commit kind — from the live
         // manifest, or the `_feed` meta once data GC retired the dir
         val kind = readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-          .orElse(feedMeta(replicaDir, v).map(_._1))
-          .flatten
+          .orElse(feedMeta(replicaDir, v).flatMap(_._1))
         kind match {
-          case Some("compact") | Some("reshard") | None => () // identical / legacy
+          case Some(k) if IdenticalKinds(k) => ()
+          case None => throw new IllegalStateException(
+            s"replica $replicaDir: version $v has no changes and no " +
+              "commit kind to classify it (GC'd, or written in an older " +
+              "store format) — the feed cannot be read across it; " +
+              "restart the consumer from a full snapshot")
           case Some("clone") => throw new IllegalStateException(
             s"replica $replicaDir: version $v is the store's SHALLOW-CLONE " +
               "initial version — its content equals the clone source at " +
@@ -1645,9 +1501,9 @@ object CdcStream {
     * delta-sized rewind/restore diffs prune by. Some(keys) ONLY when
     * every version in the range is accounted for: it records changes,
     * or its `commitKind` proves it content-identical (compact /
-    * reshard). A version that mutated content outside the feed (an
-    * erasure, a recordChanges=false merge, a legacy unclassified
-    * changeless commit) — or a GC'd version dir — returns outer None:
+    * reshard / upgrade). A version that mutated content outside the
+    * feed (an erasure, a recordChanges=false merge) — or a GC'd or
+    * unclassifiable version dir — returns outer None:
     * the feed cannot bound the divergence, so the caller must fall
     * back to the full-store diff. `Some(None)` means the range is
     * PROVABLY divergence-free (all versions content-identical).
@@ -1669,10 +1525,9 @@ object CdcStream {
           // the `_feed` meta a data GC left behind; a version with
           // NEITHER (truncated feed / pre-retention GC) is unknowable
           readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-            .orElse(feedMeta(replicaDir, v).map(_._1)) match {
-            case Some(Some("compact")) | Some(Some("reshard")) =>
-              Some(None) // identical
-            case _ => None // mutated outside the feed, legacy, or gone
+            .orElse(feedMeta(replicaDir, v).flatMap(_._1)) match {
+            case Some(k) if IdenticalKinds(k) => Some(None)
+            case _ => None // mutated outside the feed, or gone
           }
       }
     }
@@ -1684,9 +1539,9 @@ object CdcStream {
 
   /** True iff the store's content at version `fromV` PROVABLY equals
     * its content at version `toV` (fromV ≤ toV): every version in
-    * `(fromV, toV]` is a content-identical commit (compact / reshard).
-    * Metadata-only (manifest `commitKind` reads). A GC'd version dir,
-    * a legacy unclassified manifest, or any content-mutating kind
+    * `(fromV, toV]` is a content-identical commit ([[IdenticalKinds]]).
+    * Metadata-only (manifest `commitKind` reads). A GC'd or
+    * unclassifiable version dir, or any content-mutating kind
     * (merge / erase / restore) returns false — the conservative
     * answer. Used by the GSI cursor checks: an index in sync at
     * `fromV` is still in sync at `toV` across pure maintenance
@@ -1700,9 +1555,8 @@ object CdcStream {
       // version classification, so an in-sync index isn't misreported
       // as lagging once an intervening compact/reshard dir ages out
       readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-        .orElse(feedMeta(replicaDir, v).map(_._1))
-        .flatten
-        .exists(k => k == "compact" || k == "reshard")
+        .orElse(feedMeta(replicaDir, v).flatMap(_._1))
+        .exists(IdenticalKinds)
     }
 
   /** The CURRENT committed version number (the pointer's target) —
@@ -1874,10 +1728,7 @@ object CdcStream {
     * through the feed would silently RETAIN the erased keys — apply
     * [[eraseKeys]] to the follower separately), and a merge committed
     * with `recordChanges = false` is a commit the feed simply never
-    * carried — both REFUSE instead of silently diverging. Manifests
-    * predating the classification (None) keep the historical
-    * silent-skip: after the fact a changeless legacy version is
-    * indistinguishable from a compaction.
+    * carried — both REFUSE instead of silently diverging.
     *
     * `conditionalApply` replays into an ORDER-CONDITIONAL follower:
     * the fold still runs by commit order (a conditional primary's
@@ -2053,8 +1904,8 @@ object CdcStream {
     * is divergence-sized too — at 100 TB the difference between a
     * failover drill and a double full-store scan per rejoin. Any
     * version in either range that mutated content outside the feed
-    * (erasure, recordChanges=false, legacy) falls back to the full
-    * diff — correct, never silently partial.
+    * (erasure, recordChanges=false) falls back to the full diff —
+    * correct, never silently partial.
     *
     * ==The fork invariant — REQUIRED for the delta path==
     * The new primary's content at `newPrimaryForkVersion` must EQUAL
@@ -2077,17 +1928,16 @@ object CdcStream {
       opCol: String = "op",
       demotedDivergedAfter: Option[Long] = None,
       newPrimaryForkVersion: Option[Long] = None): Long = {
-    val (vp, vpName) = currentVersion(newPrimaryDir).getOrElse(
+    val (vp, _, pm) = currentManifest(newPrimaryDir).getOrElse(
       throw new IllegalStateException(
         s"resync: new primary $newPrimaryDir has no committed version"))
-    currentVersion(demotedDir)
-      .flatMap { case (_, n) => readManifest(demotedDir, n) }
-      .foreach { m =>
-        require(m.condOrderCols.isEmpty && !m.deltasConditional,
-          "resyncAsFollower supports sequence stores; a conditional " +
-            "store rejoins via reseedAsFollower (compact-and-reseed)")
-      }
-    val vd = currentVersion(demotedDir).map(_._1).getOrElse(0L)
+    val demoted = currentManifest(demotedDir)
+    demoted.foreach { case (_, _, m) =>
+      require(m.condOrderCols.isEmpty && !m.deltasConditional,
+        "resyncAsFollower supports sequence stores; a conditional " +
+          "store rejoins via reseedAsFollower (compact-and-reseed)")
+    }
+    val vd = demoted.map(_._1).getOrElse(0L)
     // divergence bound off the two change feeds (None = unbounded →
     // full diff): demoted keys past the delivery fork ∪ new-primary
     // keys past the promotion fork
@@ -2129,7 +1979,7 @@ object CdcStream {
       case Some(Some(keys)) =>
         // both sides restricted to the candidate keys' buckets — the
         // diff (and its read) is divergence-sized
-        val want = readForKeysAt(spark, newPrimaryDir, vpName, idCols, keys)
+        val want = readForKeysAt(spark, newPrimaryDir, pm, idCols, keys)
         val have = readReplicaForKeys(spark, demotedDir, idCols, keys)
         (want, have) match {
           case (None, None) => None
@@ -2196,18 +2046,12 @@ object CdcStream {
         "the store, so freezeReplica it first (promoteFollower already " +
         "does during a failover)")
     compactReplica(spark, newPrimaryDir)
-    val (vp, vpName) = currentVersion(newPrimaryDir).getOrElse(
+    val (vp, _, m) = currentManifest(newPrimaryDir).getOrElse(
       throw new IllegalStateException(
         s"reseed: new primary $newPrimaryDir has no committed version"))
-    val m = readManifest(newPrimaryDir, vpName)
     // raw snapshot INCLUDING tombstone rows (keepDeletes): the
     // late-loser protection must survive the reseed
-    val snapshot: Option[DataFrame] = m match {
-      case Some(mm) => mergedBucketRead(spark, newPrimaryDir, mm,
-        keepDeletes = true)
-      case None => // pre-bucket flat layout (no tombstones possible)
-        Some(spark.read.parquet(s"$newPrimaryDir/$vpName"))
-    }
+    val snapshot = mergedBucketRead(spark, newPrimaryDir, m, keepDeletes = true)
     // MATERIALIZE the snapshot BEFORE the wipe: the read must succeed
     // while the demoted store still exists — a lazy read executed
     // after the wipe would, on an unreadable new primary (e.g. the
@@ -2233,7 +2077,7 @@ object CdcStream {
       seedMat.foreach { case (seed, _) =>
         applyNetToReplica(demotedDir, seed,
           seed.columns.toArray, idCols, opCol,
-          numBuckets = m.map(_.numBuckets).getOrElse(DefaultReplicaBuckets),
+          numBuckets = m.numBuckets,
           conditional = Some(orderCols), bypassFreeze = true,
           reduceBy = Some(orderCols))
       }
@@ -2302,20 +2146,15 @@ object CdcStream {
   def restoreReplica(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, toVersion: Long,
       recordChanges: Boolean = false,
-      /** Key columns for the feed entry when the store's manifests
-        * predate `keyCols` (pre-metadata stores record none).
-        */
-      idColsOverride: Seq[String] = Nil,
       /** Run every refusal check, then return WITHOUT committing —
         * the dry-run half of [[restoreConsistentTables]]'s two-phase
         * contract (all refusals before the first commit).
         */
       validateOnly: Boolean = false): Unit = {
     requireUnfrozen(replicaDir)
-    val cur = currentVersion(replicaDir)
-    if (cur.isEmpty) throw new IllegalStateException(
-      s"restore: $replicaDir has no committed version")
-    val (v, name) = cur.get
+    val (v, name, prev) = currentManifest(replicaDir).getOrElse(
+      throw new IllegalStateException(
+        s"restore: $replicaDir has no committed version"))
     if (toVersion == v) return
     // only committed PREDECESSORS restore: a version dir above CURRENT
     // is a crashed writer's unpublished orphan — restoring "to" it
@@ -2328,7 +2167,8 @@ object CdcStream {
     val target = readManifest(replicaDir, targetName).getOrElse(
       throw new IllegalArgumentException(
         s"restore: $replicaDir has no manifest for version $toVersion " +
-          "(never committed, or GC'd past the retained window)"))
+          "(never committed, GC'd past the retained window, or written " +
+          "in an older store format)"))
     // every referenced data path must still exist — a half-GC'd target
     // would publish dangling references
     val missing = (target.buckets.values ++ target.deltas.values.flatten)
@@ -2336,7 +2176,6 @@ object CdcStream {
     if (missing.nonEmpty) throw new IllegalStateException(
       s"restore: version $toVersion's data was GC'd " +
         s"(missing: ${missing.take(3).mkString(", ")}…)")
-    val prev = readManifest(replicaDir, name)
     val feedActive = replicaHasFeed(replicaDir)
     if (feedActive && !recordChanges) throw new IllegalStateException(
       s"restore: $replicaDir records a change feed — restore with " +
@@ -2348,38 +2187,25 @@ object CdcStream {
     // resyncAsFollower refuses
     if (recordChanges &&
         (target.condOrderCols.nonEmpty || target.deltasConditional ||
-          prev.exists(p => p.condOrderCols.nonEmpty || p.deltasConditional)))
+          prev.condOrderCols.nonEmpty || prev.deltasConditional))
       throw new IllegalStateException(
         "restore: a conditional store's feed followers fold greatest-" +
           "order-wins and would drop the rollback rows — re-seed " +
           "followers from the restored snapshot (reseedAsFollower) " +
           "instead of a restore feed entry")
-    // recordChanges additionally needs key columns — surface that in
-    // the dry run too, not at diff time
-    if (recordChanges)
-      target.keyCols.orElse(prev.flatMap(_.keyCols))
-        .orElse(Option(idColsOverride).filter(_.nonEmpty)).getOrElse(
-          throw new IllegalStateException(
-            "restore: recordChanges needs key columns — this store's " +
-              "manifests predate keyCols; pass idColsOverride"))
     if (validateOnly) return
     val nextName = f"v${v + 1}%09d"
     val staging = newStagingDir(replicaDir)
     if (recordChanges) {
-      val opCol = target.opColName.orElse(prev.flatMap(_.opColName))
-        .getOrElse("op")
-      val ids = target.keyCols.orElse(prev.flatMap(_.keyCols))
-        .orElse(Option(idColsOverride).filter(_.nonEmpty)).getOrElse(
-          throw new IllegalStateException(
-            "restore: recordChanges needs key columns — this store's " +
-              "manifests predate keyCols; pass idColsOverride"))
+      val opCol = target.opColName
+      val ids = target.keyCols
       // DELTA-SIZED when the feed covers (toVersion, current]: the
       // divergence between the target and the current state is bounded
       // by the keys those versions' feed entries touched, so both
       // sides read only the touched keys' buckets ([[readForKeysAt]]
       // pruning — O(rolled-back delta), never O(store)). A version in
       // the range that mutated content outside the feed (erasure,
-      // recordChanges=false, legacy) falls back to the full diff.
+      // recordChanges=false) falls back to the full diff.
       val bound: Option[DataFrame] =
         feedTouchedKeys(spark, replicaDir, toVersion, v, ids) match {
           case Some(Some(keys)) => Some(keys)
@@ -2393,8 +2219,8 @@ object CdcStream {
       // legitimate diff endpoint (restore-to-empty = all-delete entry)
       val (wantOpt, haveOpt) = bound match {
         case Some(keys) if keys.columns.nonEmpty =>
-          (readForKeysAt(spark, replicaDir, targetName, ids, keys),
-            readReplicaForKeys(spark, replicaDir, ids, keys))
+          (readForKeysAt(spark, replicaDir, target, ids, keys),
+            readForKeysAt(spark, replicaDir, prev, ids, keys))
         case Some(_) => (None, None) // empty-schema sentinel: no diff
         case None =>
           (readReplicaAt(spark, replicaDir, toVersion),
@@ -2409,7 +2235,7 @@ object CdcStream {
             .write.parquet(s"$staging/changes")
       }
     }
-    publishVersion(replicaDir, staging, nextName, target, prev,
+    publishVersion(replicaDir, staging, nextName, target, Some(prev),
       Some(name), forbidFrozen = true, kind = "restore")
   }
 
@@ -2475,14 +2301,15 @@ object CdcStream {
     * driver-side metadata, no data rows read:
     *
     *  - `current_pointer` (error): CURRENT names a version dir with a
-    *    readable manifest (pre-bucket flat layouts pass with info);
+    *    manifest in the current store format (an older one names
+    *    [[upgradeReplica]]);
     *  - `dangling_ref` (error): a current-manifest bucket/delta path
     *    does not exist ([[verifyReplicaIntegrity]] — the shallow-clone
     *    churn hazard, or manual deletion);
     *  - `empty_bucket_dir` (warn): a referenced bucket dir exists but
     *    holds no parquet file (half-deleted data);
-    *  - `schema` (error): the manifest's recorded schema fails to
-    *    parse;
+    *  - `schema` (error): the manifest, its recorded schema included,
+    *    fails to parse;
     *  - `conditional_meta` (error): deltas are marked conditional but
     *    no order columns are recorded;
     *  - `delta_sequence` (error): a bucket's delta chain is not in
@@ -2534,17 +2361,15 @@ object CdcStream {
         if (!new java.io.File(replicaDir, name).isDirectory)
           add("current_pointer", "error", name,
             "CURRENT names a version dir that does not exist")
-        else readManifest(replicaDir, name) match {
-          case None =>
-            add("current_pointer", "info", name,
-              "version dir has no manifest (pre-bucket flat layout)")
-          case Some(m) =>
-            // schema parse
-            try { manifestSchema(m); () } catch {
-              case e: Exception =>
-                add("schema", "error", name,
-                  s"manifest schema does not parse: ${e.getMessage}")
-            }
+        else (try Right(readManifest(replicaDir, name)) catch {
+          case e: Exception => Left(e)
+        }) match {
+          case Left(e) =>
+            add("schema", "error", name,
+              s"manifest does not parse: ${e.getMessage}")
+          case Right(None) =>
+            add("current_pointer", "error", name, olderFormat(replicaDir, name))
+          case Right(Some(m)) =>
             if (m.deltasConditional && m.condOrderCols.isEmpty)
               add("conditional_meta", "error", name,
                 "deltas marked conditional but no order columns recorded")
@@ -2761,11 +2586,11 @@ object CdcStream {
   def cloneReplica(sourceDir: String, cloneDir: String,
       atVersion: Option[Long] = None): Long = {
     val srcAbs = new java.io.File(sourceDir).getAbsolutePath
-    val cur = currentVersion(srcAbs).getOrElse(throw new IllegalStateException(
-      s"cloneReplica: source $sourceDir has no committed version"))
-    val (curV, curName) = cur
-    val (v, name) = atVersion match {
-      case None => (curV, curName)
+    val (curV, _, curM) = currentManifest(srcAbs).getOrElse(
+      throw new IllegalStateException(
+        s"cloneReplica: source $sourceDir has no committed version"))
+    val (v, m) = atVersion match {
+      case None => (curV, curM)
       case Some(av) =>
         // same rule as RESTORE: only committed predecessors — a dir
         // above CURRENT is a crashed writer's unpublished orphan
@@ -2773,12 +2598,12 @@ object CdcStream {
           s"cloneReplica: version $av is ahead of the current version " +
             s"$curV (an unpublished crashed-writer orphan, not a " +
             "committed state)")
-        (av, f"v$av%09d")
+        (av, readManifest(srcAbs, f"v$av%09d").getOrElse(
+          throw new IllegalStateException(s"cloneReplica: source " +
+            s"$sourceDir has no manifest for version $av (never " +
+            "committed, GC'd past the retained window, or written in an " +
+            "older store format)")))
     }
-    val m = readManifest(srcAbs, name).getOrElse(
-      throw new IllegalStateException(s"cloneReplica: source $sourceDir " +
-        s"has no manifest for version $v (pre-bucket flat layout, never " +
-        "committed, or GC'd past the retained window)"))
     // every referenced data path must still exist — a clone of a
     // half-GC'd historical version would publish dangling references
     val missing = (m.buckets.values ++ m.deltas.values.flatten)
@@ -2900,8 +2725,7 @@ object CdcStream {
     */
   def restoreConsistentTables(spark: org.apache.spark.sql.SparkSession,
       tables: Seq[String], atWatermark: Option[Long] = None,
-      recordChanges: Boolean = false,
-      idColsOverride: Map[String, Seq[String]] = Map.empty): Long = {
+      recordChanges: Boolean = false): Long = {
     val point = atWatermark.getOrElse {
       tables.map { src =>
         val wms = committedVersions(src).flatMap(replicaWatermark(src, _))
@@ -2918,12 +2742,10 @@ object CdcStream {
       (src, v)
     }
     picks.foreach { case (src, v) =>
-      restoreReplica(spark, src, v, recordChanges,
-        idColsOverride.getOrElse(src, Nil), validateOnly = true)
+      restoreReplica(spark, src, v, recordChanges, validateOnly = true)
     }
     picks.foreach { case (src, v) =>
-      restoreReplica(spark, src, v, recordChanges,
-        idColsOverride.getOrElse(src, Nil))
+      restoreReplica(spark, src, v, recordChanges)
     }
     point
   }
@@ -2997,7 +2819,7 @@ object CdcStream {
     * two histories, so every clone commit after the clone-initial
     * version must be a prior refresh's own commit (kind "refresh" —
     * stamped by this method) or content-identical maintenance
-    * (compact / reshard, so a MATERIALIZED clone still refreshes).
+    * ([[IdenticalKinds]], so a MATERIALIZED clone still refreshes).
     * Anything else refuses before any commit. O(versions) manifest
     * metadata; GC-retired versions classify via their `_feed` meta.
     *
@@ -3020,9 +2842,9 @@ object CdcStream {
           "not a shallow clone (or its ancestry was truncated)"))
     val (srcDir, srcForkV) = cloneProvenance(cloneDir, initial).get
     val foreign = versions.filter(_ > initial).filter { v =>
-      val kind = readManifest(cloneDir, f"v$v%09d").flatMap(_.commitKind)
+      val kind = readManifest(cloneDir, f"v$v%09d").map(_.commitKind)
         .orElse(feedMeta(cloneDir, v).flatMap(_._1))
-      !kind.exists(k => k == "refresh" || k == "compact" || k == "reshard")
+      !kind.exists(k => k == "refresh" || IdenticalKinds(k))
     }
     if (foreign.nonEmpty) throw new IllegalStateException(
       s"refreshClone: clone $cloneDir DIVERGED from $srcDir — version(s) " +
@@ -3103,7 +2925,8 @@ object CdcStream {
 
   /** DESCRIBE HISTORY (the Delta analog): one row per version with
     * any surviving surface — live version dirs plus versions data GC
-    * retired into `_feed`. Columns: the commit kind, the recorded
+    * retired into `_feed`. Columns: the commit kind (null for a version
+    * whose manifest is in an older store format), the recorded
     * source watermark, the change rows its feed entry carries (null
     * when the feed never carried it), `rows_written` /
     * `buckets_changed` derived from the version's OWN manifest refs
@@ -3127,7 +2950,7 @@ object CdcStream {
     val rows = feedVersions(replicaDir).map { v =>
       val name = f"v$v%09d"
       val m = readManifest(replicaDir, name)
-      val kind = m.flatMap(_.commitKind)
+      val kind = m.map(_.commitKind)
         .orElse(feedMeta(replicaDir, v).flatMap(_._1))
       val wm = replicaWatermark(replicaDir, v)
       val changeRows: Option[Long] =
@@ -3153,7 +2976,7 @@ object CdcStream {
         ownRefs.map(p => footerRowCount(resolveStorePath(replicaDir, p))).sum)
       val cloneSrc = cloneProvenance(replicaDir, v)
         .map { case (src, sv) => s"$src@v$sv" }
-      (v, kind.getOrElse("legacy"), wm, changeRows, rowsWritten,
+      (v, kind, wm, changeRows, rowsWritten,
         ownBuckets.map(_.size.toLong), curV.contains(v), cloneSrc)
     }
     rows.toDF("version", "kind", "watermark", "change_rows",
@@ -3191,12 +3014,7 @@ object CdcStream {
       replicaDir: String, targetFilesPerBucket: Int = 1,
       tombstoneHorizon: Option[Column] = None): Unit = {
     import org.apache.spark.sql.functions.lit
-    val cur = currentVersion(replicaDir)
-    if (cur.isEmpty) return
-    val (v, name) = cur.get
-    val prev = readManifest(replicaDir, name)
-    if (prev.isEmpty) return // pre-bucket flat layout: migrated by the next merge
-    val m = prev.get
+    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
     def parquetFiles(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -3204,6 +3022,12 @@ object CdcStream {
       !p.startsWith(s"$name/") ||
         parquetFiles(resolveStorePath(replicaDir, p)) > targetFilesPerBucket
     }
+    val nextName = f"v${v + 1}%09d"
+    // rewritten buckets refresh their recorded tombstone mins (a
+    // one-job agg over the files just written); the rest keep theirs
+    def minsAfter(rewritten: Set[Int], staging: String): Map[Int, String] =
+      (m.tombstoneMins -- rewritten) ++ m.condOrderCols
+        .map(stagedTombstoneMins(spark, s"$staging/data", _)).getOrElse(Map.empty)
     // MERGE-ON-READ fold: every bucket with pending deltas (plus the
     // usual fragmented set) rewrites as a fresh single-file base
     // bucket; delta lists drop from the manifest in the same commit.
@@ -3213,11 +3037,7 @@ object CdcStream {
     // buckets' stored tombstones pass through untouched.
     if (m.deltas.nonEmpty) {
       val rewriteKeys: Set[Int] = m.deltas.keySet ++ fragmented.keys
-      val bc = m.bucketCols.orElse(m.keyCols).getOrElse(
-        throw new IllegalStateException(
-          s"replica $replicaDir: deltas without recorded keyCols"))
-      val routeBy = pmod(hash(bc.map(col): _*), lit(m.numBuckets))
-      val nextName = f"v${v + 1}%09d"
+      val routeBy = pmod(hash(m.routing.map(col): _*), lit(m.numBuckets))
       val staging = newStagingDir(replicaDir)
       val folded = mergedBucketRead(spark, replicaDir, m, rewriteKeys,
         keepDeletes = true)
@@ -3231,128 +3051,49 @@ object CdcStream {
       }
       val newBuckets = (m.buckets -- rewriteKeys) ++ written
         .map(k => k -> s"$nextName/data/__bucket=$k")
-      // a conditional fold may have materialized the store's first
-      // tombstones — the recorded schema must advertise the column or
-      // schema-pruned readers would read the rows back as live
-      val newSchema = manifestSchema(m).map { sc =>
-        if (m.deltasConditional && !sc.fieldNames.contains(Tombstone))
-          StructType(sc.fields :+ StructField(Tombstone,
-            org.apache.spark.sql.types.BooleanType))
-        else sc
-      }
-      val newMins: Map[Int, String] =
-        m.condOrderCols.orElse(m.tombstoneMinCols) match {
-          case Some(ocs) =>
-            (m.tombstoneMins -- rewriteKeys) ++
-              stagedTombstoneMins(spark, s"$staging/data", ocs)
-          case None => m.tombstoneMins -- rewriteKeys
-        }
       publishVersion(replicaDir, staging, nextName,
         m.copy(buckets = newBuckets,
-          schemaJson = newSchema.map(_.json).orElse(m.schemaJson),
+          schema = withTombstoneIn(m.schema, folded),
           deltas = m.deltas -- rewriteKeys,
           deltasConditional = (m.deltas -- rewriteKeys).nonEmpty &&
             m.deltasConditional,
-          tombstoneMins = newMins),
-        prev, cur.map(_._2), kind = "compact")
+          tombstoneMins = minsAfter(rewriteKeys, staging)),
+        Some(m), Some(name), kind = "compact")
       return
     }
-    // the store's union schema (manifest-recorded, or one footer merge
-    // for pre-schema manifests); buckets written before any
-    // conditional merge may lack the tombstone column, so the sweep
-    // reads every bucket THROUGH this schema (absent columns null-fill)
-    lazy val unionSc: Option[StructType] =
-      prev.flatMap(manifestSchema).orElse {
-        if (m.buckets.isEmpty) None
-        else Some(spark.read.option("mergeSchema", "true").parquet(
-          m.buckets.values.toSeq.sorted
-            .map(p => resolveStorePath(replicaDir, p)): _*).schema)
-      }
     // replicas that never merged conditionally carry no tombstone
-    // column — the sweep is skipped without reading any data
+    // column — the sweep is skipped without reading any data. Buckets
+    // written before the store's first conditional merge lack the
+    // column, so the sweep reads every bucket THROUGH the union schema
+    // (absent columns null-fill)
     val expiredTombstone = tombstoneHorizon
-      .filter(_ => unionSc.exists(_.fieldNames.contains(Tombstone)))
+      .filter(_ => m.schema.fieldNames.contains(Tombstone))
       .map(h => coalesce(col(Tombstone), lit(false)) && h)
-    // LEGACY stores (no recorded condOrderCols): key the recorded mins
-    // by the horizon's own referenced columns, so the full sweep below
-    // runs exactly ONCE — afterwards detection is the O(manifest)
-    // metadata predicate. (A conditional store whose horizon references
-    // non-order columns keeps the per-call sweep: re-keying its mins
-    // would clash with the merge paths' condOrderCols-keyed refreshes.)
-    val sweepMinCols: Option[Seq[String]] =
-      (tombstoneHorizon, unionSc) match {
-        case (Some(h), Some(sc)) if m.condOrderCols.isEmpty &&
-            sc.fieldNames.contains(Tombstone) =>
-          val refs = horizonRefNames(h)
-          val resolved = sc.fieldNames
-            .filter(f => refs.exists(_.equalsIgnoreCase(f))).toSeq
-          if (refs.nonEmpty && resolved.length == refs.length) Some(resolved)
-          else None
-        case _ => None
-      }
-    var sweptMins: Map[Int, String] = Map.empty
-    var sweepRan = false
     val expired: Set[Int] = (tombstoneHorizon, expiredTombstone) match {
-      case (None, _) | (_, None) => Set.empty
       case (Some(h), Some(pred)) =>
         // detection is an O(manifest) predicate over the recorded
-        // per-bucket min tombstone orders — no bucket file is read.
-        // Stores predating the metadata (None) fall back to the full
-        // column-pruned sweep, whose one pass ALSO records the mins.
-        expiredFromMeta(spark, m, unionSc, h).getOrElse {
-          sweepRan = true
-          val minAgg = sweepMinCols.map { mcs =>
-            min(when(coalesce(col(Tombstone), lit(false)) &&
-              mcs.map(c => col(c).isNotNull).reduce(_ && _),
-              struct(mcs.map(col): _*))).as("__m")
-          }
-          val perBucket = m.buckets.toSeq.sortBy(_._1)
+        // per-bucket min tombstone orders — no bucket file is read. A
+        // horizon over non-order columns falls back to the full
+        // column-pruned sweep, per call (the mins stay keyed by the
+        // order columns every merge path refreshes them under).
+        expiredFromMeta(spark, m, h).getOrElse {
+          m.buckets.toSeq.sortBy(_._1)
             .map { case (k, p) =>
-              spark.read.schema(unionSc.get)
+              spark.read.schema(m.schema)
                 .parquet(resolveStorePath(replicaDir, p))
-                .agg(max(coalesce(pred, lit(false))).as("__x"),
-                  (max(coalesce(col(Tombstone), lit(false))).as("__tb") +:
-                    minAgg.toSeq): _*)
+                .agg(max(coalesce(pred, lit(false))).as("__x"))
                 .withColumn("__bucket", lit(k))
             }
             .reduce(_.unionByName(_))
-          val rows = perBucket
-            .select(col("__bucket"), col("__x"), col("__tb"),
-              (if (minAgg.isDefined) to_json(col("__m")) else lit(null))
-                .as("__j"))
+            .select(col("__bucket"), col("__x"))
             .collect()
-          // tombstone-bearing buckets with no orderable min record the
-          // sentinel — same contract as stagedTombstoneMins
-          sweptMins =
-            if (minAgg.isEmpty) Map.empty
-            else rows.collect {
-              case r if !r.isNullAt(2) && r.getBoolean(2) =>
-                r.getInt(0) ->
-                  (if (r.isNullAt(3)) NullOrderSentinel else r.getString(3))
-            }.toMap
-          rows.filter(r => !r.isNullAt(1) && r.getBoolean(1))
-            .map(_.getInt(0)).toSet
+            .collect { case r if !r.isNullAt(1) && r.getBoolean(1) => r.getInt(0) }
+            .toSet
         }
+      case _ => Set.empty
     }
     val rewrite = fragmented ++ m.buckets.filter { case (k, _) => expired(k) }
-    // the min-key columns this commit's manifest records mins under
-    val minKey: Option[Seq[String]] =
-      m.condOrderCols.orElse(
-        if (sweepRan) sweepMinCols else m.tombstoneMinCols)
-    if (rewrite.isEmpty) {
-      // legacy store, nothing expired and nothing fragmented: publish a
-      // METADATA-ONLY version carrying the mins the sweep just
-      // computed, so the next maintain call decides without a scan
-      if (sweepRan && sweepMinCols.nonEmpty) {
-        val nextName = f"v${v + 1}%09d"
-        val staging = newStagingDir(replicaDir)
-        publishVersion(replicaDir, staging, nextName,
-          m.copy(tombstoneMins = sweptMins, tombstoneMinCols = sweepMinCols),
-          prev, cur.map(_._2), kind = "compact")
-      }
-      return
-    }
-    val nextName = f"v${v + 1}%09d"
+    if (rewrite.isEmpty) return
     val staging = newStagingDir(replicaDir)
     rewrite.toSeq.sortBy(_._1)
       .map { case (k, p) =>
@@ -3376,21 +3117,11 @@ object CdcStream {
     val newBuckets = (m.buckets -- rewrite.keys) ++ written
       .map(k => k -> s"$nextName/data/__bucket=$k")
     // content-identical rewrite (minus aged-out tombstones): the union
-    // schema carries over; rewritten buckets refresh their recorded
-    // tombstone mins (a one-job agg over the files just written)
-    val minsBase =
-      if (sweepRan && sweepMinCols.nonEmpty) sweptMins else m.tombstoneMins
-    val newMins: Map[Int, String] = minKey match {
-      case Some(ocs) =>
-        (minsBase -- rewrite.keys) ++
-          stagedTombstoneMins(spark, s"$staging/data", ocs)
-      case None => minsBase -- rewrite.keys
-    }
+    // schema carries over
     publishVersion(replicaDir, staging, nextName,
-      m.copy(buckets = newBuckets, tombstoneMins = newMins,
-        tombstoneMinCols = if (m.condOrderCols.nonEmpty) None
-          else minKey),
-      prev, cur.map(_._2), kind = "compact")
+      m.copy(buckets = newBuckets,
+        tombstoneMins = minsAfter(rewrite.keySet, staging)),
+      Some(m), Some(name), kind = "compact")
   }
 
   /** Metadata-driven maintenance policy — the call a `foreachBatch`
@@ -3412,47 +3143,32 @@ object CdcStream {
       replicaDir: String, maxDeltas: Int = 8,
       targetFilesPerBucket: Int = 1,
       tombstoneHorizon: Option[Column] = None): Boolean = {
-    currentVersion(replicaDir) match {
-      case None => false
-      case Some((v, name)) =>
-        val m = readManifest(replicaDir, name)
-        val chains = m.map(_.deltas.values.map(_.size))
-          .getOrElse(Iterable.empty)
-        // no pending deltas: the auto-maintenance cadence (the sink
-        // calls this after EVERY commit) must be a near-no-op on a
-        // healthy store — gate on real fragmentation (multi-file
-        // buckets; a dir-stat walk, no data read) and metadata-decided
-        // tombstone expiry, NOT compactReplica's carried-over rule,
-        // which would rewrite every bucket not referenced from the
-        // current version dir after every micro-batch
-        val dueNoDeltas = chains.isEmpty && m.exists { mm =>
-          val frag = mm.buckets.exists { case (_, p) =>
-            Option(new java.io.File(resolveStorePath(replicaDir, p)).listFiles())
-              .getOrElse(Array.empty)
-              .count(f => f.isFile && f.getName.endsWith(".parquet")) >
-              targetFilesPerBucket
-          }
-          frag || tombstoneHorizon.exists { h =>
-            val sc = manifestSchema(mm)
-            sc.exists(_.fieldNames.contains(Tombstone)) &&
-              expiredFromMeta(spark, mm, sc, h)
-                // can't decide cheaply (legacy store without recorded
-                // mins, or a horizon referencing non-min columns): let
-                // compactReplica run its pruned sweep. A legacy store
-                // pays it ONCE — the sweep publishes horizon-keyed
-                // mins (tombstoneMinCols) — while a condOrderCols
-                // store with an off-key horizon pays it per call
-                // (documented; its mins stay order-column-keyed)
-                .map(_.nonEmpty).getOrElse(true)
-          }
-        }
-        if (chains.isEmpty && !dueNoDeltas) false
-        else if (chains.nonEmpty && chains.max < maxDeltas) false
-        else {
-          compactReplica(spark, replicaDir, targetFilesPerBucket,
-            tombstoneHorizon)
-          currentVersion(replicaDir).exists(_._1 > v)
-        }
+    val (v, _, m) = currentManifest(replicaDir).getOrElse(return false)
+    val chains = m.deltas.values.map(_.size)
+    // no pending deltas: the auto-maintenance cadence (the sink calls
+    // this after EVERY commit) must be a near-no-op on a healthy store
+    // — gate on real fragmentation (multi-file buckets; a dir-stat
+    // walk, no data read) and metadata-decided tombstone expiry, NOT
+    // compactReplica's carried-over rule, which would rewrite every
+    // bucket not referenced from the current version dir after every
+    // micro-batch
+    def dueNoDeltas = m.buckets.exists { case (_, p) =>
+      Option(new java.io.File(resolveStorePath(replicaDir, p)).listFiles())
+        .getOrElse(Array.empty)
+        .count(f => f.isFile && f.getName.endsWith(".parquet")) >
+        targetFilesPerBucket
+    } || tombstoneHorizon.exists { h =>
+      m.schema.fieldNames.contains(Tombstone) &&
+        // a horizon over non-order columns can't be decided from the
+        // recorded mins: compactReplica runs its pruned sweep, per call
+        expiredFromMeta(spark, m, h).map(_.nonEmpty).getOrElse(true)
+    }
+    if (chains.isEmpty && !dueNoDeltas) false
+    else if (chains.nonEmpty && chains.max < maxDeltas) false
+    else {
+      compactReplica(spark, replicaDir, targetFilesPerBucket,
+        tombstoneHorizon)
+      currentVersion(replicaDir).exists(_._1 > v)
     }
   }
 
@@ -3480,89 +3196,129 @@ object CdcStream {
       replicaDir: String, idCols: Seq[String], newNumBuckets: Int): Unit = {
     require(newNumBuckets > 0, s"newNumBuckets must be positive: $newNumBuckets")
     requireUnfrozen(replicaDir)
-    val cur = currentVersion(replicaDir)
-    if (cur.isEmpty) return
-    val (v, name) = cur.get
-    val m = readManifest(replicaDir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"rebucketReplica: $replicaDir is the pre-bucket flat layout; " +
-          "apply one batch to migrate it before resharding"))
-    // routing is a pure function of the RECORDED columns. Three cases:
-    // recorded bucketCols → they alone route and idCols is ignored, so
-    // any caller value is safe; no bucketCols but recorded keyCols →
-    // idCols IS the routing input and must match; neither recorded
-    // (pre-keyCols legacy manifest) → the caller's idCols cannot be
-    // validated and a wrong value would silently rehash every row so
-    // later key-pruned lookups miss — refuse loudly and let one eager
-    // merge record keyCols first (the same migration other legacy
-    // refusals prescribe).
-    if (m.bucketCols.isEmpty) m.keyCols match {
-      case Some(rec) => require(rec == idCols,
-        s"rebucketReplica: $replicaDir records keyCols " +
-          s"(${rec.mkString(",")}) but the caller passed " +
-          s"(${idCols.mkString(",")})")
-      case None => throw new IllegalStateException(
-        s"rebucketReplica: $replicaDir records neither bucketCols nor " +
-          "keyCols, so the caller's idCols cannot be checked against " +
-          "the stored routing; apply one eager batch (which records " +
-          "keyCols) before resharding")
-    }
+    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
+    // routing is a pure function of the RECORDED columns: recorded
+    // bucketCols alone route and idCols is ignored, so any caller value
+    // is safe; otherwise the recorded keyCols route and the caller's
+    // idCols must match them
+    if (m.bucketCols.isEmpty) require(m.keyCols == idCols,
+      s"rebucketReplica: $replicaDir records keyCols " +
+        s"(${m.keyCols.mkString(",")}) but the caller passed " +
+        s"(${idCols.mkString(",")})")
     if (m.numBuckets == newNumBuckets) return
-    val nextName = f"v${v + 1}%09d"
-    val staging = newStagingDir(replicaDir)
-    if (m.buckets.isEmpty && m.deltas.isEmpty) {
+    if (m.buckets.isEmpty && m.deltas.isEmpty)
       // empty store: flip the count with a manifest-only commit
-      publishVersion(replicaDir, staging, nextName,
-        m.copy(numBuckets = newNumBuckets, buckets = Map.empty),
-        Some(m), Some(name), forbidFrozen = true, kind = "reshard")
-      return
-    }
-    val paths = m.buckets.values.toSeq.sorted
-      .map(p => resolveStorePath(replicaDir, p))
-    // union schema: null-fills buckets written before a column existed,
-    // and guarantees the stored types the reader's key casts hash with
-    val sc = manifestSchema(m).getOrElse(
-      spark.read.option("mergeSchema", "true").parquet(paths: _*).schema)
-    val bucketOf = pmod(
-      hash(m.bucketCols.getOrElse(idCols).map(col): _*), lit(newNumBuckets))
+      publishVersion(replicaDir, newStagingDir(replicaDir), f"v${v + 1}%09d",
+        m.copy(numBuckets = newNumBuckets), Some(m), Some(name),
+        forbidFrozen = true, kind = "reshard")
     // pending merge-on-read deltas FOLD into the reshard (it is a full
     // rewrite anyway — refusing would only force an extra compaction
     // pass over the same bytes); keepDeletes keeps the rewrite
     // content-faithful, so tombstones and their order values survive
-    val source: DataFrame =
-      if (m.deltas.nonEmpty)
-        mergedBucketRead(spark, replicaDir, m, keepDeletes = true)
-          .getOrElse(spark.createDataFrame(
-            new java.util.ArrayList[org.apache.spark.sql.Row](), sc))
-      else spark.read.schema(sc).parquet(paths: _*)
-    source
-      .withColumn("__bucket", bucketOf)
-      .repartition(newNumBuckets, col("__bucket"))
+    else rewriteStore(spark, replicaDir, v, name, m,
+      mergedBucketRead(spark, replicaDir, m, keepDeletes = true),
+      newNumBuckets, Some(m), "reshard")
+  }
+
+  /** Rewrite a store's whole state `source` — content-identical, the
+    * rows of manifest `m` — into version `v + 1`, routed by `m`'s
+    * columns into `numBuckets` buckets: ONE hash-routed job with one
+    * task and one output file per bucket. The new manifest is `m` with
+    * the new layout, no pending deltas, the schema widened by any
+    * tombstones the fold materialized, and the tombstone mins of the
+    * written files. The writer behind [[rebucketReplica]] and
+    * [[upgradeReplica]].
+    */
+  private def rewriteStore(spark: org.apache.spark.sql.SparkSession,
+      replicaDir: String, v: Long, name: String, m: ReplicaManifest,
+      source: Option[DataFrame], numBuckets: Int,
+      prev: Option[ReplicaManifest], kind: String): Unit = {
+    val nextName = f"v${v + 1}%09d"
+    val staging = newStagingDir(replicaDir)
+    source.getOrElse(spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema))
+      .withColumn("__bucket",
+        pmod(hash(m.routing.map(col): _*), lit(numBuckets)))
+      .repartition(numBuckets, col("__bucket"))
       .write.partitionBy("__bucket").parquet(s"$staging/data")
-    val written = Option(new java.io.File(s"$staging/data").listFiles())
-      .getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(_.getName.stripPrefix("__bucket=").toInt)
-    val newBuckets: Map[Int, String] =
-      written.map(k => k -> s"$nextName/data/__bucket=$k").toMap
-    // a conditional fold may materialize tombstones the recorded
-    // schema does not yet advertise
-    val outSc =
-      if (m.deltas.nonEmpty && m.deltasConditional &&
-          !sc.fieldNames.contains(Tombstone))
-        StructType(sc.fields :+ StructField(Tombstone,
-          org.apache.spark.sql.types.BooleanType))
-      else sc
-    val newMins: Map[Int, String] =
-      m.condOrderCols.orElse(m.tombstoneMinCols) match {
-        case Some(ocs) => stagedTombstoneMins(spark, s"$staging/data", ocs)
-        case None => Map.empty
-      }
     publishVersion(replicaDir, staging, nextName,
-      m.copy(numBuckets = newNumBuckets, buckets = newBuckets,
-        schemaJson = Some(outSc.json), deltas = Map.empty,
-        deltasConditional = false, tombstoneMins = newMins),
-      Some(m), Some(name), forbidFrozen = true, kind = "reshard")
+      m.copy(numBuckets = numBuckets,
+        buckets = bucketDirs(s"$staging/data")
+          .map(k => k -> s"$nextName/data/__bucket=$k").toMap,
+        schema = withTombstoneIn(m.schema, source),
+        deltas = Map.empty, deltasConditional = false,
+        tombstoneMins = m.condOrderCols
+          .map(stagedTombstoneMins(spark, s"$staging/data", _))
+          .getOrElse(Map.empty)),
+      prev, Some(name), forbidFrozen = true, kind = kind)
+  }
+
+  /** UPGRADE a store an older graft wrote into the current store format
+    * — the one entry point that reads the older formats
+    * ([[currentFormat]]); every other entry point refuses such a store
+    * and names this one. Reads the current state ONCE — a pre-bucket
+    * flat version dir whole, or the manifest's buckets (and pending
+    * deltas) through one footer merge when it records no schema,
+    * tombstones kept — and rewrites it through [[rebucketReplica]]'s
+    * full-rewrite writer as one published, content-identical version
+    * (kind "upgrade"). The version keeps the recorded bucket count and
+    * routing ([[DefaultReplicaBuckets]] for a flat dir) and records the
+    * schema, `keyCols` = `idCols`, the op column and, from the written
+    * files, the tombstone mins.
+    *
+    * `orderCols` names the order columns a store holding tombstones
+    * (a tombstone column in its schema) compares them by; required
+    * when its manifest records none. A store already in the current
+    * format, or never committed, is left as it is.
+    */
+  def upgradeReplica(spark: org.apache.spark.sql.SparkSession,
+      replicaDir: String, idCols: Seq[String],
+      orderCols: Seq[Column] = Nil): Unit = {
+    requireUnfrozen(replicaDir)
+    val (v, name) = currentVersion(replicaDir).getOrElse(return)
+    if (readManifest(replicaDir, name).nonEmpty) return
+    val raw = parseManifest(replicaDir, name)
+    // the flat layout: no manifest, the version dir holds the rows
+    val old = raw.getOrElse(ReplicaManifest(DefaultReplicaBuckets,
+      Map.empty, new StructType(), Nil, "", ""))
+    if (old.keyCols.nonEmpty) require(old.keyCols == idCols,
+      s"upgradeReplica: $replicaDir records keyCols " +
+        s"(${old.keyCols.mkString(",")}) but the caller passed " +
+        s"(${idCols.mkString(",")})")
+    val paths = raw match {
+      case Some(_) => old.buckets.values.toSeq.sorted
+        .map(p => resolveStorePath(replicaDir, p))
+      case None => Seq(s"$replicaDir/$name")
+    }
+    val schema =
+      if (old.schema.nonEmpty || paths.isEmpty) old.schema
+      else spark.read.option("mergeSchema", "true").parquet(paths: _*).schema
+    require(schema.nonEmpty, s"upgradeReplica: $replicaDir holds no data " +
+      "and records no schema — there is nothing to upgrade; remove it")
+    val tombstones = schema.fieldNames.contains(Tombstone)
+    val orderNames = orderColNames(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), schema), orderCols)
+    (old.condOrderCols, orderNames) match {
+      case (Some(rec), given) if given.nonEmpty && rec != given =>
+        throw new IllegalArgumentException(s"upgradeReplica: $replicaDir " +
+          s"orders conditionally by (${rec.mkString(",")}) but the caller " +
+          s"passed (${given.mkString(",")})")
+      case (None, Nil) if tombstones =>
+        throw new IllegalArgumentException(s"upgradeReplica: $replicaDir " +
+          "holds tombstones but records no order columns for them — pass " +
+          "orderCols, the stored columns its conditional merges ordered by")
+      case _ =>
+    }
+    val m = old.copy(schema = schema, keyCols = idCols,
+      opColName = Some(old.opColName).filter(_.nonEmpty).getOrElse("op"),
+      condOrderCols = old.condOrderCols.orElse(
+        Some(orderNames).filter(_ => tombstones)),
+      tombstoneMins = Map.empty)
+    val source =
+      if (raw.isEmpty) Some(spark.read.schema(schema).parquet(paths: _*))
+      else mergedBucketRead(spark, replicaDir, m, keepDeletes = true)
+    rewriteStore(spark, replicaDir, v, name, m, source, m.numBuckets,
+      Some(m), "upgrade")
   }
 
   /** COMPLIANCE ERASURE (right-to-be-forgotten — the Delta
@@ -3598,31 +3354,13 @@ object CdcStream {
       replicaDir: String, idCols: Seq[String], keys: DataFrame): Unit = {
     import org.apache.spark.sql.functions.lit
     requireUnfrozen(replicaDir)
-    val cur = currentVersion(replicaDir)
-    if (cur.isEmpty) return
-    val (v, name) = cur.get
-    val m = readManifest(replicaDir, name).getOrElse(
-      throw new IllegalArgumentException(
-        s"eraseKeys: $replicaDir is the pre-bucket flat layout; apply " +
-          "one batch to migrate it before erasing"))
-    val allPaths = m.buckets.values.toSeq.sorted
-      .map(p => resolveStorePath(replicaDir, p))
-    val fullSchema = manifestSchema(m).orElse {
-      if (allPaths.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true")
-        .parquet(allPaths: _*).schema)
-    }
+    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
     // type-faithful keys (Catalyst hash is type-sensitive — same rule
-    // as the pruned lookup path); a schema-less empty store still
-    // scrubs its change feed below using the caller's key types
-    val typedKeys = (fullSchema match {
-      case Some(sc) =>
-        val types = sc.fields.map(f => f.name -> f.dataType).toMap
-        keys.select(idCols.map { c =>
-          types.get(c).map(t => keys(c).cast(t).as(c)).getOrElse(keys(c))
-        }: _*)
-      case None => keys.select(idCols.map(keys(_)): _*)
-    }).distinct()
+    // as the pruned lookup path)
+    val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
+    val typedKeys = keys.select(idCols.map { c =>
+      types.get(c).map(t => keys(c).cast(t).as(c)).getOrElse(keys(c))
+    }: _*).distinct()
     // materialize the typed key set ONCE (r15): the erasure consumes
     // it from several actions (touched-bucket collect, bucket rewrite
     // anti-joins, the per-version feed scrub) — each would otherwise
@@ -3644,10 +3382,13 @@ object CdcStream {
       // no broadcast hint: a routine GDPR batch is small (AQE
       // broadcasts it), but a bulk takedown can carry millions of
       // keys — that case must be allowed to shuffle
+      val folded =
+        if (touchedDeltas.isEmpty) None
+        else mergedBucketRead(spark, replicaDir, m, touched, keepDeletes = true)
       if (touchedDeltas.isEmpty) {
         rewrite.toSeq.sortBy(_._1)
           .map { case (k, p) =>
-            spark.read.schema(fullSchema.get)
+            spark.read.schema(m.schema)
               .parquet(resolveStorePath(replicaDir, p))
               .join(keysM, idCols, "left_anti")
               .withColumn("__bucket", lit(k)) }
@@ -3661,11 +3402,8 @@ object CdcStream {
         // tombstones and their late-loser protection), anti-joins the
         // keys, and drops those buckets' delta lists in the SAME
         // commit. Every pre-fold copy — base and delta — purges below.
-        val routeBy = pmod(hash(
-          m.bucketCols.orElse(m.keyCols).getOrElse(idCols).map(col): _*),
-          lit(m.numBuckets))
-        mergedBucketRead(spark, replicaDir, m, touched,
-            keepDeletes = true).foreach { r =>
+        val routeBy = pmod(hash(m.routing.map(col): _*), lit(m.numBuckets))
+        folded.foreach { r =>
           r.join(keysM, idCols, "left_anti")
             .withColumn("__bucket", routeBy)
             .repartition(math.max(touched.size, 1), col("__bucket"))
@@ -3677,26 +3415,12 @@ object CdcStream {
       }
       val newBuckets = (m.buckets -- touched) ++ written
         .map(k => k -> s"$nextName/data/__bucket=$k")
-      // a conditional fold may materialize tombstones the recorded
-      // schema does not yet advertise
-      val newSchema = manifestSchema(m).map { sc =>
-        if (touchedDeltas.nonEmpty && m.deltasConditional &&
-            !sc.fieldNames.contains(Tombstone))
-          StructType(sc.fields :+ StructField(Tombstone,
-            org.apache.spark.sql.types.BooleanType))
-        else sc
-      }
       val remainingDeltas = m.deltas -- touched
-      val newMins: Map[Int, String] =
-        m.condOrderCols.orElse(m.tombstoneMinCols) match {
-          case Some(ocs) =>
-            (m.tombstoneMins -- touched) ++
-              stagedTombstoneMins(spark, s"$staging/data", ocs)
-          case None => m.tombstoneMins -- touched
-        }
+      val newMins = (m.tombstoneMins -- touched) ++ m.condOrderCols
+        .map(stagedTombstoneMins(spark, s"$staging/data", _)).getOrElse(Map.empty)
       publishVersion(replicaDir, staging, nextName,
         m.copy(buckets = newBuckets,
-          schemaJson = newSchema.map(_.json).orElse(m.schemaJson),
+          schema = withTombstoneIn(m.schema, folded),
           deltas = remainingDeltas,
           deltasConditional = remainingDeltas.nonEmpty && m.deltasConditional,
           tombstoneMins = newMins),
@@ -3705,9 +3429,8 @@ object CdcStream {
     // 2: purge historical on-disk copies of the touched buckets —
     // base files AND pending delta files (their lists dropped from the
     // manifest above, so nothing references them)
-    val referenced: Set[String] = currentVersion(replicaDir)
-      .flatMap { case (_, n) => readManifest(replicaDir, n) }
-      .map(mm => mm.buckets.values.toSet ++ mm.deltas.values.flatten)
+    val referenced: Set[String] = currentManifest(replicaDir)
+      .map { case (_, _, mm) => mm.buckets.values.toSet ++ mm.deltas.values.flatten }
       .getOrElse(Set.empty)
     replicaVersions(replicaDir).foreach { vv =>
       touched.foreach { k =>
@@ -3867,7 +3590,7 @@ object CdcStream {
     import java.nio.file.StandardCopyOption.ATOMIC_MOVE
     CdcStream.publishTestHook()
     writeManifestTo(java.nio.file.Paths.get(stagingDir),
-      next.copy(commitKind = Some(kind)))
+      next.copy(commitKind = kind))
     val target = java.nio.file.Paths.get(replicaDir, nextName)
     val lock = java.nio.file.Paths.get(replicaDir, ".commit-lock")
     val ownerToken = java.util.UUID.randomUUID().toString
@@ -4101,7 +3824,7 @@ object CdcStream {
         val g = new com.fasterxml.jackson.core.JsonFactory()
           .createGenerator(sw)
         g.writeStartObject()
-        m.flatMap(_.commitKind).foreach(g.writeStringField("kind", _))
+        m.map(_.commitKind).foreach(g.writeStringField("kind", _))
         m.flatMap(_.watermark).foreach(g.writeNumberField("watermark", _))
         g.writeEndObject()
         g.close()
@@ -4199,7 +3922,7 @@ object CdcStream {
     */
   private def castNetToStore(net: DataFrame,
       prev: Option[ReplicaManifest]): DataFrame =
-    prev.flatMap(manifestSchema) match {
+    prev.map(_.schema) match {
       case Some(ps) =>
         val types = ps.fields.map(f => f.name -> f.dataType).toMap
         val narrow = net.schema.fields.filter(bf =>
@@ -4226,7 +3949,6 @@ object CdcStream {
       nb: Int,
       resolvedBucketCols: Option[Seq[String]],
       bc: Seq[String],
-      legacyFlat: Option[String],
       metaOrd: Option[Seq[String]]) {
     def bucketOf: Column = pmod(hash(bc.map(col): _*), lit(nb))
   }
@@ -4242,18 +3964,14 @@ object CdcStream {
     val dataCols = batchCols.filterNot(_ == opCol)
 
     new java.io.File(replicaDir).mkdirs()
-    val cur = currentVersion(replicaDir)
-    val prev = cur.flatMap { case (_, name) => readManifest(replicaDir, name) }
+    val resolved = currentManifest(replicaDir)
+    val cur = resolved.map { case (v, name, _) => (v, name) }
+    val prev = resolved.map(_._3)
     // type-faithful net — see [[castNetToStore]]. The cast runs HERE,
     // for every entry point (a net a caller pre-cast under an
     // equal-or-narrower snapshot re-casts losslessly, the widening
     // ladder being transitive)
     val netT = castNetToStore(net, prev)
-    // a current version WITHOUT a manifest is the pre-bucket flat
-    // layout: merge against the whole old version once (this batch
-    // migrates the replica into the bucketed layout)
-    val legacyFlat = cur.filter(_ => prev.isEmpty)
-      .map { case (_, name) => s"$replicaDir/$name" }
     // bucket count AND routing columns are fixed at replica creation
     // (stored in the manifest). On an existing replica a caller-passed
     // bucketCols must MATCH the recorded routing: recording one thing
@@ -4285,7 +4003,7 @@ object CdcStream {
           s"(${rec.mkString(",")}) but the batch passed (${ns.mkString(",")})"))
     }
     CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols,
-      resolvedBucketCols.getOrElse(idCols), legacyFlat,
+      resolvedBucketCols.getOrElse(idCols),
       prev.flatMap(_.condOrderCols).orElse(condNames))
   }
 
@@ -4345,7 +4063,6 @@ object CdcStream {
       batchCols: Array[String],
       val idCols: Seq[String],
       opCol: String,
-      prevSchema: Option[StructType],
       /** The net: one row per key, cast to the store's types. */
       val net: DataFrame,
       /** The buckets the net's rows route to. */
@@ -4357,14 +4074,17 @@ object CdcStream {
       kind: String,
       prepareOnly: Boolean) {
 
-    private[CdcStream] def curName: Option[String] = p.cur.map(_._2)
+    private def curName: Option[String] = p.cur.map(_._2)
+
+    /** The manifest the commit routed against. */
+    private[CdcStream] def base: Option[ReplicaManifest] = p.prev
 
     @volatile private var staged: Option[ReplicaManifest] = None
     @volatile private var published = false
 
     def stage(): Unit = {
       val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
-        legacyFlat, metaOrd) = p
+        metaOrd) = p
       val spark = net.sparkSession
       val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
       val touchedPaths = prevBuckets.collect {
@@ -4384,8 +4104,7 @@ object CdcStream {
             "an unconditional merge cannot fold them — run compactReplica " +
             "first or merge with conditionalOrder")
       val noBase = netT.select(dataCols.map(col): _*).limit(0)
-      val base = legacyFlat match {
-        case Some(flat) => spark.read.parquet(flat)
+      val base =
         // an EAGER merge over buckets with pending deltas folds them in:
         // keepDeletes preserves delete state across the rewrite —
         // sequence-folded stores pass stored tombstones through
@@ -4393,19 +4112,14 @@ object CdcStream {
         // winners AS tombstones so the conditional compare below (and
         // any late batch after it) still loses to them. The rewritten
         // buckets drop their delta lists.
-        case None if prevHasDeltas =>
+        if (prevHasDeltas)
           mergedBucketRead(spark, replicaDir, prev.get, touched,
               keepDeletes = true)
             .getOrElse(noBase)
-        case None if touchedPaths.isEmpty => noBase
-        case None => prev.flatMap(manifestSchema) match {
-          // manifest union schema: null-fills evolution gaps without a
-          // per-merge footer scan; pre-schema manifests merge footers once
-          case Some(sc) => spark.read.schema(sc).parquet(touchedPaths: _*)
-          case None => spark.read.option("mergeSchema", "true")
-            .parquet(touchedPaths: _*)
-        }
-      }
+        else if (touchedPaths.isEmpty) noBase
+        // manifest union schema: null-fills evolution gaps without a
+        // per-merge footer scan
+        else spark.read.schema(prev.get.schema).parquet(touchedPaths: _*)
       // ONE window per (bucket, key) over the touched buckets' rows ∪
       // the net picks each key's survivor. The rows are hash-routed to
       // their bucket's writer FIRST — one task and ONE output file per
@@ -4448,11 +4162,9 @@ object CdcStream {
             .unionByName(incoming.withColumn("__incoming", lit(1)),
               allowMissingColumns = true), Nil)
       }
-      val writeBuckets = // flat-layout migration rewrites ALL buckets
-        if (legacyFlat.isDefined) nb else math.max(touched.size, 1)
       val w = Window.partitionBy((col("__bucket") +: idCols.map(col)): _*)
         .orderBy((ord.map(_.desc) :+ col("__incoming").desc): _*)
-      val winners = all.repartition(writeBuckets, col("__bucket"))
+      val winners = all.repartition(math.max(touched.size, 1), col("__bucket"))
         .withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1)
       val mergedB = (conditional match {
@@ -4473,7 +4185,7 @@ object CdcStream {
       // schema so the pruned lookup path never needs a footer-merge over
       // every bucket file; `merged` only covers touched buckets, so the
       // previous union widens.
-      val unionSchema = prevSchema match {
+      val unionSchema = prev.map(_.schema) match {
         case Some(ps) =>
           StructType(ps.fields.map { pf =>
             netT.schema.fields.find(_.name == pf.name) match {
@@ -4509,7 +4221,7 @@ object CdcStream {
       // buckets actually written (a delete can empty one entirely) —
       // never outside the touched set the base read covered
       val written = bucketDirs(s"$staging/data")
-      if (legacyFlat.isEmpty && !written.subsetOf(touched))
+      if (!written.subsetOf(touched))
         throw new IllegalStateException(s"replica $replicaDir: merge wrote " +
           s"bucket(s) ${(written -- touched).toSeq.sorted.mkString(",")} " +
           "outside the net's recorded touched set")
@@ -4518,57 +4230,30 @@ object CdcStream {
         written.map(k => k -> s"$nextName/data/__bucket=$k")
       // tombstone metadata for the rewritten buckets: one column-pruned
       // agg over the files just written (never the store); untouched
-      // buckets keep their recorded mins. Only maintained once the store
-      // has an order-column record — legacy tombstone stores keep the
-      // scan-based detection until their next conditional merge, whose
-      // None→Some condOrderCols transition backfills the UNTOUCHED
-      // legacy buckets too (one pruned job, once) so the recorded mins
-      // are complete from the first version that carries them.
+      // buckets keep their recorded mins. Maintained once the store has
+      // an order-column record.
+      val carried = prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
       val newMins: Map[Int, String] = metaOrd match {
         case Some(ocs)
           if conditional.nonEmpty ||
             unionSchema.fieldNames.contains(Tombstone) =>
-          val transition = prev.exists(_.condOrderCols.isEmpty)
-          val backfill =
-            if (transition)
-              legacyTombstoneMins(spark, replicaDir,
-                prevBuckets.filter { case (k, _) => !touched(k) },
-                prevSchema, ocs)
-            else Map.empty[Int, String]
-          // at the transition, prior mins (possibly sweep-recorded under
-          // tombstoneMinCols) are re-keyed by the backfill — don't carry
-          val carried =
-            if (transition) Map.empty[Int, String]
-            else prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
-          backfill ++ carried ++
-            stagedTombstoneMins(spark, s"$staging/data", ocs)
-        case _ =>
-          // store without order columns: rewritten buckets refresh their
-          // sweep-recorded mins (keyed by tombstoneMinCols) off the
-          // staged files — dropping without refresh would hide their
-          // tombstones from metadata-decided expiry forever
-          prev.flatMap(_.tombstoneMinCols) match {
-            case Some(mcs) =>
-              (prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched) ++
-                stagedTombstoneMins(spark, s"$staging/data", mcs)
-            case None =>
-              prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
-          }
+          carried ++ stagedTombstoneMins(spark, s"$staging/data", ocs)
+        case _ => carried
       }
       val remainingDeltas = prev.map(_.deltas -- touched).getOrElse(Map.empty)
-      staged = Some(ReplicaManifest(nb, newBuckets, Some(unionSchema.json),
-        watermark, resolvedBucketCols,
+      staged = Some(ReplicaManifest(nb, newBuckets, unionSchema,
+        keyCols = prev.map(_.keyCols).getOrElse(idCols),
+        opColName = prev.map(_.opColName).getOrElse(opCol),
+        commitKind = kind,
+        watermark = watermark,
+        bucketCols = resolvedBucketCols,
         // an eager rewrite FOLDS the touched buckets' deltas (the base
         // read merged them); untouched buckets keep theirs
-        keyCols = prev.flatMap(_.keyCols).orElse(Some(idCols)),
-        opColName = prev.flatMap(_.opColName).orElse(Some(opCol)),
         deltas = remainingDeltas,
         condOrderCols = metaOrd,
         deltasConditional = remainingDeltas.nonEmpty &&
           prev.exists(_.deltasConditional),
-        tombstoneMins = newMins,
-        tombstoneMinCols = if (metaOrd.nonEmpty) None
-          else prev.flatMap(_.tombstoneMinCols)))
+        tombstoneMins = newMins))
       stageTestHook(replicaDir)
     }
 
@@ -4628,17 +4313,7 @@ object CdcStream {
     val spark = net.sparkSession
     def plan(in: DataFrame) = planCommit(replicaDir, in, batchCols, idCols,
       opCol, numBuckets, conditional, bucketCols, bypassFreeze)
-    // returns the store's previous union schema
-    def checked(p: CommitPlan): Option[StructType] = {
-      // the previous union schema (upgrading a pre-schema manifest with
-      // one footer-merge over its buckets — a one-time write-side cost)
-      val prevSchema: Option[StructType] = p.prev.flatMap { m =>
-        manifestSchema(m)
-          .orElse(if (m.buckets.isEmpty) None
-          else Some(spark.read.option("mergeSchema", "true").parquet(
-            m.buckets.values.toSeq.sorted
-              .map(path => resolveStorePath(replicaDir, path)): _*).schema))
-      }
+    def checked(p: CommitPlan): Unit =
       // SCHEMA EVOLUTION: TYPE changes only along the safe WIDENING ladder
       // ([[isTypeWidening]] — int→long, float→double …), and only on
       // NON-ROUTING columns. This is where the contract is ENFORCED, not
@@ -4652,7 +4327,7 @@ object CdcStream {
       // (netT), never a union's: union type-coercion would blur the
       // distinction (int ⋈ string resolves to a runtime cast that would
       // masquerade as a "widening" here and then blow up mid-write).
-      if (!defer) prevSchema.foreach { ps =>
+      if (!defer) p.prev.map(_.schema).foreach { ps =>
         p.netT.schema.fields.filter(f => p.dataCols.contains(f.name))
           .foreach { f =>
           ps.fields.find(_.name == f.name).foreach { pf =>
@@ -4676,12 +4351,10 @@ object CdcStream {
           }
         }
       }
-      prevSchema
-    }
     def routing(p: CommitPlan) =
       (p.nb, p.bc, p.bc.map(c => p.netT.schema(c).dataType))
     val p0 = plan(net)
-    val prevSchema0 = checked(p0)
+    checked(p0)
     val staging = newStagingDir(replicaDir)
     try {
       val touched = new BucketSet
@@ -4699,9 +4372,9 @@ object CdcStream {
         FileUtils.deleteQuietly(new java.io.File(staging))
         again
       } else {
-        val prevSchema = if (p.cur == p0.cur) prevSchema0 else checked(p)
+        if (p.cur != p0.cur) checked(p)
         new EagerCommit(replicaDir, p, staging, batchCols, idCols, opCol,
-          prevSchema, p.netT, touched.value, watermark, recordChanges,
+          p.netT, touched.value, watermark, recordChanges,
           conditional, bypassFreeze, kind, prepareOnly)
       }
     } catch {
@@ -4720,8 +4393,8 @@ object CdcStream {
   private[streaming] def readCommitKeys(
       spark: org.apache.spark.sql.SparkSession, c: EagerCommit,
       keepDeletes: Boolean): Option[DataFrame] =
-    c.curName.flatMap { name =>
-      readForKeysAt(spark, c.replicaDir, name, c.idCols,
+    c.base.flatMap { m =>
+      readForKeysAt(spark, c.replicaDir, m, c.idCols,
         c.net.select(c.idCols.map(col): _*), keepDeletes,
         buckets = Some(c.touched))
     }.map(df => if (keepDeletes) withTombstoneFlag(df) else df)
@@ -4765,7 +4438,7 @@ object CdcStream {
       val p = planCommit(replicaDir, net, batchCols, idCols, opCol,
         numBuckets, conditional, bucketCols, bypassFreeze)
       val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
-        legacyFlat, metaOrd) = p
+        metaOrd) = p
       val bucketOf = p.bucketOf
       // -------- DEFERRED (merge-on-read) commit: append the net as
       // per-bucket delta files — NO base read, NO base rewrite, and NO
@@ -4774,15 +4447,6 @@ object CdcStream {
       // latency floor a streaming upsert sink needs for small
       // micro-batches; reads fold deltas newest-net-wins, compaction
       // folds them back into base files.
-      require(legacyFlat.isEmpty,
-        "deferMerge: flat-layout replicas must migrate via one eager merge")
-      val prevSc = prev.flatMap(manifestSchema)
-      // a pre-schema manifest doesn't know its own union schema — a
-      // deferred commit would record the NET's (possibly narrower)
-      // columns and readers would silently drop stored ones
-      require(prev.isEmpty || prevSc.nonEmpty,
-        "deferMerge: this replica predates recorded schemas; run one " +
-          "eager merge first to upgrade its manifest")
       // ONE ordering model per delta chain set: folding sequence-
       // committed and order-committed deltas together has no coherent
       // winner rule — compaction resets the mode
@@ -4796,18 +4460,7 @@ object CdcStream {
               "-ordered deferred commit cannot mix with them — " +
               "compactReplica first")
       }
-      prevSc.foreach { ps =>
-        // a SEQUENCE-folded deferred commit must not land in a bucket
-        // holding conditional tombstones (its fold has no order compare
-        // — a tombstone's late-loser protection would silently drop).
-        // With tombstone metadata the check is per bucket (below, after
-        // the write says which buckets the batch hit); a legacy
-        // tombstone-bearing store without the metadata refuses whole.
-        if (ps.fieldNames.contains(Tombstone) && conditional.isEmpty &&
-            prev.exists(_.condOrderCols.isEmpty))
-          throw new IllegalStateException(
-            "deferMerge cannot run on a replica holding conditional-merge " +
-              "tombstones; compactReplica(tombstoneHorizon) first")
+      prev.map(_.schema).foreach { ps =>
         val extra = dataCols.filterNot(ps.fieldNames.contains)
         if (extra.nonEmpty) throw new IllegalArgumentException(
           s"deferMerge: batch adds column(s) ${extra.mkString(",")} — " +
@@ -4836,7 +4489,7 @@ object CdcStream {
             "eager merge (deferMerge=false), which records the widened " +
             "schema and rewrites the touched buckets")
       }
-      prev.flatMap(_.keyCols).foreach(k => require(k == idCols,
+      prev.map(_.keyCols).foreach(k => require(k == idCols,
         s"deferMerge: replica records keyCols $k but batch uses $idCols"))
       val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
       val nextV = cur.map(_._1 + 1).getOrElse(1L)
@@ -4857,9 +4510,12 @@ object CdcStream {
         FileUtils.deleteQuietly(new java.io.File(staging))
         return None
       }
-      // per-bucket exclusivity for sequence-folded deltas (metadata-
-      // backed stores): the touched buckets fall out of the write's own
-      // partition dirs, so the check costs no extra job
+      // per-bucket exclusivity for sequence-folded deltas: a SEQUENCE-
+      // folded deferred commit must not land in a bucket holding
+      // conditional tombstones (its fold has no order compare — a
+      // tombstone's late-loser protection would silently drop). The
+      // touched buckets fall out of the write's own partition dirs, so
+      // the check costs no extra job
       if (conditional.isEmpty && prev.exists(_.condOrderCols.nonEmpty)) {
         val clash = written.toSet.intersect(
           prev.map(_.tombstoneMins.keySet).getOrElse(Set.empty))
@@ -4876,30 +4532,15 @@ object CdcStream {
       val newDeltas = prevDeltas ++ written.map(k =>
         k -> (prevDeltas.getOrElse(k, Seq.empty) :+
           s"$nextName/delta/__bucket=$k")).toMap
-      val scJson = prevSc.getOrElse(netT.select(dataCols.map(col): _*).schema)
-      // first CONDITIONAL commit on a legacy store: recording
-      // condOrderCols flips the store onto metadata-decided expiry and
-      // per-bucket exclusivity, so the mins must cover the legacy
-      // buckets' tombstones — deferred commits rewrite no base bucket,
-      // hence the backfill scans them all (once)
-      // at the None→Some transition the backfill re-keys EVERY
-      // bucket's min by the order columns — prior mins (possibly keyed
-      // by a sweep-recorded tombstoneMinCols) must not carry over
-      val minsBase: Map[Int, String] =
-        if (conditional.nonEmpty && prev.exists(_.condOrderCols.isEmpty))
-          legacyTombstoneMins(spark, replicaDir, prevBuckets, prevSc,
-            metaOrd.getOrElse(Seq.empty))
-        else prev.map(_.tombstoneMins).getOrElse(Map.empty)
       publishVersion(replicaDir, staging, nextName,
-        ReplicaManifest(nb, prevBuckets, Some(scJson.json), watermark,
-          resolvedBucketCols,
-          keyCols = Some(idCols), opColName = Some(opCol),
+        ReplicaManifest(nb, prevBuckets,
+          prev.map(_.schema).getOrElse(netT.select(dataCols.map(col): _*).schema),
+          keyCols = idCols, opColName = opCol, commitKind = kind,
+          watermark = watermark, bucketCols = resolvedBucketCols,
           deltas = newDeltas,
           condOrderCols = metaOrd,
           deltasConditional = conditional.nonEmpty,
-          tombstoneMins = minsBase,
-          tombstoneMinCols = if (metaOrd.nonEmpty) None
-            else prev.flatMap(_.tombstoneMinCols)),
+          tombstoneMins = prev.map(_.tombstoneMins).getOrElse(Map.empty)),
         prev, cur.map(_._2), forbidFrozen = !bypassFreeze, kind = kind,
         flipPointer = !prepareOnly)
       Some(nextV)

@@ -5,9 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Run independent driver tasks as CONCURRENT Spark jobs (guide §2.6:
   * actions are only sequential because driver code calls them
   * sequentially). Used for a commit's per-store tasks (one per index
-  * store, plus the primary's stage), for a gate that drives the same
-  * mutation against two disjoint stores, and for per-file rewrites
-  * that touch disjoint paths. A single task runs inline — no pool
+  * store, plus the primary's stage), for a fan-out's per-table merges,
+  * for a gate that drives the same mutation against two disjoint
+  * stores, and for per-file rewrites that touch disjoint paths. A
+  * single task runs inline — no pool
   * churn on the common path.
   *
   * Each task runs under its own Spark job group. The first failure —
@@ -27,8 +28,13 @@ private[graft] object ConcurrentJobs {
     */
   private val DrainTimeoutSec = 120L
 
-  def run(spark: SparkSession, tasks: Seq[() => Unit]): Unit =
-    if (tasks.size <= 1) tasks.foreach(_())
+  def run(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+    runAll(spark, tasks); ()
+  }
+
+  /** [[run]] that returns each task's result, in input order. */
+  def runAll[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] =
+    if (tasks.size <= 1) tasks.map(_())
     else {
       import java.util.concurrent._
       val sc = spark.sparkContext
@@ -37,10 +43,10 @@ private[graft] object ConcurrentJobs {
       // threads are created per call, so each inherits the caller's
       // Spark local properties (streaming batch id, SQL execution id)
       val pool = Executors.newFixedThreadPool(math.min(4, tasks.size))
-      val done = new ExecutorCompletionService[Unit](pool)
+      val done = new ExecutorCompletionService[A](pool)
       val fs = tasks.zip(groups).map { case (t, g) =>
-        done.submit(new Callable[Unit] {
-          def call(): Unit = {
+        done.submit(new Callable[A] {
+          def call(): A = {
             // the inherited description keeps the jobs' attribution
             sc.setJobGroup(g, sc.getLocalProperty("spark.job.description"),
               interruptOnCancel = true)
@@ -48,8 +54,10 @@ private[graft] object ConcurrentJobs {
           }
         })
       }
-      try tasks.foreach(_ => done.take().get())
-      catch {
+      try {
+        tasks.foreach(_ => done.take().get())
+        fs.map(_.get())
+      } catch {
         case e @ (_: ExecutionException | _: InterruptedException) =>
           groups.foreach(g => sc.cancelJobGroupAndFutureJobs(g))
           fs.foreach(_.cancel(false))

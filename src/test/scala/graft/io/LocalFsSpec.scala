@@ -108,6 +108,36 @@ class LocalFsSpec extends SparkSuite {
     }
   }
 
+  test("link status matches stock on files, dirs, symlinks, missing paths") {
+    withTempDir { root =>
+      val stock = init(new RawLocalFileSystem, "022")
+      val nio = init(new NioRawLocalFileSystem, "022")
+      val file = new File(root, "f")
+      Files.write(file.toPath, "data".getBytes)
+      val dir = new File(root, "d"); assert(dir.mkdir())
+      val link = new File(root, "l")
+      Files.createSymbolicLink(link.toPath, file.toPath)
+      val dangling = new File(root, "dl")
+      Files.createSymbolicLink(dangling.toPath, new File(root, "gone").toPath)
+      def status(fs: RawLocalFileSystem, p: Path) =
+        try {
+          val s = fs.getFileLinkStatus(p)
+          Some((s.getPath, s.isDirectory, s.isSymlink,
+            if (s.isSymlink) s.getSymlink else null, s.getLen,
+            s.getPermission, s.getOwner, s.getGroup, s.getModificationTime))
+        } catch { case _: FileNotFoundException => None }
+      // both path forms: stock reads a scheme-qualified path as no link
+      // (so a qualified dangling link is missing, like a missing path)
+      for (f <- Seq(file, dir, link, dangling, new File(root, "missing"));
+           p <- Seq(new Path(f.getPath), new Path(f.toURI.toString)))
+        assert(status(nio, p) == status(stock, p), p)
+      assert(status(nio, new Path(link.getPath)).exists(_._3))
+      assert(status(nio, new Path(dangling.getPath)).exists(_._3))
+      assert(status(nio, new Path(new File(root, "missing").getPath)).isEmpty)
+      stock.close(); nio.close()
+    }
+  }
+
   test("streaming checkpoint offsets/ and commits/ are written through GraftLocalFs") {
     withTempDir { root =>
       val in = new File(root, "in").toString

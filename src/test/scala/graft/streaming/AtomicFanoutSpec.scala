@@ -1,6 +1,10 @@
 package graft.streaming
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{JobFailed, JobSucceeded, SparkListener,
+  SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskStart}
 
 import org.apache.spark.sql.types._
 
@@ -166,6 +170,55 @@ class AtomicFanoutSpec extends SparkSuite {
     intercept[IllegalArgumentException](ReplicaSinkConfig(Map(
       "path" -> "{db}/{table}", "keys" -> "id",
       "schemaRegistry" -> "/tmp/x", "atomicFanOut" -> "true")))
+  }
+
+  test("a failed table's merge cancels its sibling's running job") {
+    val root = Files.createTempDirectory("atomic-fanout").toString
+    val sc = spark.sparkContext
+    val slowJobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val slowStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val ends = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobEnd]()
+    val taskStarted = new CountDownLatch(1)
+    val jobEnded = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties.getProperty("spark.job.description") == "users-slow") {
+          slowJobs.add(e.jobId); e.stageIds.foreach(slowStages.add(_))
+        }
+      override def onTaskStart(e: SparkListenerTaskStart): Unit =
+        if (slowStages.contains(e.stageId)) taskStarted.countDown()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (slowJobs.contains(e.jobId)) { ends.add(e); jobEnded.countDown() }
+    }
+    // both tables' merges run side by side; the users merge goes on to a
+    // job that would run a minute unless its tasks are killed, and the
+    // orders merge fails once that job is running
+    CdcStream.stageTestHook = dir =>
+      if (dir.endsWith("users")) {
+        sc.setJobDescription("users-slow")
+        spark.range(0, 2, 1, 2).rdd.map { x => Thread.sleep(60000L); x }.count()
+      } else if (dir.endsWith("orders")) {
+        assert(taskStarted.await(30, TimeUnit.SECONDS), "slow job never started")
+        throw new IllegalStateException("orders merge failed")
+      }
+    sc.addSparkListener(listener)
+    val t0 = System.nanoTime()
+    try {
+      val e = intercept[IllegalStateException](runAtomic(root))
+      assert(e.getMessage == "orders merge failed")
+      assert(jobEnded.await(30, TimeUnit.SECONDS), "slow job never ended")
+      val end = ends.peek()
+      assert(end.jobResult != JobSucceeded)
+      assert(end.jobResult.asInstanceOf[JobFailed].exception.getMessage
+        .contains("cancelled"), end.jobResult.toString)
+      assert(TimeUnit.NANOSECONDS.toSeconds(System.nanoTime() - t0) < 45)
+      // phase 1 failed: no intent was written and no pointer flipped
+      assert(!new java.io.File(root, "_fanout_txn.json").exists())
+      assert(ordersState(root).isEmpty && usersState(root).isEmpty)
+    } finally {
+      CdcStream.stageTestHook = _ => ()
+      sc.removeSparkListener(listener)
+    }
   }
 
   private def q(s: String): String =

@@ -36,6 +36,30 @@ class MergeOnReadSpec extends SparkSuite {
       java.nio.file.Paths.get(dir, cur, "manifest.json"))
   }
 
+  /** Remove the conditional metadata from the CURRENT manifest — the
+    * shape a store had before it recorded its order columns and
+    * tombstone mins.
+    */
+  private def stripConditionalMetadata(dir: String): Unit = {
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    val cur = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(dir, "CURRENT")).trim
+    val path = java.nio.file.Paths.get(dir, cur, "manifest.json")
+    val node = om.readTree(java.nio.file.Files.readString(path))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("condOrderCols"); node.remove("tombstoneMins")
+    java.nio.file.Files.writeString(path, om.writeValueAsString(node))
+  }
+
+  private def legacyFieldNames(dir: String, field: String): Set[String] =
+    Option(new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(manifestJson(dir)).get(field)).map { o =>
+      val it = o.fieldNames()
+      val b = Set.newBuilder[String]
+      while (it.hasNext) b += it.next()
+      b.result()
+    }.getOrElse(Set.empty)
+
   test("deferred commits append deltas; reads fold newest-net-wins") {
     val dir = freshDir()
     applyDefer(dir, Seq((1L, "a", 1L, "update"), (2L, "b", 1L, "update"),
@@ -331,39 +355,27 @@ class MergeOnReadSpec extends SparkSuite {
     applyCond((0L until 12L).map(i => (i, s"a$i", 5L, "update")))
     applyCond(Seq((1L, "x", 9L, "delete"), (3L, "x", 9L, "delete"),
       (7L, "x", 9L, "delete")))
-    // snapshot the recorded tombstone buckets, then STRIP the metadata
-    // to simulate a store written before condOrderCols/tombstoneMins
-    // existed in the manifest
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def manifestPath() = {
-      val cur = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "CURRENT")).trim
-      java.nio.file.Paths.get(dir, cur, "manifest.json")
-    }
-    val node = om.readTree(java.nio.file.Files.readString(manifestPath()))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val tombBuckets = {
-      val it = node.get("tombstoneMins").fieldNames()
-      val b = scala.collection.mutable.Set.empty[String]
-      while (it.hasNext) b += it.next()
-      b.toSet
-    }
+    val tombBuckets = legacyFieldNames(dir, "tombstoneMins")
     assert(tombBuckets.size >= 2, s"fixture needs ≥2 tombstone buckets: $tombBuckets")
-    node.remove("condOrderCols"); node.remove("tombstoneMins")
-    java.nio.file.Files.writeString(manifestPath(), om.writeValueAsString(node))
-    // first conditional merge on the legacy store touches ONE live key;
-    // the None→Some condOrderCols transition must backfill the
-    // UNTOUCHED legacy buckets' tombstone mins too
-    applyCond(Seq((2L, "a2b", 6L, "update")))
-    val upgraded = om.readTree(java.nio.file.Files.readString(manifestPath()))
-    val minsAfter = {
-      val it = upgraded.get("tombstoneMins").fieldNames()
-      val b = scala.collection.mutable.Set.empty[String]
-      while (it.hasNext) b += it.next()
-      b.toSet
+    // the shape written before the store recorded its order columns
+    stripConditionalMetadata(dir)
+    // the conditional merge refuses the legacy store and names the
+    // upgrade, which does the backfill
+    val refused = intercept[IllegalStateException] {
+      applyCond(Seq((2L, "a2b", 6L, "update")))
     }
-    assert(tombBuckets.subsetOf(minsAfter),
-      s"backfill must cover legacy buckets: had $tombBuckets, got $minsAfter")
+    assert(refused.getMessage.contains("upgradeReplica"), refused.getMessage)
+    // the tombstones' order columns are not on record: the caller names them
+    val noOrder = intercept[IllegalArgumentException] {
+      CdcStream.upgradeReplica(spark, dir, Seq("id"))
+    }
+    assert(noOrder.getMessage.contains("orderCols"), noOrder.getMessage)
+    CdcStream.upgradeReplica(spark, dir, Seq("id"), Seq(col("seq")))
+    assert(new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(manifestJson(dir)).get("condOrderCols").get(0).asText == "seq")
+    assert(legacyFieldNames(dir, "tombstoneMins") == tombBuckets,
+      "the upgrade must record every legacy bucket's tombstone min")
+    applyCond(Seq((2L, "a2b", 6L, "update")))
     // the per-bucket exclusivity check now sees the legacy tombstones:
     // a sequence deferred commit on a deleted key's bucket refuses
     intercept[IllegalStateException] {
@@ -373,8 +385,7 @@ class MergeOnReadSpec extends SparkSuite {
     assert(CdcStream.maintainReplica(spark, dir,
       tombstoneHorizon = Some(col("seq") <= lit(9L))),
       "maintenance must detect the legacy buckets' expired tombstones")
-    val afterJson = java.nio.file.Files.readString(manifestPath())
-    assert(!afterJson.contains("tombstoneMins"),
+    assert(!manifestJson(dir).contains("tombstoneMins"),
       "expired legacy tombstones must age out via the metadata path")
     // content unchanged by the maintenance: deleted keys stay gone
     val expected = (0L until 12L).filterNot(Set(1L, 3L, 7L))
@@ -416,35 +427,24 @@ class MergeOnReadSpec extends SparkSuite {
     // version so the maintain below has no fragmentation work left
     CdcStream.compactReplica(spark, dir)
     CdcStream.compactReplica(spark, dir)
-    // strip the conditional metadata to simulate a pre-metadata store
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    def manifestPath() = {
-      val cur = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, "CURRENT")).trim
-      java.nio.file.Paths.get(dir, cur, "manifest.json")
-    }
-    val node = om.readTree(java.nio.file.Files.readString(manifestPath()))
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("condOrderCols"); node.remove("tombstoneMins")
-    java.nio.file.Files.writeString(manifestPath(), om.writeValueAsString(node))
-    // nothing expired: the sweep runs ONCE and the published manifest
-    // carries horizon-keyed mins (tombstoneMinCols), so every later
-    // detection is O(manifest)
-    val horizon = Some(col("seq") <= lit(1L))
-    CdcStream.maintainReplica(spark, dir, tombstoneHorizon = horizon)
+    stripConditionalMetadata(dir)
+    // the upgrade is the ONE sweep: it reads the data once and records
+    // the mins keyed by the order columns the horizon names
+    CdcStream.upgradeReplica(spark, dir, Seq("id"), Seq(col("seq")))
     val mj = manifestJson(dir)
-    assert(mj.contains("tombstoneMinCols") && mj.contains("tombstoneMins"),
+    assert(mj.contains("condOrderCols") && mj.contains("tombstoneMins"),
       s"the sweep must record horizon-keyed mins: $mj")
     // corrupt every data file: the next detection must decide from the
-    // manifest alone — pre-fix the full sweep re-ran on EVERY call
+    // manifest alone, with no further sweep
     def corrupt(f: java.io.File): Unit =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).foreach(corrupt)
       else if (f.getName.endsWith(".parquet"))
         java.nio.file.Files.write(f.toPath, "garbage".getBytes)
     corrupt(new java.io.File(dir))
+    val horizon = Some(col("seq") <= lit(1L))
     assert(!CdcStream.maintainReplica(spark, dir, tombstoneHorizon = horizon),
-      "second call must be a metadata-decided no-op (no data file read)")
+      "detection must be a metadata-decided no-op (no data file read)")
   }
 
   test("a null-order tombstone neither blocks its bucket's age-out nor " +

@@ -64,9 +64,9 @@ class ReplicaMaintenanceSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       CdcStream.rebucketReplica(spark, dir2, Seq("v"), 7)
     }
-    // a pre-keyCols manifest records neither routing column set: the
-    // caller's idCols cannot be checked — refuse instead of silently
-    // rehashing by possibly-wrong columns
+    // a manifest without keyCols (an older store format) records no
+    // routing columns to check the caller's idCols against: the
+    // reshard refuses and names the upgrade, which records them
     val cur = java.nio.file.Files.readString(
       java.nio.file.Paths.get(dir2, "CURRENT")).trim
     val mPath = java.nio.file.Paths.get(dir2, cur, "manifest.json")
@@ -75,9 +75,18 @@ class ReplicaMaintenanceSpec extends SparkSuite {
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     node.remove("keyCols"); node.remove("bucketCols")
     java.nio.file.Files.writeString(mPath, om.writeValueAsString(node))
-    intercept[IllegalStateException] {
+    val e = intercept[IllegalStateException] {
       CdcStream.rebucketReplica(spark, dir2, Seq("id"), 7)
     }
+    assert(e.getMessage.contains("upgradeReplica"), e.getMessage)
+    CdcStream.upgradeReplica(spark, dir2, Seq("id"))
+    intercept[IllegalArgumentException] {
+      CdcStream.rebucketReplica(spark, dir2, Seq("v"), 7)
+    }
+    CdcStream.rebucketReplica(spark, dir2, Seq("id"), 7)
+    assert(CdcStream.readReplicaForKeys(spark, dir2, Seq("id"),
+      Seq(1L).toDF("id")).get.select($"v").as[String].collect().toSeq ==
+      Seq("a"))
   }
 
   test("enrichBatch: lookup join serves live state, NULLs absent/deleted keys") {
