@@ -113,9 +113,11 @@ class ReplicaRelation(
                 org.apache.spark.sql.catalyst.expressions.Literal(
                   combos.head(i)).dataType)
             }
-            val rows = combos.map(Row.fromSeq)
+            // a LOCAL key set: buckets and the key filter resolve on the
+            // driver, so the pruned read is the scan's one job
+            import scala.jdk.CollectionConverters._
             val keys = spark.createDataFrame(
-              spark.sparkContext.parallelize(rows, 1), StructType(fields))
+              combos.map(Row.fromSeq).asJava, StructType(fields))
             CdcStream.readReplicaForKeys(spark, path, idCols, keys)
           }.toOption.flatten
         }

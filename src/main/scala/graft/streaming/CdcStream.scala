@@ -899,8 +899,7 @@ object CdcStream {
       numBuckets = Option(n.get("numBuckets")).map(_.asInt)
         .getOrElse(DefaultReplicaBuckets),
       buckets = byBucket("buckets")(_.asText),
-      schema = str("schema").map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new StructType()),
+      schema = str("schema").map(parsedSchema(_)).getOrElse(new StructType()),
       keyCols = Option(n.get("keyCols")).map(strs).getOrElse(Nil),
       opColName = str("opCol").getOrElse(""),
       commitKind = str("commitKind").getOrElse(""),
@@ -923,11 +922,33 @@ object CdcStream {
       m.commitKind.nonEmpty &&
       (m.condOrderCols.nonEmpty || !m.schema.fieldNames.contains(Tombstone)) &&
       m.tombstoneMins.values.forall { j =>
-        j == NullOrderSentinel || m.condOrderCols.exists { ocs =>
-          val t = Json.readTree(j)
-          ocs.forall(t.hasNonNull)
-        }
+        j == NullOrderSentinel ||
+          m.condOrderCols.exists(_.forall(nonNullFields(j).contains))
       }
+
+  /** A pure function of a manifest's JSON text, memoized on that text:
+    * the key is the content itself, so no entry can go stale. Cleared
+    * wholesale past the bound (as [[graft.operators.ZoneMaps]]' zone
+    * cache: the entries are small and re-derivable).
+    */
+  private final class TextMemo[V <: AnyRef](f: String => V) {
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, V]()
+    def apply(text: String): V = {
+      if (memo.size > 4096) memo.clear()
+      memo.computeIfAbsent(text, t => f(t))
+    }
+  }
+
+  /** A recorded schema, parsed once per distinct JSON text. */
+  private val parsedSchema = new TextMemo(
+    DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** The fields a recorded tombstone min holds non-null. */
+  private val nonNullFields = new TextMemo[Set[String]]({ j =>
+    import scala.jdk.CollectionConverters._
+    val t = Json.readTree(j)
+    t.fieldNames.asScala.filter(t.hasNonNull).toSet
+  })
 
   /** A version's manifest in the current format. None when the version
     * was never committed, was GC'd, or was written in an older format —
@@ -1020,10 +1041,15 @@ object CdcStream {
     * partitioning every bucket spans the full key range). `keys` is the
     * bounded lookup set carrying exactly the `idCols` columns; its
     * bucket ids are computed with the SAME Catalyst hash expression the
-    * writer bucketed with (collected — one int per lookup key), and
-    * matching rows are selected with a broadcast semi-join over the
-    * pruned scan. A point lookup on a 16-bucket replica reads one
-    * bucket's files, not 16.
+    * writer bucketed with. A point lookup on a 16-bucket replica reads
+    * one bucket's files, not 16.
+    *
+    * Cost: a LOCAL `keys` (its optimized plan is a LocalRelation, as
+    * `Seq(...).toDF` gives) resolves its buckets on the driver and
+    * filters the pruned scan with `In` over its typed keys, so the read
+    * runs ONE Spark job, the caller's scan. Any other `keys` plan
+    * collects its distinct bucket ids (one int per bucket) and selects
+    * matching rows with a broadcast semi-join.
     *
     * None when no version was ever committed or the replica is empty.
     */
@@ -1064,12 +1090,15 @@ object CdcStream {
 
   /** Key-pruned read of one version's manifest `m` — CURRENT's, or a
     * historical one for time travel (same exact hash-derived bucket
-    * pruning, same broadcast semi-join). The delta-sized restore diff
-    * reads the rollback target through this: O(touched buckets), not
-    * O(store), even when the target is a historical version.
+    * pruning). The delta-sized restore diff reads the rollback target
+    * through this: O(touched buckets), not O(store), even when the
+    * target is a historical version. A local `keys` prunes and filters
+    * on the driver (`In` over its typed keys, no job before the scan);
+    * any other plan collects its buckets and semi-joins.
     * `buckets`: the candidate buckets when the caller already knows
     * them (an [[EagerCommit]]'s touched set) — skips the collect that
-    * derives them from the keys. None when `m` is committed-but-empty.
+    * derives them from the keys, and keeps the semi-join. None when `m`
+    * is committed-but-empty.
     */
   private def readForKeysAt(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, m: ReplicaManifest, idCols: Seq[String],
@@ -1105,11 +1134,17 @@ object CdcStream {
         throw new IllegalArgumentException(
           s"readReplicaForKeys: replica routes by bucketCol '$c' " +
             s"which is not among the lookup idCols $idCols"))
-      val candidate = buckets.getOrElse {
-        val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
-        typedKeys.select(bucketOf.as("__bucket")).distinct()
-          .collect().map(_.getInt(0)).toSet
-      }
+      val bucketOf = pmod(hash(bc.map(typedKeys(_)): _*), lit(m.numBuckets))
+      // a LOCAL key set (a `Seq(...).toDF`): the optimizer folds the
+      // cast and the bucket projection into its LocalRelation, so the
+      // typed keys and their buckets come off the driver with no job.
+      // A caller's known buckets keep the semi-join path unchanged.
+      val local = if (buckets.nonEmpty) None
+        else localRows(typedKeys.select(idCols.map(typedKeys(_)) :+ bucketOf: _*))
+      val candidate = buckets
+        .orElse(local.map(_.map(_.getInt(idCols.size)).toSet))
+        .getOrElse(typedKeys.select(bucketOf.as("__bucket")).distinct()
+          .collect().map(_.getInt(0)).toSet)
       // reading with the explicit FULL schema both null-fills
       // columns a pruned bucket predates (additive evolution) and
       // avoids a per-lookup footer merge; pending deltas on the
@@ -1121,8 +1156,44 @@ object CdcStream {
         .getOrElse(spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema))
       val folded = if (keepDeletes) base else filterTombstones(base)
-      Some(folded.join(broadcast(typedKeys), idCols, "left_semi"))
+      Some(local match {
+        case Some(rows) => folded.filter(
+          tupleIn(idCols, typedKeys.schema.map(_.dataType), rows))
+        case None => folded.join(broadcast(typedKeys), idCols, "left_semi")
+      })
     }
+
+  /** The rows of `df` when its optimized plan is a LocalRelation — read
+    * on the driver, no job; None for any other plan.
+    */
+  private[streaming] def localRows(df: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] =
+    df.queryExecution.optimizedPlan match {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        Some(r.data)
+      case _ => None
+    }
+
+  /** `cols` IN the tuples of `rows`' leading fields (typed `types`): the
+    * filter twin of an equi-semi-join against them — a tuple with a null
+    * field matches nothing, as under `=`. An `InSet`, not an `In` of
+    * literals: the keys ride in the plan as data, so reads of different
+    * keys share one generated class instead of compiling one each, and a
+    * single column still pushes down to the parquet scan.
+    */
+  private[streaming] def tupleIn(cols: Seq[String], types: Seq[DataType],
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge.{column, expression}
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InSet}
+    val tuples = rows.map(r => cols.indices.map(i => r.get(i, types(i))))
+      .filterNot(_.contains(null)).distinct
+    val typed = cols.zip(types).map { case (c, t) => col(c).cast(t) }
+    if (tuples.isEmpty) lit(false)
+    else if (cols.size == 1) column(InSet(expression(typed.head),
+      tuples.map(_.head).toSet))
+    else column(InSet(expression(struct(typed: _*)),
+      tuples.map(t => new GenericInternalRow(t.toArray): Any).toSet))
+  }
 
   /** Public face of [[readForKeysAt]]: key-pruned read of a specific
     * committed VERSION (the time-travel twin of [[readReplicaForKeys]]).

@@ -701,7 +701,11 @@ object SecondaryIndex {
     * is already deleted while the primary still holds the old row —
     * closed by the batch replay; only the batch in flight at the
     * crash is affected. Cost: O(hit buckets + hit keys), never
-    * O(table).
+    * O(table). The index hits are collected once (one job) and drive
+    * the primary read as a local key set, so with a local `values`
+    * (a `Seq(...).toDF`) buckets and key filters resolve on the driver
+    * and the lookup runs two Spark jobs: the hit collect and the
+    * caller's read of the primary.
     */
   def lookupByIndex(
       spark: SparkSession,
@@ -715,12 +719,22 @@ object SecondaryIndex {
       Seq(idxName), values)
     entries match {
       case Some(e) =>
-        val keys = e.select(idCols.map(col): _*).distinct()
+        import scala.jdk.CollectionConverters._
+        val hits = e.select(idCols.map(col): _*)
+        val keys = spark.createDataFrame(
+          hits.collect().distinct.toSeq.asJava, hits.schema)
         CdcStream.readReplicaForKeys(spark, primaryDir, idCols, keys) match {
           case Some(rows) =>
-            rows.withColumn(idxName, idxExpr)
-              .join(broadcast(values.select(col(idxName))), Seq(idxName),
-                "left_semi")
+            // read repair against the values as the index types them
+            val typed = values.select(
+              col(idxName).cast(e.schema(idxName).dataType).as(idxName))
+            val withIdx = rows.withColumn(idxName, idxExpr)
+            CdcStream.localRows(typed) match {
+              case Some(vs) => withIdx.filter(CdcStream.tupleIn(Seq(idxName),
+                typed.schema.map(_.dataType), vs))
+              case None => withIdx.join(broadcast(values.select(col(idxName))),
+                Seq(idxName), "left_semi")
+            }
           case None => emptyLike(spark, e, idCols, idxName)
         }
       case None =>

@@ -273,6 +273,30 @@ class CloneSpec extends SparkSuite {
     assert(odd(s"$root/p", s"$root/i") == Set(1L, 3L))
   }
 
+  test("a dangling indexed clone refuses a local-key point read and a GSI " +
+      "lookup with the recovery, not a FileNotFoundException") {
+    val root = freshDir("clone-idx-d")
+    val spec = SecondaryIndex.IndexSpec(s"$root/i", col("id") % 2, "band")
+    def all(tag: String, seq: Long) =
+      SecondaryIndex.applyBatchWithIndexes(spark, s"$root/p", Seq(spec),
+        idxBatch((1L to 4L).map(k => (k, s"$tag$k", seq, "update"))),
+        Seq("id"), Seq("seq"), numBuckets = 4)
+    all("a", 1L)
+    SecondaryIndex.cloneIndexedReplica(s"$root/p", s"$root/cp",
+      Seq(s"$root/i" -> s"$root/ci"))
+    all("x", 2L); all("y", 3L)
+    assert(CdcStream.verifyReplicaIntegrity(s"$root/cp").nonEmpty)
+    def refuses(read: => Any): Unit = {
+      val e = intercept[IllegalStateException](read)
+      assert(e.getMessage.contains("DANGLING") &&
+        e.getMessage.contains("RE-CLONING"), e.getMessage)
+    }
+    refuses(CdcStream.readReplicaForKeys(spark, s"$root/cp", Seq("id"),
+      Seq(1L).toDF("id")).get.collect())
+    refuses(SecondaryIndex.lookupByIndex(spark, s"$root/cp", s"$root/ci",
+      Seq("id"), col("id") % 2, "band", Seq(1L).toDF("band")).collect())
+  }
+
   test("cloneIndexedReplica: idempotent retry, and refusals for " +
       "missing/lagging source-index cursors and occupied targets") {
     val root = freshDir("clone-idx-r")

@@ -715,6 +715,124 @@ class SecondaryIndexSpec extends SparkSuite {
     assert(plain <= 4, s"plain eager commit ran $plain jobs")
   }
 
+  /** The same keys as a frame whose plan is not a LocalRelation: the
+    * bucket-collect and semi-join path the local one must agree with.
+    */
+  private def nonLocal(keys: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(keys.rdd, keys.schema)
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** A key-pruned read over the local `keys`: it runs at most `budget`
+    * Spark jobs (the scan) and returns the non-local path's rows and
+    * schema.
+    */
+  private def localRead(dir: String, idCols: Seq[String],
+      keys: org.apache.spark.sql.DataFrame, tombstones: Boolean = false,
+      budget: Int = 1): Seq[String] = {
+    def read(k: org.apache.spark.sql.DataFrame) =
+      (if (tombstones)
+        CdcStream.readReplicaForKeysWithTombstones(spark, dir, idCols, k)
+      else CdcStream.readReplicaForKeys(spark, dir, idCols, k)).get
+    var got = Seq.empty[String]
+    val jobs = countJobs { got = sortedRows(read(keys)) }
+    assert(jobs <= budget,
+      s"local-key read of ${keys.collect().toSeq} ran $jobs jobs")
+    val old = read(nonLocal(keys))
+    assert(read(keys).schema == old.schema)
+    assert(got == sortedRows(old), s"keys ${keys.collect().toSeq}")
+    got
+  }
+
+  test("job budget: a local-key point read runs one Spark job and returns " +
+      "what the semi-join path returns") {
+    val p = freshDir()
+    CdcStream.applyBatchToReplica(p, wide(rows(1, 300)), Seq("id"),
+      Seq(col("seq")))
+    val live = fold(Seq(rows(1, 300)))
+    val dead = rows(1, 300).collect { case (id, _, _, _, "delete") => id }
+      .filterNot(live.contains)
+    def ids(got: Seq[String]) =
+      got.map(_.stripPrefix("[").takeWhile(_ != ',').toLong).sorted
+    // int keys into a long-keyed store
+    val some = live.keys.toSeq.sorted.take(8)
+    assert(ids(localRead(p, Seq("id"), some.map(_.toInt).toDF("id"))) == some)
+    // ... spread over more than one bucket
+    assert(some.toDF("id").select(pmod(hash($"id"), lit(16))).distinct()
+      .count() >= 2)
+    // a null key and duplicates; a deleted key returns nothing
+    val odd = Seq(Some(some.head), None, Some(some.head), Some(dead.head))
+    assert(ids(localRead(p, Seq("id"), odd.toDF("id"))) == Seq(some.head))
+    // an empty key set: Some(empty) with the store's schema
+    val none = CdcStream.readReplicaForKeys(spark, p, Seq("id"),
+      Seq.empty[Long].toDF("id")).get
+    assert(none.schema == CdcStream.readReplica(spark, p).get.schema)
+    assert(localRead(p, Seq("id"), Seq.empty[Long].toDF("id")).isEmpty)
+    // a deferred store with pending deltas folds them into the read;
+    // the fold's per-key window adds its shuffle stage as a second job
+    CdcStream.applyBatchToReplica(p, wide(rows(2, 100)), Seq("id"),
+      Seq(col("seq")), deferMerge = true)
+    val live2 = fold(Seq(rows(1, 300), rows(2, 100)))
+    val probe = (rows(2, 100).map(_._1).take(6) ++ some).distinct
+    assert(ids(localRead(p, Seq("id"), probe.toDF("id"), budget = 2)) ==
+      probe.filter(live2.contains).sorted)
+    // a non-local keys frame still reads through the semi-join
+    assert(CdcStream.readReplicaForKeys(spark, p, Seq("id"),
+      nonLocal(probe.toDF("id"))).get.select($"id").as[Long].collect()
+      .sorted.toSeq == probe.filter(live2.contains).sorted)
+    // multi-column ids
+    val m = freshDir()
+    CdcStream.applyBatchToReplica(m, Seq((1L, "a", 10L, 1L, "update"),
+      (1L, "b", 11L, 1L, "update"), (2L, "a", 12L, 1L, "update"))
+      .toDF("id", "k", "v", "seq", "op"), Seq("id", "k"), Seq(col("seq")))
+    assert(localRead(m, Seq("id", "k"),
+      Seq((1L, "b"), (2L, "a"), (2L, "b"), (1L, null)).toDF("id", "k"))
+      .map(_.split(',').take(3).mkString(",")) == Seq("[1,b,11", "[2,a,12"))
+    // a conditionally tombstoned key: gone from the live read, a
+    // tombstone row in the read that keeps delete state
+    val c = freshDir()
+    CdcStream.applyBatchToReplica(c, wide(Seq((1L, 1L, 1L, 5L, "update"),
+      (2L, 1L, 1L, 5L, "update"))), Seq("id"), Seq(col("seq")),
+      conditionalOrder = true)
+    CdcStream.applyBatchToReplica(c, wide(Seq((1L, 1L, 1L, 9L, "delete"))),
+      Seq("id"), Seq(col("seq")), conditionalOrder = true)
+    assert(ids(localRead(c, Seq("id"), Seq(1L, 2L).toDF("id"))) == Seq(2L))
+    assert(localRead(c, Seq("id"), Seq(1L, 2L).toDF("id"), tombstones = true)
+      .map(_.endsWith(",true]")) == Seq(true, false))
+  }
+
+  test("job budget: a GSI lookup over local values runs at most 2 Spark " +
+      "jobs; a graft-replica key-equality read runs 1") {
+    val root = freshDir()
+    applyTwo(root, wide(rows(1, 300)))
+    val live = fold(Seq(rows(1, 300)))
+    def byGrp(values: org.apache.spark.sql.DataFrame) =
+      SecondaryIndex.lookupByIndex(spark, s"$root/p", s"$root/i1", Seq("id"),
+        col("grp"), "grp", values).select($"id").as[Long].collect().sorted.toSeq
+    val want = live.collect { case (id, (3L, _)) => id }.toSeq.sorted
+    assert(want.nonEmpty)
+    var got = Seq.empty[Long]
+    val jobs = countJobs { got = byGrp(Seq(3L).toDF("grp")) }
+    assert(jobs <= 2, s"GSI lookup ran $jobs jobs")
+    assert(got == want)
+    assert(byGrp(Seq(3).toDF("grp")) == want, "int values, long index")
+    assert(byGrp(nonLocal(Seq(3L).toDF("grp"))) == want)
+    assert(byGrp(Seq(999L).toDF("grp")).isEmpty)
+    val rel = new graft.sources.replica.ReplicaRelation(
+      spark.sqlContext, s"$root/p", None, None, Seq("id"))
+    val df = spark.sqlContext.baseRelationToDataFrame(rel)
+    val keys = live.keys.toSeq.sorted.take(3)
+    var scanned = Seq.empty[Long]
+    val scanJobs = countJobs {
+      scanned = df.filter($"id".isin(keys: _*)).select($"id").as[Long]
+        .collect().sorted.toSeq
+    }
+    assert(rel.lastScanPruned)
+    assert(scanJobs <= 1, s"graft-replica key read ran $scanJobs jobs")
+    assert(scanned == keys)
+  }
+
   test("an int-keyed batch into a long-keyed indexed store routes by the " +
       "store's type: primary, GSIs and pruned reads match the fold") {
     val root = freshDir()
