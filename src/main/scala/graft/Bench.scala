@@ -73,26 +73,13 @@ object Bench {
 
   /** The committed record's per-query map (empty when absent or
     * unparseable — drift then records null, never blocks a run). */
-  private def priorQueries(path: java.nio.file.Path): Map[String, Double] =
-    try {
-      if (!java.nio.file.Files.exists(path)) return Map.empty
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(java.nio.file.Files.readString(path))
-      var out = Map.empty[String, Double]
-      if (p.nextToken() != JsonToken.START_OBJECT) return Map.empty
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        val name = p.currentName(); p.nextToken()
-        if (name == "queries" &&
-            p.currentToken() == JsonToken.START_OBJECT) {
-          while (p.nextToken() != JsonToken.END_OBJECT) {
-            val q = p.currentName(); p.nextToken()
-            out += q -> p.getDoubleValue
-          }
-        } else p.skipChildren()
-      }
-      p.close(); out
-    } catch { case _: Throwable => Map.empty }
+  private def priorQueries(path: java.nio.file.Path): Map[String, Double] = {
+    import scala.jdk.CollectionConverters._
+    graft.io.AtomicFiles.readJson(path).flatMap(n => Option(n.get("queries")))
+      .map(_.fields.asScala.map(e => e.getKey -> e.getValue).toMap)
+      .filter(_.values.forall(_.isNumber))
+      .map(_.map { case (q, v) => q -> v.asDouble }).getOrElse(Map.empty)
+  }
 
   private def loadavg1(): Option[Double] =
     try Some(new String(java.nio.file.Files.readAllBytes(

@@ -104,14 +104,10 @@ object ChangelogGenerator {
         .collect().map(_.getString(0)).sorted.toSeq
 
     // schemas.json — the feed's TABLE_MAP/JDBC-probe equivalent
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    tables.foreach(t => g.writeStringField(s"$db.$t", schema.json))
-    g.writeEndObject()
-    g.close()
+    val schemas = graft.io.AtomicFiles.Json.createObjectNode()
+    tables.foreach(t => schemas.put(s"$db.$t", schema.json))
     java.nio.file.Files.write(new File(dir, "schemas.json").toPath,
-      sw.toString.getBytes(StandardCharsets.UTF_8))
+      graft.io.AtomicFiles.Json.writeValueAsBytes(schemas))
 
     val ordered = events
       .selectExpr("event_id", "user_id", "event_type", "value", "props",

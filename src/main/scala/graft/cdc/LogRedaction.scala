@@ -90,13 +90,7 @@ object LogRedaction {
         i = nl + 1
       }
     }
-    if (redacted > 0) {
-      val tmp = new File(f.getParentFile, s".${f.getName}.redact-tmp")
-      java.nio.file.Files.write(tmp.toPath, out.toByteArray)
-      java.nio.file.Files.move(tmp.toPath, f.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (redacted > 0) graft.io.AtomicFiles.replace(f.toPath, out.toByteArray)
     redacted
   }
 

@@ -72,19 +72,12 @@ object DedupQueries {
     }
   }
 
-  /** Recursive file copy — an index-mutating query works on a COPY of
-    * the build-once artifact, never the artifact itself.
+  /** Recursive copy — an index-mutating query works on a COPY of the
+    * build-once artifact, never the artifact itself.
     */
-  private def copyRec(from: java.io.File, to: java.io.File): Unit = {
-    if (from.isDirectory) {
-      to.mkdirs()
-      Option(from.listFiles()).getOrElse(Array.empty)
-        .foreach(f => copyRec(f, new java.io.File(to, f.getName)))
-    } else
-      java.nio.file.Files.copy(from.toPath, to.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def copyRec(from: String, to: String): Unit =
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(from), new java.io.File(to), false)
 
   private def withPlantedDupes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -1001,7 +994,7 @@ object DedupQueries {
       // operator's 100 TB contract
       val base = clusterIncBase(s, dir, docs)
       val state = IndexArtifacts.tempDir("cluster-inc-state")
-      copyRec(new java.io.File(base), new java.io.File(state))
+      copyRec(base, state)
       IncrementalClusters.update(s, state, docs.filter($"doc_id" % 3 === 0))
       IncrementalClusters.labels(s, state)
         .select($"doc_id", $"label".as("cluster_id"),
@@ -1028,12 +1021,11 @@ object DedupQueries {
       // so the timed work is retirement itself
       val built = IndexArtifacts.cachedPath(dir, "cluster-full-state",
         inputs = Seq(s"$dir/documents.parquet")) { out =>
-        copyRec(new java.io.File(clusterIncBase(s, dir, docs)),
-          new java.io.File(out))
+        copyRec(clusterIncBase(s, dir, docs), out)
         IncrementalClusters.update(s, out, docs.filter($"doc_id" % 3 === 0))
       }
       val state = IndexArtifacts.tempDir("cluster-retire-state")
-      copyRec(new java.io.File(built), new java.io.File(state))
+      copyRec(built, state)
       IncrementalClusters.retire(s, state,
         docs.filter($"doc_id" % 7 === 0).select($"doc_id"))
       IncrementalClusters.labels(s, state)

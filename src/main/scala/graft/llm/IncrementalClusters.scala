@@ -3,9 +3,11 @@ package graft.llm
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.io.AtomicFiles
 import graft.streaming.CdcStream
 import TextOps._
 
@@ -276,10 +278,8 @@ object IncrementalClusters {
       val next = new File(tbl(stateDir, name + ".next"))
       f(s.read.parquet(cur.toString))
         .write.mode("overwrite").parquet(next.toString)
-      val trash = new File(tbl(stateDir, name + ".trash"))
-      Files.move(cur.toPath, trash.toPath)
-      Files.move(next.toPath, cur.toPath)
-      deleteRec(trash)
+      AtomicFiles.swapDir(cur.toPath, next.toPath,
+        Paths.get(tbl(stateDir, name + ".trash")))
     }
   }
 
@@ -314,10 +314,8 @@ object IncrementalClusters {
           val next = new File(tbl(stateDir, name + ".next"))
           s.read.parquet(dir.toString).coalesce(target)
             .write.mode("overwrite").parquet(next.toString)
-          val trash = new File(tbl(stateDir, name + ".trash"))
-          Files.move(dir.toPath, trash.toPath)
-          Files.move(next.toPath, dir.toPath)
-          deleteRec(trash)
+          AtomicFiles.swapDir(dir.toPath, next.toPath,
+            Paths.get(tbl(stateDir, name + ".trash")))
         }
       }
     }
@@ -334,13 +332,7 @@ object IncrementalClusters {
     val trash = new File(tbl(stateDir, name + ".trash"))
     if (!cur.exists() && new File(next, "_SUCCESS").exists())
       Files.move(next.toPath, cur.toPath)
-    if (cur.exists() && next.exists()) deleteRec(next)
-    if (trash.exists()) deleteRec(trash)
-  }
-
-  private def deleteRec(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
+    if (cur.exists() && next.exists()) FileUtils.deleteQuietly(next)
+    FileUtils.deleteQuietly(trash)
   }
 }

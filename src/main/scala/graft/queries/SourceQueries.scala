@@ -55,11 +55,7 @@ object SourceQueries {
       // ENOTEMPTY) — both mean "use theirs"
       case _: java.nio.file.FileSystemException
           if new File(target, "_SUCCESS").exists() =>
-        def rm(f: File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete()
-        }
-        rm(tmp)
+        org.apache.commons.io.FileUtils.deleteQuietly(tmp)
     }
     target.toString
   }
@@ -197,9 +193,7 @@ object SourceQueries {
       val work = new File(graft.llm.IndexArtifacts.tempDir("binlog-redact"))
       work.mkdirs()
       Option(src.listFiles()).getOrElse(Array.empty).filter(_.isFile)
-        .foreach(f => Files.copy(f.toPath,
-          new File(work, f.getName).toPath,
-          StandardCopyOption.REPLACE_EXISTING))
+        .foreach(org.apache.commons.io.FileUtils.copyFileToDirectory(_, work, false))
       val erased = Tables(s, dir).events
         .select($"user_id").distinct().filter($"user_id" % 97 === 0)
         .collect().map(_.getLong(0)).toSet
@@ -373,8 +367,8 @@ object SourceQueries {
     // fanOutToReplicasAtomic runs every table's merge PREPARE-ONLY
     // (version claimed, CURRENT untouched), writes one durable intent,
     // then flips all pointers — ms apiece, forward-recoverable. The
-    // gate injects a kill BETWEEN table commits (publish claim #3 of
-    // the five concurrent prepares), asserts IN-QUERY that no table is
+    // gate injects a kill BETWEEN table commits (the `purchase` table's
+    // prepare claim, among five concurrent prepares), asserts IN-QUERY that no table is
     // observably ahead (none has a readable committed state — the old
     // protocol would already be serving the killed batch's early
     // tables), replays, and the oracle pins the converged per-table
@@ -393,7 +387,8 @@ object SourceQueries {
           intentDir = root, schemas = schemas, idCols = ids)
         ()
       }
-      val disarm = CdcStream.armClaimKill(3)
+      val disarm = graft.streaming.CommitFaults.armClaimKill(
+        s"$root/graft/purchase", 1)
       val killed =
         try { run(); false }
         catch {

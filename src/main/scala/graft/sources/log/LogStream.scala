@@ -1,7 +1,5 @@
 package graft.sources.log
 
-import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.Scan
@@ -77,26 +75,23 @@ object LogScan {
   * (CommonSourceOffset.scala:14-53), behind both sources' map offsets.
   */
 object MapOffsetJson {
+  private val Json = graft.io.AtomicFiles.Json
+
   def write(m: Map[String, Long]): String = {
-    val sw = new java.io.StringWriter()
-    val g = new JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    m.toSeq.sortBy(_._1).foreach { case (k, v) => g.writeNumberField(k, v) }
-    g.writeEndObject()
-    g.close()
-    sw.toString
+    val n = Json.createObjectNode()
+    m.toSeq.sortBy(_._1).foreach { case (k, v) => n.put(k, v) }
+    Json.writeValueAsString(n)
   }
 
   /** `what` names the offset in the not-an-object error. */
   def parse(json: String, what: String): Map[String, Long] = {
-    val p = new JsonFactory().createParser(json)
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-    require(p.nextToken() == JsonToken.START_OBJECT, s"$what must be a JSON object")
-    while (p.nextToken() != JsonToken.END_OBJECT) {
-      val k = p.currentName(); p.nextToken(); m += k -> p.getLongValue
-    }
-    p.close()
-    m.toMap
+    import scala.jdk.CollectionConverters._
+    val n = Json.readTree(json)
+    require(n != null && n.isObject, s"$what must be a JSON object")
+    n.fields.asScala.map { e =>
+      require(e.getValue.isIntegralNumber, s"$what: `${e.getKey}` is not an integer")
+      e.getKey -> e.getValue.longValue
+    }.toMap
   }
 }
 

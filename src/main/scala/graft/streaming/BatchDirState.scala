@@ -4,6 +4,7 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -46,8 +47,7 @@ object BatchDirState {
     val folded = completed.flatMap { f =>
       val ff = f.toPath.resolve(FoldsFile)
       if (Files.exists(ff))
-        new String(Files.readAllBytes(ff), StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).map(_.toLong)
+        Files.readString(ff).split("\n").filter(_.nonEmpty).map(_.toLong)
       else Array.empty[Long]
     }.toSet
     completed.map(idOf).filterNot(folded)
@@ -84,12 +84,7 @@ object BatchDirState {
     Files.move(tmp.toPath, new File(dir, s"batch=$newId").toPath)
     // GC of folded sources — safe at any point from here
     val liveSet = live.toSet
-    completedDirs(dir).filter(f => liveSet.contains(idOf(f))).foreach(deleteRec)
-  }
-
-  private def deleteRec(f: File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(deleteRec))
-    f.delete()
-    ()
+    completedDirs(dir).filter(f => liveSet.contains(idOf(f)))
+      .foreach(FileUtils.deleteQuietly)
   }
 }

@@ -1,5 +1,8 @@
 package graft.streaming
 
+import com.fasterxml.jackson.databind.JsonNode
+import graft.io.AtomicFiles
+import graft.io.AtomicFiles.Json
 import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
@@ -156,8 +159,7 @@ object CdcStream {
     * superseded.
     */
   def flipPreparedVersion(replicaDir: String, version: Long): Unit = {
-    import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.StandardCopyOption.ATOMIC_MOVE
+    CommitFaults.hit(replicaDir, CommitFaults.Entry)
     val name = f"v$version%09d"
     if (replicaCurrentVersion(replicaDir).exists(_ >= version)) return
     // split-brain fence: a freeze raised between prepare and flip (a
@@ -174,13 +176,17 @@ object CdcStream {
         s"flipPreparedVersion: $replicaDir has no prepared version $name " +
           "— a later commit orphan-swept an abandoned prepare; re-run " +
           "the batch from phase 1")
-    claimTestHook()
-    val tmp = java.nio.file.Paths.get(replicaDir, Pointer + ".tmp")
-    java.nio.file.Files.write(tmp, name.getBytes(UTF_8))
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(replicaDir, Pointer), ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    postPublishTestHook()
+    CommitFaults.hit(replicaDir, CommitFaults.Claim)
+    flipCurrent(replicaDir, name)
+  }
+
+  /** Point CURRENT at version dir `name` — the one pointer flip, shared
+    * by [[publishVersion]] and [[flipPreparedVersion]].
+    */
+  private def flipCurrent(replicaDir: String, name: String): Unit = {
+    AtomicFiles.replace(java.nio.file.Paths.get(replicaDir, Pointer),
+      name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    CommitFaults.hit(replicaDir, CommitFaults.Post)
   }
 
   // ---------------------------------------- cross-table atomic fan-out
@@ -208,55 +214,32 @@ object CdcStream {
   private def fanOutIntentFile(intentDir: String): java.io.File =
     new java.io.File(intentDir, "_fanout_txn.json")
 
-  private def writeFanOutIntent(intentDir: String,
+  private[streaming] def writeFanOutIntent(intentDir: String,
       prepared: Seq[(String, Long)]): Unit = {
     new java.io.File(intentDir).mkdirs()
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartArray()
-    prepared.foreach { case (d, v) =>
-      g.writeStartObject()
-      g.writeStringField("dir", d)
-      g.writeNumberField("version", v)
-      g.writeEndObject()
-    }
-    g.writeEndArray()
-    g.close()
-    val dir = java.nio.file.Paths.get(intentDir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".txn-", ".tmp")
-    java.nio.file.Files.write(tmp, sw.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, fanOutIntentFile(intentDir).toPath,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    val a = Json.createArrayNode()
+    prepared.foreach { case (d, v) => a.addObject().put("dir", d).put("version", v) }
+    AtomicFiles.replaceJson(fanOutIntentFile(intentDir).toPath, a)
   }
 
   /** Complete a crashed atomic fan-out's pending flips from its
     * durable intent — forward recovery, metadata-only. Returns true
     * when an intent was found and completed. Runs automatically at the
-    * start of every [[fanOutToReplicasAtomic]] batch.
+    * start of every [[fanOutToReplicasAtomic]] batch. A malformed
+    * intent throws: its flips cannot be told apart from a lost batch.
     */
   def recoverFanOutIntent(intentDir: String): Boolean = {
+    import scala.jdk.CollectionConverters._
     val f = fanOutIntentFile(intentDir)
     if (!f.exists()) return false
-    import com.fasterxml.jackson.core.JsonToken
-    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8))
-    val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    require(p.nextToken() == JsonToken.START_ARRAY)
-    while (p.nextToken() != JsonToken.END_ARRAY) {
-      var dir: String = null; var v = -1L
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "dir" => p.nextToken(); dir = p.getText
-          case "version" => p.nextToken(); v = p.getLongValue
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      entries += ((dir, v))
-    }
-    p.close()
+    def malformed = new IllegalStateException(
+      s"recoverFanOutIntent: malformed fan-out intent $f")
+    val entries = AtomicFiles.readJson(f.toPath).filter(_.isArray)
+      .getOrElse(throw malformed).elements.asScala.toSeq
+      .map(e => (textField(e, "dir"), longField(e, "version")) match {
+        case (Some(d), Some(v)) => (d, v)
+        case _ => throw malformed
+      })
     entries.foreach { case (d, v) => flipPreparedVersion(d, v) }
     f.delete()
     true
@@ -759,57 +742,6 @@ object CdcStream {
 
   private val stagingCounter = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Test seam: runs between the stale-lock staleness/token read and
-    * the aside-rename in `publishVersion`'s lock break, so specs can
-    * interleave a competing break-and-reacquire inside the window the
-    * verification step exists to defuse. No-op in production.
-    */
-  private[streaming] var lockBreakTestHook: () => Unit = () => ()
-
-  /** Test seam: runs at [[publishVersion]] entry — after a writer's
-    * entry-time fence check but before its commit, the window the
-    * in-critical-section `forbidFrozen` re-check closes.
-    */
-  private[streaming] var publishTestHook: () => Unit = () => ()
-
-  /** Test seam: runs after the staged version dir is CLAIMED (moved to
-    * its final name) but before the pointer swap — a crash here leaves
-    * an unpublished orphan at the target name, the widest intra-commit
-    * window. The fault-injection sweep drives every multi-commit
-    * operation through it.
-    */
-  private[streaming] var claimTestHook: () => Unit = () => ()
-
-  /** Arm a DETERMINISTIC mid-commit kill: the `afterClaims`-th
-    * [[publishVersion]] claim from now (counting across every store —
-    * post version-dir rename, pre pointer flip: a genuinely torn
-    * commit) throws, independent of host speed. The e2e pipeline
-    * drill pins its mid-stream crash with this instead of a
-    * wall-clock progress poll, so the kill lands at the same commit
-    * on every host. Returns the disarm function (restores the prior
-    * hook); the armed hook self-disarms after firing so recovery
-    * commits are never re-killed.
-    */
-  private[graft] def armClaimKill(afterClaims: Int): () => Unit = {
-    val prev = claimTestHook
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    claimTestHook = () => {
-      prev()
-      if (n.incrementAndGet() == afterClaims) {
-        claimTestHook = prev
-        throw new RuntimeException(
-          s"[test] injected mid-commit kill at claim #$afterClaims")
-      }
-    }
-    () => claimTestHook = prev
-  }
-
-  /** Test seam: runs immediately after the pointer swap — the commit
-    * is durable, but the writer dies before lock release bookkeeping,
-    * orphan GC, and retention run.
-    */
-  private[streaming] var postPublishTestHook: () => Unit = () => ()
-
   /** `bucketCols`: the key subset rows hash-route by — defaults to the
     * full key (`keyCols`). A PROPER subset turns the replica into a
     * value-clustered store: every row sharing the subset's values lands
@@ -875,7 +807,14 @@ object CdcStream {
   /** Commit kinds that leave the store's content unchanged. */
   private val IdenticalKinds = Set("compact", "reshard", "upgrade")
 
-  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** A JSON sidecar's string field; None when absent or not a string. */
+  private def textField(n: JsonNode, k: String): Option[String] =
+    Option(n.get(k)).filter(_.isTextual).map(_.textValue)
+
+  /** A JSON sidecar's integer field; None when absent or not an integer. */
+  private def longField(n: JsonNode, k: String): Option[Long] =
+    Option(n.get(k)).filter(x => x.isIntegralNumber && x.canConvertToLong)
+      .map(_.longValue)
 
   /** A version's manifest as written — in any format, an older graft's
     * too: a required field it lacks reads EMPTY. None when the version
@@ -890,9 +829,8 @@ object CdcStream {
     if (!f.exists()) return None
     val n = Json.readTree(f)
     def str(k: String) = Option(n.get(k)).map(_.asText)
-    def strs(j: com.fasterxml.jackson.databind.JsonNode) =
-      j.elements.asScala.map(_.asText).toSeq
-    def byBucket[A](k: String)(v: com.fasterxml.jackson.databind.JsonNode => A) =
+    def strs(j: JsonNode) = j.elements.asScala.map(_.asText).toSeq
+    def byBucket[A](k: String)(v: JsonNode => A) =
       Option(n.get(k)).map(_.fields.asScala
         .map(e => e.getKey.toInt -> v(e.getValue)).toMap).getOrElse(Map.empty[Int, A])
     Some(ReplicaManifest(
@@ -991,8 +929,7 @@ object CdcStream {
   private def currentVersion(replicaDir: String): Option[(Long, String)] = {
     val ptr = new java.io.File(replicaDir, Pointer)
     if (!ptr.exists()) return None
-    val name = new String(java.nio.file.Files.readAllBytes(ptr.toPath),
-      java.nio.charset.StandardCharsets.UTF_8).trim
+    val name = java.nio.file.Files.readString(ptr.toPath).trim
     if (new java.io.File(replicaDir, name).isDirectory)
       Some((name.stripPrefix("v").toLong, name))
     else None
@@ -1434,29 +1371,19 @@ object CdcStream {
       .find(_.isDirectory)
 
   /** A retired version's `_feed` meta: (commitKind, watermark). */
-  private def feedMeta(replicaDir: String, v: Long)
-      : Option[(Option[String], Option[Long])] = {
-    val f = new java.io.File(f"$replicaDir/_feed/v$v%09d/meta.json")
-    if (!f.exists()) return None
-    try {
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      var kind: Option[String] = None
-      var wm: Option[Long] = None
-      require(p.nextToken() == JsonToken.START_OBJECT)
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "kind" => p.nextToken(); kind = Some(p.getText)
-          case "watermark" => p.nextToken(); wm = Some(p.getLongValue)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      p.close()
-      Some((kind, wm))
-    } catch { case _: Exception => None }
-  }
+  private[streaming] def feedMeta(replicaDir: String, v: Long)
+      : Option[(Option[String], Option[Long])] =
+    AtomicFiles.readJson(
+      java.nio.file.Paths.get(f"$replicaDir/_feed/v$v%09d/meta.json"))
+      .filter(_.isObject)
+      .map(n => (textField(n, "kind"), longField(n, "watermark")))
+
+  /** Version `v`'s commit kind: from its live manifest, or from its
+    * `_feed` meta once data GC retired the version dir.
+    */
+  private def commitKindOf(replicaDir: String, v: Long): Option[String] =
+    readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
+      .orElse(feedMeta(replicaDir, v).flatMap(_._1))
 
   /** Versions whose FEED surface is still on disk: live version dirs ∪
     * `_feed`-retired ones. The contiguity/gap contract runs over this
@@ -1503,11 +1430,8 @@ object CdcStream {
         "full snapshot")
     if (strict) want.foreach { v =>
       if (feedChangesDir(replicaDir, v).isEmpty) {
-        // changeless version: classify by commit kind — from the live
-        // manifest, or the `_feed` meta once data GC retired the dir
-        val kind = readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-          .orElse(feedMeta(replicaDir, v).flatMap(_._1))
-        kind match {
+        // changeless version: classify by commit kind
+        commitKindOf(replicaDir, v) match {
           case Some(k) if IdenticalKinds(k) => ()
           case None => throw new IllegalStateException(
             s"replica $replicaDir: version $v has no changes and no " +
@@ -1595,8 +1519,7 @@ object CdcStream {
           // changeless version — classify from the live manifest or
           // the `_feed` meta a data GC left behind; a version with
           // NEITHER (truncated feed / pre-retention GC) is unknowable
-          readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-            .orElse(feedMeta(replicaDir, v).flatMap(_._1)) match {
+          commitKindOf(replicaDir, v) match {
             case Some(k) if IdenticalKinds(k) => Some(None)
             case _ => None // mutated outside the feed, or gone
           }
@@ -1621,13 +1544,9 @@ object CdcStream {
   private[streaming] def contentIdenticalRange(replicaDir: String,
       fromV: Long, toV: Long): Boolean =
     ((fromV + 1) to toV).forall { v =>
-      // the kind survives data GC in the `_feed` meta after the live
-      // manifest is retired — same fallback as the feed's changeless-
-      // version classification, so an in-sync index isn't misreported
+      // the `_feed` meta fallback keeps an in-sync index from reading
       // as lagging once an intervening compact/reshard dir ages out
-      readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-        .orElse(feedMeta(replicaDir, v).flatMap(_._1))
-        .exists(IdenticalKinds)
+      commitKindOf(replicaDir, v).exists(IdenticalKinds)
     }
 
   /** The CURRENT committed version number (the pointer's target) —
@@ -1766,9 +1685,7 @@ object CdcStream {
   /** The fence reason when the store is frozen, None otherwise. */
   def replicaFrozen(replicaDir: String): Option[String] = {
     val p = java.nio.file.Paths.get(replicaDir, FrozenMarker)
-    if (java.nio.file.Files.exists(p))
-      Some(new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8))
+    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
     else None
   }
 
@@ -1884,58 +1801,29 @@ object CdcStream {
     * promoted over and the fork pair — `demotedFork` (the last demoted
     * version the follower had applied at promotion, post-drain) and
     * `promotionVersion` (the follower's version at promotion). Sidecar
-    * metadata (the store sweep only touches `.staging-*`/`.gc-*`),
+    * metadata (the store sweep never deletes it, see [[isStaleDebris]]),
     * atomically replaced at each promotion so it always describes the
     * LATEST failover this store won.
     */
-  private def writePromotionRecord(followerDir: String,
+  private[streaming] def writePromotionRecord(followerDir: String,
       demotedDir: String, demotedFork: Long, promotionVersion: Long): Unit = {
     val canonical =
       try new java.io.File(demotedDir).getCanonicalPath
       catch { case _: java.io.IOException => demotedDir }
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    g.writeStringField("demotedDir", canonical)
-    g.writeNumberField("demotedFork", demotedFork)
-    g.writeNumberField("promotionVersion", promotionVersion)
-    g.writeEndObject()
-    g.close()
     val dir = java.nio.file.Paths.get(followerDir)
     java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".promo-", ".tmp")
-    java.nio.file.Files.write(tmp,
-      sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dir.resolve("_promotion.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replaceJson(dir.resolve("_promotion.json"),
+      Json.createObjectNode().put("demotedDir", canonical)
+        .put("demotedFork", demotedFork)
+        .put("promotionVersion", promotionVersion))
   }
 
   private[streaming] def promotionRecord(newPrimaryDir: String)
-      : Option[(String, Long, Long)] = {
-    val f = new java.io.File(newPrimaryDir, "_promotion.json")
-    if (!f.exists()) return None
-    try {
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      var dir: Option[String] = None
-      var fork: Option[Long] = None
-      var promo: Option[Long] = None
-      require(p.nextToken() == JsonToken.START_OBJECT)
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "demotedDir" => p.nextToken(); dir = Some(p.getText)
-          case "demotedFork" => p.nextToken(); fork = Some(p.getLongValue)
-          case "promotionVersion" => p.nextToken(); promo = Some(p.getLongValue)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      p.close()
-      for (d <- dir; fk <- fork; pv <- promo) yield (d, fk, pv)
-    } catch { case _: Exception => None }
-  }
+      : Option[(String, Long, Long)] =
+    AtomicFiles.readJson(
+      java.nio.file.Paths.get(newPrimaryDir, "_promotion.json")).flatMap(n =>
+      for (d <- textField(n, "demotedDir"); fk <- longField(n, "demotedFork");
+           pv <- longField(n, "promotionVersion")) yield (d, fk, pv))
 
   /** RE-SYNC a demoted (possibly diverged) store as a follower of the
     * new primary — the pg_rewind analog. The old primary may hold
@@ -2491,12 +2379,9 @@ object CdcStream {
       add("stale_lock", "warn", ".commit-lock",
         "older than the 60 s stale-break horizon — a crashed writer " +
           "died holding it; the next commit breaks it")
+    val now = System.currentTimeMillis()
     Option(new java.io.File(replicaDir).listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        (f.getName.startsWith(".staging-") || f.getName.startsWith(".gc-") ||
-          f.getName.startsWith(".commit-lock-broken-")) &&
-          System.currentTimeMillis() - f.lastModified() > 3600L * 1000
-      }
+      .filter(isStaleDebris(_, now))
       .foreach(f => add("stale_debris", "info", f.getName,
         "crashed-writer leftover older than the sweep horizon"))
     replicaFrozen(replicaDir).foreach(r =>
@@ -2542,18 +2427,8 @@ object CdcStream {
   def pinReplicaRetention(replicaDir: String, fromVersion: Long): Unit = {
     val dir = java.nio.file.Paths.get(replicaDir)
     java.nio.file.Files.createDirectories(dir)
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    g.writeNumberField("retainFromVersion", fromVersion)
-    g.writeEndObject()
-    g.close()
-    val tmp = java.nio.file.Files.createTempFile(dir, ".retain-", ".tmp")
-    java.nio.file.Files.write(tmp,
-      sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dir.resolve("_retain.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replaceJson(dir.resolve("_retain.json"),
+      Json.createObjectNode().put("retainFromVersion", fromVersion))
   }
 
   /** The GC floor that protects EVERYTHING version `version`'s
@@ -2584,25 +2459,9 @@ object CdcStream {
     ()
   }
 
-  private def retentionPin(replicaDir: String): Option[Long] = {
-    val f = new java.io.File(replicaDir, "_retain.json")
-    if (!f.exists()) return None
-    try {
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      var v: Option[Long] = None
-      require(p.nextToken() == JsonToken.START_OBJECT)
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "retainFromVersion" => p.nextToken(); v = Some(p.getLongValue)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      v
-    } catch { case _: Exception => None }
-  }
+  private[streaming] def retentionPin(replicaDir: String): Option[Long] =
+    AtomicFiles.readJson(java.nio.file.Paths.get(replicaDir, "_retain.json"))
+      .flatMap(longField(_, "retainFromVersion"))
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE … SHALLOW CLONE` analog):
     * make `cloneDir` an independent store whose initial version
@@ -2709,16 +2568,8 @@ object CdcStream {
     // Jackson-serialized: a source path containing a quote or
     // backslash must round-trip (raw interpolation produced invalid
     // JSON there and broke the crash-retry match).
-    val sw = new java.io.StringWriter()
-    val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-    g.writeStartObject()
-    g.writeStringField("source", srcAbs)
-    g.writeNumberField("sourceVersion", v)
-    g.writeEndObject()
-    g.close()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(staging, "_clone.json"),
-      sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    AtomicFiles.replaceJson(java.nio.file.Paths.get(staging, "_clone.json"),
+      Json.createObjectNode().put("source", srcAbs).put("sourceVersion", v))
     publishVersion(cloneDir, staging, cloneName,
       m.copy(buckets = m.buckets.map { case (k, p) => k -> abs(p) },
         deltas = m.deltas.map { case (k, ps) => k -> ps.map(abs) }),
@@ -2854,26 +2705,11 @@ object CdcStream {
   def cloneProvenance(replicaDir: String, version: Long): Option[(String, Long)] = {
     // the live version dir first; after data GC retired the dir, the
     // sidecar lives with the rest of the feed surface under `_feed`
-    val f = Seq(new java.io.File(f"$replicaDir/v$version%09d", "_clone.json"),
+    Seq(new java.io.File(f"$replicaDir/v$version%09d", "_clone.json"),
         new java.io.File(f"$replicaDir/_feed/v$version%09d", "_clone.json"))
-      .find(_.exists()).getOrElse(return None)
-    try {
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      var src: Option[String] = None
-      var v: Option[Long] = None
-      require(p.nextToken() == JsonToken.START_OBJECT)
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "source" => p.nextToken(); src = Some(p.getText)
-          case "sourceVersion" => p.nextToken(); v = Some(p.getLongValue)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      for (s <- src; vv <- v) yield (s, vv)
-    } catch { case _: Exception => None }
+      .find(_.exists()).flatMap(f => AtomicFiles.readJson(f.toPath))
+      .flatMap(n => for (src <- textField(n, "source");
+          sv <- longField(n, "sourceVersion")) yield (src, sv))
   }
 
   /** REFRESH an UNdiverged shallow clone to its source's CURRENT state
@@ -2913,9 +2749,7 @@ object CdcStream {
           "not a shallow clone (or its ancestry was truncated)"))
     val (srcDir, srcForkV) = cloneProvenance(cloneDir, initial).get
     val foreign = versions.filter(_ > initial).filter { v =>
-      val kind = readManifest(cloneDir, f"v$v%09d").map(_.commitKind)
-        .orElse(feedMeta(cloneDir, v).flatMap(_._1))
-      !kind.exists(k => k == "refresh" || IdenticalKinds(k))
+      !commitKindOf(cloneDir, v).exists(k => k == "refresh" || IdenticalKinds(k))
     }
     if (foreign.nonEmpty) throw new IllegalStateException(
       s"refreshClone: clone $cloneDir DIVERGED from $srcDir — version(s) " +
@@ -2927,46 +2761,18 @@ object CdcStream {
       orderCols, fromVersionExclusive = applied,
       recordChanges = recordChanges, conditionalApply = conditionalApply,
       kind = "refresh")
-    if (newApplied != applied) {
-      val sw = new java.io.StringWriter()
-      val g = new com.fasterxml.jackson.core.JsonFactory().createGenerator(sw)
-      g.writeStartObject()
-      g.writeStringField("source", srcDir)
-      g.writeNumberField("appliedSourceVersion", newApplied)
-      g.writeEndObject()
-      g.close()
-      val dir = java.nio.file.Paths.get(cloneDir)
-      val tmp = java.nio.file.Files.createTempFile(dir, ".refresh-", ".tmp")
-      java.nio.file.Files.write(tmp,
-        sw.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      java.nio.file.Files.move(tmp, dir.resolve("_refresh.json"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
+    if (newApplied != applied)
+      AtomicFiles.replaceJson(java.nio.file.Paths.get(cloneDir, "_refresh.json"),
+        Json.createObjectNode().put("source", srcDir)
+          .put("appliedSourceVersion", newApplied))
     newApplied
   }
 
   /** The last source version a [[refreshClone]] applied — None before
     * the first refresh (the fork point from provenance applies). */
-  private def refreshCursor(cloneDir: String): Option[Long] = {
-    val f = new java.io.File(cloneDir, "_refresh.json")
-    if (!f.exists()) return None
-    try {
-      import com.fasterxml.jackson.core.JsonToken
-      val p = new com.fasterxml.jackson.core.JsonFactory()
-        .createParser(new String(java.nio.file.Files.readAllBytes(f.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      var v: Option[Long] = None
-      require(p.nextToken() == JsonToken.START_OBJECT)
-      while (p.nextToken() != JsonToken.END_OBJECT) {
-        p.currentName() match {
-          case "appliedSourceVersion" => p.nextToken(); v = Some(p.getLongValue)
-          case _ => p.nextToken(); p.skipChildren()
-        }
-      }
-      v
-    } catch { case _: Exception => None }
-  }
+  private[streaming] def refreshCursor(cloneDir: String): Option[Long] =
+    AtomicFiles.readJson(java.nio.file.Paths.get(cloneDir, "_refresh.json"))
+      .flatMap(longField(_, "appliedSourceVersion"))
 
   /** Row count of the parquet files under `path` (a file, or a dir of
     * files) straight off their FOOTERS — driver-local metadata IO,
@@ -3567,16 +3373,26 @@ object CdcStream {
         FileUtils.deleteQuietly(next)
         df.join(keysM, idCols, "left_anti")
           .write.parquet(next.toString)
-        val aside = new java.io.File(
-          d.getParent, s".changes-erased-${System.nanoTime()}")
-        java.nio.file.Files.move(d.toPath, aside.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        java.nio.file.Files.move(next.toPath, d.toPath,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        FileUtils.deleteQuietly(aside)
+        AtomicFiles.swapDir(d.toPath, next.toPath, java.nio.file.Paths.get(
+          d.getParent, s".changes-erased-${System.nanoTime()}"))
       })
     }
     } finally dropKeys()
+  }
+
+  /** Crashed writers' debris in a store's root — what the commit sweep
+    * deletes and [[fsckReplica]] reports: a staging dir, an aside-renamed
+    * orphan, a broken lock, or an [[AtomicFiles]] tmp file whose newest
+    * mtime anywhere under it is over an hour old. Live writers keep
+    * their staging trees fresh and finish lock breaks and metadata
+    * writes in milliseconds, so only a dead writer's leftovers qualify.
+    */
+  private def isStaleDebris(f: java.io.File, now: Long): Boolean = {
+    def newestMtime(f: java.io.File): Long =
+      Option(f.listFiles()).getOrElse(Array.empty)
+        .foldLeft(f.lastModified())((m, c) => math.max(m, newestMtime(c)))
+    Seq(".staging-", ".gc-", ".commit-lock-broken-", AtomicFiles.TmpPrefix)
+      .exists(f.getName.startsWith) && now - newestMtime(f) > 3600L * 1000
   }
 
   /** A fresh staging directory under `replicaDir` for a writer to
@@ -3659,7 +3475,7 @@ object CdcStream {
       flipPointer: Boolean = true): Unit = {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.StandardCopyOption.ATOMIC_MOVE
-    CdcStream.publishTestHook()
+    CommitFaults.hit(replicaDir, CommitFaults.Entry)
     writeManifestTo(java.nio.file.Paths.get(stagingDir),
       next.copy(commitKind = kind))
     val target = java.nio.file.Paths.get(replicaDir, nextName)
@@ -3687,7 +3503,7 @@ object CdcStream {
           val staleToken =
             try Some(new String(java.nio.file.Files.readAllBytes(lock), UTF_8))
             catch { case _: java.io.IOException => None }
-          CdcStream.lockBreakTestHook()
+          CommitFaults.hit(replicaDir, CommitFaults.LockBreak)
           val aside = java.nio.file.Paths.get(replicaDir,
             s".commit-lock-broken-${System.nanoTime()}")
           // token unreadable = the owner released between our checks:
@@ -3782,16 +3598,8 @@ object CdcStream {
         case e: java.nio.file.FileSystemException =>
           conflict(s"could not claim version dir $nextName (${e.getMessage})")
       }
-      CdcStream.claimTestHook()
-      if (flipPointer) {
-        val tmpPtr = java.nio.file.Paths.get(replicaDir, Pointer + ".tmp")
-        java.nio.file.Files.write(tmpPtr, nextName.getBytes(UTF_8))
-        java.nio.file.Files.move(tmpPtr,
-          java.nio.file.Paths.get(replicaDir, Pointer),
-          ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        CdcStream.postPublishTestHook()
-      }
+      CommitFaults.hit(replicaDir, CommitFaults.Claim)
+      if (flipPointer) flipCurrent(replicaDir, nextName)
     } finally {
       // release only OUR lock: if it went stale (>60 s — impossible for
       // this metadata-only section short of a machine-level stall) and
@@ -3816,31 +3624,16 @@ object CdcStream {
     // floor are never swept ([[pinReplicaRetention]])
     val pinFloor = retentionPin(replicaDir)
     val now = System.currentTimeMillis()
-    def newestMtime(f: java.io.File): Long =
-      Option(f.listFiles()).getOrElse(Array.empty)
-        .foldLeft(f.lastModified())((m, c) => math.max(m, newestMtime(c)))
     Option(new java.io.File(replicaDir).listFiles()).getOrElse(Array.empty)
       .filter { f =>
-        def stale = now - newestMtime(f) > 3600L * 1000
-        (f.isDirectory && {
-          // the retain set was computed from THIS commit's view — a
-          // competitor may have committed a NEWER version since the
-          // flip, so only versions at or below ours are GC candidates
-          (f.getName.matches("v[0-9]{9}") &&
-            f.getName.stripPrefix("v").toLong <= myV &&
-            !retain.contains(f.getName) &&
-            !pinFloor.exists(f.getName.stripPrefix("v").toLong >= _)) ||
-            // crashed writers' debris: staging subtrees and aside-
-            // renamed orphans, both by deep newest-mtime age
-            ((f.getName.startsWith(".staging-") ||
-              f.getName.startsWith(".gc-")) && stale)
-        }) ||
-          // a breaker that crashed between aside-rename and delete
-          // leaks its .commit-lock-broken-* FILE; a live break resolves
-          // in milliseconds and a stolen live lock parked aside has a
-          // fresh mtime, so the hour-old sweep only ever collects
-          // crashed-breaker debris
-          (f.isFile && f.getName.startsWith(".commit-lock-broken-") && stale)
+        // the retain set was computed from THIS commit's view — a
+        // competitor may have committed a NEWER version since the
+        // flip, so only versions at or below ours are GC candidates
+        (f.isDirectory && f.getName.matches("v[0-9]{9}") &&
+          f.getName.stripPrefix("v").toLong <= myV &&
+          !retain.contains(f.getName) &&
+          !pinFloor.exists(f.getName.stripPrefix("v").toLong >= _)) ||
+          isStaleDebris(f, now)
       }
       .foreach { f =>
         // FEED RETENTION decoupled from data GC (the Delta-CDF
@@ -3874,37 +3667,24 @@ object CdcStream {
       val name = versionDir.getName
       val target = java.nio.file.Paths.get(replicaDir, "_feed", name)
       java.nio.file.Files.createDirectories(target)
-      val changes = new java.io.File(versionDir, "changes")
-      if (changes.isDirectory &&
-          !java.nio.file.Files.exists(target.resolve("changes")))
-        java.nio.file.Files.move(changes.toPath, target.resolve("changes"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      // clone provenance outlives its (data-less) initial version dir:
-      // [[cloneProvenance]] and DESCRIBE HISTORY read it from `_feed`
-      // once the dir is gone (without this, ONE post-clone commit's GC
-      // erased the store's branch ancestry)
-      val cloneSidecar = new java.io.File(versionDir, "_clone.json")
-      if (cloneSidecar.isFile &&
-          !java.nio.file.Files.exists(target.resolve("_clone.json")))
-        java.nio.file.Files.move(cloneSidecar.toPath,
-          target.resolve("_clone.json"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      // the changes dir, and the clone provenance: it outlives its
+      // (data-less) initial version dir — [[cloneProvenance]] and
+      // DESCRIBE HISTORY read it from `_feed` once the dir is gone
+      // (without this, ONE post-clone commit's GC erased the store's
+      // branch ancestry)
+      Seq("changes", "_clone.json").map(f => (versionDir.toPath.resolve(f),
+          target.resolve(f)))
+        .filter { case (from, to) =>
+          java.nio.file.Files.exists(from) && !java.nio.file.Files.exists(to)
+        }
+        .foreach { case (from, to) => java.nio.file.Files.move(from, to,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE) }
       if (!java.nio.file.Files.exists(target.resolve("meta.json"))) {
         val m = readManifest(replicaDir, name)
-        val sw = new java.io.StringWriter()
-        val g = new com.fasterxml.jackson.core.JsonFactory()
-          .createGenerator(sw)
-        g.writeStartObject()
-        m.map(_.commitKind).foreach(g.writeStringField("kind", _))
-        m.flatMap(_.watermark).foreach(g.writeNumberField("watermark", _))
-        g.writeEndObject()
-        g.close()
-        val tmp = java.nio.file.Files.createTempFile(target, ".meta-", ".tmp")
-        java.nio.file.Files.write(tmp, sw.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        java.nio.file.Files.move(tmp, target.resolve("meta.json"),
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        val n = Json.createObjectNode()
+        m.map(_.commitKind).foreach(n.put("kind", _))
+        m.flatMap(_.watermark).foreach(n.put("watermark", _))
+        AtomicFiles.replaceJson(target.resolve("meta.json"), n)
       }
     } catch { case _: java.io.IOException => () }
 
@@ -4102,12 +3882,6 @@ object CdcStream {
     Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
       .map(_.getName.stripPrefix("__bucket=").toInt).toSet
-
-  /** Test seam: runs with the store's dir at the end of
-    * [[EagerCommit.stage]] — every Spark job done, nothing published.
-    * No-op in production.
-    */
-  private[streaming] var stageTestHook: String => Unit = _ => ()
 
   /** One EAGER commit of a per-key net into one store, in three steps
     * so a caller can run its Spark jobs beside other stores' commits
@@ -4325,7 +4099,7 @@ object CdcStream {
         deltasConditional = remainingDeltas.nonEmpty &&
           prev.exists(_.deltasConditional),
         tombstoneMins = newMins))
-      stageTestHook(replicaDir)
+      CommitFaults.hit(replicaDir, CommitFaults.Stage)
     }
 
     /** Publish the staged version; returns its number. */
@@ -4572,10 +4346,7 @@ object CdcStream {
       netT.withColumn("__bucket", bucketOf)
         .repartition(col("__bucket"))
         .write.partitionBy("__bucket").parquet(s"$staging/delta")
-      val written = Option(new java.io.File(s"$staging/delta").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-        .map(_.getName.stripPrefix("__bucket=").toInt)
+      val written = bucketDirs(s"$staging/delta")
       // net-empty batch: nothing to commit (same contract as eager)
       if (written.isEmpty) {
         FileUtils.deleteQuietly(new java.io.File(staging))
@@ -4637,7 +4408,7 @@ object CdcStream {
     * Exactly-once under micro-batch REPLAY: the view version dir
     * records `batchId`, and a batch at or below the recorded id is
     * skipped (the replica apply is keyed-idempotent, so re-running it
-    * is harmless). The view swap is a tmp-write + ATOMIC_MOVE pointer
+    * is harmless). The view swap is an [[AtomicFiles.replace]] pointer
     * flip — foreachBatch serializes writers, so no commit lock is
     * needed here. `segment` is any expression over the batch/replica
     * columns (it must name the same columns in both).
@@ -4650,20 +4421,13 @@ object CdcStream {
       valueCol: String, opCol: String = "op",
       numBuckets: Int = DefaultReplicaBuckets): DataFrame = {
     import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
     val spark = batch.sparkSession
     new java.io.File(viewDir).mkdirs()
-    val ptr = java.nio.file.Paths.get(viewDir, Pointer)
-    val curName: Option[String] =
-      if (java.nio.file.Files.exists(ptr))
-        Some(new String(java.nio.file.Files.readAllBytes(ptr), UTF_8).trim)
-      else None
+    val curName = currentVersion(viewDir).map(_._2)
     def readView(name: String): DataFrame =
       spark.read.parquet(s"$viewDir/$name/data")
-    val lastBatch: Long = curName.map { n =>
-      new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(viewDir, n, "batch")), UTF_8).trim.toLong
-    }.getOrElse(-1L)
+    val lastBatch: Long = curName.map(n => java.nio.file.Files.readString(
+      java.nio.file.Paths.get(viewDir, n, "batch")).trim.toLong).getOrElse(-1L)
     if (batchId <= lastBatch) return readView(curName.get) // replayed batch
     val nextName = f"v${curName.map(_.stripPrefix("v").toLong + 1).getOrElse(1L)}%09d"
     // CRASH-SAFE ORDER — the delta only makes sense against the
@@ -4679,8 +4443,7 @@ object CdcStream {
     //  - after the flip: the batchId guard above no-ops the replay.
     val pendingBatch = java.nio.file.Paths.get(viewDir, nextName, "batch")
     val pendingComplete = java.nio.file.Files.exists(pendingBatch) &&
-      new String(java.nio.file.Files.readAllBytes(pendingBatch), UTF_8)
-        .trim.toLong == batchId
+      java.nio.file.Files.readString(pendingBatch).trim.toLong == batchId
     if (!pendingComplete) {
       val net = lastOpPerKey(batch, idCols, orderCols)
       val keys = net.select(idCols.map(col): _*).distinct()
@@ -4718,17 +4481,13 @@ object CdcStream {
       }
       updated.filter(col("n_keys") > 0)
         .write.mode("overwrite").parquet(s"$viewDir/$nextName/data")
-      val btmp = java.nio.file.Paths.get(viewDir, nextName, "batch.tmp")
-      java.nio.file.Files.write(btmp, batchId.toString.getBytes(UTF_8))
-      java.nio.file.Files.move(btmp, pendingBatch, ATOMIC_MOVE,
-        REPLACE_EXISTING)
+      AtomicFiles.replace(pendingBatch, batchId.toString.getBytes(UTF_8))
     }
     // advance the per-key state; a replayed apply nets idempotent
     applyBatchToReplica(replicaDir, batch, idCols, orderCols, opCol,
       numBuckets)
-    val tmp = java.nio.file.Paths.get(viewDir, Pointer + ".tmp")
-    java.nio.file.Files.write(tmp, nextName.getBytes(UTF_8))
-    java.nio.file.Files.move(tmp, ptr, ATOMIC_MOVE, REPLACE_EXISTING)
+    AtomicFiles.replace(java.nio.file.Paths.get(viewDir, Pointer),
+      nextName.getBytes(UTF_8))
     // previous view versions: keep one for in-flight readers, GC older
     Option(new java.io.File(viewDir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.matches("v[0-9]{9}") &&
@@ -4780,8 +4539,7 @@ object CdcStream {
     val marker = java.nio.file.Paths.get(historyDir, "_last_batch")
     val lastApplied =
       if (java.nio.file.Files.exists(marker))
-        new String(java.nio.file.Files.readAllBytes(marker),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
+        java.nio.file.Files.readString(marker).trim.toLong
       else -1L
     if (batchId <= lastApplied) return
     val w = Window.partitionBy(idCols.map(col): _*)
@@ -4818,12 +4576,8 @@ object CdcStream {
     // advance the open-version state (net op per key; deletes remove)
     applyBatchToReplica(currentDir, b.drop("valid_to"), idCols, orderCols,
       opCol, numBuckets)
-    val tmp = java.nio.file.Paths.get(historyDir, "_last_batch.tmp")
-    java.nio.file.Files.write(tmp, batchId.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, marker,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    AtomicFiles.replace(marker,
+      batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
   }
 
   /** The full SCD2 history: closed versions from `historyDir` plus the

@@ -76,23 +76,16 @@ object SecondaryIndex {
     * recorded — pre-cursor index stores, or a dir that isn't one).
     */
   def appliedPrimaryVersion(indexDir: String): Option[Long] = {
-    val f = new java.io.File(indexDir, CursorFile)
-    if (!f.exists()) None
-    else
-      try Some(new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      catch { case _: NumberFormatException => None }
+    val f = java.nio.file.Paths.get(indexDir, CursorFile)
+    if (!java.nio.file.Files.exists(f)) None
+    else java.nio.file.Files.readString(f).trim.toLongOption
   }
 
-  private def recordAppliedPrimaryVersion(indexDir: String, v: Long): Unit = {
+  private[streaming] def recordAppliedPrimaryVersion(indexDir: String, v: Long): Unit = {
     val dir = java.nio.file.Paths.get(indexDir)
     java.nio.file.Files.createDirectories(dir)
-    val tmp = java.nio.file.Files.createTempFile(dir, ".cursor-", ".tmp")
-    java.nio.file.Files.write(tmp,
+    graft.io.AtomicFiles.replace(dir.resolve(CursorFile),
       v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    java.nio.file.Files.move(tmp, dir.resolve(CursorFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Refuse an index whose cursor cannot be reconciled with the

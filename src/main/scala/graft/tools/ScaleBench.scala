@@ -124,7 +124,7 @@ object ScaleBench {
     // file-count curve must not clobber them
     try {
       val path = java.nio.file.Paths.get("SCALEBENCH.json")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val mapper = graft.io.AtomicFiles.Json
       val fresh = mapper.readTree(line)
         .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
       val merged =

@@ -76,10 +76,10 @@ class AtomicFanoutSpec extends SparkSuite {
   test("pre-intent kill (mid-prepare): NOTHING is visible anywhere; " +
       "replay converges") {
     val root = Files.createTempDirectory("atomic-fanout").toString
-    // 2 tables → prepares claim #1,#2; kill at #2 = between the two
-    // tables' data commits — exactly the window the old protocol left
+    // kill the users table's prepare (its commit #1) — between the two
+    // tables' data commits, exactly the window the old protocol left
     // the first table visibly ahead in
-    val disarm = CdcStream.armClaimKill(2)
+    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 1)
     try assert(injected(runAtomic(root)), "kill must land mid-prepare")
     finally disarm()
     assert(ordersState(root).isEmpty && usersState(root).isEmpty,
@@ -94,10 +94,11 @@ class AtomicFanoutSpec extends SparkSuite {
   test("mid-flip kill: the intent is durable and recovery completes " +
       "FORWARD — flips only, no data re-run") {
     val root = Files.createTempDirectory("atomic-fanout-flip").toString
-    // prepares claim #1,#2; flips claim #3 (orders — present order is
-    // sorted) and #4 (users). Kill at #4: orders flipped, users
-    // prepared-but-pending, intent durable.
-    val disarm = CdcStream.armClaimKill(4)
+    // each table commits twice: its prepare, then its flip (orders
+    // flips first — present order is sorted). Kill the users flip
+    // (users commit #2): orders flipped, users prepared-but-pending,
+    // intent durable.
+    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 2)
     try assert(injected(runAtomic(root)), "kill must land mid-flip")
     finally disarm()
     assert(ordersState(root).contains(Map(1L -> 10L, 2L -> 20L)),
@@ -120,7 +121,7 @@ class AtomicFanoutSpec extends SparkSuite {
   test("a freeze raised between prepare and flip fences the pointer: " +
       "intent recovery refuses the demoted store") {
     val root = Files.createTempDirectory("atomic-fanout-frozen").toString
-    val disarm = CdcStream.armClaimKill(4)
+    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 2)
     try assert(injected(runAtomic(root)), "kill must land mid-flip")
     finally disarm()
     // failover demotes the pending table before recovery runs — the
@@ -193,14 +194,15 @@ class AtomicFanoutSpec extends SparkSuite {
     // both tables' merges run side by side; the users merge goes on to a
     // job that would run a minute unless its tasks are killed, and the
     // orders merge fails once that job is running
-    CdcStream.stageTestHook = dir =>
-      if (dir.endsWith("users")) {
-        sc.setJobDescription("users-slow")
-        spark.range(0, 2, 1, 2).rdd.map { x => Thread.sleep(60000L); x }.count()
-      } else if (dir.endsWith("orders")) {
-        assert(taskStarted.await(30, TimeUnit.SECONDS), "slow job never started")
-        throw new IllegalStateException("orders merge failed")
-      }
+    val usersStage = CommitFaults.arm(s"$root/shop/users", 1, CommitFaults.Stage) {
+      sc.setJobDescription("users-slow")
+      spark.range(0, 2, 1, 2).rdd.map { x => Thread.sleep(60000L); x }.count()
+      ()
+    }
+    val ordersStage = CommitFaults.arm(s"$root/shop/orders", 1, CommitFaults.Stage) {
+      assert(taskStarted.await(30, TimeUnit.SECONDS), "slow job never started")
+      throw new IllegalStateException("orders merge failed")
+    }
     sc.addSparkListener(listener)
     val t0 = System.nanoTime()
     try {
@@ -216,7 +218,7 @@ class AtomicFanoutSpec extends SparkSuite {
       assert(!new java.io.File(root, "_fanout_txn.json").exists())
       assert(ordersState(root).isEmpty && usersState(root).isEmpty)
     } finally {
-      CdcStream.stageTestHook = _ => ()
+      usersStage.disarm(); ordersStage.disarm()
       sc.removeSparkListener(listener)
     }
   }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
@@ -303,42 +302,9 @@ class CommitFaultSweepSpec extends SparkSuite {
 
   // ----------------------------------------------------------- harness
 
-  private val counter = new AtomicInteger(0)
-
-  private def disarm(): Unit = {
-    CdcStream.publishTestHook = () => ()
-    CdcStream.claimTestHook = () => ()
-    CdcStream.postPublishTestHook = () => ()
-    counter.set(0)
-  }
-
-  /** Count commits only (no crash). */
-  private def armCounter(): Unit = {
-    disarm()
-    CdcStream.publishTestHook = () => { counter.incrementAndGet(); () }
-  }
-
-  /** Crash at commit `n` (1-based), at the given intra-commit point.
-    * Index commits run concurrently, so by the time one commit reaches
-    * its claim or post point a sibling may already have moved `counter`
-    * on: each commit's ordinal is kept on its own thread instead.
-    * `publishVersion` runs all three hooks on the committing thread, and
-    * no swept operation reaches `flipPreparedVersion` (the one path that
-    * fires claim/post without a publish entry).
-    */
-  private def armCrash(point: String, n: Int): Unit = {
-    disarm()
-    val ordinal = ThreadLocal.withInitial[Int](() => 0)
-    CdcStream.publishTestHook = () => {
-      val c = counter.incrementAndGet()
-      ordinal.set(c)
-      if (point == "entry" && c == n) throw new InjectedCrash
-    }
-    CdcStream.claimTestHook = () =>
-      if (point == "claim" && ordinal.get() == n) throw new InjectedCrash
-    CdcStream.postPublishTestHook = () =>
-      if (point == "post" && ordinal.get() == n) throw new InjectedCrash
-  }
+  /** The points a trial crashes at. */
+  private val points = Set(CommitFaults.Entry, CommitFaults.Claim,
+    CommitFaults.Post)
 
   private def isInjected(e: Throwable): Boolean =
     e.isInstanceOf[InjectedCrash] ||
@@ -352,43 +318,47 @@ class CommitFaultSweepSpec extends SparkSuite {
     val failures = scala.collection.mutable.ArrayBuffer.empty[String]
     var trials = 0
     ops.foreach { op =>
-      // clean run: the expected converged state AND the commit count
+      // clean run: the expected converged state AND every commit point
+      // it hits, as (store relative to the root, store ordinal, point)
       val cleanRoot = freshRoot()
-      disarm()
       op.prepare(cleanRoot)
-      armCounter()
-      op.run(cleanRoot)
-      val k = counter.get()
-      disarm()
+      val base = java.nio.file.Paths.get(CommitFaults.storeKey(cleanRoot))
+      val sites = CommitFaults.record(op.run(cleanRoot))
+        .filter(st => points(st.point))
+        .map(st => (base.relativize(java.nio.file.Paths.get(st.store)).toString,
+          st.ordinal, st.point))
+        .distinct.sorted
       val expected = op.observe(cleanRoot)
-      assert(k >= 1, s"${op.name}: no commits counted — not a commit op")
+      val commits = sites.count(_._3 == CommitFaults.Entry)
+      assert(commits >= 1, s"${op.name}: no commits recorded — not a commit op")
       assert(expected.nonEmpty, s"${op.name}: clean run observes nothing")
-      for (point <- Seq("entry", "claim", "post"); n <- 1 to k) {
+      for ((store, n, point) <- sites) {
         trials += 1
+        val trial = s"${op.name} $store $point#$n"
         val root = freshRoot()
-        disarm()
         op.prepare(root)
-        armCrash(point, n)
+        val armed = CommitFaults.arm(s"$root/$store", n, point)(
+          throw new InjectedCrash)
         val crashed =
           try { op.run(root); false }
           catch { case e: Throwable if isInjected(e) => true }
-        disarm()
+          finally armed.disarm()
         if (!crashed)
-          failures += s"${op.name} $point#$n: injection did not fire"
+          failures += s"$trial: injection did not fire"
         else {
           try {
             op.recover(root)
             val got = op.observe(root)
             if (got != expected)
-              failures += s"${op.name} $point#$n: diverged after replay\n" +
+              failures += s"$trial: diverged after replay\n" +
                 s"  expected: $expected\n  got:      $got"
           } catch {
             case e: Throwable =>
-              failures += s"${op.name} $point#$n: replay threw ${e.getMessage}"
+              failures += s"$trial: replay threw ${e.getMessage}"
           }
         }
       }
-      info(s"${op.name}: $k commits x 3 points — converged")
+      info(s"${op.name}: $commits commits, ${sites.size} points — converged")
     }
     assert(failures.isEmpty,
       s"$trials trials, ${failures.size} failed:\n${failures.mkString("\n")}")
@@ -398,11 +368,11 @@ class CommitFaultSweepSpec extends SparkSuite {
   test("armClaimKill: the injected kill lands at the exact Nth claim, " +
       "mid-commit (claimed, unpublished), and the retry converges — " +
       "the e2e drill's deterministic kill primitive") {
-    disarm()
     val root = freshRoot()
     commit(s"$root/p", b1) // before arming: not counted
-    val disarmKill = CdcStream.armClaimKill(2)
+    val disarmKill = CommitFaults.armClaimKill(s"$root/p", 2)
     try {
+      commit(s"$root/other", b1) // another store's commit: not counted
       commit(s"$root/p", b2) // claim #1 — survives
       val e = intercept[RuntimeException] { commit(s"$root/p", b3) }
       assert(e.getMessage.contains("injected mid-commit kill"),

@@ -227,13 +227,11 @@ class FeedReplicationSpec extends SparkSuite {
     // promotion drain
     val entered = new java.util.concurrent.CountDownLatch(1)
     val frozen = new java.util.concurrent.CountDownLatch(1)
-    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
-    CdcStream.publishTestHook = () =>
-      if (fired.compareAndSet(false, true)) {
-        entered.countDown()
-        frozen.await(30, java.util.concurrent.TimeUnit.SECONDS)
-        ()
-      }
+    val armed = CommitFaults.arm(dir, 1, CommitFaults.Entry) {
+      entered.countDown()
+      frozen.await(30, java.util.concurrent.TimeUnit.SECONDS)
+      ()
+    }
     try {
       import scala.concurrent._
       import scala.concurrent.duration._
@@ -253,7 +251,7 @@ class FeedReplicationSpec extends SparkSuite {
       // the fenced store never saw the aborted commit
       assert(state(dir) == Seq((1L, "a")))
     } finally {
-      CdcStream.publishTestHook = () => ()
+      armed.disarm()
       CdcStream.unfreezeReplica(dir)
     }
   }

@@ -93,7 +93,7 @@ class FsckSpec extends SparkSuite {
       "and a stale lock as stale_lock (warn)") {
     val dir = freshDir()
     commit(dir, b1)
-    val disarm = CdcStream.armClaimKill(1)
+    val disarm = CommitFaults.armClaimKill(dir, 1)
     try intercept[RuntimeException] { commit(dir, b2) }
     finally disarm()
     val after = checks(dir)
@@ -144,5 +144,34 @@ class FsckSpec extends SparkSuite {
     val after = checks(dir)
     assert(after.get("frozen").contains("info") &&
       after.get("retention_pin").contains("info"), s"$after")
+  }
+
+  test("fsck reports exactly the debris the commit sweep deletes: a slow " +
+      "writer's staging dir is neither, a stale tmp file is both") {
+    val dir = freshDir()
+    commit(dir, b1)
+    val hourAgo2 = System.currentTimeMillis() - 2 * 3600L * 1000
+    // a slow live writer: its staging root is old, but it just wrote
+    val slow = new java.io.File(dir, ".staging-slow")
+    new java.io.File(slow, "data").mkdirs()
+    java.nio.file.Files.write(new java.io.File(slow, "data/part").toPath,
+      Array[Byte](1))
+    assert(slow.setLastModified(hourAgo2))
+    // a crashed metadata writer's tmp file, and a live one's
+    val staleTmp = new java.io.File(dir,
+      graft.io.AtomicFiles.TmpPrefix + "crashed-CURRENT")
+    val freshTmp = new java.io.File(dir,
+      graft.io.AtomicFiles.TmpPrefix + "live-_retain.json")
+    Seq(staleTmp, freshTmp).foreach(f =>
+      java.nio.file.Files.write(f.toPath, "v000000001".getBytes))
+    assert(staleTmp.setLastModified(hourAgo2))
+    def debris: Set[String] = CdcStream.fsckReplica(spark, dir).collect()
+      .filter(_.getString(0) == "stale_debris").map(_.getString(2)).toSet
+    assert(debris == Set(staleTmp.getName))
+    commit(dir, b2)
+    assert(slow.isDirectory, "the sweep must keep a live writer's staging")
+    assert(!staleTmp.exists(), "the sweep must delete a stale tmp file")
+    assert(freshTmp.exists(), "the sweep must keep a fresh tmp file")
+    assert(debris.isEmpty)
   }
 }

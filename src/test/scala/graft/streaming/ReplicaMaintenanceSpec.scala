@@ -806,7 +806,7 @@ class ReplicaMaintenanceSpec extends SparkSuite {
     assert(lock.setLastModified(System.currentTimeMillis() - 120000L))
     // ...that a COMPETING breaker breaks and re-acquires exactly inside
     // our breaker's staleness-check → aside-rename window
-    CdcStream.lockBreakTestHook = () => {
+    val armed = CommitFaults.arm(dir, 1, CommitFaults.LockBreak) {
       java.nio.file.Files.delete(lock.toPath)
       java.nio.file.Files.writeString(lock.toPath, "live-competitor-token")
     }
@@ -816,7 +816,7 @@ class ReplicaMaintenanceSpec extends SparkSuite {
           batch(Seq((2L, "b", "update"))),
           idCols = Seq("id"), orderCols = Seq(col("v")))
       }
-    } finally CdcStream.lockBreakTestHook = () => ()
+    } finally armed.disarm()
     // the competitor's live lock was handed back untouched, and the
     // displaced-lock aside file did not leak
     assert(java.nio.file.Files.readString(lock.toPath) == "live-competitor-token",

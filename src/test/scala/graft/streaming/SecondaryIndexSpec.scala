@@ -909,25 +909,24 @@ class SecondaryIndexSpec extends SparkSuite {
     val b2 = Seq((1L, 5L, 30L, 2L, "update"), (2L, 4L, 40L, 2L, "delete"),
       (3L, 6L, 60L, 2L, "update"))
     val primary = new java.io.File(s"$root/p").getCanonicalPath
-    CdcStream.stageTestHook = dir =>
-      if (new java.io.File(dir).getCanonicalPath == primary) {
-        // both index commits land first: the stage runs beside them
-        val deadline = System.currentTimeMillis() + 60000
-        while (twoSpecs(root).exists(sp =>
-            !CdcStream.replicaCurrentVersion(sp.dir).contains(2L)) &&
-            System.currentTimeMillis() < deadline) Thread.sleep(20)
-        // a crashed writer's staging dir, an hour stale
-        val debris = new java.io.File(primary, ".staging-crashed")
-        new java.io.File(debris, "data").mkdirs()
-        val old = System.currentTimeMillis() - 2 * 3600L * 1000
-        Seq(new java.io.File(debris, "data"), debris).foreach(_.setLastModified(old))
-        throw new IllegalStateException("injected stage failure")
-      }
+    val armed = CommitFaults.arm(s"$root/p", 1, CommitFaults.Stage) {
+      // both index commits land first: the stage runs beside them
+      val deadline = System.currentTimeMillis() + 60000
+      while (twoSpecs(root).exists(sp =>
+          !CdcStream.replicaCurrentVersion(sp.dir).contains(2L)) &&
+          System.currentTimeMillis() < deadline) Thread.sleep(20)
+      // a crashed writer's staging dir, an hour stale
+      val debris = new java.io.File(primary, ".staging-crashed")
+      new java.io.File(debris, "data").mkdirs()
+      val old = System.currentTimeMillis() - 2 * 3600L * 1000
+      Seq(new java.io.File(debris, "data"), debris).foreach(_.setLastModified(old))
+      throw new IllegalStateException("injected stage failure")
+    }
     try {
       val e = intercept[IllegalStateException](
         applyTwo(root, wide(b2), recordChanges = true))
       assert(e.getMessage == "injected stage failure")
-    } finally CdcStream.stageTestHook = _ => ()
+    } finally armed.disarm()
     // index-first window: both indexes ahead, the primary not published,
     // and the failed commit's own staging already gone
     twoSpecs(root).foreach(sp =>
