@@ -270,6 +270,23 @@ object EventQueries {
     }
   }
 
+  /** Phase 1 of an e2e kill drill: drain `q` until the armed `kill`
+    * stops it; any other failure is rethrown. Three or more data
+    * triggers without the kill firing fail the drill: nothing tore, so
+    * the restart would prove nothing.
+    */
+  private def runUntilKilled(q: org.apache.spark.sql.streaming.StreamingQuery,
+      kill: graft.streaming.CommitFaults.Arming): Unit = {
+    try q.processAllAvailable()
+    catch {
+      case e: org.apache.spark.sql.streaming.StreamingQueryException
+          if graft.streaming.CommitFaults.isInjectedKill(e.getCause) =>
+    } finally { kill.disarm(); if (q.isActive) q.stop() }
+    val triggers = q.recentProgress.count(_.numInputRows > 0)
+    require(kill.fired || triggers < 3, s"e2e drill: $triggers data " +
+      "triggers ran but the kill at the primary's third commit never fired")
+  }
+
   /** signup→insert, error→delete, else update — the shared
     * [[graft.cdc.OpMapping]] (generator + queries + oracles). */
   private def opCol(eventType: org.apache.spark.sql.Column) =
@@ -809,10 +826,10 @@ object EventQueries {
       // diff rows = the restore entry's net; target-state rows = v1's
       // recorded net (exactly the live rows the rollback lands on) —
       // both from parquet footers, zero jobs
-      val diffRows = graft.llm.IndexArtifacts.parquetRowCount(
-        f"$primary/v$restoredV%09d/changes")
-      val targetRows = graft.llm.IndexArtifacts.parquetRowCount(
-        f"$primary/v${1L}%09d/changes")
+      def feedRows(v: Long) = CdcStream.feedChangesDir(primary, v)
+        .map(d => graft.llm.IndexArtifacts.parquetRowCount(d.getPath)).getOrElse(0L)
+      val diffRows = feedRows(restoredV)
+      val targetRows = feedRows(1L)
       val lookupVia =
         if (diffRows * 4 < targetRows) {
           // small diff: replay it through the EXISTING index (whose
@@ -1302,17 +1319,10 @@ object EventQueries {
         // genuinely torn commit. Each data batch commits each store
         // once, indexes first, so the kill falls inside batch 3's
         // commit group with 2 full batches already durable, on every
-        // host. The poll below only NOTICES termination (or a drained
-        // sub-smoke source whose few batches never reach 3 commits —
-        // then phase 1 simply completes unkilled).
-        val disarm = graft.streaming.CommitFaults.armClaimKill(primary, 3)
-        val q1 = start()
-        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-        try
-          while (q1.isActive && System.nanoTime() < deadline &&
-              !(q1.recentProgress.nonEmpty && !q1.status.isDataAvailable))
-            Thread.sleep(25)
-        finally { disarm(); if (q1.isActive) q1.stop() }
+        // host. A sub-smoke source whose few batches never reach 3
+        // commits completes phase 1 unkilled.
+        val kill = graft.streaming.CommitFaults.armClaimKill(primary, 3)
+        runUntilKilled(start(), kill)
         // the follower drains the feed THROUGH the kill point —
         // whatever committed is replicable, nothing torn is visible
         val cursor = CdcStream.replayFeedInto(s, primary, follower,
@@ -1374,14 +1384,8 @@ object EventQueries {
           .option("indexPath", s"$out/idx-band,$out/idx-type")
           .option("checkpointLocation", s"$out/ck")
           .start()
-        val disarm = graft.streaming.CommitFaults.armClaimKill(primary, 3)
-        val q1 = start()
-        val deadline = System.nanoTime() + 300L * 1000 * 1000 * 1000
-        try
-          while (q1.isActive && System.nanoTime() < deadline &&
-              !(q1.recentProgress.nonEmpty && !q1.status.isDataAvailable))
-            Thread.sleep(25)
-        finally { disarm(); if (q1.isActive) q1.stop() }
+        val kill = graft.streaming.CommitFaults.armClaimKill(primary, 3)
+        runUntilKilled(start(), kill)
         val q2 = start()
         try q2.processAllAvailable() finally q2.stop()
       }

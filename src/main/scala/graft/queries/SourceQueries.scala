@@ -387,14 +387,14 @@ object SourceQueries {
           intentDir = root, schemas = schemas, idCols = ids)
         ()
       }
-      val disarm = graft.streaming.CommitFaults.armClaimKill(
+      val kill = graft.streaming.CommitFaults.armClaimKill(
         s"$root/graft/purchase", 1)
       val killed =
         try { run(); false }
         catch {
-          case e: RuntimeException if Option(e.getMessage)
-              .exists(_.contains("injected mid-commit kill")) => true
-        } finally disarm()
+          case e: RuntimeException
+              if graft.streaming.CommitFaults.isInjectedKill(e) => true
+        } finally kill.disarm()
       require(killed, "the injected kill must land mid-batch")
       // NO table is observably ahead of the batch boundary: pointers
       // only flip after every table prepared + the intent is durable

@@ -8,20 +8,6 @@ import org.apache.spark.sql.types.StructType
 
 import graft.streaming.CdcStream
 
-/** `spark.read.format("graft-replica")` — the batch READ half of the
-  * replica store's format surface: the current state, a `version=N`
-  * time travel, or an `asOfWatermark=W` source-position read, without
-  * library calls.
-  *
-  * Key-equality predicates on the replica's id columns (`keys` option)
-  * push down into BUCKET PRUNING: when the query's filters pin every id
-  * column with `=` or `IN`, the scan derives the candidate buckets from
-  * the key values themselves ([[CdcStream.readReplicaForKeys]]) and
-  * reads only those buckets' files — a point lookup on a 16-bucket
-  * replica reads one bucket. All filters are left in the plan for Spark
-  * to re-apply ([[unhandledFilters]] returns them), so pruning can only
-  * skip files, never rows.
-  */
 /** Batch change-feed relation (`readChangeFeed=true` on a batch read)
   * — the `table_changes(...)` analog: committed per-key nets of
   * versions in `(fromVersion, toVersion]` with `_commit_version` /
@@ -48,6 +34,20 @@ class ReplicaChangesRelation(
   override def buildScan(): RDD[Row] = read().rdd
 }
 
+/** `spark.read.format("graft-replica")` — the batch READ half of the
+  * replica store's format surface: the current state, a `version=N`
+  * time travel, or an `asOfWatermark=W` source-position read, without
+  * library calls.
+  *
+  * Key-equality predicates on the replica's id columns (`keys` option)
+  * push down into BUCKET PRUNING: when the query's filters pin every id
+  * column with `=` or `IN`, the scan derives the candidate buckets from
+  * the key values themselves ([[CdcStream.readReplicaForKeys]]) and
+  * reads only those buckets' files — a point lookup on a 16-bucket
+  * replica reads one bucket. All filters are left in the plan for Spark
+  * to re-apply ([[unhandledFilters]] returns them), so pruning can only
+  * skip files, never rows.
+  */
 class ReplicaRelation(
     override val sqlContext: SQLContext,
     path: String,
@@ -57,20 +57,21 @@ class ReplicaRelation(
 
   private def spark = sqlContext.sparkSession
 
-  private def read(): DataFrame = {
-    val df = (version, asOfWatermark) match {
-      case (Some(v), _) => CdcStream.readReplicaAt(spark, path, v)
-      case (None, Some(w)) => CdcStream.readReplicaAtWatermark(spark, path, w)
-      case (None, None) => CdcStream.readReplica(spark, path)
-    }
-    df.getOrElse(throw new IllegalArgumentException(
-      s"graft-replica: no readable state at $path" +
-        version.map(v => s" version=$v").getOrElse("") +
-        asOfWatermark.map(w => s" asOfWatermark=$w").getOrElse("") +
-        " (never committed, empty, or GC'd)"))
-  }
+  private def noState = new IllegalArgumentException(
+    s"graft-replica: no readable state at $path" +
+      version.map(v => s" version=$v").getOrElse("") +
+      asOfWatermark.map(w => s" asOfWatermark=$w").getOrElse("") +
+      " (never committed, empty, or GC'd)")
 
-  override val schema: StructType = read().schema
+  private def read(): DataFrame = ((version, asOfWatermark) match {
+    case (Some(v), _) => CdcStream.readReplicaAt(spark, path, v)
+    case (None, Some(w)) => CdcStream.readReplicaAtWatermark(spark, path, w)
+    case (None, None) => CdcStream.readReplica(spark, path)
+  }).getOrElse(throw noState)
+
+  /** From the manifest the read would serve, without planning a scan. */
+  override val schema: StructType =
+    CdcStream.readSchema(path, version, asOfWatermark).getOrElse(throw noState)
 
   /** Pruning only ever SKIPS FILES; every filter is re-applied by Spark. */
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import com.fasterxml.jackson.databind.JsonNode
 import graft.io.AtomicFiles
 import graft.io.AtomicFiles.Json
 import org.apache.commons.io.FileUtils
@@ -9,6 +8,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+
+import ReplicaStore._
 
 /** One envelope keyed for cross-batch dedup: `key` = `db.table`,
   * `offset` = the packed log coordinate the source stamped into the
@@ -122,22 +123,6 @@ object CdcStream {
     }
   }
 
-  /** Fan a multi-table envelope micro-batch out to per-table replicas —
-    * the reference's delta-plus consumer pattern where the sink `path`
-    * carries `{db}`/`{table}` placeholders (README.md:61-67). Each
-    * table present in the batch is routed to
-    * `pathTemplate.replace("{db}", db).replace("{table}", table)` and
-    * upserted there with ITS row schema and id columns via
-    * [[applyBatchToReplica]].
-    *
-    * The default order column is `offset` — under per-table map offsets
-    * that is the table-local record index, a total order per table.
-    *
-    * Scale: the driver-side work is one tiny distinct over (db, table)
-    * — bounded by table count — and one upsert job per table; the
-    * per-table filter is a pushed-down `get_json_object` predicate, no
-    * full envelope parse. Returns the materialized replica paths.
-    */
   /** Phase-2 pointer flip of a PREPARED commit (phase 1 =
     * `applyBatchToReplica(prepareOnly = true)`): make the claimed,
     * reader-invisible version current in one atomic rename. Idempotent
@@ -154,40 +139,10 @@ object CdcStream {
     * the idempotence check unable to tell "our flip landed" from "a
     * stranger took the number" (the batch's data for this table would
     * be silently lost). The streaming sink serializes batches per
-    * path, which is the intended caller. No post-flip GC runs here —
-    * the NEXT ordinary commit's sweep covers whatever this version
-    * superseded.
+    * path, which is the intended caller.
     */
-  def flipPreparedVersion(replicaDir: String, version: Long): Unit = {
-    CommitFaults.hit(replicaDir, CommitFaults.Entry)
-    val name = f"v$version%09d"
-    if (replicaCurrentVersion(replicaDir).exists(_ >= version)) return
-    // split-brain fence: a freeze raised between prepare and flip (a
-    // failover demoting this writer's stores) must block the flip the
-    // same way publishVersion's in-lock re-check blocks a commit — a
-    // pointer published behind the fence would be a successful write
-    // on a demoted store
-    replicaFrozen(replicaDir).foreach(r => throw new IllegalStateException(
-      s"flipPreparedVersion: replica $replicaDir is FROZEN ($r): the " +
-        "prepared version stays unpublished — resyncAsFollower to " +
-        "rejoin, or unfreezeReplica to force"))
-    if (!new java.io.File(replicaDir, name).isDirectory)
-      throw new IllegalStateException(
-        s"flipPreparedVersion: $replicaDir has no prepared version $name " +
-          "— a later commit orphan-swept an abandoned prepare; re-run " +
-          "the batch from phase 1")
-    CommitFaults.hit(replicaDir, CommitFaults.Claim)
-    flipCurrent(replicaDir, name)
-  }
-
-  /** Point CURRENT at version dir `name` — the one pointer flip, shared
-    * by [[publishVersion]] and [[flipPreparedVersion]].
-    */
-  private def flipCurrent(replicaDir: String, name: String): Unit = {
-    AtomicFiles.replace(java.nio.file.Paths.get(replicaDir, Pointer),
-      name.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    CommitFaults.hit(replicaDir, CommitFaults.Post)
-  }
+  def flipPreparedVersion(replicaDir: String, version: Long): Unit =
+    ReplicaStore.flipPrepared(replicaDir, version)
 
   // ---------------------------------------- cross-table atomic fan-out
   // The fan-out's per-table commits used to be only batch-idempotent: a
@@ -277,6 +232,22 @@ object CdcStream {
     results.map(_._1)
   }
 
+  /** Fan a multi-table envelope micro-batch out to per-table replicas —
+    * the reference's delta-plus consumer pattern where the sink `path`
+    * carries `{db}`/`{table}` placeholders (README.md:61-67). Each
+    * table present in the batch is routed to
+    * `pathTemplate.replace("{db}", db).replace("{table}", table)` and
+    * upserted there with ITS row schema and id columns via
+    * [[applyBatchToReplica]].
+    *
+    * The default order column is `offset` — under per-table map offsets
+    * that is the table-local record index, a total order per table.
+    *
+    * Scale: the driver-side work is one tiny distinct over (db, table)
+    * — bounded by table count — and one upsert job per table; the
+    * per-table filter is a pushed-down `get_json_object` predicate, no
+    * full envelope parse. Returns the materialized replica paths.
+    */
   def fanOutToReplicas(
       envelopes: DataFrame,
       pathTemplate: String,
@@ -421,31 +392,16 @@ object CdcStream {
   }
 
   // ------------------------------------------------------- replica store
-  // Bucket-scoped versioned layout — the partition-scoped MERGE shape
-  // (what a Delta/Iceberg MERGE does under the hood):
-  //
-  //   <replicaDir>/CURRENT                   → "v000000003"
-  //   <replicaDir>/v000000003/manifest.json  {numBuckets, buckets: {k → path}}
-  //   <replicaDir>/v000000003/data/__bucket=5/…parquet
-  //
-  // Rows hash-partition into numBuckets buckets by idCols; a batch
-  // REWRITES ONLY the buckets its keys touch, and the new manifest
-  // points untouched buckets at their existing files in older versions.
-  // At 100 TB the per-batch write cost is O(touched buckets), not
-  // O(replica). The swap is: write the new version dir + manifest
-  // completely, then ATOMIC_MOVE a fresh pointer over CURRENT, then
-  // best-effort-delete version dirs no current/previous manifest
-  // references. A crash anywhere leaves either the old or the new
-  // version live — never neither.
+  // The on-disk layout and commit protocol live in [[ReplicaStore]];
+  // this object builds every read and write on it.
 
-  private val Pointer = "CURRENT"
-  val DefaultReplicaBuckets = 16
+  val DefaultReplicaBuckets: Int = ReplicaStore.DefaultBuckets
 
   /** Reserved column storing order-conditional delete TOMBSTONES
     * (see [[applyBatchToReplica]]'s `conditionalOrder`). Live read
     * paths filter it; only conditional merges write it.
     */
-  val Tombstone = "__tombstone"
+  val Tombstone: String = ReplicaStore.Tombstone
 
   /** Resolve a manifest-recorded bucket/delta path. Ordinary stores
     * record paths RELATIVE to their own directory; a SHALLOW CLONE's
@@ -460,47 +416,12 @@ object CdcStream {
   private def resolveStorePath(replicaDir: String, p: String): String =
     if (p.startsWith("/")) p else s"$replicaDir/$p"
 
-  /** The version-dir segment that owns a manifest-recorded bucket or
-    * delta path — for a RELATIVE path its first segment; for a
-    * clone's ABSOLUTE reference, the `v…` segment preceding the
-    * `data`/`delta` segment (the SOURCE's version dir). The deferred
-    * fold uses this as the delta's global sequence: clone version
-    * numbering starts ABOVE its source's current version
-    * ([[cloneReplica]]), so a clone-local delta always outranks any
-    * inherited source delta — sequence monotonicity survives the
-    * absolute references.
-    */
-  private def versionSegmentOf(p: String): String = {
-    val segs = p.split('/')
-    val i = segs.lastIndexWhere(s => s == "delta" || s == "data")
-    if (i > 0 && segs(i - 1).matches("v[0-9]{9}")) segs(i - 1)
-    else {
-      // fallback searches from the END: the version segment sits near
-      // the leaf, so a store ROOTED under a directory that happens to
-      // be named like v000000001 must not shadow it (the first-match
-      // scan mis-derived inherited deltas' sequence numbers there)
-      val j = segs.lastIndexWhere(_.matches("v[0-9]{9}"))
-      if (j >= 0) segs(j) else p.takeWhile(_ != '/')
-    }
-  }
-
   /** Drop tombstoned rows (and the marker column) from a replica scan
     * — identity for replicas that never merged conditionally.
     */
   private def filterTombstones(df: DataFrame): DataFrame =
     if (!df.columns.contains(Tombstone)) df
     else df.filter(!coalesce(col(Tombstone), lit(false))).drop(Tombstone)
-
-  /** `sc` widened by the tombstone column when a rewrite's conditional
-    * fold `folded` carries it: the fold may materialize a store's first
-    * tombstones, and the recorded schema must advertise the column or
-    * schema-pruned readers would read those rows back as live.
-    */
-  private def withTombstoneIn(sc: StructType,
-      folded: Option[DataFrame]): StructType =
-    if (sc.fieldNames.contains(Tombstone) ||
-        !folded.exists(_.columns.contains(Tombstone))) sc
-    else sc.add(Tombstone, BooleanType)
 
   /** Reserved column carrying a delta file's commit version during a
     * merge-on-read scan (never stored).
@@ -573,10 +494,10 @@ object CdcStream {
     // ONE read per delta COMMIT, not per (commit, bucket) path — a
     // version's selected bucket dirs share a sequence, and a per-path
     // union would put |versions|·|buckets| scan legs in the plan.
-    val byVersion = deltaPaths
-      .groupBy(versionSegmentOf).toSeq.sortBy(_._1)
-    val all = byVersion.foldLeft(base) { case (acc, (version, ps)) =>
-      val seq = version.stripPrefix("v").toLong
+    val byVersion = deltaPaths.groupBy(p => owningVersion(p).getOrElse(
+      throw new IllegalStateException(
+        s"replica $replicaDir: delta path $p names no version"))).toSeq.sortBy(_._1)
+    val all = byVersion.foldLeft(base) { case (acc, (seq, ps)) =>
       acc.unionByName(
         spark.read.schema(deltaSc)
           .parquet(ps.distinct.sorted
@@ -604,48 +525,6 @@ object CdcStream {
         winners.filter(col(oc) =!= "delete")
           .drop("__mor_rn", DeltaSeq, oc)
     })
-  }
-
-  /** Recorded-min value for a bucket whose only tombstones carry NULL
-    * order values: unorderable against any horizon (never expires),
-    * recorded so the bucket stays in the exclusivity clash set.
-    */
-  private val NullOrderSentinel = """{"__null_order":true}"""
-
-  /** Per-bucket tombstone metadata off a freshly written staging data
-    * dir (one column-pruned agg over just-rewritten files): the min
-    * (by the store's order tuple) tombstone's order values as JSON.
-    * Buckets absent from the result hold no tombstones.
-    */
-  private def stagedTombstoneMins(spark: org.apache.spark.sql.SparkSession,
-      dataDir: String, ordNames: Seq[String]): Map[Int, String] = {
-    // a rewrite that filtered every row (e.g. expiry emptied the only
-    // bucket) leaves no parquet files — nothing to record
-    def hasParquet(f: java.io.File): Boolean =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).exists(hasParquet)
-      else f.getName.endsWith(".parquet")
-    if (!hasParquet(new java.io.File(dataDir))) return Map.empty
-    val df = spark.read.parquet(dataDir)
-    if (!df.columns.contains(Tombstone) ||
-        !ordNames.forall(df.columns.contains)) return Map.empty
-    // null-order tombstones stay OUT of the min: a null min field
-    // would evaluate the horizon to null and block the whole bucket's
-    // age-out forever. A tombstone whose order is unknown can never be
-    // judged expired by an order horizon — it is retained (never
-    // swept), and must not hide its bucket's orderable tombstones. A
-    // bucket whose ONLY tombstones are null-order still records the
-    // [[NullOrderSentinel]]: the map's keySet is also the deferred
-    // sequence-fold exclusivity clash set, and dropping the bucket
-    // would admit an order-free fold against a tombstone it cannot
-    // order with.
-    df.filter(coalesce(col(Tombstone), lit(false)))
-      .groupBy(col("__bucket").cast("int").as("__b"))
-      .agg(min(when(ordNames.map(c => col(c).isNotNull).reduce(_ && _),
-        struct(ordNames.map(col): _*))).as("m"))
-      .select(col("__b"),
-        coalesce(to_json(col("m")), lit(NullOrderSentinel)).as("j"))
-      .collect().map(r => r.getInt(0) -> r.getString(1)).toMap
   }
 
   /** The column names a horizon predicate references (resolved or
@@ -740,219 +619,8 @@ object CdcStream {
   final class ConcurrentReplicaWriteException(message: String)
     extends RuntimeException(message)
 
-  private val stagingCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** `bucketCols`: the key subset rows hash-route by — defaults to the
-    * full key (`keyCols`). A PROPER subset turns the replica into a
-    * value-clustered store: every row sharing the subset's values lands
-    * in one bucket, so an equality lookup on just those columns prunes
-    * exactly — the layout a secondary index needs (partition key =
-    * indexed value, full key = indexed value + primary key). Pinned at
-    * replica creation, recorded here so every reader and writer derives
-    * the same routing.
-    */
-  /** `schema`/`keyCols`/`opColName`/`commitKind` are REQUIRED: every
-    * commit records them, and a version whose manifest lacks one is in
-    * a format [[upgradeReplica]] rewrites (see [[currentFormat]]).
-    * `schema` is the store's UNION schema, so every read serves bucket
-    * files written under different evolution steps through one
-    * explicit schema, with no footer merge.
-    *
-    * `keyCols`/`opColName`/`deltas`: the merge-on-read surface. A
-    * DEFERRED commit appends its per-key net as per-bucket delta files
-    * (no base read, no base rewrite) and records them here in commit
-    * order; read paths fold base ∪ deltas newest-net-wins, and
-    * compaction folds deltas back into base files, with no
-    * caller-provided metadata.
-    *
-    * `condOrderCols`/`deltasConditional`/`tombstoneMins`: the
-    * order-conditional surface. `condOrderCols` names the stored
-    * columns every conditional merge of this store orders by (pinned
-    * at the first conditional merge — mixing orderings would make the
-    * stored-vs-incoming compare meaningless). `deltasConditional`
-    * marks the PENDING delta chains as order-folded: the read fold
-    * picks each key's greatest-order row (ties → later commit) instead
-    * of the newest commit, and compaction materializes winning deletes
-    * as tombstone rows. `tombstoneMins` records, per bucket, the
-    * MINIMUM (by the order tuple) stored tombstone's order values as a
-    * JSON object — so tombstone-expiry detection is an O(manifest)
-    * predicate over ≤ numBuckets driver-local rows, never a store
-    * scan. Maintained at every base-bucket write; a bucket absent from
-    * the map holds no tombstones.
-    */
-  private final case class ReplicaManifest(numBuckets: Int,
-      buckets: Map[Int, String],
-      schema: StructType,
-      keyCols: Seq[String],
-      opColName: String,
-      /** WHAT KIND of commit produced this version — "merge",
-        * "compact", "reshard", "upgrade", "erase", "restore", "clone",
-        * "refresh". Lets feed consumers distinguish a changeless
-        * version that is CONTENT-IDENTICAL ([[IdenticalKinds]] —
-        * correctly contributes an empty change set) from one that
-        * MUTATED content without a feed entry (an erasure, or a merge
-        * with recordChanges=false) — the latter must refuse a follower
-        * drain instead of silently losing the commit.
-        */
-      commitKind: String,
-      watermark: Option[Long] = None,
-      bucketCols: Option[Seq[String]] = None,
-      deltas: Map[Int, Seq[String]] = Map.empty,
-      condOrderCols: Option[Seq[String]] = None,
-      deltasConditional: Boolean = false,
-      tombstoneMins: Map[Int, String] = Map.empty) {
-    def routing: Seq[String] = bucketCols.getOrElse(keyCols)
-  }
-
   /** Commit kinds that leave the store's content unchanged. */
   private val IdenticalKinds = Set("compact", "reshard", "upgrade")
-
-  /** A JSON sidecar's string field; None when absent or not a string. */
-  private def textField(n: JsonNode, k: String): Option[String] =
-    Option(n.get(k)).filter(_.isTextual).map(_.textValue)
-
-  /** A JSON sidecar's integer field; None when absent or not an integer. */
-  private def longField(n: JsonNode, k: String): Option[Long] =
-    Option(n.get(k)).filter(x => x.isIntegralNumber && x.canConvertToLong)
-      .map(_.longValue)
-
-  /** A version's manifest as written — in any format, an older graft's
-    * too: a required field it lacks reads EMPTY. None when the version
-    * dir holds no manifest (the pre-bucket flat layout, or GC'd). Only
-    * [[upgradeReplica]] reads through this; everything else reads
-    * [[readManifest]].
-    */
-  private def parseManifest(replicaDir: String,
-      version: String): Option[ReplicaManifest] = {
-    import scala.jdk.CollectionConverters._
-    val f = new java.io.File(s"$replicaDir/$version", "manifest.json")
-    if (!f.exists()) return None
-    val n = Json.readTree(f)
-    def str(k: String) = Option(n.get(k)).map(_.asText)
-    def strs(j: JsonNode) = j.elements.asScala.map(_.asText).toSeq
-    def byBucket[A](k: String)(v: JsonNode => A) =
-      Option(n.get(k)).map(_.fields.asScala
-        .map(e => e.getKey.toInt -> v(e.getValue)).toMap).getOrElse(Map.empty[Int, A])
-    Some(ReplicaManifest(
-      numBuckets = Option(n.get("numBuckets")).map(_.asInt)
-        .getOrElse(DefaultReplicaBuckets),
-      buckets = byBucket("buckets")(_.asText),
-      schema = str("schema").map(parsedSchema(_)).getOrElse(new StructType()),
-      keyCols = Option(n.get("keyCols")).map(strs).getOrElse(Nil),
-      opColName = str("opCol").getOrElse(""),
-      commitKind = str("commitKind").getOrElse(""),
-      watermark = Option(n.get("watermark")).map(_.asLong),
-      bucketCols = Option(n.get("bucketCols")).map(strs),
-      deltas = byBucket("deltas")(strs),
-      condOrderCols = Option(n.get("condOrderCols")).map(strs),
-      deltasConditional = Option(n.get("deltasConditional")).exists(_.asBoolean),
-      tombstoneMins = byBucket("tombstoneMins")(_.asText)))
-  }
-
-  /** Is `m` the manifest every current writer writes? Schema, key
-    * columns, op column and kind are recorded; a store holding
-    * tombstones records the order columns they compare by; and every
-    * recorded tombstone min carries each order column (older writers
-    * recorded a min with a null field, which no horizon can judge).
-    */
-  private def currentFormat(m: ReplicaManifest): Boolean =
-    m.schema.nonEmpty && m.keyCols.nonEmpty && m.opColName.nonEmpty &&
-      m.commitKind.nonEmpty &&
-      (m.condOrderCols.nonEmpty || !m.schema.fieldNames.contains(Tombstone)) &&
-      m.tombstoneMins.values.forall { j =>
-        j == NullOrderSentinel ||
-          m.condOrderCols.exists(_.forall(nonNullFields(j).contains))
-      }
-
-  /** A pure function of a manifest's JSON text, memoized on that text:
-    * the key is the content itself, so no entry can go stale. Cleared
-    * wholesale past the bound (as [[graft.operators.ZoneMaps]]' zone
-    * cache: the entries are small and re-derivable).
-    */
-  private final class TextMemo[V <: AnyRef](f: String => V) {
-    private val memo = new java.util.concurrent.ConcurrentHashMap[String, V]()
-    def apply(text: String): V = {
-      if (memo.size > 4096) memo.clear()
-      memo.computeIfAbsent(text, t => f(t))
-    }
-  }
-
-  /** A recorded schema, parsed once per distinct JSON text. */
-  private val parsedSchema = new TextMemo(
-    DataType.fromJson(_).asInstanceOf[StructType])
-
-  /** The fields a recorded tombstone min holds non-null. */
-  private val nonNullFields = new TextMemo[Set[String]]({ j =>
-    import scala.jdk.CollectionConverters._
-    val t = Json.readTree(j)
-    t.fieldNames.asScala.filter(t.hasNonNull).toSet
-  })
-
-  /** A version's manifest in the current format. None when the version
-    * was never committed, was GC'd, or was written in an older format —
-    * a historical version is then simply gone; a CURRENT one is refused
-    * by [[currentManifest]].
-    */
-  private def readManifest(replicaDir: String, version: String): Option[ReplicaManifest] =
-    parseManifest(replicaDir, version).filter(currentFormat)
-
-  private def writeManifestTo(dir: java.nio.file.Path, m: ReplicaManifest): Unit = {
-    val n = Json.createObjectNode()
-    def strings(k: String, cs: Seq[String]): Unit = {
-      val a = n.putArray(k); cs.foreach(a.add)
-    }
-    def byBucket[A](k: String, kv: Map[Int, A])(
-        put: (com.fasterxml.jackson.databind.node.ObjectNode, String, A) => Unit): Unit = {
-      val o = n.putObject(k)
-      kv.toSeq.sortBy(_._1).foreach { case (b, v) => put(o, b.toString, v) }
-    }
-    n.put("numBuckets", m.numBuckets)
-    n.put("schema", m.schema.json)
-    m.watermark.foreach(n.put("watermark", _))
-    m.bucketCols.foreach(strings("bucketCols", _))
-    strings("keyCols", m.keyCols)
-    n.put("opCol", m.opColName)
-    n.put("commitKind", m.commitKind)
-    m.condOrderCols.foreach(strings("condOrderCols", _))
-    if (m.deltasConditional) n.put("deltasConditional", true)
-    if (m.tombstoneMins.nonEmpty)
-      byBucket("tombstoneMins", m.tombstoneMins)(_.put(_, _))
-    byBucket("buckets", m.buckets)(_.put(_, _))
-    if (m.deltas.nonEmpty)
-      byBucket("deltas", m.deltas) { (o, b, ps) =>
-        val a = o.putArray(b); ps.foreach(a.add)
-      }
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve("manifest.json"), Json.writeValueAsBytes(n))
-  }
-
-  private def currentVersion(replicaDir: String): Option[(Long, String)] = {
-    val ptr = new java.io.File(replicaDir, Pointer)
-    if (!ptr.exists()) return None
-    val name = java.nio.file.Files.readString(ptr.toPath).trim
-    if (new java.io.File(replicaDir, name).isDirectory)
-      Some((name.stripPrefix("v").toLong, name))
-    else None
-  }
-
-  /** CURRENT with its manifest — None when nothing was ever committed.
-    * Every entry point resolves the live state through here, so this is
-    * the ONE place a store in an older format is refused: a current
-    * version without a current-format manifest ([[currentFormat]]).
-    */
-  private def currentManifest(replicaDir: String)
-      : Option[(Long, String, ReplicaManifest)] =
-    currentVersion(replicaDir).map { case (v, name) =>
-      (v, name, readManifest(replicaDir, name).getOrElse(
-        throw new IllegalStateException(olderFormat(replicaDir, name))))
-    }
-
-  private def olderFormat(replicaDir: String, name: String): String =
-    s"replica $replicaDir: current version $name is in an older store " +
-      "format (a flat layout, or a manifest without a schema, keyCols, " +
-      "opCol, commitKind, the order columns of its tombstones or a " +
-      "complete tombstone min) — rewrite it once with " +
-      "CdcStream.upgradeReplica(spark, dir, idCols, orderCols)"
 
   /** Read the live replica (the current manifest's bucket union).
     * None when no version was ever committed or the replica is empty.
@@ -964,9 +632,44 @@ object CdcStream {
     */
   def readReplica(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String): Option[DataFrame] =
-    currentManifest(replicaDir).flatMap { case (_, _, m) =>
-      requireInheritedRefsLive(replicaDir, m)
-      mergedBucketRead(spark, replicaDir, m)
+    readableManifest(replicaDir, None).flatMap(mergedBucketRead(spark, replicaDir, _))
+
+  /** The manifest a read of `version` (None: CURRENT) serves. CURRENT
+    * refuses dangling inherited references loudly
+    * ([[requireInheritedRefsLive]]); a historical version whose
+    * referenced files were GC'd is simply gone (None).
+    */
+  private def readableManifest(replicaDir: String,
+      version: Option[Long]): Option[ReplicaManifest] = version match {
+    case None => currentManifest(replicaDir).map { case (_, m) =>
+      requireInheritedRefsLive(replicaDir, m); m
+    }
+    // a referenced older version dir may itself have been GC'd only
+    // if nothing points at it — verify the files are still present
+    case Some(v) => readManifest(replicaDir, v).filter(missingRefs(replicaDir, _).isEmpty)
+  }
+
+  /** `m`'s recorded data paths that no longer exist. */
+  private def missingRefs(replicaDir: String, m: ReplicaManifest): Seq[String] =
+    m.refs.filterNot(p => new java.io.File(resolveStorePath(replicaDir, p)).exists())
+
+  /** The schema of the rows [[readReplica]] (`version` and
+    * `asOfWatermark` None), [[readReplicaAt]] or
+    * [[readReplicaAtWatermark]] returns, from the manifest alone: the
+    * recorded union schema without the tombstone column, every field
+    * nullable as the parquet read makes it. None exactly when that read
+    * returns None.
+    */
+  private[graft] def readSchema(replicaDir: String, version: Option[Long],
+      asOfWatermark: Option[Long]): Option[StructType] =
+    (version, asOfWatermark) match {
+      case (None, Some(w)) =>
+        versionAtWatermark(replicaDir, w)
+          .flatMap(v => readSchema(replicaDir, Some(v), None))
+      case _ => readableManifest(replicaDir, version)
+        .filter(m => m.buckets.nonEmpty || m.deltas.nonEmpty)
+        .map(m => org.apache.spark.sql.GraftColumnBridge.asNullable(
+          StructType(m.schema.filterNot(_.name == Tombstone))))
     }
 
   /** Key-predicate read path — the read-side half of the
@@ -992,7 +695,7 @@ object CdcStream {
     */
   def readReplicaForKeys(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, idCols: Seq[String], keys: DataFrame): Option[DataFrame] =
-    currentManifest(replicaDir).flatMap { case (_, _, m) =>
+    currentManifest(replicaDir).flatMap { case (_, m) =>
       readForKeysAt(spark, replicaDir, m, idCols, keys)
     }
 
@@ -1012,7 +715,7 @@ object CdcStream {
       spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, idCols: Seq[String],
       keys: DataFrame): Option[DataFrame] =
-    currentManifest(replicaDir).flatMap { case (_, _, m) =>
+    currentManifest(replicaDir).flatMap { case (_, m) =>
       readForKeysAt(spark, replicaDir, m, idCols, keys,
         keepDeletes = true)
     }.map(withTombstoneFlag)
@@ -1141,7 +844,7 @@ object CdcStream {
   def readReplicaForKeysAt(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, version: Long, idCols: Seq[String],
       keys: DataFrame): Option[DataFrame] =
-    readManifest(replicaDir, f"v$version%09d")
+    readManifest(replicaDir, version)
       .flatMap(readForKeysAt(spark, replicaDir, _, idCols, keys))
 
   /** ZONE-MAP range read: serve `column ∈ [lo, hi]` over the replica's
@@ -1203,20 +906,12 @@ object CdcStream {
       atVersion: Option[Long] = None)
       : Option[(DataFrame, Int, Int)] = {
     require(colBounds.nonEmpty, "readReplicaRangeMulti: no bounds given")
-    val resolved: Option[ReplicaManifest] = atVersion match {
-      case Some(v) => readManifest(replicaDir, f"v$v%09d")
-      case None => currentManifest(replicaDir).map(_._3)
-    }
     val (column, lo, hi) = colBounds.head
-    resolved.filter(m => m.buckets.nonEmpty || m.deltas.nonEmpty)
-      // liveness: current-version reads enforce inherited refs loudly;
-      // a historical read's GC'd references mean "gone" (None),
-      // matching readReplicaAt
-      .filter { m =>
-        if (atVersion.isEmpty) { requireInheritedRefsLive(replicaDir, m); true }
-        else (m.buckets.values ++ m.deltas.values.flatten)
-          .forall(p => new java.io.File(resolveStorePath(replicaDir, p)).exists())
-      }
+    // liveness as readReplicaAt's: current-version reads enforce
+    // inherited refs loudly; a historical read's GC'd references mean
+    // "gone" (None)
+    readableManifest(replicaDir, atVersion)
+      .filter(m => m.buckets.nonEmpty || m.deltas.nonEmpty)
       .map { m =>
         def colType(c: String) =
           m.schema.fields.find(_.name == c).map(_.dataType)
@@ -1318,12 +1013,53 @@ object CdcStream {
     */
   def readReplicaAt(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, version: Long): Option[DataFrame] =
-    readManifest(replicaDir, f"v$version%09d")
-      // a referenced older version dir may itself have been GC'd only
-      // if nothing points at it — verify the files are still present
-      .filter(m => (m.buckets.values ++ m.deltas.values.flatten)
-        .forall(p => new java.io.File(resolveStorePath(replicaDir, p)).exists()))
+    readableManifest(replicaDir, Some(version))
       .flatMap(mergedBucketRead(spark, replicaDir, _))
+
+  /** A feed version's changes dir, wherever it lives: the version dir
+    * itself, or `_feed/` after data GC retired it (feed retention is
+    * decoupled from data retention, so compaction never shortens the
+    * readable feed).
+    */
+  private[graft] def feedChangesDir(replicaDir: String, v: Long): Option[java.io.File] =
+    Seq(versionDir(replicaDir, v), retiredDir(replicaDir, v))
+      .map(new java.io.File(_, "changes")).find(_.isDirectory)
+
+  /** A retired version's `_feed` meta: (commitKind, watermark). */
+  private[streaming] def feedMeta(replicaDir: String, v: Long)
+      : Option[(Option[String], Option[Long])] =
+    AtomicFiles.readJson(new java.io.File(retiredDir(replicaDir, v), "meta.json").toPath)
+      .filter(_.isObject)
+      .map(n => (textField(n, "kind"), longField(n, "watermark")))
+
+  /** Version `v`'s commit kind: from its live manifest, or from its
+    * `_feed` meta once data GC retired the version dir.
+    */
+  private def commitKindOf(replicaDir: String, v: Long): Option[String] =
+    readManifest(replicaDir, v).map(_.commitKind)
+      .orElse(feedMeta(replicaDir, v).flatMap(_._1))
+
+  /** Whether the store RECORDS a change feed: any committed version —
+    * live, or retired into `_feed` by data GC — carries a changes dir.
+    * The mode switch feed-sensitive operations consult: a
+    * feed-recording store's RESTORE must record its rollback diff so
+    * followers replay it (checking only LIVE version dirs misses a
+    * store whose every recorded feed surface was retired — e.g. all
+    * content commits aged into `_feed` behind a compaction).
+    */
+  def replicaHasFeed(replicaDir: String): Boolean =
+    replicaVersions(replicaDir).exists(v =>
+      new java.io.File(versionDir(replicaDir, v), "changes").isDirectory) ||
+      retiredVersions(replicaDir).exists(v =>
+        new java.io.File(retiredDir(replicaDir, v), "changes").isDirectory)
+
+  /** Versions whose FEED surface is still on disk: live version dirs ∪
+    * `_feed`-retired ones. The contiguity/gap contract runs over this
+    * set, so data GC never creates a feed gap — only
+    * [[truncateReplicaFeed]] (the VACUUM analog) does.
+    */
+  private def feedVersions(replicaDir: String): Seq[Long] =
+    (committedVersions(replicaDir) ++ retiredVersions(replicaDir)).distinct.sorted
 
   /** Change-feed read (the Delta-CDF analog): the committed per-key
     * NETS of versions in `(fromVersionExclusive, toVersion]`, each row
@@ -1360,60 +1096,6 @@ object CdcStream {
     * the replica), version selection and the strict classification are
     * directory/manifest metadata only.
     */
-  /** A feed version's changes dir, wherever it lives: the version dir
-    * itself, or `_feed/` after data GC retired it ([[retireVersionToFeed]]
-    * — feed retention is decoupled from data retention, so compaction
-    * never shortens the readable feed).
-    */
-  private def feedChangesDir(replicaDir: String, v: Long): Option[java.io.File] =
-    Seq(new java.io.File(f"$replicaDir/v$v%09d/changes"),
-      new java.io.File(f"$replicaDir/_feed/v$v%09d/changes"))
-      .find(_.isDirectory)
-
-  /** A retired version's `_feed` meta: (commitKind, watermark). */
-  private[streaming] def feedMeta(replicaDir: String, v: Long)
-      : Option[(Option[String], Option[Long])] =
-    AtomicFiles.readJson(
-      java.nio.file.Paths.get(f"$replicaDir/_feed/v$v%09d/meta.json"))
-      .filter(_.isObject)
-      .map(n => (textField(n, "kind"), longField(n, "watermark")))
-
-  /** Version `v`'s commit kind: from its live manifest, or from its
-    * `_feed` meta once data GC retired the version dir.
-    */
-  private def commitKindOf(replicaDir: String, v: Long): Option[String] =
-    readManifest(replicaDir, f"v$v%09d").map(_.commitKind)
-      .orElse(feedMeta(replicaDir, v).flatMap(_._1))
-
-  /** Versions whose FEED surface is still on disk: live version dirs ∪
-    * `_feed`-retired ones. The contiguity/gap contract runs over this
-    * set, so data GC never creates a feed gap — only
-    * [[truncateReplicaFeed]] (the VACUUM analog) does.
-    */
-  /** Whether the store RECORDS a change feed: any committed version —
-    * live, or retired into `_feed` by data GC — carries a changes dir.
-    * The mode switch feed-sensitive operations consult: a
-    * feed-recording store's RESTORE must record its rollback diff so
-    * followers replay it (checking only LIVE version dirs misses a
-    * store whose every recorded feed surface was retired — e.g. all
-    * content commits aged into `_feed` behind a compaction).
-    */
-  def replicaHasFeed(replicaDir: String): Boolean =
-    replicaVersions(replicaDir).exists(v =>
-      new java.io.File(f"$replicaDir/v$v%09d/changes").isDirectory) ||
-      Option(new java.io.File(replicaDir, "_feed").listFiles())
-        .getOrElse(Array.empty)
-        .exists(f => f.isDirectory && f.getName.matches("v[0-9]{9}") &&
-          new java.io.File(f, "changes").isDirectory)
-
-  private def feedVersions(replicaDir: String): Seq[Long] =
-    (committedVersions(replicaDir) ++
-      Option(new java.io.File(replicaDir, "_feed").listFiles())
-        .getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.matches("v[0-9]{9}"))
-        .map(_.getName.stripPrefix("v").toLong))
-      .distinct.sorted
-
   def readReplicaChanges(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, fromVersionExclusive: Long = 0L,
       toVersion: Option[Long] = None,
@@ -1483,9 +1165,9 @@ object CdcStream {
   def truncateReplicaFeed(replicaDir: String, beforeVersion: Long): Int = {
     var n = 0
     feedVersions(replicaDir).filter(_ < beforeVersion).foreach { v =>
-      val retired = new java.io.File(f"$replicaDir/_feed/v$v%09d")
+      val retired = retiredDir(replicaDir, v)
       if (retired.isDirectory) { FileUtils.deleteQuietly(retired); n += 1 }
-      val live = new java.io.File(f"$replicaDir/v$v%09d/changes")
+      val live = new java.io.File(versionDir(replicaDir, v), "changes")
       if (live.isDirectory) { FileUtils.deleteQuietly(live); n += 1 }
     }
     n
@@ -1555,7 +1237,7 @@ object CdcStream {
     * dir can sit ABOVE the pointer and must not be mistaken for state.
     */
   def replicaCurrentVersion(replicaDir: String): Option[Long] =
-    currentVersion(replicaDir).map(_._1)
+    currentVersion(replicaDir)
 
   /** Version dirs still on disk (newest last) — the time-travel
     * surface [[readReplicaAt]] serves. NOTE: may include a crashed
@@ -1563,38 +1245,16 @@ object CdcStream {
     * aside by the next commit); version-PICKING logic must use
     * [[committedVersions]] so an orphan is never selected.
     */
-  def replicaVersions(replicaDir: String): Seq[Long] =
-    Option(new java.io.File(replicaDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v[0-9]{9}"))
-      .map(_.getName.stripPrefix("v").toLong).sorted.toSeq
-
-  /** COMMITTED versions only: on-disk version dirs at or below the
-    * CURRENT pointer. A crashed writer's claimed-but-unpublished
-    * orphan sits ABOVE the pointer with a complete manifest
-    * (watermark included), so any watermark scan or fleet composition
-    * that picks from raw [[replicaVersions]] can select uncommitted
-    * state — the fault sweep caught `restoreConsistentTables`'s retry
-    * picking its own crash's orphan and refusing on it.
-    */
-  private def committedVersions(replicaDir: String): Seq[Long] =
-    currentVersion(replicaDir) match {
-      case Some((cur, _)) => replicaVersions(replicaDir).filter(_ <= cur)
-      case None => Nil
-    }
+  def replicaVersions(replicaDir: String): Seq[Long] = versionDirs(replicaDir)
 
   /** The source watermark a committed version's manifest recorded
     * (None for versions written without one, or pre-watermark
     * manifests).
     */
   def replicaWatermark(replicaDir: String, version: Long): Option[Long] =
-    readManifest(replicaDir, f"v$version%09d").flatMap(_.watermark)
+    readManifest(replicaDir, version).flatMap(_.watermark)
       .orElse(feedMeta(replicaDir, version).flatMap(_._2))
 
-  /** Watermark time travel: read the replica AS OF source watermark
-    * `wm` — the newest committed version whose recorded watermark is
-    * <= wm. Versions without a watermark are skipped (their source
-    * position is unknown). None when no committed version qualifies.
-    */
   /** The newest committed version whose recorded watermark is `<= wm`
     * — the version a watermark time-travel read serves.
     */
@@ -1602,6 +1262,11 @@ object CdcStream {
     committedVersions(replicaDir).reverse
       .find(v => replicaWatermark(replicaDir, v).exists(_ <= wm))
 
+  /** Watermark time travel: read the replica AS OF source watermark
+    * `wm` — the newest committed version whose recorded watermark is
+    * <= wm. Versions without a watermark are skipped (their source
+    * position is unknown). None when no committed version qualifies.
+    */
   def readReplicaAtWatermark(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String, wm: Long): Option[DataFrame] =
     versionAtWatermark(replicaDir, wm)
@@ -1627,75 +1292,54 @@ object CdcStream {
     */
   def readConsistentSnapshot(spark: org.apache.spark.sql.SparkSession,
       replicaDirs: Seq[String]): (Long, Seq[DataFrame]) = {
-    val latest = replicaDirs.map { d =>
-      val wms = committedVersions(d).flatMap(replicaWatermark(d, _))
-      if (wms.isEmpty) throw new IllegalStateException(
-        s"consistent read: replica $d has no watermarked version")
-      wms.max
-    }
-    val point = latest.min
-    val dfs = replicaDirs.map { d =>
-      readReplicaAtWatermark(spark, d, point).getOrElse(
-        throw new IllegalStateException(
-          s"consistent read: replica $d cannot serve watermark $point"))
-    }
-    (point, dfs)
+    val (point, vs) = consistentVersions(replicaDirs, "read")
+    (point, replicaDirs.zip(vs).map { case (d, v) =>
+      readReplicaAt(spark, d, v).getOrElse(throw new IllegalStateException(
+        s"consistent read: replica $d cannot serve watermark $point"))
+    })
+  }
+
+  /** The consistency point of `dirs` — `at`, or the minimum over them of
+    * each store's newest recorded watermark — and each store's version
+    * at it ([[versionAtWatermark]]), every one resolved before the
+    * caller acts on any. `what` names the caller in the refusals.
+    */
+  private def consistentVersions(dirs: Seq[String], what: String,
+      at: Option[Long] = None): (Long, Seq[Long]) = {
+    val point = at.getOrElse(dirs.map { d =>
+      committedVersions(d).flatMap(replicaWatermark(d, _)).maxOption
+        .getOrElse(throw new IllegalStateException(
+          s"consistent $what: replica $d has no watermarked version"))
+    }.min)
+    (point, dirs.map(d => versionAtWatermark(d, point).getOrElse(
+      throw new IllegalStateException(
+        s"consistent $what: replica $d cannot serve watermark $point"))))
   }
 
   // ---------------------------------------------- failover / promotion
 
-  /** Split-brain fence marker file. While present, every content
-    * write path (merge — eager and deferred — erasure, reshard)
-    * refuses; reads, compaction and the change feed stay available.
-    */
-  private val FrozenMarker = "FROZEN"
-
-  /** Fence the store against writers (the failover demotion step).
-    * Idempotent; the reason is recorded for the refusal message.
+  /** Fence the store against writers (the failover demotion step): a
+    * [[ReplicaStore.FrozenMarker]] file, under which every content write
+    * path (merge — eager and deferred — erasure, reshard) refuses;
+    * reads, compaction and the change feed stay available. Idempotent;
+    * the reason is recorded for the refusal message.
     *
     * The fence is ATOMIC with respect to in-flight commits: after the
     * marker lands, this call waits for the commit lock to clear, so a
     * writer that entered its critical section before the fence
     * FINISHES before we return (a subsequent drain sees its commit),
-    * while one entering after re-checks the marker inside the lock
-    * ([[publishVersion]]'s `forbidFrozen`) and aborts — no successful
-    * commit can land behind the fence unseen. The wait is bounded: a
-    * lock older than the 60 s stale threshold is a crashed writer's
-    * debris the next commit would break anyway.
+    * while one entering after re-checks the marker inside the lock and
+    * aborts — no successful commit can land behind the fence unseen.
+    * The wait is bounded: a lock older than the 60 s stale threshold is
+    * a crashed writer's debris the next commit would break anyway.
     */
-  def freezeReplica(replicaDir: String, reason: String = "failover"): Unit = {
-    new java.io.File(replicaDir).mkdirs()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(replicaDir, FrozenMarker),
-      reason.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val lock = java.nio.file.Paths.get(replicaDir, ".commit-lock")
-    val deadline = System.currentTimeMillis() + 65000L
-    while (java.nio.file.Files.exists(lock) &&
-        System.currentTimeMillis() - lock.toFile.lastModified <= 60000L &&
-        System.currentTimeMillis() < deadline)
-      Thread.sleep(20)
-  }
+  def freezeReplica(replicaDir: String, reason: String = "failover"): Unit =
+    freeze(replicaDir, reason)
 
-  def unfreezeReplica(replicaDir: String): Unit = {
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(replicaDir, FrozenMarker))
-    ()
-  }
+  def unfreezeReplica(replicaDir: String): Unit = unfreeze(replicaDir)
 
   /** The fence reason when the store is frozen, None otherwise. */
-  def replicaFrozen(replicaDir: String): Option[String] = {
-    val p = java.nio.file.Paths.get(replicaDir, FrozenMarker)
-    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
-    else None
-  }
-
-  private def requireUnfrozen(replicaDir: String): Unit =
-    replicaFrozen(replicaDir).foreach { r =>
-      throw new IllegalStateException(
-        s"replica $replicaDir is FROZEN ($r): writes are fenced during " +
-          "failover — resyncAsFollower to rejoin as a follower, or " +
-          "unfreezeReplica to force")
-    }
+  def replicaFrozen(replicaDir: String): Option[String] = frozen(replicaDir)
 
   /** Apply a primary's change feed `(fromVersionExclusive, latest]`
     * into a follower store as ONE commit-ordered merge — the canonical
@@ -1734,7 +1378,7 @@ object CdcStream {
       /** Commit classification for the catch-up merge — "merge" for
         * follower drains; [[refreshClone]] stamps "refresh". */
       kind: String = "merge"): Long = {
-    val latest = currentVersion(primaryDir).map(_._1).getOrElse(0L)
+    val latest = currentVersion(primaryDir).getOrElse(0L)
     if (latest <= fromVersionExclusive) return fromVersionExclusive
     readReplicaChanges(spark, primaryDir, fromVersionExclusive,
         Some(latest)).foreach { net =>
@@ -1786,7 +1430,7 @@ object CdcStream {
           fromVersionExclusive = lastAppliedVersion, recordChanges = true,
           conditionalApply = conditionalApply)
       else lastAppliedVersion
-    val promoV = currentVersion(followerDir).map(_._1).getOrElse(0L)
+    val promoV = currentVersion(followerDir).getOrElse(0L)
     // record the fork pair THE PROMOTION ITSELF established — the
     // ground truth [[resyncAsFollower]]'s delta path cross-checks a
     // caller's fork arguments against (a too-new fork would silently
@@ -1887,11 +1531,11 @@ object CdcStream {
       opCol: String = "op",
       demotedDivergedAfter: Option[Long] = None,
       newPrimaryForkVersion: Option[Long] = None): Long = {
-    val (vp, _, pm) = currentManifest(newPrimaryDir).getOrElse(
+    val (vp, pm) = currentManifest(newPrimaryDir).getOrElse(
       throw new IllegalStateException(
         s"resync: new primary $newPrimaryDir has no committed version"))
     val demoted = currentManifest(demotedDir)
-    demoted.foreach { case (_, _, m) =>
+    demoted.foreach { case (_, m) =>
       require(m.condOrderCols.isEmpty && !m.deltasConditional,
         "resyncAsFollower supports sequence stores; a conditional " +
           "store rejoins via reseedAsFollower (compact-and-reseed)")
@@ -2005,7 +1649,7 @@ object CdcStream {
         "the store, so freezeReplica it first (promoteFollower already " +
         "does during a failover)")
     compactReplica(spark, newPrimaryDir)
-    val (vp, _, m) = currentManifest(newPrimaryDir).getOrElse(
+    val (vp, m) = currentManifest(newPrimaryDir).getOrElse(
       throw new IllegalStateException(
         s"reseed: new primary $newPrimaryDir has no committed version"))
     // raw snapshot INCLUDING tombstone rows (keepDeletes): the
@@ -2111,7 +1755,7 @@ object CdcStream {
         */
       validateOnly: Boolean = false): Unit = {
     requireUnfrozen(replicaDir)
-    val (v, name, prev) = currentManifest(replicaDir).getOrElse(
+    val (v, prev) = currentManifest(replicaDir).getOrElse(
       throw new IllegalStateException(
         s"restore: $replicaDir has no committed version"))
     if (toVersion == v) return
@@ -2122,16 +1766,14 @@ object CdcStream {
     if (toVersion > v) throw new IllegalArgumentException(
       s"restore: version $toVersion is ahead of the current version $v " +
         "(an unpublished crashed-writer orphan, not a committed state)")
-    val targetName = f"v$toVersion%09d"
-    val target = readManifest(replicaDir, targetName).getOrElse(
+    val target = readManifest(replicaDir, toVersion).getOrElse(
       throw new IllegalArgumentException(
         s"restore: $replicaDir has no manifest for version $toVersion " +
           "(never committed, GC'd past the retained window, or written " +
           "in an older store format)"))
     // every referenced data path must still exist — a half-GC'd target
     // would publish dangling references
-    val missing = (target.buckets.values ++ target.deltas.values.flatten)
-      .filterNot(p => new java.io.File(resolveStorePath(replicaDir, p)).exists())
+    val missing = missingRefs(replicaDir, target)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"restore: version $toVersion's data was GC'd " +
         s"(missing: ${missing.take(3).mkString(", ")}…)")
@@ -2153,49 +1795,48 @@ object CdcStream {
           "followers from the restored snapshot (reseedAsFollower) " +
           "instead of a restore feed entry")
     if (validateOnly) return
-    val nextName = f"v${v + 1}%09d"
-    val staging = newStagingDir(replicaDir)
-    if (recordChanges) {
-      val opCol = target.opColName
-      val ids = target.keyCols
-      // DELTA-SIZED when the feed covers (toVersion, current]: the
-      // divergence between the target and the current state is bounded
-      // by the keys those versions' feed entries touched, so both
-      // sides read only the touched keys' buckets ([[readForKeysAt]]
-      // pruning — O(rolled-back delta), never O(store)). A version in
-      // the range that mutated content outside the feed (erasure,
-      // recordChanges=false) falls back to the full diff.
-      val bound: Option[DataFrame] =
-        feedTouchedKeys(spark, replicaDir, toVersion, v, ids) match {
-          case Some(Some(keys)) => Some(keys)
-          case Some(None) => // provably identical: empty feed entry
-            Some(readReplica(spark, replicaDir)
-              .map(_.select(ids.map(col): _*).limit(0))
-              .getOrElse(spark.emptyDataFrame))
-          case None => None
+    ReplicaStore.commit(replicaDir, Some((v, prev)), "restore", fenced = true) { txn =>
+      if (recordChanges) {
+        val opCol = target.opColName
+        val ids = target.keyCols
+        // DELTA-SIZED when the feed covers (toVersion, current]: the
+        // divergence between the target and the current state is bounded
+        // by the keys those versions' feed entries touched, so both
+        // sides read only the touched keys' buckets ([[readForKeysAt]]
+        // pruning — O(rolled-back delta), never O(store)). A version in
+        // the range that mutated content outside the feed (erasure,
+        // recordChanges=false) falls back to the full diff.
+        val bound: Option[DataFrame] =
+          feedTouchedKeys(spark, replicaDir, toVersion, v, ids) match {
+            case Some(Some(keys)) => Some(keys)
+            case Some(None) => // provably identical: empty feed entry
+              Some(readReplica(spark, replicaDir)
+                .map(_.select(ids.map(col): _*).limit(0))
+                .getOrElse(spark.emptyDataFrame))
+            case None => None
+          }
+        // committed-but-empty versions read as None: an empty side is a
+        // legitimate diff endpoint (restore-to-empty = all-delete entry)
+        val (wantOpt, haveOpt) = bound match {
+          case Some(keys) if keys.columns.nonEmpty =>
+            (readForKeysAt(spark, replicaDir, target, ids, keys),
+              readForKeysAt(spark, replicaDir, prev, ids, keys))
+          case Some(_) => (None, None) // empty-schema sentinel: no diff
+          case None =>
+            (readReplicaAt(spark, replicaDir, toVersion),
+              readReplica(spark, replicaDir))
         }
-      // committed-but-empty versions read as None: an empty side is a
-      // legitimate diff endpoint (restore-to-empty = all-delete entry)
-      val (wantOpt, haveOpt) = bound match {
-        case Some(keys) if keys.columns.nonEmpty =>
-          (readForKeysAt(spark, replicaDir, target, ids, keys),
-            readForKeysAt(spark, replicaDir, prev, ids, keys))
-        case Some(_) => (None, None) // empty-schema sentinel: no diff
-        case None =>
-          (readReplicaAt(spark, replicaDir, toVersion),
-            readReplica(spark, replicaDir))
+        (wantOpt, haveOpt) match {
+          case (None, None) => () // empty → empty: nothing to record
+          case _ =>
+            val ref = wantOpt.orElse(haveOpt).get
+            stateDiff(wantOpt.getOrElse(ref.limit(0)),
+              haveOpt.getOrElse(ref.limit(0)), ids, opCol)
+              .write.parquet(txn.path("changes"))
+        }
       }
-      (wantOpt, haveOpt) match {
-        case (None, None) => () // empty → empty: nothing to record
-        case _ =>
-          val ref = wantOpt.orElse(haveOpt).get
-          stateDiff(wantOpt.getOrElse(ref.limit(0)),
-            haveOpt.getOrElse(ref.limit(0)), ids, opCol)
-            .write.parquet(s"$staging/changes")
-      }
+      Some(target)
     }
-    publishVersion(replicaDir, staging, nextName, target, Some(prev),
-      Some(name), forbidFrozen = true, kind = "restore")
   }
 
   /** Fail a CURRENT-state read of a store whose INHERITED
@@ -2207,8 +1848,7 @@ object CdcStream {
     */
   private def requireInheritedRefsLive(replicaDir: String,
       m: ReplicaManifest): Unit = {
-    val dangling = (m.buckets.values ++ m.deltas.values.flatten)
-      .filter(_.startsWith("/"))
+    val dangling = m.refs.filter(_.startsWith("/"))
       .filterNot(p => new java.io.File(p).exists()).toSeq.sorted
     if (dangling.nonEmpty) throw new IllegalStateException(
       s"replica $replicaDir: ${dangling.size} inherited shallow-clone data " +
@@ -2234,8 +1874,8 @@ object CdcStream {
     */
   def verifyReplicaIntegrity(replicaDir: String): Seq[(String, String)] =
     (for {
-      (_, name) <- currentVersion(replicaDir)
-      m <- readManifest(replicaDir, name)
+      v <- currentVersion(replicaDir)
+      m <- readManifest(replicaDir, v)
     } yield {
       val refs =
         m.buckets.toSeq.sortBy(_._1)
@@ -2281,7 +1921,7 @@ object CdcStream {
     *  - `orphan_version` (info): a claimed-but-unpublished version dir
     *    above CURRENT (a crashed writer; renamed aside by the next
     *    commit);
-    *  - `stale_lock` (warn): `.commit-lock` older than the 60 s
+    *  - `stale_lock` (warn): the commit lock is older than the 60 s
     *    stale-break horizon (a crashed writer died holding it);
     *  - `stale_debris` (info): staging/GC-aside/broken-lock leftovers
     *    older than the hour sweep horizon;
@@ -2316,18 +1956,19 @@ object CdcStream {
         add("current_pointer", "error", replicaDir,
           "no CURRENT pointer — nothing was ever committed, or the " +
             "pointer file was deleted")
-      case Some((v, name)) =>
-        if (!new java.io.File(replicaDir, name).isDirectory)
+      case Some(v) =>
+        val name = versionName(v)
+        if (!versionDir(replicaDir, v).isDirectory)
           add("current_pointer", "error", name,
             "CURRENT names a version dir that does not exist")
-        else (try Right(readManifest(replicaDir, name)) catch {
+        else (try Right(readManifest(replicaDir, v)) catch {
           case e: Exception => Left(e)
         }) match {
           case Left(e) =>
             add("schema", "error", name,
               s"manifest does not parse: ${e.getMessage}")
           case Right(None) =>
-            add("current_pointer", "error", name, olderFormat(replicaDir, name))
+            add("current_pointer", "error", name, olderFormat(replicaDir, v))
           case Right(Some(m)) =>
             if (m.deltasConditional && m.condOrderCols.isEmpty)
               add("conditional_meta", "error", name,
@@ -2346,9 +1987,7 @@ object CdcStream {
             }
             // delta chains strictly increasing by version segment
             m.deltas.foreach { case (b, ps) =>
-              val seq = ps.map(p => versionSegmentOf(p))
-                .filter(_.matches("v[0-9]{9}"))
-                .map(_.stripPrefix("v").toLong)
+              val seq = ps.flatMap(owningVersion)
               if (seq.sliding(2).exists(w => w.length == 2 && w(0) >= w(1)))
                 add("delta_sequence", "error", s"bucket=$b",
                   s"delta chain not strictly version-ordered: $seq")
@@ -2359,7 +1998,7 @@ object CdcStream {
         if (fv.nonEmpty) {
           val lo = fv.min
           (lo to v).filterNot(fv.toSet).foreach { missing =>
-            add("feed_gap", "warn", f"v$missing%09d",
+            add("feed_gap", "warn", versionName(missing),
               "committed version inside the retained feed range has " +
                 "neither a feed surface nor a manifest to classify it — " +
                 "consumers positioned before it will refuse the drain")
@@ -2367,16 +2006,14 @@ object CdcStream {
         }
         // orphans above CURRENT
         replicaVersions(replicaDir).filter(_ > v).foreach { o =>
-          add("orphan_version", "info", f"v$o%09d",
+          add("orphan_version", "info", versionName(o),
             "claimed-but-unpublished version above CURRENT (crashed " +
               "writer); the next commit renames it aside")
         }
     }
     // lock + debris + operational state
-    val lock = new java.io.File(replicaDir, ".commit-lock")
-    if (lock.isFile &&
-        System.currentTimeMillis() - lock.lastModified() > 60000L)
-      add("stale_lock", "warn", ".commit-lock",
+    if (lockStale(replicaDir))
+      add("stale_lock", "warn", LockFile,
         "older than the 60 s stale-break horizon — a crashed writer " +
           "died holding it; the next commit breaks it")
     val now = System.currentTimeMillis()
@@ -2388,7 +2025,7 @@ object CdcStream {
       add("frozen", "info", replicaDir, s"writes fenced: $r"))
     retentionPin(replicaDir).foreach(p =>
       add("retention_pin", "info", replicaDir,
-        f"GC floor pinned at v$p%09d — version dirs at or above it " +
+        s"GC floor pinned at ${versionName(p)} — version dirs at or above it " +
           "are never swept"))
     // GSI cursors vs the primary's CURRENT
     indexDirs.foreach { idx =>
@@ -2397,7 +2034,7 @@ object CdcStream {
           add("index_cursor_missing", "error", idx,
             "index store records no applied-primary-version cursor")
         case Some(applied) =>
-          val pv = cur.map(_._1).getOrElse(0L)
+          val pv = cur.getOrElse(0L)
           if (applied > pv)
             add("index_ahead", "error", idx,
               s"cursor at $applied but primary CURRENT is $pv — the " +
@@ -2440,15 +2077,11 @@ object CdcStream {
     * clone's fork. Metadata-only (one manifest read).
     */
   def retentionFloorFor(replicaDir: String, version: Long): Long = {
-    val name = f"v$version%09d"
-    val m = readManifest(replicaDir, name).getOrElse(
+    val m = readManifest(replicaDir, version).getOrElse(
       throw new IllegalArgumentException(
         s"retentionFloorFor: $replicaDir has no manifest for version " +
           s"$version"))
-    val segs = (m.buckets.values ++ m.deltas.values.flatten).toSeq
-      .map(versionSegmentOf).filter(_.matches("v[0-9]{9}"))
-      .map(_.stripPrefix("v").toLong)
-    (segs :+ version).min
+    (m.refs.flatMap(owningVersion) :+ version).min
   }
 
   /** Drop the [[pinReplicaRetention]] pin; the next commit's GC sweeps
@@ -2460,8 +2093,7 @@ object CdcStream {
   }
 
   private[streaming] def retentionPin(replicaDir: String): Option[Long] =
-    AtomicFiles.readJson(java.nio.file.Paths.get(replicaDir, "_retain.json"))
-      .flatMap(longField(_, "retainFromVersion"))
+    ReplicaStore.retentionPin(replicaDir)
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE … SHALLOW CLONE` analog):
     * make `cloneDir` an independent store whose initial version
@@ -2481,7 +2113,7 @@ object CdcStream {
     *
     * CONTRACTS (the same ones Delta documents for shallow clones):
     *  - the clone depends on the source's files, and ANY source commit
-    *    can break it: publishVersion GCs on EVERY commit with one
+    *    can break it: the store GCs on EVERY commit with one
     *    version of grace, so two ordinary source merges touching a
     *    bucket delete files the clone still references — not just a
     *    compaction or erasure. Clone-side GC can never delete source
@@ -2516,7 +2148,7 @@ object CdcStream {
   def cloneReplica(sourceDir: String, cloneDir: String,
       atVersion: Option[Long] = None): Long = {
     val srcAbs = new java.io.File(sourceDir).getAbsolutePath
-    val (curV, _, curM) = currentManifest(srcAbs).getOrElse(
+    val (curV, curM) = currentManifest(srcAbs).getOrElse(
       throw new IllegalStateException(
         s"cloneReplica: source $sourceDir has no committed version"))
     val (v, m) = atVersion match {
@@ -2528,7 +2160,7 @@ object CdcStream {
           s"cloneReplica: version $av is ahead of the current version " +
             s"$curV (an unpublished crashed-writer orphan, not a " +
             "committed state)")
-        (av, readManifest(srcAbs, f"v$av%09d").getOrElse(
+        (av, readManifest(srcAbs, av).getOrElse(
           throw new IllegalStateException(s"cloneReplica: source " +
             s"$sourceDir has no manifest for version $av (never " +
             "committed, GC'd past the retained window, or written in an " +
@@ -2536,14 +2168,13 @@ object CdcStream {
     }
     // every referenced data path must still exist — a clone of a
     // half-GC'd historical version would publish dangling references
-    val missing = (m.buckets.values ++ m.deltas.values.flatten)
-      .filterNot(p => new java.io.File(resolveStorePath(srcAbs, p)).exists())
+    val missing = missingRefs(srcAbs, m)
     if (missing.nonEmpty) throw new IllegalStateException(
       s"cloneReplica: version $v's data was GC'd " +
         s"(missing: ${missing.take(3).mkString(", ")}…)")
     // Refuse only a PUBLISHED store (CURRENT exists): version dirs
     // without a pointer are a crashed clone's unpublished debris —
-    // publishVersion renames the orphan aside, so the documented crash
+    // the commit renames the orphan aside, so the documented crash
     // recovery is simply "re-run cloneReplica; if CURRENT already
     // exists the clone committed and recovery is a no-op"
     // (CommitFaultSweepSpec drives all three crash points).
@@ -2557,23 +2188,21 @@ object CdcStream {
     // numbering is keyed to the source's CURRENT (not the cloned
     // version): every inherited delta path's segment is <= curV, so
     // clone-local deltas always outrank inherited ones
-    val cloneName = f"v${curV + 1}%09d"
-    val staging = newStagingDir(cloneDir)
-    // provenance sidecar rides in the version dir: atomic with the
-    // commit, auditable for the store's lifetime — when data GC
-    // retires the (data-less) clone-initial dir, the sidecar moves to
-    // `_feed/<vname>/` with the rest of the feed surface
-    // ([[retireVersionToFeed]]), so [[describeReplicaHistory]] and the
-    // idempotent-retry provenance match keep working after GC.
-    // Jackson-serialized: a source path containing a quote or
-    // backslash must round-trip (raw interpolation produced invalid
-    // JSON there and broke the crash-retry match).
-    AtomicFiles.replaceJson(java.nio.file.Paths.get(staging, "_clone.json"),
-      Json.createObjectNode().put("source", srcAbs).put("sourceVersion", v))
-    publishVersion(cloneDir, staging, cloneName,
-      m.copy(buckets = m.buckets.map { case (k, p) => k -> abs(p) },
-        deltas = m.deltas.map { case (k, ps) => k -> ps.map(abs) }),
-      prev = None, curName = None, kind = "clone")
+    ReplicaStore.commit(cloneDir, None, "clone", version = Some(curV + 1)) { txn =>
+      // provenance sidecar rides in the version dir: atomic with the
+      // commit, auditable for the store's lifetime — when data GC
+      // retires the (data-less) clone-initial dir, the sidecar moves to
+      // `_feed/<vname>/` with the rest of the feed surface, so
+      // [[describeReplicaHistory]] and the idempotent-retry provenance
+      // match keep working after GC. Jackson-serialized: a source path
+      // containing a quote or backslash must round-trip (raw
+      // interpolation produced invalid JSON there and broke the
+      // crash-retry match).
+      AtomicFiles.replaceJson(java.nio.file.Paths.get(txn.path("_clone.json")),
+        Json.createObjectNode().put("source", srcAbs).put("sourceVersion", v))
+      Some(m.copy(buckets = m.buckets.map { case (k, p) => k -> abs(p) },
+        deltas = m.deltas.map { case (k, ps) => k -> ps.map(abs) }))
+    }
     curV + 1
   }
 
@@ -2592,26 +2221,11 @@ object CdcStream {
     * watermark point the clones were cut at.
     */
   def cloneConsistentTables(tables: Seq[(String, String)]): Long = {
-    val latest = tables.map { case (src, _) =>
-      val wms = committedVersions(src).flatMap(replicaWatermark(src, _))
-      if (wms.isEmpty) throw new IllegalStateException(
-        s"consistent clone: replica $src has no watermarked version")
-      wms.max
-    }
-    val point = latest.min
-    // resolve every table's version BEFORE the first commit: a table
+    // every table's version resolves BEFORE the first commit: a table
     // that cannot serve the point must abort the whole composition
     // with nothing published
-    val picks: Seq[(String, String, Long)] = tables.map { case (src, dst) =>
-      val v = committedVersions(src).reverse
-        .find(replicaWatermark(src, _).exists(_ <= point))
-        .getOrElse(throw new IllegalStateException(
-          s"consistent clone: replica $src cannot serve watermark $point"))
-      (src, dst, v)
-    }
-    picks.foreach { case (src, dst, v) =>
-      cloneOrSkip(src, dst, v)
-    }
+    val (point, vs) = consistentVersions(tables.map(_._1), "clone")
+    tables.zip(vs).foreach { case ((src, dst), v) => cloneOrSkip(src, dst, v) }
     point
   }
 
@@ -2639,7 +2253,7 @@ object CdcStream {
     * commit" contract holds for a SINGLE operator over a quiesced
     * fleet. A freeze or concurrent commit landing between the
     * validation pass and a table's commit still aborts mid-fleet
-    * ([[publishVersion]] re-checks the fence inside the commit lock —
+    * (every commit re-checks the fence inside the commit lock —
     * correctly: the late fence wins). Recovery for such a mid-fleet
     * abort is the same retry-at-the-explicit-point path documented
     * above for crashes: resolve the contention, re-run with the same
@@ -2648,21 +2262,8 @@ object CdcStream {
   def restoreConsistentTables(spark: org.apache.spark.sql.SparkSession,
       tables: Seq[String], atWatermark: Option[Long] = None,
       recordChanges: Boolean = false): Long = {
-    val point = atWatermark.getOrElse {
-      tables.map { src =>
-        val wms = committedVersions(src).flatMap(replicaWatermark(src, _))
-        if (wms.isEmpty) throw new IllegalStateException(
-          s"consistent restore: replica $src has no watermarked version")
-        wms.max
-      }.min
-    }
-    val picks: Seq[(String, Long)] = tables.map { src =>
-      val v = committedVersions(src).reverse
-        .find(replicaWatermark(src, _).exists(_ <= point))
-        .getOrElse(throw new IllegalStateException(
-          s"consistent restore: replica $src cannot serve watermark $point"))
-      (src, v)
-    }
+    val (point, vs) = consistentVersions(tables, "restore", atWatermark)
+    val picks = tables.zip(vs)
     picks.foreach { case (src, v) =>
       restoreReplica(spark, src, v, recordChanges, validateOnly = true)
     }
@@ -2684,7 +2285,7 @@ object CdcStream {
       atVersion: Long): Unit = {
     val sAbs = new java.io.File(src).getAbsolutePath
     currentVersion(dst) match {
-      case Some((v, _)) =>
+      case Some(v) =>
         if (!cloneProvenance(dst, v).contains((sAbs, atVersion)))
           throw new IllegalStateException(
             s"cloneOrSkip: $dst already holds a store that is not this " +
@@ -2705,9 +2306,9 @@ object CdcStream {
   def cloneProvenance(replicaDir: String, version: Long): Option[(String, Long)] = {
     // the live version dir first; after data GC retired the dir, the
     // sidecar lives with the rest of the feed surface under `_feed`
-    Seq(new java.io.File(f"$replicaDir/v$version%09d", "_clone.json"),
-        new java.io.File(f"$replicaDir/_feed/v$version%09d", "_clone.json"))
-      .find(_.exists()).flatMap(f => AtomicFiles.readJson(f.toPath))
+    Seq(versionDir(replicaDir, version), retiredDir(replicaDir, version))
+      .map(new java.io.File(_, "_clone.json")).find(_.exists())
+      .flatMap(f => AtomicFiles.readJson(f.toPath))
       .flatMap(n => for (src <- textField(n, "source");
           sv <- longField(n, "sourceVersion")) yield (src, sv))
   }
@@ -2818,15 +2419,14 @@ object CdcStream {
   def describeReplicaHistory(spark: org.apache.spark.sql.SparkSession,
       replicaDir: String): DataFrame = {
     import spark.implicits._
-    val curV = currentVersion(replicaDir).map(_._1)
+    val curV = currentVersion(replicaDir)
     // every version with ANY surviving surface: live dirs (manifests)
     // plus versions data GC retired into `_feed` — so the audit log
     // keeps pricing commits (kind, watermark, feed counts, clone
     // provenance) after their data aged out, and a clone's ancestry
     // row survives the GC of its data-less initial dir
     val rows = feedVersions(replicaDir).map { v =>
-      val name = f"v$v%09d"
-      val m = readManifest(replicaDir, name)
+      val m = readManifest(replicaDir, v)
       val kind = m.map(_.commitKind)
         .orElse(feedMeta(replicaDir, v).flatMap(_._1))
       val wm = replicaWatermark(replicaDir, v)
@@ -2842,13 +2442,11 @@ object CdcStream {
       // priced at any store size. A metadata-only commit (clone,
       // restore) correctly prices 0/0; a retired version (manifest
       // gone) prices null.
+      def own(p: String) = owningVersion(p).contains(v)
       val ownBuckets = m.map(mm =>
-        mm.buckets.filter { case (_, p) => versionSegmentOf(p) == name }.keySet ++
-          mm.deltas.filter { case (_, ps) =>
-            ps.exists(versionSegmentOf(_) == name) }.keySet)
-      val ownRefs: Seq[String] = m.toSeq.flatMap(mm =>
-        mm.buckets.values ++ mm.deltas.values.flatten)
-        .filter(p => versionSegmentOf(p) == name)
+        mm.buckets.filter { case (_, p) => own(p) }.keySet ++
+          mm.deltas.filter { case (_, ps) => ps.exists(own) }.keySet)
+      val ownRefs = m.toSeq.flatMap(_.refs).filter(own)
       val rowsWritten: Option[Long] = m.map(_ =>
         ownRefs.map(p => footerRowCount(resolveStorePath(replicaDir, p))).sum)
       val cloneSrc = cloneProvenance(replicaDir, v)
@@ -2891,20 +2489,22 @@ object CdcStream {
       replicaDir: String, targetFilesPerBucket: Int = 1,
       tombstoneHorizon: Option[Column] = None): Unit = {
     import org.apache.spark.sql.functions.lit
-    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
+    val (v, m) = currentManifest(replicaDir).getOrElse(return)
     def parquetFiles(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(f => f.isFile && f.getName.endsWith(".parquet"))
     val fragmented = m.buckets.filter { case (_, p) =>
-      !p.startsWith(s"$name/") ||
+      !p.startsWith(versionName(v) + "/") ||
         parquetFiles(resolveStorePath(replicaDir, p)) > targetFilesPerBucket
     }
-    val nextName = f"v${v + 1}%09d"
     // rewritten buckets refresh their recorded tombstone mins (a
     // one-job agg over the files just written); the rest keep theirs
-    def minsAfter(rewritten: Set[Int], staging: String): Map[Int, String] =
-      (m.tombstoneMins -- rewritten) ++ m.condOrderCols
-        .map(stagedTombstoneMins(spark, s"$staging/data", _)).getOrElse(Map.empty)
+    def rewriteBuckets(k: Set[Int], folded: Option[DataFrame])(
+        write: ReplicaStore.Txn => Unit): Unit =
+      ReplicaStore.commit(replicaDir, Some((v, m)), "compact") { txn =>
+        write(txn)
+        Some(txn.rewritten(spark, m, k, folded, minsBy = m.condOrderCols))
+      }
     // MERGE-ON-READ fold: every bucket with pending deltas (plus the
     // usual fragmented set) rewrites as a fresh single-file base
     // bucket; delta lists drop from the manifest in the same commit.
@@ -2915,27 +2515,15 @@ object CdcStream {
     if (m.deltas.nonEmpty) {
       val rewriteKeys: Set[Int] = m.deltas.keySet ++ fragmented.keys
       val routeBy = pmod(hash(m.routing.map(col): _*), lit(m.numBuckets))
-      val staging = newStagingDir(replicaDir)
       val folded = mergedBucketRead(spark, replicaDir, m, rewriteKeys,
         keepDeletes = true)
-      folded.foreach { r =>
-        r.withColumn("__bucket", routeBy)
-          .repartition(math.max(rewriteKeys.size, 1), col("__bucket"))
-          .write.partitionBy("__bucket").parquet(s"$staging/data")
+      rewriteBuckets(rewriteKeys, folded) { txn =>
+        folded.foreach { r =>
+          r.withColumn("__bucket", routeBy)
+            .repartition(math.max(rewriteKeys.size, 1), col("__bucket"))
+            .write.partitionBy("__bucket").parquet(txn.path("data"))
+        }
       }
-      val written: Set[Int] = rewriteKeys.filter { k =>
-        new java.io.File(s"$staging/data/__bucket=$k").isDirectory
-      }
-      val newBuckets = (m.buckets -- rewriteKeys) ++ written
-        .map(k => k -> s"$nextName/data/__bucket=$k")
-      publishVersion(replicaDir, staging, nextName,
-        m.copy(buckets = newBuckets,
-          schema = withTombstoneIn(m.schema, folded),
-          deltas = m.deltas -- rewriteKeys,
-          deltasConditional = (m.deltas -- rewriteKeys).nonEmpty &&
-            m.deltasConditional,
-          tombstoneMins = minsAfter(rewriteKeys, staging)),
-        Some(m), Some(name), kind = "compact")
       return
     }
     // replicas that never merged conditionally carry no tombstone
@@ -2971,34 +2559,24 @@ object CdcStream {
     }
     val rewrite = fragmented ++ m.buckets.filter { case (k, _) => expired(k) }
     if (rewrite.isEmpty) return
-    val staging = newStagingDir(replicaDir)
-    rewrite.toSeq.sortBy(_._1)
-      .map { case (k, p) =>
-        spark.read.parquet(resolveStorePath(replicaDir, p))
-          .withColumn("__bucket", lit(k)) }
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .transform(df => expiredTombstone match {
-        // null-safe: a null-order tombstone evaluates the horizon to
-        // null — it is RETAINED (its late-loser protection can't be
-        // judged expired), not silently dropped by three-valued filter
-        case Some(pred) => df.filter(!coalesce(pred, lit(false)))
-        case None => df
-      })
-      .repartition(rewrite.size, org.apache.spark.sql.functions.col("__bucket"))
-      .write.partitionBy("__bucket").parquet(s"$staging/data")
-    // a bucket the GC emptied writes no partition dir — drop it from
-    // the manifest (readers treat an absent bucket id as zero rows)
-    val written: Set[Int] = rewrite.keys.filter { k =>
-      new java.io.File(s"$staging/data/__bucket=$k").isDirectory
-    }.toSet
-    val newBuckets = (m.buckets -- rewrite.keys) ++ written
-      .map(k => k -> s"$nextName/data/__bucket=$k")
     // content-identical rewrite (minus aged-out tombstones): the union
-    // schema carries over
-    publishVersion(replicaDir, staging, nextName,
-      m.copy(buckets = newBuckets,
-        tombstoneMins = minsAfter(rewrite.keySet, staging)),
-      Some(m), Some(name), kind = "compact")
+    // schema carries over, and a bucket the GC emptied drops out
+    rewriteBuckets(rewrite.keySet, None) { txn =>
+      rewrite.toSeq.sortBy(_._1)
+        .map { case (k, p) =>
+          spark.read.parquet(resolveStorePath(replicaDir, p))
+            .withColumn("__bucket", lit(k)) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .transform(df => expiredTombstone match {
+          // null-safe: a null-order tombstone evaluates the horizon to
+          // null — it is RETAINED (its late-loser protection can't be
+          // judged expired), not silently dropped by three-valued filter
+          case Some(pred) => df.filter(!coalesce(pred, lit(false)))
+          case None => df
+        })
+        .repartition(rewrite.size, org.apache.spark.sql.functions.col("__bucket"))
+        .write.partitionBy("__bucket").parquet(txn.path("data"))
+    }
   }
 
   /** Metadata-driven maintenance policy — the call a `foreachBatch`
@@ -3020,7 +2598,7 @@ object CdcStream {
       replicaDir: String, maxDeltas: Int = 8,
       targetFilesPerBucket: Int = 1,
       tombstoneHorizon: Option[Column] = None): Boolean = {
-    val (v, _, m) = currentManifest(replicaDir).getOrElse(return false)
+    val (v, m) = currentManifest(replicaDir).getOrElse(return false)
     val chains = m.deltas.values.map(_.size)
     // no pending deltas: the auto-maintenance cadence (the sink calls
     // this after EVERY commit) must be a near-no-op on a healthy store
@@ -3045,7 +2623,7 @@ object CdcStream {
     else {
       compactReplica(spark, replicaDir, targetFilesPerBucket,
         tombstoneHorizon)
-      currentVersion(replicaDir).exists(_._1 > v)
+      currentVersion(replicaDir).exists(_ > v)
     }
   }
 
@@ -3073,7 +2651,7 @@ object CdcStream {
       replicaDir: String, idCols: Seq[String], newNumBuckets: Int): Unit = {
     require(newNumBuckets > 0, s"newNumBuckets must be positive: $newNumBuckets")
     requireUnfrozen(replicaDir)
-    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
+    val (v, m) = currentManifest(replicaDir).getOrElse(return)
     // routing is a pure function of the RECORDED columns: recorded
     // bucketCols alone route and idCols is ignored, so any caller value
     // is safe; otherwise the recorded keyCols route and the caller's
@@ -3085,16 +2663,15 @@ object CdcStream {
     if (m.numBuckets == newNumBuckets) return
     if (m.buckets.isEmpty && m.deltas.isEmpty)
       // empty store: flip the count with a manifest-only commit
-      publishVersion(replicaDir, newStagingDir(replicaDir), f"v${v + 1}%09d",
-        m.copy(numBuckets = newNumBuckets), Some(m), Some(name),
-        forbidFrozen = true, kind = "reshard")
+      ReplicaStore.commit(replicaDir, Some((v, m)), "reshard", fenced = true)(
+        _ => Some(m.copy(numBuckets = newNumBuckets)))
     // pending merge-on-read deltas FOLD into the reshard (it is a full
     // rewrite anyway — refusing would only force an extra compaction
     // pass over the same bytes); keepDeletes keeps the rewrite
     // content-faithful, so tombstones and their order values survive
-    else rewriteStore(spark, replicaDir, v, name, m,
+    else rewriteStore(spark, replicaDir, v, m,
       mergedBucketRead(spark, replicaDir, m, keepDeletes = true),
-      newNumBuckets, Some(m), "reshard")
+      newNumBuckets, "reshard")
   }
 
   /** Rewrite a store's whole state `source` — content-identical, the
@@ -3107,28 +2684,19 @@ object CdcStream {
     * [[upgradeReplica]].
     */
   private def rewriteStore(spark: org.apache.spark.sql.SparkSession,
-      replicaDir: String, v: Long, name: String, m: ReplicaManifest,
-      source: Option[DataFrame], numBuckets: Int,
-      prev: Option[ReplicaManifest], kind: String): Unit = {
-    val nextName = f"v${v + 1}%09d"
-    val staging = newStagingDir(replicaDir)
-    source.getOrElse(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema))
-      .withColumn("__bucket",
-        pmod(hash(m.routing.map(col): _*), lit(numBuckets)))
-      .repartition(numBuckets, col("__bucket"))
-      .write.partitionBy("__bucket").parquet(s"$staging/data")
-    publishVersion(replicaDir, staging, nextName,
-      m.copy(numBuckets = numBuckets,
-        buckets = bucketDirs(s"$staging/data")
-          .map(k => k -> s"$nextName/data/__bucket=$k").toMap,
-        schema = withTombstoneIn(m.schema, source),
-        deltas = Map.empty, deltasConditional = false,
-        tombstoneMins = m.condOrderCols
-          .map(stagedTombstoneMins(spark, s"$staging/data", _))
-          .getOrElse(Map.empty)),
-      prev, Some(name), forbidFrozen = true, kind = kind)
-  }
+      replicaDir: String, v: Long, m: ReplicaManifest,
+      source: Option[DataFrame], numBuckets: Int, kind: String): Unit =
+    ReplicaStore.commit(replicaDir, Some((v, m)), kind, fenced = true) { txn =>
+      source.getOrElse(spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), m.schema))
+        .withColumn("__bucket",
+          pmod(hash(m.routing.map(col): _*), lit(numBuckets)))
+        .repartition(numBuckets, col("__bucket"))
+        .write.partitionBy("__bucket").parquet(txn.path("data"))
+      Some(txn.rewritten(spark, m.copy(numBuckets = numBuckets,
+          buckets = Map.empty, deltas = Map.empty, tombstoneMins = Map.empty),
+        (0 until numBuckets).toSet, source, minsBy = m.condOrderCols))
+    }
 
   /** UPGRADE a store an older graft wrote into the current store format
     * — the one entry point that reads the older formats
@@ -3152,9 +2720,9 @@ object CdcStream {
       replicaDir: String, idCols: Seq[String],
       orderCols: Seq[Column] = Nil): Unit = {
     requireUnfrozen(replicaDir)
-    val (v, name) = currentVersion(replicaDir).getOrElse(return)
-    if (readManifest(replicaDir, name).nonEmpty) return
-    val raw = parseManifest(replicaDir, name)
+    val v = currentVersion(replicaDir).getOrElse(return)
+    if (readManifest(replicaDir, v).nonEmpty) return
+    val raw = parseManifest(replicaDir, v)
     // the flat layout: no manifest, the version dir holds the rows
     val old = raw.getOrElse(ReplicaManifest(DefaultReplicaBuckets,
       Map.empty, new StructType(), Nil, "", ""))
@@ -3165,7 +2733,7 @@ object CdcStream {
     val paths = raw match {
       case Some(_) => old.buckets.values.toSeq.sorted
         .map(p => resolveStorePath(replicaDir, p))
-      case None => Seq(s"$replicaDir/$name")
+      case None => Seq(versionDir(replicaDir, v).getPath)
     }
     val schema =
       if (old.schema.nonEmpty || paths.isEmpty) old.schema
@@ -3194,8 +2762,7 @@ object CdcStream {
     val source =
       if (raw.isEmpty) Some(spark.read.schema(schema).parquet(paths: _*))
       else mergedBucketRead(spark, replicaDir, m, keepDeletes = true)
-    rewriteStore(spark, replicaDir, v, name, m, source, m.numBuckets,
-      Some(m), "upgrade")
+    rewriteStore(spark, replicaDir, v, m, source, m.numBuckets, "upgrade")
   }
 
   /** COMPLIANCE ERASURE (right-to-be-forgotten — the Delta
@@ -3231,7 +2798,7 @@ object CdcStream {
       replicaDir: String, idCols: Seq[String], keys: DataFrame): Unit = {
     import org.apache.spark.sql.functions.lit
     requireUnfrozen(replicaDir)
-    val (v, name, m) = currentManifest(replicaDir).getOrElse(return)
+    val (v, m) = currentManifest(replicaDir).getOrElse(return)
     // type-faithful keys (Catalyst hash is type-sensitive — same rule
     // as the pruned lookup path)
     val types = m.schema.fields.map(f => f.name -> f.dataType).toMap
@@ -3254,64 +2821,50 @@ object CdcStream {
     val rewrite = m.buckets.filter { case (k, _) => touched(k) }
     val touchedDeltas = m.deltas.keySet.filter(touched)
     if (rewrite.nonEmpty || touchedDeltas.nonEmpty) {
-      val nextName = f"v${v + 1}%09d"
-      val staging = newStagingDir(replicaDir)
       // no broadcast hint: a routine GDPR batch is small (AQE
       // broadcasts it), but a bulk takedown can carry millions of
       // keys — that case must be allowed to shuffle
       val folded =
         if (touchedDeltas.isEmpty) None
         else mergedBucketRead(spark, replicaDir, m, touched, keepDeletes = true)
-      if (touchedDeltas.isEmpty) {
-        rewrite.toSeq.sortBy(_._1)
-          .map { case (k, p) =>
-            spark.read.schema(m.schema)
-              .parquet(resolveStorePath(replicaDir, p))
-              .join(keysM, idCols, "left_anti")
-              .withColumn("__bucket", lit(k)) }
-          .reduce(_.unionByName(_))
-          .repartition(rewrite.size, col("__bucket"))
-          .write.partitionBy("__bucket").parquet(s"$staging/data")
-      } else {
-        // touched buckets hold pending merge-on-read deltas: the
-        // erasure rewrite FOLDS them (the same content-faithful fold
-        // compaction runs — keepDeletes keeps surviving keys'
-        // tombstones and their late-loser protection), anti-joins the
-        // keys, and drops those buckets' delta lists in the SAME
-        // commit. Every pre-fold copy — base and delta — purges below.
-        val routeBy = pmod(hash(m.routing.map(col): _*), lit(m.numBuckets))
-        folded.foreach { r =>
-          r.join(keysM, idCols, "left_anti")
-            .withColumn("__bucket", routeBy)
-            .repartition(math.max(touched.size, 1), col("__bucket"))
-            .write.partitionBy("__bucket").parquet(s"$staging/data")
+      ReplicaStore.commit(replicaDir, Some((v, m)), "erase", fenced = true) { txn =>
+        if (touchedDeltas.isEmpty) {
+          rewrite.toSeq.sortBy(_._1)
+            .map { case (k, p) =>
+              spark.read.schema(m.schema)
+                .parquet(resolveStorePath(replicaDir, p))
+                .join(keysM, idCols, "left_anti")
+                .withColumn("__bucket", lit(k)) }
+            .reduce(_.unionByName(_))
+            .repartition(rewrite.size, col("__bucket"))
+            .write.partitionBy("__bucket").parquet(txn.path("data"))
+        } else {
+          // touched buckets hold pending merge-on-read deltas: the
+          // erasure rewrite FOLDS them (the same content-faithful fold
+          // compaction runs — keepDeletes keeps surviving keys'
+          // tombstones and their late-loser protection), anti-joins the
+          // keys, and drops those buckets' delta lists in the SAME
+          // commit. Every pre-fold copy — base and delta — purges below.
+          val routeBy = pmod(hash(m.routing.map(col): _*), lit(m.numBuckets))
+          folded.foreach { r =>
+            r.join(keysM, idCols, "left_anti")
+              .withColumn("__bucket", routeBy)
+              .repartition(math.max(touched.size, 1), col("__bucket"))
+              .write.partitionBy("__bucket").parquet(txn.path("data"))
+          }
         }
+        Some(txn.rewritten(spark, m, touched, folded, minsBy = m.condOrderCols))
       }
-      val written = touched.filter { k =>
-        new java.io.File(s"$staging/data/__bucket=$k").isDirectory
-      }
-      val newBuckets = (m.buckets -- touched) ++ written
-        .map(k => k -> s"$nextName/data/__bucket=$k")
-      val remainingDeltas = m.deltas -- touched
-      val newMins = (m.tombstoneMins -- touched) ++ m.condOrderCols
-        .map(stagedTombstoneMins(spark, s"$staging/data", _)).getOrElse(Map.empty)
-      publishVersion(replicaDir, staging, nextName,
-        m.copy(buckets = newBuckets,
-          schema = withTombstoneIn(m.schema, folded),
-          deltas = remainingDeltas,
-          deltasConditional = remainingDeltas.nonEmpty && m.deltasConditional,
-          tombstoneMins = newMins),
-        Some(m), Some(name), forbidFrozen = true, kind = "erase")
     }
     // 2: purge historical on-disk copies of the touched buckets —
     // base files AND pending delta files (their lists dropped from the
     // manifest above, so nothing references them)
     val referenced: Set[String] = currentManifest(replicaDir)
-      .map { case (_, _, mm) => mm.buckets.values.toSet ++ mm.deltas.values.flatten }
+      .map { case (_, mm) => mm.refs.toSet }
       .getOrElse(Set.empty)
     replicaVersions(replicaDir).foreach { vv =>
       touched.foreach { k =>
-        Seq(f"v$vv%09d/data/__bucket=$k", f"v$vv%09d/delta/__bucket=$k")
+        Seq("data", "delta").map(sub => s"${versionName(vv)}/$sub/__bucket=$k")
           .foreach { rel =>
             if (!referenced(rel))
               FileUtils.deleteQuietly(new java.io.File(s"$replicaDir/$rel"))
@@ -3349,7 +2902,7 @@ object CdcStream {
       val t = df.schema(c).dataType
       if (t != keyTypes(c) && !isTypeWidening(t, keyTypes(c)))
         throw new IllegalStateException(
-          f"eraseKeys: feed version v$vv%09d of $replicaDir stores key " +
+          s"eraseKeys: feed version ${versionName(vv)} of $replicaDir stores key " +
             s"column `$c` as ${t.simpleString}, which is neither the " +
             s"store's ${keyTypes(c).simpleString} nor a widening of it — " +
             "the scrub cannot match its keys exactly; repair that feed " +
@@ -3380,314 +2933,6 @@ object CdcStream {
     } finally dropKeys()
   }
 
-  /** Crashed writers' debris in a store's root — what the commit sweep
-    * deletes and [[fsckReplica]] reports: a staging dir, an aside-renamed
-    * orphan, a broken lock, or an [[AtomicFiles]] tmp file whose newest
-    * mtime anywhere under it is over an hour old. Live writers keep
-    * their staging trees fresh and finish lock breaks and metadata
-    * writes in milliseconds, so only a dead writer's leftovers qualify.
-    */
-  private def isStaleDebris(f: java.io.File, now: Long): Boolean = {
-    def newestMtime(f: java.io.File): Long =
-      Option(f.listFiles()).getOrElse(Array.empty)
-        .foldLeft(f.lastModified())((m, c) => math.max(m, newestMtime(c)))
-    Seq(".staging-", ".gc-", ".commit-lock-broken-", AtomicFiles.TmpPrefix)
-      .exists(f.getName.startsWith) && now - newestMtime(f) > 3600L * 1000
-  }
-
-  /** A fresh staging directory under `replicaDir` for a writer to
-    * assemble its version in. Hidden from readers (only `v*` dirs are
-    * version-visible) and GC'd when stale (a crashed writer's debris).
-    */
-  private def newStagingDir(replicaDir: String): String = {
-    val p = java.nio.file.Paths.get(replicaDir,
-      s".staging-${System.nanoTime()}-${stagingCounter.incrementAndGet()}")
-    java.nio.file.Files.createDirectories(p)
-    p.toString
-  }
-
-  /** Commit the version assembled in `stagingDir` as `nextName` —
-    * OPTIMISTIC CONCURRENCY, Delta-commit style. The whole commit
-    * (validate → claim name → flip pointer) runs under a writer-only
-    * lock file, and contains ONLY fast metadata operations — the data
-    * write happened into the staging dir before this was called:
-    *
-    *  1. the manifest is written INTO the staging dir, so the directory
-    *     is complete before it becomes visible;
-    *  2. under the lock, the COMPARE-AND-SWAP check runs FIRST:
-    *     CURRENT must still equal the version this commit was based
-    *     on. A competitor that committed since — whether or not its
-    *     version dir is visible yet — fails this check, and the loser
-    *     deletes only its OWN staging (never a directory another
-    *     writer renamed). On a real metastore this check-and-flip is
-    *     one CAS;
-    *  3. if the target name already exists while CURRENT is unchanged,
-    *     it can only be a CRASHED writer's complete-but-unpublished
-    *     orphan (died between rename and flip, holding no lock —
-    *     live commits are serialized by the lock, so a mid-commit
-    *     competitor is never mistaken for an orphan): rename it aside
-    *     and claim the name (the aside dir is deleted after release);
-    *  4. the staging dir atomically RENAMES to the target and the
-    *     CURRENT pointer flips atomically; then version dirs
-    *     referenced by NEITHER the new manifest NOR the previous one
-    *     are GC'd (a concurrent reader that resolved CURRENT just
-    *     before the flip is still scanning the previous version's
-    *     buckets — one version of grace). Best effort; failure leaves
-    *     garbage, not loss. Stale staging debris is swept by DEEP
-    *     newest-mtime (a slow writer streaming files into a staging
-    *     subtree keeps it alive; the root dir's own mtime would go
-    *     stale mid-write).
-    *
-    * The lock file is stale-broken after 60 s — far above the
-    * metadata-only critical section, so only a crashed writer's lock
-    * is ever broken. The break is ITSELF race-free: the breaker
-    * atomically RENAMES the observed stale lock aside (exactly one
-    * breaker wins the rename; losers retry against the fresh lock),
-    * each lock carries an owner token so release never deletes a
-    * successor's lock, and data-sized deletions (an orphan's version
-    * dir) happen OUTSIDE the lock — inside it the orphan is renamed
-    * aside, a metadata op. Post-flip GC only considers version numbers
-    * at or below this commit's, so a competitor's newer commit can
-    * never be swept by a stale retain set.
-    */
-  private def publishVersion(replicaDir: String, stagingDir: String,
-      nextName: String, next: ReplicaManifest, prev: Option[ReplicaManifest],
-      curName: Option[String], forbidFrozen: Boolean = false,
-      /** Commit classification recorded in the manifest ("merge" /
-        * "compact" / "reshard" / "erase" / "restore" / "clone") —
-        * never copied from the previous manifest, so every version
-        * states what produced IT. "merge" is the safe default: a
-        * changeless merge refuses a follower drain
-        * ([[replayFeedInto]]), so an unclassified new path fails
-        * loud, not silent.
-        */
-      kind: String = "merge",
-      /** PREPARE-ONLY commit (phase 1 of the cross-store atomic flip,
-        * [[flipPreparedVersion]]): do everything through the version-
-        * dir claim — staging assembled, manifest written, conflict
-        * checks, the claim rename — but leave CURRENT untouched. The
-        * prepared version is invisible to every reader until its flip;
-        * an abandoned prepare is a claimed-but-unpublished orphan the
-        * next commit renames aside (the existing crashed-writer
-        * machinery). The post-flip GC sweep is skipped — it belongs to
-        * the flip's view of the store.
-        */
-      flipPointer: Boolean = true): Unit = {
-    import java.nio.charset.StandardCharsets.UTF_8
-    import java.nio.file.StandardCopyOption.ATOMIC_MOVE
-    CommitFaults.hit(replicaDir, CommitFaults.Entry)
-    writeManifestTo(java.nio.file.Paths.get(stagingDir),
-      next.copy(commitKind = kind))
-    val target = java.nio.file.Paths.get(replicaDir, nextName)
-    val lock = java.nio.file.Paths.get(replicaDir, ".commit-lock")
-    val ownerToken = java.util.UUID.randomUUID().toString
-    def tryCreate(): Boolean =
-      try {
-        java.nio.file.Files.write(lock, ownerToken.getBytes(UTF_8),
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    def acquire(): Boolean =
-      tryCreate() || {
-        if (System.currentTimeMillis() - lock.toFile.lastModified > 60000L) {
-          // Read the observed-stale lock's identity BEFORE breaking:
-          // the staleness check races against a concurrent
-          // break-and-reacquire, so by the time our aside-rename lands
-          // the path may hold a successor's LIVE lock. The rename is
-          // atomic (of N breakers exactly one wins; losers fail the
-          // move and retry the fresh lock), and it preserves both the
-          // file's content and its mtime — so AFTER the move we verify
-          // we moved what we measured: same owner token AND still a
-          // stale mtime (a live lock is created fresh, so a
-          // stale-mtime aside file is provably a crashed writer's).
-          val staleToken =
-            try Some(new String(java.nio.file.Files.readAllBytes(lock), UTF_8))
-            catch { case _: java.io.IOException => None }
-          CommitFaults.hit(replicaDir, CommitFaults.LockBreak)
-          val aside = java.nio.file.Paths.get(replicaDir,
-            s".commit-lock-broken-${System.nanoTime()}")
-          // token unreadable = the owner released between our checks:
-          // the path is (momentarily) free, so just try a fresh create
-          staleToken.isEmpty && tryCreate() || staleToken.nonEmpty && {
-            try {
-              java.nio.file.Files.move(lock, aside, ATOMIC_MOVE)
-              val movedToken =
-                new String(java.nio.file.Files.readAllBytes(aside), UTF_8)
-              val movedStale =
-                System.currentTimeMillis() - aside.toFile.lastModified > 60000L
-              if (staleToken.contains(movedToken) && movedStale) {
-                java.nio.file.Files.deleteIfExists(aside)
-                tryCreate()
-              } else {
-                // we stole a successor's live lock: hand it back. We
-                // hold the aside file exclusively, but a third writer
-                // may transiently claim the now-free path; its
-                // critical section is sub-second metadata work, so
-                // retry the restore briefly rather than leave two
-                // writers believing they are serialized. The restore
-                // publishes via a HARD LINK, not a rename: link(2)
-                // FAILS atomically if the path is taken (rename(2)
-                // would silently REPLACE a third writer's fresh
-                // lock), so a claimed path is waited out, never
-                // clobbered. If the restore cannot land, abort the
-                // acquire (conflict); the aside file ages into the
-                // stale-debris sweep and the displaced owner's
-                // token-guarded release never touches a stranger's
-                // lock.
-                var restored = false
-                var tries = 0
-                while (!restored && tries < 200) {
-                  restored =
-                    try {
-                      java.nio.file.Files.createLink(lock, aside)
-                      java.nio.file.Files.deleteIfExists(aside)
-                      true
-                    } catch { case _: java.io.IOException => false }
-                  if (!restored) { tries += 1; Thread.sleep(10) }
-                }
-                false
-              }
-            } catch { case _: java.io.IOException => false }
-          }
-        } else false
-      }
-    // a losing writer deletes ONLY its own staging — never the target
-    // name, which past this point may belong to a competitor
-    def conflict(msg: String): Nothing = {
-      FileUtils.deleteQuietly(new java.io.File(stagingDir))
-      throw new ConcurrentReplicaWriteException(
-        s"replica $replicaDir: $msg; re-run this batch against the new " +
-          "current version")
-    }
-    if (!acquire()) conflict("another writer is mid-commit")
-    // data-sized deletions deferred to after the lock is released
-    var orphanAside: Option[java.nio.file.Path] = None
-    try {
-      // fence re-check INSIDE the critical section: entry-time checks
-      // leave a window where a long-running writer commits behind a
-      // fence raised mid-flight ([[freezeReplica]] waits this lock out,
-      // so marker-write happens-before any commit that gets here after
-      // the fence)
-      if (forbidFrozen) replicaFrozen(replicaDir).foreach { r =>
-        FileUtils.deleteQuietly(new java.io.File(stagingDir))
-        throw new IllegalStateException(
-          s"replica $replicaDir is FROZEN ($r): writes are fenced during " +
-            "failover — resyncAsFollower to rejoin as a follower, or " +
-            "unfreezeReplica to force")
-      }
-      val nowCur = currentVersion(replicaDir).map(_._2)
-      if (nowCur != curName)
-        conflict(s"based on ${curName.getOrElse("<empty>")} but current " +
-          s"is now ${nowCur.getOrElse("<empty>")}")
-      // CURRENT is unchanged and commits serialize under the lock, so
-      // an existing target is a crashed writer's unpublished orphan.
-      // Rename it aside (metadata-only — the recursive delete of a
-      // data-sized dir must not run while holding the lock) and delete
-      // it after release.
-      if (java.nio.file.Files.exists(target)) {
-        val aside = java.nio.file.Paths.get(replicaDir,
-          s".gc-${System.nanoTime()}")
-        try {
-          java.nio.file.Files.move(target, aside, ATOMIC_MOVE)
-          orphanAside = Some(aside)
-        } catch { case _: java.io.IOException => () }
-      }
-      try java.nio.file.Files.move(java.nio.file.Paths.get(stagingDir), target,
-        ATOMIC_MOVE)
-      catch {
-        case e: java.nio.file.FileSystemException =>
-          conflict(s"could not claim version dir $nextName (${e.getMessage})")
-      }
-      CommitFaults.hit(replicaDir, CommitFaults.Claim)
-      if (flipPointer) flipCurrent(replicaDir, nextName)
-    } finally {
-      // release only OUR lock: if it went stale (>60 s — impossible for
-      // this metadata-only section short of a machine-level stall) and
-      // a successor broke it, the token no longer matches and the
-      // successor's lock is left alone
-      try {
-        if (new String(java.nio.file.Files.readAllBytes(lock), UTF_8) == ownerToken)
-          java.nio.file.Files.deleteIfExists(lock)
-      } catch { case _: java.io.IOException => () }
-    }
-    orphanAside.foreach(p => FileUtils.deleteQuietly(p.toFile))
-    // a PREPARED commit changes no reader-visible state — the sweep
-    // below reasons from a flipped pointer's view; the NEXT ordinary
-    // commit's sweep collects whatever the prepared version supersedes
-    if (!flipPointer) return
-    def refs(m: Option[ReplicaManifest]): Set[String] =
-      m.map(mm => (mm.buckets.values ++ mm.deltas.values.flatten)
-        .map(_.takeWhile(_ != '/')).toSet).getOrElse(Set.empty)
-    val retain = refs(Some(next)) ++ refs(prev) + nextName + curName.getOrElse("")
-    val myV = nextName.stripPrefix("v").toLong
-    // clone-aware retention pin: version dirs at or above the pinned
-    // floor are never swept ([[pinReplicaRetention]])
-    val pinFloor = retentionPin(replicaDir)
-    val now = System.currentTimeMillis()
-    Option(new java.io.File(replicaDir).listFiles()).getOrElse(Array.empty)
-      .filter { f =>
-        // the retain set was computed from THIS commit's view — a
-        // competitor may have committed a NEWER version since the
-        // flip, so only versions at or below ours are GC candidates
-        (f.isDirectory && f.getName.matches("v[0-9]{9}") &&
-          f.getName.stripPrefix("v").toLong <= myV &&
-          !retain.contains(f.getName) &&
-          !pinFloor.exists(f.getName.stripPrefix("v").toLong >= _)) ||
-          isStaleDebris(f, now)
-      }
-      .foreach { f =>
-        // FEED RETENTION decoupled from data GC (the Delta-CDF
-        // contract: OPTIMIZE never shortens the change feed; only
-        // VACUUM/truncate does): before a version dir dies, its feed
-        // surface — the changes dir plus the kind/watermark the feed
-        // classification and stamping need — retires into `_feed/`.
-        if (f.isDirectory && f.getName.matches("v[0-9]{9}"))
-          retireVersionToFeed(replicaDir, f)
-        FileUtils.deleteQuietly(f)
-      }
-  }
-
-  /** Move a GC-candidate version dir's feed surface to
-    * `<replicaDir>/_feed/<vname>/`: the `changes` dir (atomic rename —
-    * delta-sized data, zero copy) and a `meta.json` carrying the
-    * manifest's `commitKind` + `watermark` (what
-    * [[readReplicaChanges]]'s changeless-version classification and
-    * `_commit_watermark` stamping read once the manifest is gone).
-    * Crash order: changes move first, then meta — a half-retired
-    * version serves its changes from `_feed` (the read path checks
-    * both locations), and classification is only consulted for
-    * CHANGELESS versions, whose retire is meta-only. Best effort like
-    * the GC itself: failure leaves the version dir in place (the
-    * delete below it still runs — worst case the feed gains a gap, the
-    * same outcome as pre-retention GC, never corruption).
-    */
-  private def retireVersionToFeed(replicaDir: String,
-      versionDir: java.io.File): Unit =
-    try {
-      val name = versionDir.getName
-      val target = java.nio.file.Paths.get(replicaDir, "_feed", name)
-      java.nio.file.Files.createDirectories(target)
-      // the changes dir, and the clone provenance: it outlives its
-      // (data-less) initial version dir — [[cloneProvenance]] and
-      // DESCRIBE HISTORY read it from `_feed` once the dir is gone
-      // (without this, ONE post-clone commit's GC erased the store's
-      // branch ancestry)
-      Seq("changes", "_clone.json").map(f => (versionDir.toPath.resolve(f),
-          target.resolve(f)))
-        .filter { case (from, to) =>
-          java.nio.file.Files.exists(from) && !java.nio.file.Files.exists(to)
-        }
-        .foreach { case (from, to) => java.nio.file.Files.move(from, to,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE) }
-      if (!java.nio.file.Files.exists(target.resolve("meta.json"))) {
-        val m = readManifest(replicaDir, name)
-        val n = Json.createObjectNode()
-        m.map(_.commitKind).foreach(n.put("kind", _))
-        m.flatMap(_.watermark).foreach(n.put("watermark", _))
-        AtomicFiles.replaceJson(target.resolve("meta.json"), n)
-      }
-    } catch { case _: java.io.IOException => () }
-
   /** Apply one CDC micro-batch to the bucketed versioned parquet
     * replica (idCols upsert + delete) — `foreachBatch` body reproducing
     * the reference's downstream partition-scoped `MERGE` pattern
@@ -3697,8 +2942,8 @@ object CdcStream {
     * (which brings real atomic commit); the versioned-pointer swap
     * keeps the test environment dependency-free while staying
     * crash-safe.
-    */
-  /** @param conditionalOrder when true, the merge is ORDER-CONDITIONAL
+    *
+    * @param conditionalOrder when true, the merge is ORDER-CONDITIONAL
     *   (the Delta `whenMatched(newer)` / Debezium version-compare
     *   shape): per key, the row with the GREATEST `orderCols` value
     *   among {stored row, batch net} wins, with the incoming row
@@ -3711,8 +2956,7 @@ object CdcStream {
     *   records the merge's OUTCOME: only incoming winners (their
     *   original op, deletes included) — a conditionally LOSING row
     *   appears nowhere, so feed replay stays state-faithful.
-    */
-  /** @param bucketCols optional PROPER SUBSET of `idCols` to hash-route
+    * @param bucketCols optional PROPER SUBSET of `idCols` to hash-route
     *   rows by (recorded in the manifest at creation, ignored on an
     *   existing replica). Routing by a subset clusters every row
     *   sharing the subset's values into one bucket, so equality
@@ -3737,8 +2981,7 @@ object CdcStream {
         * [[applyNetToReplica]]). */
       kind: String = "merge",
       /** Phase-1 (prepare-only) commit for the cross-store atomic flip
-        * — see [[publishVersion]]'s `flipPointer` and
-        * [[flipPreparedVersion]]. */
+        * — see [[flipPreparedVersion]]. */
       prepareOnly: Boolean = false): Option[Long] = {
     bucketCols.foreach(_.filterNot(idCols.contains).foreach(c =>
       throw new IllegalArgumentException(
@@ -3793,14 +3036,14 @@ object CdcStream {
     * is pinned to.
     */
   private final case class CommitPlan(
-      cur: Option[(Long, String)],
-      prev: Option[ReplicaManifest],
+      base: Option[(Long, ReplicaManifest)],
       netT: DataFrame,
       dataCols: Array[String],
       nb: Int,
       resolvedBucketCols: Option[Seq[String]],
       bc: Seq[String],
       metaOrd: Option[Seq[String]]) {
+    def prev: Option[ReplicaManifest] = base.map(_._2)
     def bucketOf: Column = pmod(hash(bc.map(col): _*), lit(nb))
   }
 
@@ -3815,9 +3058,8 @@ object CdcStream {
     val dataCols = batchCols.filterNot(_ == opCol)
 
     new java.io.File(replicaDir).mkdirs()
-    val resolved = currentManifest(replicaDir)
-    val cur = resolved.map { case (v, name, _) => (v, name) }
-    val prev = resolved.map(_._3)
+    val base = currentManifest(replicaDir)
+    val prev = base.map(_._2)
     // type-faithful net — see [[castNetToStore]]. The cast runs HERE,
     // for every entry point (a net a caller pre-cast under an
     // equal-or-narrower snapshot re-casts losslessly, the widening
@@ -3853,7 +3095,7 @@ object CdcStream {
         s"replica $replicaDir orders conditionally by " +
           s"(${rec.mkString(",")}) but the batch passed (${ns.mkString(",")})"))
     }
-    CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols,
+    CommitPlan(base, netT, dataCols, nb, resolvedBucketCols,
       resolvedBucketCols.getOrElse(idCols),
       prev.flatMap(_.condOrderCols).orElse(condNames))
   }
@@ -3875,14 +3117,6 @@ object CdcStream {
     def value: Set[Int] = ids
   }
 
-  /** Bucket ids of a `partitionBy("__bucket")` write, from its
-    * partition dirs.
-    */
-  private def bucketDirs(dir: String): Set[Int] =
-    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
-      .map(_.getName.stripPrefix("__bucket=").toInt).toSet
-
   /** One EAGER commit of a per-key net into one store, in three steps
     * so a caller can run its Spark jobs beside other stores' commits
     * and publish it later:
@@ -3895,41 +3129,36 @@ object CdcStream {
     *     dir: the touched buckets' rewrite, and the feed entry of a
     *     conditional merge;
     *  3. [[publish]] is metadata only: the net files become the feed
-    *     entry (or go), then [[publishVersion]] claims the version and
+    *     entry (or go), then the transaction claims the version and
     *     flips the pointer.
     *
     * [[abort]] deletes an unpublished staging dir. One a crashed writer
     * leaves behind is debris the store's commits sweep once stale.
     */
   private[streaming] final class EagerCommit private[CdcStream] (
-      val replicaDir: String,
       p: CommitPlan,
-      staging: String,
+      txn: ReplicaStore.Txn,
       batchCols: Array[String],
       val idCols: Seq[String],
       opCol: String,
-      /** The net: one row per key, cast to the store's types. */
-      val net: DataFrame,
       /** The buckets the net's rows route to. */
       val touched: Set[Int],
       watermark: Option[Long],
       recordChanges: Boolean,
       conditional: Option[Seq[Column]],
-      bypassFreeze: Boolean,
-      kind: String,
       prepareOnly: Boolean) {
 
-    private def curName: Option[String] = p.cur.map(_._2)
+    def replicaDir: String = txn.dir
+
+    /** The net: one row per key, cast to the store's types. */
+    val net: DataFrame = p.netT
 
     /** The manifest the commit routed against. */
     private[CdcStream] def base: Option[ReplicaManifest] = p.prev
 
-    @volatile private var staged: Option[ReplicaManifest] = None
-    @volatile private var published = false
-
     def stage(): Unit = {
-      val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
-        metaOrd) = p
+      val CommitPlan(_, netT, dataCols, nb, resolvedBucketCols, _, metaOrd) = p
+      val prev = p.prev
       val spark = net.sparkSession
       val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
       val touchedPaths = prevBuckets.collect {
@@ -4045,7 +3274,7 @@ object CdcStream {
         case None => merged.schema
       }
       mergedB.write.mode("overwrite").partitionBy("__bucket")
-        .parquet(s"$staging/data")
+        .parquet(txn.path("data"))
       // CHANGE FEED (opt-in, Delta-CDF shape): the version records its
       // own per-key NET — exactly the rows this commit applied, op
       // included — inside the version dir, so changes commit atomically
@@ -4061,66 +3290,32 @@ object CdcStream {
       if (recordChanges && conditional.nonEmpty)
         winners.filter(col("__incoming") === 1)
           .select(batchCols.toSeq.map(col): _*)
-          .write.parquet(s"$staging/changes")
+          .write.parquet(txn.path("changes"))
 
-      // buckets actually written (a delete can empty one entirely) —
-      // never outside the touched set the base read covered
-      val written = bucketDirs(s"$staging/data")
-      if (!written.subsetOf(touched))
-        throw new IllegalStateException(s"replica $replicaDir: merge wrote " +
-          s"bucket(s) ${(written -- touched).toSeq.sorted.mkString(",")} " +
-          "outside the net's recorded touched set")
-      val nextName = f"v${cur.map(_._1 + 1).getOrElse(1L)}%09d"
-      val newBuckets = (prevBuckets -- touched) ++
-        written.map(k => k -> s"$nextName/data/__bucket=$k")
-      // tombstone metadata for the rewritten buckets: one column-pruned
-      // agg over the files just written (never the store); untouched
-      // buckets keep their recorded mins. Maintained once the store has
+      // the written buckets (a delete can empty one entirely) replace
+      // the touched ones, and the rewrite FOLDS their deltas (the base
+      // read merged them); untouched buckets keep theirs. Tombstone
+      // mins of the rewritten buckets are re-derived once the store has
       // an order-column record.
-      val carried = prev.map(_.tombstoneMins).getOrElse(Map.empty) -- touched
-      val newMins: Map[Int, String] = metaOrd match {
-        case Some(ocs)
-          if conditional.nonEmpty ||
-            unionSchema.fieldNames.contains(Tombstone) =>
-          carried ++ stagedTombstoneMins(spark, s"$staging/data", ocs)
-        case _ => carried
-      }
-      val remainingDeltas = prev.map(_.deltas -- touched).getOrElse(Map.empty)
-      staged = Some(ReplicaManifest(nb, newBuckets, unionSchema,
-        keyCols = prev.map(_.keyCols).getOrElse(idCols),
-        opColName = prev.map(_.opColName).getOrElse(opCol),
-        commitKind = kind,
-        watermark = watermark,
-        bucketCols = resolvedBucketCols,
-        // an eager rewrite FOLDS the touched buckets' deltas (the base
-        // read merged them); untouched buckets keep theirs
-        deltas = remainingDeltas,
-        condOrderCols = metaOrd,
-        deltasConditional = remainingDeltas.nonEmpty &&
-          prev.exists(_.deltasConditional),
-        tombstoneMins = newMins))
-      CommitFaults.hit(replicaDir, CommitFaults.Stage)
+      val m = prev.getOrElse(ReplicaManifest(nb, Map.empty, unionSchema,
+        idCols, opCol, txn.kind, bucketCols = resolvedBucketCols))
+      txn.stage(txn.rewritten(spark, m.copy(schema = unionSchema,
+          watermark = watermark, condOrderCols = metaOrd),
+        touched, minsBy = metaOrd.filter(_ =>
+          conditional.nonEmpty || unionSchema.fieldNames.contains(Tombstone))))
     }
 
     /** Publish the staged version; returns its number. */
     def publish(): Option[Long] = {
-      val next = staged.getOrElse(throw new IllegalStateException(
-        s"replica $replicaDir: publish before stage"))
-      val netDir = java.nio.file.Paths.get(staging, "net")
+      val netDir = java.nio.file.Paths.get(txn.path("net"))
       if (recordChanges && conditional.isEmpty)
         java.nio.file.Files.move(netDir, netDir.resolveSibling("changes"),
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       else FileUtils.deleteQuietly(netDir.toFile)
-      val nextV = p.cur.map(_._1 + 1).getOrElse(1L)
-      publishVersion(replicaDir, staging, f"v$nextV%09d", next, p.prev,
-        curName, forbidFrozen = !bypassFreeze, kind = kind,
-        flipPointer = !prepareOnly)
-      published = true
-      Some(nextV)
+      Some(txn.publish(prepareOnly))
     }
 
-    def abort(): Unit =
-      if (!published) FileUtils.deleteQuietly(new java.io.File(staging))
+    def abort(): Unit = txn.close()
   }
 
   /** Start an eager commit ([[EagerCommit]]): resolve the manifest
@@ -4200,31 +3395,33 @@ object CdcStream {
       (p.nb, p.bc, p.bc.map(c => p.netT.schema(c).dataType))
     val p0 = plan(net)
     checked(p0)
-    val staging = newStagingDir(replicaDir)
+    val txn = new ReplicaStore.Txn(replicaDir, p0.base, kind, !bypassFreeze, None)
     try {
       val touched = new BucketSet
       spark.sparkContext.register(touched)
       val record = udf((b: Int) => { touched.add(b); true }).asNondeterministic()
       val reduced = reduceBy.fold(p0.netT)(lastOpPerKey(p0.netT, idCols, _))
-      reduced.filter(record(p0.bucketOf)).write.parquet(s"$staging/net")
+      reduced.filter(record(p0.bucketOf)).write.parquet(txn.path("net"))
       val written = graft.llm.IndexArtifacts.readWritten(spark,
-        s"$staging/net", reduced.schema)
+        txn.path("net"), reduced.schema)
       val p = plan(written)
       if (routing(p) != routing(p0)) {
         val again = routeNet(replicaDir, written, batchCols, idCols, opCol,
           numBuckets, watermark, recordChanges, conditional, bucketCols,
           bypassFreeze, kind, prepareOnly, defer = defer)
-        FileUtils.deleteQuietly(new java.io.File(staging))
+        txn.close()
         again
       } else {
-        if (p.cur != p0.cur) checked(p)
-        new EagerCommit(replicaDir, p, staging, batchCols, idCols, opCol,
-          p.netT, touched.value, watermark, recordChanges,
-          conditional, bypassFreeze, kind, prepareOnly)
+        if (p.base.map(_._1) != p0.base.map(_._1)) checked(p)
+        // the net's files name no version: the commit builds on the
+        // base read after they were written
+        txn.base = p.base
+        new EagerCommit(p, txn, batchCols, idCols, opCol, touched.value,
+          watermark, recordChanges, conditional, prepareOnly)
       }
     } catch {
       case e: Throwable =>
-        FileUtils.deleteQuietly(new java.io.File(staging))
+        txn.close()
         throw e
     }
   }
@@ -4282,8 +3479,8 @@ object CdcStream {
       val spark = net.sparkSession
       val p = planCommit(replicaDir, net, batchCols, idCols, opCol,
         numBuckets, conditional, bucketCols, bypassFreeze)
-      val CommitPlan(cur, prev, netT, dataCols, nb, resolvedBucketCols, _,
-        metaOrd) = p
+      val CommitPlan(_, netT, dataCols, nb, resolvedBucketCols, _, metaOrd) = p
+      val prev = p.prev
       val bucketOf = p.bucketOf
       // -------- DEFERRED (merge-on-read) commit: append the net as
       // per-bucket delta files — NO base read, NO base rewrite, and NO
@@ -4336,56 +3533,46 @@ object CdcStream {
       }
       prev.map(_.keyCols).foreach(k => require(k == idCols,
         s"deferMerge: replica records keyCols $k but batch uses $idCols"))
-      val prevBuckets = prev.map(_.buckets).getOrElse(Map.empty[Int, String])
-      val nextV = cur.map(_._1 + 1).getOrElse(1L)
-      val nextName = f"v$nextV%09d"
-      val staging = newStagingDir(replicaDir)
-      // hash-repartition by bucket id (no explicit count — no driver
-      // pre-collect): each bucket's rows land in exactly one shuffle
-      // partition, so partitionBy still writes one file per bucket
-      netT.withColumn("__bucket", bucketOf)
-        .repartition(col("__bucket"))
-        .write.partitionBy("__bucket").parquet(s"$staging/delta")
-      val written = bucketDirs(s"$staging/delta")
-      // net-empty batch: nothing to commit (same contract as eager)
-      if (written.isEmpty) {
-        FileUtils.deleteQuietly(new java.io.File(staging))
-        return None
-      }
-      // per-bucket exclusivity for sequence-folded deltas: a SEQUENCE-
-      // folded deferred commit must not land in a bucket holding
-      // conditional tombstones (its fold has no order compare — a
-      // tombstone's late-loser protection would silently drop). The
-      // touched buckets fall out of the write's own partition dirs, so
-      // the check costs no extra job
-      if (conditional.isEmpty && prev.exists(_.condOrderCols.nonEmpty)) {
-        val clash = written.toSet.intersect(
-          prev.map(_.tombstoneMins.keySet).getOrElse(Set.empty))
-        if (clash.nonEmpty) {
-          FileUtils.deleteQuietly(new java.io.File(staging))
-          throw new IllegalStateException(
-            s"deferMerge: bucket(s) ${clash.toSeq.sorted.mkString(",")} " +
-              "hold conditional tombstones a sequence fold cannot order " +
-              "against; compactReplica(tombstoneHorizon) first")
+      ReplicaStore.commit(replicaDir, p.base, kind, fenced = !bypassFreeze,
+          prepareOnly = prepareOnly) { txn =>
+        // hash-repartition by bucket id (no explicit count — no driver
+        // pre-collect): each bucket's rows land in exactly one shuffle
+        // partition, so partitionBy still writes one file per bucket
+        netT.withColumn("__bucket", bucketOf)
+          .repartition(col("__bucket"))
+          .write.partitionBy("__bucket").parquet(txn.path("delta"))
+        val written = bucketDirs(txn.path("delta"))
+        // net-empty batch: nothing to commit (same contract as eager)
+        if (written.isEmpty) None
+        else {
+          // per-bucket exclusivity for sequence-folded deltas: a SEQUENCE-
+          // folded deferred commit must not land in a bucket holding
+          // conditional tombstones (its fold has no order compare — a
+          // tombstone's late-loser protection would silently drop). The
+          // touched buckets fall out of the write's own partition dirs, so
+          // the check costs no extra job
+          if (conditional.isEmpty && prev.exists(_.condOrderCols.nonEmpty)) {
+            val clash = written.intersect(
+              prev.map(_.tombstoneMins.keySet).getOrElse(Set.empty))
+            if (clash.nonEmpty) throw new IllegalStateException(
+              s"deferMerge: bucket(s) ${clash.toSeq.sorted.mkString(",")} " +
+                "hold conditional tombstones a sequence fold cannot order " +
+                "against; compactReplica(tombstoneHorizon) first")
+          }
+          if (recordChanges) netT.write.parquet(txn.path("changes"))
+          val prevDeltas = prev.map(_.deltas).getOrElse(Map.empty[Int, Seq[String]])
+          val newDeltas = prevDeltas ++ written.map(k =>
+            k -> (prevDeltas.getOrElse(k, Seq.empty) :+ txn.ref("delta", k))).toMap
+          Some(ReplicaManifest(nb, prev.map(_.buckets).getOrElse(Map.empty),
+            prev.map(_.schema).getOrElse(netT.select(dataCols.map(col): _*).schema),
+            keyCols = idCols, opColName = opCol, commitKind = kind,
+            watermark = watermark, bucketCols = resolvedBucketCols,
+            deltas = newDeltas,
+            condOrderCols = metaOrd,
+            deltasConditional = conditional.nonEmpty,
+            tombstoneMins = prev.map(_.tombstoneMins).getOrElse(Map.empty)))
         }
       }
-      if (recordChanges) netT.write.parquet(s"$staging/changes")
-      val prevDeltas = prev.map(_.deltas).getOrElse(Map.empty[Int, Seq[String]])
-      val newDeltas = prevDeltas ++ written.map(k =>
-        k -> (prevDeltas.getOrElse(k, Seq.empty) :+
-          s"$nextName/delta/__bucket=$k")).toMap
-      publishVersion(replicaDir, staging, nextName,
-        ReplicaManifest(nb, prevBuckets,
-          prev.map(_.schema).getOrElse(netT.select(dataCols.map(col): _*).schema),
-          keyCols = idCols, opColName = opCol, commitKind = kind,
-          watermark = watermark, bucketCols = resolvedBucketCols,
-          deltas = newDeltas,
-          condOrderCols = metaOrd,
-          deltasConditional = conditional.nonEmpty,
-          tombstoneMins = prev.map(_.tombstoneMins).getOrElse(Map.empty)),
-        prev, cur.map(_._2), forbidFrozen = !bypassFreeze, kind = kind,
-        flipPointer = !prepareOnly)
-      Some(nextV)
     }
   }
 
@@ -4423,13 +3610,13 @@ object CdcStream {
     import java.nio.charset.StandardCharsets.UTF_8
     val spark = batch.sparkSession
     new java.io.File(viewDir).mkdirs()
-    val curName = currentVersion(viewDir).map(_._2)
-    def readView(name: String): DataFrame =
-      spark.read.parquet(s"$viewDir/$name/data")
-    val lastBatch: Long = curName.map(n => java.nio.file.Files.readString(
-      java.nio.file.Paths.get(viewDir, n, "batch")).trim.toLong).getOrElse(-1L)
-    if (batchId <= lastBatch) return readView(curName.get) // replayed batch
-    val nextName = f"v${curName.map(_.stripPrefix("v").toLong + 1).getOrElse(1L)}%09d"
+    val cur = currentVersion(viewDir)
+    def readView(v: Long): DataFrame =
+      spark.read.parquet(new java.io.File(versionDir(viewDir, v), "data").getPath)
+    val lastBatch: Long = cur.map(v => java.nio.file.Files.readString(
+      versionDir(viewDir, v).toPath.resolve("batch")).trim.toLong).getOrElse(-1L)
+    if (batchId <= lastBatch) return readView(cur.get) // replayed batch
+    val next = cur.fold(1L)(_ + 1)
     // CRASH-SAFE ORDER — the delta only makes sense against the
     // PRE-batch replica, so the pending view version (data, then its
     // `batch` completeness marker) is written BEFORE the replica
@@ -4441,7 +3628,7 @@ object CdcStream {
     //    (a post-apply recompute would double-count the delta),
     //    re-apply the batch (keyed-idempotent), and flip;
     //  - after the flip: the batchId guard above no-ops the replay.
-    val pendingBatch = java.nio.file.Paths.get(viewDir, nextName, "batch")
+    val pendingBatch = versionDir(viewDir, next).toPath.resolve("batch")
     val pendingComplete = java.nio.file.Files.exists(pendingBatch) &&
       java.nio.file.Files.readString(pendingBatch).trim.toLong == batchId
     if (!pendingComplete) {
@@ -4468,7 +3655,7 @@ object CdcStream {
             (coalesce(col("s"), lit(0L)) - coalesce(col("s_old"), lit(0L)))
               .as("d_s"))
       }
-      val prevView = curName.map(readView)
+      val prevView = cur.map(readView)
       val updated = prevView match {
         case None => delta.select(col("segment"), col("d_n").as("n_keys"),
           col("d_s").as("sum_cents"))
@@ -4480,20 +3667,17 @@ object CdcStream {
               .as("sum_cents"))
       }
       updated.filter(col("n_keys") > 0)
-        .write.mode("overwrite").parquet(s"$viewDir/$nextName/data")
+        .write.mode("overwrite").parquet(versionDir(viewDir, next).getPath + "/data")
       AtomicFiles.replace(pendingBatch, batchId.toString.getBytes(UTF_8))
     }
     // advance the per-key state; a replayed apply nets idempotent
     applyBatchToReplica(replicaDir, batch, idCols, orderCols, opCol,
       numBuckets)
-    AtomicFiles.replace(java.nio.file.Paths.get(viewDir, Pointer),
-      nextName.getBytes(UTF_8))
+    writePointer(viewDir, next)
     // previous view versions: keep one for in-flight readers, GC older
-    Option(new java.io.File(viewDir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v[0-9]{9}") &&
-        f.getName < curName.getOrElse(nextName))
-      .foreach(FileUtils.deleteQuietly)
-    readView(nextName)
+    versionDirs(viewDir).filter(_ < cur.getOrElse(next))
+      .foreach(v => FileUtils.deleteQuietly(versionDir(viewDir, v)))
+    readView(next)
   }
 
   // ------------------------------------------------- streaming SCD2

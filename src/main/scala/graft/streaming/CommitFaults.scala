@@ -14,13 +14,13 @@ import scala.jdk.CollectionConverters._
   * A point is addressed by a [[Site]]: the store's dir, the store's
   * commit ordinal, and the point. Ordinals count each store's commits
   * from 1, starting when the arming is made; a commit is one
-  * [[CdcStream]] publish or one prepared-version flip, and its ordinal
+  * [[ReplicaStore]] publish or one prepared-version flip, and its ordinal
   * is taken at its `entry`. Commits to one store serialize under its
   * lock, so a store's ordinal names the same commit on every run,
   * however its sibling stores' commits interleave.
   *
   * The points, in commit order:
-  *  - `stage`: an eager commit's Spark jobs are done, nothing is
+  *  - `stage`: a commit's body has written its data, nothing is
   *    published (addressed by the ordinal its publish will take);
   *  - `entry`: publish entry, nothing claimed;
   *  - `lockBreak`: between a stale lock's token read and its
@@ -66,6 +66,9 @@ private[graft] object CommitFaults {
         if (pending.remove(site)) actions(site)()
       }
 
+    /** Whether every armed action has run. */
+    def fired: Boolean = pending.isEmpty
+
     def disarm(): Unit = { armings.remove(this); () }
   }
 
@@ -97,14 +100,21 @@ private[graft] object CommitFaults {
     a.seen.asScala.toSeq
   }
 
+  /** What an [[armClaimKill]] kill throws. */
+  final class InjectedKill(message: String) extends RuntimeException(message)
+
+  /** Is `e`, or any of its causes, an [[armClaimKill]] kill? */
+  def isInjectedKill(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[InjectedKill])
+
   /** A deterministic mid-commit kill: the `n`-th commit to `storeDir`
     * from now throws at its claim — version dir renamed, pointer not
     * flipped, a genuinely torn commit — whatever the host's speed or
-    * the interleaving of other stores' commits. Returns the disarm.
+    * the interleaving of other stores' commits. The returned arming
+    * reports whether the kill [[Arming.fired]]; disarm it when done.
     */
-  def armClaimKill(storeDir: String, n: Int): () => Unit = {
-    val a = arm(storeDir, n, Claim)(throw new RuntimeException(
+  def armClaimKill(storeDir: String, n: Int): Arming =
+    arm(storeDir, n, Claim)(throw new InjectedKill(
       s"[test] injected mid-commit kill at claim of commit #$n to $storeDir"))
-    () => a.disarm()
-  }
 }

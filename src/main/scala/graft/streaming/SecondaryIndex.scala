@@ -427,10 +427,17 @@ object SecondaryIndex {
     require(specs.nonEmpty, "maintainIndexesFromFeed: at least one index")
     // BOTH refusal checks are pure metadata — run them before any
     // Spark job or materialization is paid for a call that rejects
-    if (!new java.io.File(primaryDir, f"v$version%09d/changes").isDirectory)
+    if (CdcStream.feedChangesDir(primaryDir, version).isEmpty)
       throw new IllegalStateException(
         s"maintainIndexesFromFeed: version $version of $primaryDir " +
           "recorded no changes — rebuild via buildIndex instead")
+    // the changes outlive a GC'd version dir in `_feed`, but the replay
+    // reads only live versions
+    if (!CdcStream.replicaVersions(primaryDir).contains(version))
+      throw new IllegalStateException(
+        s"maintainIndexesFromFeed: version $version of $primaryDir was " +
+          "GC'd (its changes survive only in the retained feed) — " +
+          "rebuild via buildIndex instead")
     // predecessor dir gone = the old values are unknowable — refuse
     // rather than accrete stale pointers forever
     if (version > 1 &&

@@ -28,6 +28,12 @@ object GraftColumnBridge {
   def sameTypeIgnoreNullability(a: org.apache.spark.sql.types.DataType,
       b: org.apache.spark.sql.types.DataType): Boolean = a.sameType(b)
 
+  /** `StructType.asNullable` is `private[spark]`: the schema a parquet
+    * read under an explicit schema returns.
+    */
+  def asNullable(t: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = t.asNullable
+
   /** `Dataset.ofRows` is `private[sql]` — needed to wrap a custom
     * logical plan node (graft's native as-of join) as a DataFrame.
     */

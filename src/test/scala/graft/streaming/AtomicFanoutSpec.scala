@@ -79,9 +79,9 @@ class AtomicFanoutSpec extends SparkSuite {
     // kill the users table's prepare (its commit #1) — between the two
     // tables' data commits, exactly the window the old protocol left
     // the first table visibly ahead in
-    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 1)
+    val kill = CommitFaults.armClaimKill(s"$root/shop/users", 1)
     try assert(injected(runAtomic(root)), "kill must land mid-prepare")
-    finally disarm()
+    finally kill.disarm()
     assert(ordersState(root).isEmpty && usersState(root).isEmpty,
       "a table became visible before the batch's atomic flip")
     assert(!new java.io.File(root, "_fanout_txn.json").exists(),
@@ -98,9 +98,9 @@ class AtomicFanoutSpec extends SparkSuite {
     // flips first — present order is sorted). Kill the users flip
     // (users commit #2): orders flipped, users prepared-but-pending,
     // intent durable.
-    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 2)
+    val kill = CommitFaults.armClaimKill(s"$root/shop/users", 2)
     try assert(injected(runAtomic(root)), "kill must land mid-flip")
-    finally disarm()
+    finally kill.disarm()
     assert(ordersState(root).contains(Map(1L -> 10L, 2L -> 20L)),
       "the first flip landed before the kill")
     assert(usersState(root).isEmpty, "the killed flip must not publish")
@@ -121,9 +121,9 @@ class AtomicFanoutSpec extends SparkSuite {
   test("a freeze raised between prepare and flip fences the pointer: " +
       "intent recovery refuses the demoted store") {
     val root = Files.createTempDirectory("atomic-fanout-frozen").toString
-    val disarm = CommitFaults.armClaimKill(s"$root/shop/users", 2)
+    val kill = CommitFaults.armClaimKill(s"$root/shop/users", 2)
     try assert(injected(runAtomic(root)), "kill must land mid-flip")
-    finally disarm()
+    finally kill.disarm()
     // failover demotes the pending table before recovery runs — the
     // flip must refuse exactly like publishVersion's in-lock fence
     CdcStream.freezeReplica(s"$root/shop/users")

@@ -370,14 +370,14 @@ class CommitFaultSweepSpec extends SparkSuite {
       "the e2e drill's deterministic kill primitive") {
     val root = freshRoot()
     commit(s"$root/p", b1) // before arming: not counted
-    val disarmKill = CommitFaults.armClaimKill(s"$root/p", 2)
+    val kill = CommitFaults.armClaimKill(s"$root/p", 2)
     try {
       commit(s"$root/other", b1) // another store's commit: not counted
       commit(s"$root/p", b2) // claim #1 — survives
       val e = intercept[RuntimeException] { commit(s"$root/p", b3) }
       assert(e.getMessage.contains("injected mid-commit kill"),
         s"unexpected: ${e.getMessage}")
-    } finally disarmKill()
+    } finally kill.disarm()
     // torn exactly at the claim point: version dir at its final name,
     // pointer NOT flipped
     assert(CdcStream.replicaCurrentVersion(s"$root/p").contains(2L))

@@ -93,9 +93,9 @@ class FsckSpec extends SparkSuite {
       "and a stale lock as stale_lock (warn)") {
     val dir = freshDir()
     commit(dir, b1)
-    val disarm = CommitFaults.armClaimKill(dir, 1)
+    val kill = CommitFaults.armClaimKill(dir, 1)
     try intercept[RuntimeException] { commit(dir, b2) }
-    finally disarm()
+    finally kill.disarm()
     val after = checks(dir)
     assert(after.get("orphan_version").contains("info"), s"$after")
     // plant a stale lock (the injected kill released its own)

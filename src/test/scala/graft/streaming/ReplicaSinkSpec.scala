@@ -430,6 +430,61 @@ class ReplicaSinkSpec extends SparkSuite {
     assert(df.filter($"user_id" === 999L).count() === 0)
   }
 
+  test("spark.read.format takes its schema from the manifest — the read's " +
+      "own schema for eager, deferred, conditional, version and watermark " +
+      "reads — and still refuses a store with no readable state at load") {
+    val root = Files.createTempDirectory("graft-read-schema").toString
+    def load(path: String, opts: (String, String)*) = opts
+      .foldLeft(spark.read.format("graft-replica").option("path", path)) {
+        case (r, (k, v)) => r.option(k, v) }
+      .load()
+    // nested and non-nullable columns: the parquet read makes them nullable
+    def batch(rows: Seq[(Long, String, Long, String)]) =
+      rows.toDF("id", "v", "seq", "op")
+        .withColumn("tags", array(lit(1L)))
+        .withColumn("meta", struct($"seq".as("s")))
+    def apply(dir: String, rows: Seq[(Long, String, Long, String)],
+        wm: Long = 0L, defer: Boolean = false, cond: Boolean = false,
+        extra: Boolean = false): Unit =
+      CdcStream.applyBatchToReplica(dir,
+        if (extra) batch(rows).withColumn("extra", $"seq" * 2) else batch(rows),
+        Seq("id"), Seq(col("seq")), numBuckets = 4, watermark = Some(wm),
+        deferMerge = defer, conditionalOrder = cond)
+    val b1 = Seq((1L, "a", 1L, "update"), (2L, "b", 1L, "update"))
+    val b2 = Seq((1L, "a2", 2L, "update"), (3L, "c", 2L, "update"))
+
+    // eager, its second commit adding a column
+    val eager = s"$root/eager"
+    apply(eager, b1, wm = 10L); apply(eager, b2, wm = 20L, extra = true)
+    assert(load(eager).schema === CdcStream.readReplica(spark, eager).get.schema)
+    assert(load(eager).schema.fieldNames.contains("extra"))
+    // versionAsOf and asOfWatermark serve the narrower first version
+    assert(load(eager, "version" -> "1").schema ===
+      CdcStream.readReplicaAt(spark, eager, 1L).get.schema)
+    assert(load(eager, "asOfWatermark" -> "15").schema ===
+      CdcStream.readReplicaAtWatermark(spark, eager, 15L).get.schema)
+    assert(!load(eager, "version" -> "1").schema.fieldNames.contains("extra"))
+
+    // deferred, with pending deltas
+    val deferred = s"$root/deferred"
+    apply(deferred, b1, defer = true); apply(deferred, b2, defer = true)
+    assert(load(deferred).schema === CdcStream.readReplica(spark, deferred).get.schema)
+
+    // conditional, holding a tombstone (the read drops the column)
+    val cond = s"$root/cond"
+    apply(cond, b1, cond = true)
+    apply(cond, Seq((2L, "b", 5L, "delete")), cond = true)
+    assert(load(cond).schema === CdcStream.readReplica(spark, cond).get.schema)
+    assert(!load(cond).schema.fieldNames.contains(CdcStream.Tombstone))
+
+    // no readable state: refused when the relation loads
+    Seq(() => load(s"$root/never"), () => load(eager, "version" -> "99"),
+        () => load(eager, "asOfWatermark" -> "5")).foreach { attempt =>
+      val e = intercept[IllegalArgumentException](attempt())
+      assert(e.getMessage.contains("no readable state"), e.getMessage)
+    }
+  }
+
   test("checkpoint restart: a re-served batch commits no duplicate version") {
     val log = freshChangelog()
     val replica = Files.createTempDirectory("graft-sink-restart").toString

@@ -145,6 +145,28 @@ class SecondaryIndexSpec extends SparkSuite {
     assert(e.getMessage.contains("buildIndex"))
   }
 
+  test("feed-driven maintenance of a GC'd version refuses naming the GC, " +
+      "not a missing feed entry") {
+    val (p, ix) = (freshDir(), freshDir())
+    def commit(rows: Seq[(Long, String, Long, String)]): Unit =
+      CdcStream.applyBatchToReplica(p, batch(rows), Seq("id"), Seq(col("seq")),
+        numBuckets = 1, recordChanges = true)
+    commit(Seq((1L, "oslo", 1L, "update")))
+    commit(Seq((1L, "lima", 2L, "update")))
+    commit(Seq((1L, "pune", 3L, "update")))
+    // one bucket rewritten by every commit: the third commit's GC
+    // retired v1, its changes included, into `_feed`
+    assert(!CdcStream.replicaVersions(p).contains(1L))
+    assert(CdcStream.feedChangesDir(p, 1L).nonEmpty)
+    val e = intercept[IllegalStateException] {
+      SecondaryIndex.maintainIndexesFromFeed(spark, p,
+        Seq(SecondaryIndex.IndexSpec(ix, col("city"), "city")),
+        1L, Seq("id"), Seq("seq"))
+    }
+    assert(e.getMessage.contains("was GC'd"), e.getMessage)
+    assert(!e.getMessage.contains("recorded no changes"), e.getMessage)
+  }
+
   test("an index FOLLOWER lags and catches up by replaying feed " +
       "versions in order — equal to synchronized maintenance") {
     val (p, ix) = (freshDir(), freshDir())

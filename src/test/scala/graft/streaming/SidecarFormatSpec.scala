@@ -98,6 +98,11 @@ class SidecarFormatSpec extends SparkSuite {
     Files.createDirectories(Paths.get(idx, "v000000003"))
     put(Paths.get(idx, "CURRENT"), "v000000003")
     assert(CdcStream.replicaCurrentVersion(idx).contains(3L))
+
+    // so is the fence marker: its bytes are the reason
+    assert(CdcStream.replicaFrozen(idx).isEmpty)
+    put(Paths.get(idx, "FROZEN"), "demoted: \"f\" promoted")
+    assert(CdcStream.replicaFrozen(idx).contains("demoted: \"f\" promoted"))
   }
 
   test("readers: a hand-written fan-out intent drives its flips; a " +
@@ -141,6 +146,9 @@ class SidecarFormatSpec extends SparkSuite {
     SecondaryIndex.recordAppliedPrimaryVersion(s"$root/i", 12L)
     assert(read(Paths.get(root, "i", "_applied_primary_version")) == "12")
 
+    CdcStream.freezeReplica(s"$root/z", "demoted: \"f\" promoted")
+    assert(read(Paths.get(root, "z", "FROZEN")) == "demoted: \"f\" promoted")
+
     // CURRENT, the clone sidecar, the refresh cursor and the feed meta
     // from real commits
     val src = s"$root/src"
@@ -161,7 +169,7 @@ class SidecarFormatSpec extends SparkSuite {
       """{"kind":"merge","watermark":10}""")
     assert(read(Paths.get(src, "CURRENT")) == "v000000003")
     // no writer leaves a tmp file behind
-    Seq(root, src, s"$root/c", s"$root/f", s"$root/p", s"$root/i",
+    Seq(root, src, s"$root/c", s"$root/f", s"$root/p", s"$root/i", s"$root/z",
         s"$src/_feed/v000000001").foreach { d =>
       assert(!new java.io.File(d).list().exists(_.startsWith(
         graft.io.AtomicFiles.TmpPrefix)), d)
