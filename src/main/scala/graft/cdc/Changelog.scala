@@ -1,7 +1,7 @@
 package graft.cdc
 
 import com.fasterxml.jackson.core.{JsonFactory, JsonToken}
-import java.io.{BufferedReader, File, FileInputStream, InputStreamReader, StringWriter}
+import java.io.{File, FileInputStream, StringWriter}
 import java.nio.charset.StandardCharsets
 import java.util.concurrent.ConcurrentHashMap
 
@@ -184,6 +184,7 @@ object ChangelogRecord {
   */
 object ChangelogFiles {
   val DefaultPrefix = "graft-bin"
+  private final val BlockSize = 64 * 1024
   val ManifestName = "manifest.json"
 
   private final case class CountState(len: Long, mtime: Long, count: Long)
@@ -298,27 +299,8 @@ object ChangelogFiles {
     * incremental update — silently skipping records later.
     */
   private def countNewlines(f: File, from: Long, until: Long): Long = {
-    val in = new FileInputStream(f)
-    try {
-      var skipped = 0L
-      while (skipped < from) {
-        val s = in.skip(from - skipped)
-        if (s <= 0) throw new java.io.IOException(s"cannot skip to $from in $f")
-        skipped += s
-      }
-      val buf = new Array[Byte](64 * 1024)
-      var count = 0L
-      var remaining = until - from
-      var n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-      while (n > 0 && remaining > 0) {
-        var i = 0
-        while (i < n) { if (buf(i) == '\n') count += 1; i += 1 }
-        remaining -= n
-        n = if (remaining > 0)
-          in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt) else 0
-      }
-      count
-    } finally in.close()
+    val lines = new LineScanner(f, from, until)
+    try { var n = 0L; while (lines.skip()) n += 1; n } finally lines.close()
   }
 
   /** Per-file manifest entries; empty if absent. Cached, reloaded only
@@ -536,8 +518,8 @@ object ChangelogFiles {
     }
   }
 
-  /** Stream the COMPLETE lines of byte range [from, until) through a
-    * fixed 64 KB buffer, invoking `onLine` for EVERY newline-terminated
+  /** Stream the COMPLETE lines of byte range [from, until) through the
+    * [[LineScanner]], invoking `onLine` for EVERY newline-terminated
     * line (blank lines surface as empty strings — one line = one pos);
     * returns the byte position just past the last complete line. The
     * torn trailing tail is never surfaced. THE shared driver-side
@@ -548,39 +530,9 @@ object ChangelogFiles {
     */
   def forEachCompleteLine(f: File, from: Long, until: Long)(
       onLine: String => Unit): Long = {
-    val in = new FileInputStream(f)
-    try {
-      var skipped = 0L
-      while (skipped < from) {
-        val s = in.skip(from - skipped)
-        if (s <= 0) throw new java.io.IOException(s"cannot skip to $from in $f")
-        skipped += s
-      }
-      val buf = new Array[Byte](64 * 1024)
-      val line = new java.io.ByteArrayOutputStream(256)
-      var pos = from          // absolute position of the current buffer start
-      var consumed = from     // position just past the last complete line
-      var remaining = until - from
-      var n = in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt)
-      while (n > 0 && remaining > 0) {
-        var i = 0
-        while (i < n) {
-          val b = buf(i)
-          if (b == '\n') {
-            onLine(if (line.size() == 0) ""
-                   else new String(line.toByteArray, StandardCharsets.UTF_8))
-            line.reset()
-            consumed = pos + i + 1
-          } else line.write(b)
-          i += 1
-        }
-        pos += n
-        remaining -= n
-        n = if (remaining > 0)
-          in.read(buf, 0, math.min(buf.length.toLong, remaining).toInt) else 0
-      }
-      consumed
-    } finally in.close()
+    val lines = new LineScanner(f, from, until)
+    try { while (lines.next()) onLine(lines.line()); lines.consumed }
+    finally lines.close()
   }
 
   /** Per-`db.table` record counts over the complete lines of
@@ -817,19 +769,87 @@ object ChangelogFiles {
       prefix: String = DefaultPrefix): BinlogOffset =
     advanceOf(listFiles(dir, prefix), start, maxRecords)
 
+  /** THE line scanner under every changelog read ([[RecordIterator]],
+    * [[forEachCompleteLine]], [[recordCount]]): it reads [from, until)
+    * in 64 KiB blocks into one byte array (grown for a longer line) and
+    * finds each `'\n'`. [[skip]] passes a line without keeping it;
+    * [[next]] keeps it for [[line]] to decode. A line is complete only
+    * when `'\n'` ends it, so a torn tail (or a line cut at `until`) is
+    * never surfaced; a `'\r'` before the `'\n'` is content.
+    */
+  private[cdc] final class LineScanner(f: File, from: Long, until: Long)
+      extends AutoCloseable {
+    private val in = new FileInputStream(f)
+    try in.getChannel.position(from)
+    catch { case e: Throwable => in.close(); throw e }
+    private var buf = new Array[Byte](BlockSize)
+    private var base = from        // file offset of buf(0)
+    private var head = 0           // first byte of the line being scanned
+    private var end = 0            // bytes of buf that hold data
+    private var left = until - from
+    private var lineStart = 0      // the last line is buf[lineStart, lineEnd)
+    private var lineEnd = 0
+    private var done = false
+    private var consumedAt = from
+
+    /** File offset just past the last complete line. */
+    def consumed: Long = consumedAt
+
+    /** Passes the next complete line; false at EOF, `until` or a torn tail. */
+    def next(): Boolean = advance(keep = true)
+    def skip(): Boolean = advance(keep = false)
+
+    /** The line the last [[next]] passed, without its `'\n'`. */
+    def line(): String =
+      new String(buf, lineStart, lineEnd - lineStart, StandardCharsets.UTF_8)
+
+    private def advance(keep: Boolean): Boolean = {
+      var i = head
+      while (!done) {
+        val b = buf; val e = end
+        while (i < e && b(i) != '\n') i += 1
+        if (i < e) {
+          lineStart = head; lineEnd = i; head = i + 1
+          consumedAt = base + head
+          return true
+        }
+        // no '\n' in [head, end): carry the partial line (or drop it,
+        // when skipping) to the array's start and read the next block
+        val carry = if (keep) end - head else 0
+        if (carry == buf.length) buf = java.util.Arrays.copyOf(buf, buf.length * 2)
+        else if (carry > 0 && head > 0) System.arraycopy(buf, head, buf, 0, carry)
+        base += end - carry
+        head = 0; end = carry; i = carry
+        val n = if (left <= 0) -1
+          else in.read(buf, end, math.min(buf.length - end, left).toInt)
+        if (n <= 0) done = true
+        else { end += n; left -= n }
+      }
+      false
+    }
+
+    override def close(): Unit = { done = true; in.close() }
+  }
+
   /** Iterator over changelog records that exposes `close()` so an
     * abandoned/cancelled task can release the file handle early
     * (`PartitionReader.close` calls it); exhaustion also closes.
     *
-    * TORN-LINE SAFETY lives HERE, once for every caller: only lines
-    * terminated by a newline are ever parsed. Under concurrent append
-    * the file can end in a partial line (truncated JSON); a terminated
-    * line earlier in the file is complete by filesystem append
-    * semantics. The unterminated tail is treated as end-of-stream — it
-    * has no pos yet (recordCount's newline accounting agrees) and will
-    * be served once its newline lands.
-    */
-  /** @param seekBytes when >= 0, the EXACT byte offset where line
+    * TORN-LINE SAFETY lives in the [[LineScanner]], once for every
+    * caller: only lines terminated by a newline are ever parsed. Under
+    * concurrent append the file can end in a partial line (truncated
+    * JSON); a terminated line earlier in the file is complete by
+    * filesystem append semantics. The unterminated tail is treated as
+    * end-of-stream — it has no pos yet (recordCount's newline
+    * accounting agrees) and will be served once its newline lands.
+    *
+    * One line is one pos: a blank line consumes its pos but emits
+    * nothing. Lines before `fromPos` are counted, not decoded, and no
+    * line at or past `untilPos` is parsed — including the one-record
+    * prefetch — so a caller may bound the scan at a planning-time
+    * complete-line count.
+    *
+    * @param seekBytes when >= 0, the EXACT byte offset where line
     *   `seekPos` starts (from a manifest [[SyncPoint]]): the iterator
     *   seeks there directly and line-skips only [seekPos, fromPos) —
     *   at most one sync interval — instead of the whole prefix, so a
@@ -842,54 +862,25 @@ object ChangelogFiles {
       extends Iterator[ChangelogRecord] with AutoCloseable {
     require(seekBytes < 0 || seekPos <= fromPos,
       s"seekPos $seekPos past fromPos $fromPos")
-    private val in = new java.io.BufferedInputStream(new FileInputStream(f), 64 * 1024)
-    private val buf = new java.io.ByteArrayOutputStream(256)
-    private var closed = false
-    private var idx =
-      if (seekBytes >= 0) {
-        var skipped = 0L
-        while (skipped < seekBytes) {
-          val s = in.skip(seekBytes - skipped)
-          if (s <= 0)
-            throw new java.io.IOException(s"cannot seek to byte $seekBytes in $f")
-          skipped += s
-        }
-        seekPos - 1 // the seek lands at the start of line seekPos
-      } else 0L
-    private var nextRec: ChangelogRecord = advanceTo()
+    private val lines = new LineScanner(f, math.max(seekBytes, 0L), Long.MaxValue)
+    // pos of the last line passed; a seek lands at the start of line seekPos
+    private var idx = if (seekBytes >= 0) seekPos - 1 else 0L
+    private var nextRec: ChangelogRecord = advance()
 
-    /** Next NEWLINE-TERMINATED line, or null at EOF / torn tail. */
-    private def readTerminatedLine(): String = {
-      buf.reset()
-      var b = in.read()
-      while (b >= 0) {
-        if (b == '\n')
-          return new String(buf.toByteArray, StandardCharsets.UTF_8)
-        buf.write(b)
-        b = in.read()
-      }
-      null // EOF: any accumulated bytes are an unterminated (torn) line
-    }
-
-    private def advanceTo(): ChangelogRecord = {
-      // one pos per line (same accounting as recordCount's newline
-      // count); blank lines consume their pos but emit nothing
-      var cur = readTerminatedLine()
-      while (cur != null) {
+    private def advance(): ChangelogRecord = {
+      while (idx + 1 < untilPos) {
+        val serve = idx + 1 >= fromPos
+        if (!(if (serve) lines.next() else lines.skip())) { close(); return null }
         idx += 1
-        if (cur.nonEmpty && idx >= fromPos && idx < untilPos) {
-          return ChangelogRecord.parse(cur)
-        }
-        if (idx >= untilPos - 1) { close(); return null }
-        cur = readTerminatedLine()
+        if (serve) { val l = lines.line(); if (l.nonEmpty) return ChangelogRecord.parse(l) }
       }
       close(); null
     }
     override def hasNext: Boolean = nextRec != null
     override def next(): ChangelogRecord = {
-      val v = nextRec; nextRec = advanceTo(); v
+      val v = nextRec; nextRec = advance(); v
     }
-    override def close(): Unit = if (!closed) { closed = true; in.close() }
+    override def close(): Unit = lines.close()
   }
 
   /** Read records of one file with `fromPos <= pos < untilPos`;

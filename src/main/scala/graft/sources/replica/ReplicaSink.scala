@@ -59,7 +59,10 @@ import graft.streaming.CdcStream
   * feed entry. With `indexColumn` the index commits run beside the
   * primary's stage and publish before it
   * ([[graft.streaming.SecondaryIndex.applyBatchWithIndexes]]): 13 jobs
-  * with two indexes and `changeFeed`.
+  * with two indexes and `changeFeed`. A `deferMerge` commit without an
+  * index is 2 jobs (the routing shuffle, which also reduces the batch,
+  * then the delta write); with `changeFeed` the feed entry is a copy of
+  * the delta files, with no third job.
   */
 class ReplicaSinkProvider extends StreamSinkProvider with RelationProvider
     with StreamSourceProvider with DataSourceRegister {

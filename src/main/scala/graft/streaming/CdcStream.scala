@@ -41,6 +41,12 @@ object CdcStream {
   /** Expand a `value: String` envelope stream into typed columns:
     * op/timestamp/db/table/offset + one output row per changed row.
     * Pure Catalyst (`from_json` + `explode`) — codegen'd, no UDF.
+    *
+    * ONE `from_json` per envelope: for a plain `explode` the optimizer
+    * infers `size(rows) > 0` and pushes it below the projection, where
+    * it parses every envelope a second time. `posexplode_outer` infers
+    * nothing; the null `pos` it gives a null or empty `rows` marks the
+    * rows a plain `explode` would not emit, so the output is the same.
     */
   def parsed(envelopes: DataFrame, rowSchema: StructType): DataFrame = {
     val e = envelopes
@@ -51,7 +57,8 @@ object CdcStream {
         col("e.databaseName").as("databaseName"),
         col("e.tableName").as("tableName"),
         col("e.offset").as("offset"),
-        explode(col("e.rows")).as("row"))
+        posexplode_outer(col("e.rows")).as(Seq("__pos", "row")))
+      .where(col("__pos").isNotNull).drop("__pos")
     rowSchema.fieldNames.foldLeft(e) { (d, f) => d.withColumn(f, col(s"row.$f")) }
       .drop("row")
   }
@@ -1950,18 +1957,18 @@ object CdcStream {
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
     def add(check: String, sev: String, subject: String, detail: String): Unit =
       out += ((check, sev, subject, detail))
-    val cur = currentVersion(replicaDir)
+    val cur = try Right(currentVersion(replicaDir)) catch {
+      case e: DanglingCurrentException => Left(e)
+    }
     cur match {
-      case None =>
+      case Left(e) => add("current_pointer", "error", e.name, e.getMessage)
+      case Right(None) =>
         add("current_pointer", "error", replicaDir,
           "no CURRENT pointer — nothing was ever committed, or the " +
             "pointer file was deleted")
-      case Some(v) =>
+      case Right(Some(v)) =>
         val name = versionName(v)
-        if (!versionDir(replicaDir, v).isDirectory)
-          add("current_pointer", "error", name,
-            "CURRENT names a version dir that does not exist")
-        else (try Right(readManifest(replicaDir, v)) catch {
+        (try Right(readManifest(replicaDir, v)) catch {
           case e: Exception => Left(e)
         }) match {
           case Left(e) =>
@@ -2027,14 +2034,15 @@ object CdcStream {
       add("retention_pin", "info", replicaDir,
         s"GC floor pinned at ${versionName(p)} — version dirs at or above it " +
           "are never swept"))
-    // GSI cursors vs the primary's CURRENT
-    indexDirs.foreach { idx =>
+    // GSI cursors vs the primary's CURRENT (none to compare against
+    // while CURRENT dangles)
+    if (cur.isRight) indexDirs.foreach { idx =>
       SecondaryIndex.appliedPrimaryVersion(idx) match {
         case None =>
           add("index_cursor_missing", "error", idx,
             "index store records no applied-primary-version cursor")
         case Some(applied) =>
-          val pv = cur.getOrElse(0L)
+          val pv = cur.toOption.flatten.getOrElse(0L)
           if (applied > pv)
             add("index_ahead", "error", idx,
               s"cursor at $applied but primary CURRENT is $pv — the " +
@@ -2986,22 +2994,14 @@ object CdcStream {
     bucketCols.foreach(_.filterNot(idCols.contains).foreach(c =>
       throw new IllegalArgumentException(
         s"applyBatchToReplica: bucketCol '$c' must be one of idCols $idCols")))
-    // the DEFERRED path is a single write action over the net (plus an
-    // optional changes write) — the per-key window stays lazy inside it.
-    // The EAGER path reduces the batch inside the routing shuffle
-    // ([[routeNet]]): one shuffle and one write materialize the net,
-    // already split by bucket.
-    val conditional = if (conditionalOrder) Some(orderCols) else None
-    if (deferMerge)
-      applyNetToReplica(replicaDir, lastOpPerKey(batch, idCols, orderCols),
-        batch.columns, idCols, opCol, numBuckets, watermark, recordChanges,
-        conditional = conditional, bucketCols = bucketCols, defer = true,
-        kind = kind, prepareOnly = prepareOnly)
-    else
-      applyNetToReplica(replicaDir, batch, batch.columns, idCols, opCol,
-        numBuckets, watermark, recordChanges, conditional = conditional,
-        bucketCols = bucketCols, kind = kind, prepareOnly = prepareOnly,
-        reduceBy = Some(orderCols))
+    // both paths reduce the batch inside the commit's one routing
+    // shuffle: the deferred path's delta write ([[applyNetToReplica]]),
+    // the eager path's net write ([[routeNet]])
+    applyNetToReplica(replicaDir, batch, batch.columns, idCols, opCol,
+      numBuckets, watermark, recordChanges,
+      conditional = if (conditionalOrder) Some(orderCols) else None,
+      bucketCols = bucketCols, defer = deferMerge, kind = kind,
+      prepareOnly = prepareOnly, reduceBy = Some(orderCols))
   }
 
   /** TYPE-FAITHFUL NET: batch columns that arrived NARROWER than the
@@ -3443,8 +3443,8 @@ object CdcStream {
 
   /** Package-private for [[SecondaryIndex]] and the failover paths: a
     * net that is already last-op-per-key commits without a second
-    * per-key window; `reduceBy` reduces a raw batch inside the eager
-    * routing shuffle instead (deferred callers reduce before calling).
+    * per-key window; `reduceBy` reduces a raw batch inside the commit's
+    * routing shuffle instead.
     */
   private[streaming] def applyNetToReplica(
       replicaDir: String,
@@ -3476,7 +3476,6 @@ object CdcStream {
       try if (c.touched.isEmpty) None else { c.stage(); c.publish() }
       finally c.abort()
     } else {
-      val spark = net.sparkSession
       val p = planCommit(replicaDir, net, batchCols, idCols, opCol,
         numBuckets, conditional, bucketCols, bypassFreeze)
       val CommitPlan(_, netT, dataCols, nb, resolvedBucketCols, _, metaOrd) = p
@@ -3485,10 +3484,12 @@ object CdcStream {
       // -------- DEFERRED (merge-on-read) commit: append the net as
       // per-bucket delta files — NO base read, NO base rewrite, and NO
       // touched-bucket pre-collect (the write's own partition dirs say
-      // which buckets the batch hit). ONE write job + manifest — the
-      // latency floor a streaming upsert sink needs for small
-      // micro-batches; reads fold deltas newest-net-wins, compaction
-      // folds them back into base files.
+      // which buckets the batch hit). TWO Spark jobs + manifest (the
+      // routing shuffle, which also reduces the batch, and the delta
+      // write; a change feed copies the delta files) — the latency
+      // floor a streaming upsert sink needs for small micro-batches;
+      // reads fold deltas newest-net-wins, compaction folds them back
+      // into base files.
       // ONE ordering model per delta chain set: folding sequence-
       // committed and order-committed deltas together has no coherent
       // winner rule — compaction resets the mode
@@ -3537,9 +3538,13 @@ object CdcStream {
           prepareOnly = prepareOnly) { txn =>
         // hash-repartition by bucket id (no explicit count — no driver
         // pre-collect): each bucket's rows land in exactly one shuffle
-        // partition, so partitionBy still writes one file per bucket
-        netT.withColumn("__bucket", bucketOf)
+        // partition, so partitionBy still writes one file per bucket.
+        // The reduce runs after the routing, over (__bucket, keys): the
+        // bucket is a function of the key, so the winners are the same
+        // and the window needs no second shuffle
+        val routed = netT.withColumn("__bucket", bucketOf)
           .repartition(col("__bucket"))
+        reduceBy.fold(routed)(lastOpPerKey(routed, "__bucket" +: idCols, _))
           .write.partitionBy("__bucket").parquet(txn.path("delta"))
         val written = bucketDirs(txn.path("delta"))
         // net-empty batch: nothing to commit (same contract as eager)
@@ -3559,7 +3564,9 @@ object CdcStream {
                 "hold conditional tombstones a sequence fold cannot order " +
                 "against; compactReplica(tombstoneHorizon) first")
           }
-          if (recordChanges) netT.write.parquet(txn.path("changes"))
+          // the feed entry is a copy of the delta files, so no job runs
+          // the batch's scan and reduce a second time
+          if (recordChanges) txn.copyBucketFiles("delta", "changes")
           val prevDeltas = prev.map(_.deltas).getOrElse(Map.empty[Int, Seq[String]])
           val newDeltas = prevDeltas ++ written.map(k =>
             k -> (prevDeltas.getOrElse(k, Seq.empty) :+ txn.ref("delta", k))).toMap

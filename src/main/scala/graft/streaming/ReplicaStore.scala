@@ -325,14 +325,28 @@ private[streaming] object ReplicaStore {
     listFiles(dir).filter(f => f.isDirectory && f.getName.startsWith("__bucket="))
       .map(_.getName.stripPrefix("__bucket=").toInt).toSet
 
-  /** The version CURRENT names; None when nothing was ever committed. */
+  /** The version CURRENT names; None when nothing was ever committed.
+    * A CURRENT whose version dir is gone is read once more (a reader
+    * that lost a race with a flip and its GC sees the new version),
+    * then refused: building on it would claim version 1 over the
+    * store's real history.
+    */
   def currentVersion(dir: String): Option[Long] = {
     val ptr = new java.io.File(dir, Pointer)
     if (!ptr.exists()) return None
-    val name = java.nio.file.Files.readString(ptr.toPath).trim
-    if (new java.io.File(dir, name).isDirectory) Some(versionNumber(name))
-    else None
+    def named(): String = java.nio.file.Files.readString(ptr.toPath).trim
+    def live(name: String): Boolean = new java.io.File(dir, name).isDirectory
+    val first = named()
+    val name = if (live(first)) first else named()
+    if (live(name)) Some(versionNumber(name))
+    else throw new DanglingCurrentException(dir, name)
   }
+
+  final class DanglingCurrentException(dir: String, val name: String)
+      extends IllegalStateException(s"replica $dir: CURRENT names $name, " +
+        "whose version dir does not exist — the committed history is " +
+        "broken; nothing reads or writes this store until it is repaired " +
+        "(CdcStream.fsckReplica reports it)")
 
   /** CURRENT with its manifest — None when nothing was ever committed.
     * Every entry point resolves the live state through here, so this is
@@ -741,6 +755,18 @@ private[streaming] object ReplicaStore {
 
     /** The manifest path of bucket `k` written under `path(sub)`. */
     def ref(sub: String, k: Int): String = s"${versionName(version)}/$sub/__bucket=$k"
+
+    /** Copies the parquet files of the `partitionBy("__bucket")` write
+      * under `path(from)` into the one dir `path(to)`. The bucket lives
+      * in their dir names, so they hold the other columns in write order.
+      */
+    def copyBucketFiles(from: String, to: String): Unit = {
+      val target = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(path(to)))
+      bucketDirs(path(from)).foreach { b =>
+        listFiles(s"${path(from)}/__bucket=$b").filter(_.getName.endsWith(".parquet"))
+          .foreach(f => java.nio.file.Files.copy(f.toPath, target.resolve(s"b$b-${f.getName}")))
+      }
+    }
 
     /** `m` after the buckets `k` were rewritten into `path("data")`:
       * they point at their new files (an emptied one drops out), lose

@@ -22,4 +22,25 @@ object SparkSuite {
 trait SparkSuite extends AnyFunSuite {
   def spark: SparkSession = SparkSuite.spark
   def sfDir: String = SparkSuite.sfDir
+
+  /** Spark jobs run by `body`, counted by a listener between two drains
+    * of the listener bus.
+    */
+  def countJobs(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    sc.addSparkListener(l)
+    try {
+      body
+      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(l)
+    n.get
+  }
 }

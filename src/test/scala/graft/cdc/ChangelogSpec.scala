@@ -1,5 +1,6 @@
 package graft.cdc
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import graft.{SparkSuite, Tables}
@@ -212,5 +213,164 @@ class ChangelogSpec extends SparkSuite {
     // deletion is a structural change too
     assert(f3.delete())
     assert(ChangelogFiles.listFiles(d).map(_._1) === Seq(1L, 2L))
+  }
+
+  // ---- the block line scanner under readRange, forEachCompleteLine and
+  // recordCount: each case pins the (pos, record) sequence, lines and
+  // counts that the byte-at-a-time reader gave on the same bytes.
+  // Blocks are 64 KiB, so offset 65536 is the first block boundary.
+
+  private val Block = 65536
+
+  /** A record line whose JSON pos and ts are `pos`; `s` is its one cell. */
+  private def rec(pos: Long, s: String = ""): String =
+    s"""{"pos":$pos,"op":"insert","db":"g","table":"t","ts":$pos,"row":{"s":"$s"}}"""
+
+  private def record(pos: Long, s: String = ""): ChangelogRecord =
+    ChangelogRecord(pos, "insert", "g", "t", pos, Map("s" -> EnvelopeValue.VString(s)))
+
+  private def logOf(text: String): java.io.File = {
+    val f = new java.io.File(
+      Files.createTempDirectory("graft-scan").toFile, "graft-bin.000001")
+    Files.write(f.toPath, text.getBytes(StandardCharsets.UTF_8))
+    f
+  }
+
+  private def served(f: java.io.File, from: Long = 1L,
+      until: Long = Long.MaxValue, seekBytes: Long = -1L,
+      seekPos: Long = 1L): Seq[ChangelogRecord] = {
+    val it = ChangelogFiles.readRange(f, from, until, seekBytes, seekPos)
+    try it.toList finally it.close()
+  }
+
+  /** forEachCompleteLine over the whole file: (lines, consumed). */
+  private def lines(f: java.io.File): (Seq[String], Long) = {
+    val b = Seq.newBuilder[String]
+    val consumed = ChangelogFiles.forEachCompleteLine(f, 0L, f.length())(b += _)
+    (b.result(), consumed)
+  }
+
+  test("scanner: a line longer than 64 KiB is served whole") {
+    val long = "x" * 200000
+    val f = logOf(Seq(rec(1), rec(2, long), rec(3)).mkString("", "\n", "\n"))
+    assert(served(f) === Seq(record(1), record(2, long), record(3)))
+    assert(served(f, from = 3) === Seq(record(3)))
+    assert(served(f, from = 2, until = 3) === Seq(record(2, long)))
+    assert(ChangelogFiles.recordCount(f) === 3L)
+    assert(lines(f) === ((Seq(rec(1), rec(2, long), rec(3)), f.length())))
+  }
+
+  test("scanner: a multi-byte UTF-8 character across a block boundary") {
+    // the value of line 2 starts at byte `at`; pad it so a 3-byte '€'
+    // covers bytes 65535..65537, then a 4-byte emoji follows
+    val at = rec(1).length + 1 + rec(2).length - 3
+    val s = "a" * (Block - 1 - at) + "€" + "😀" + "b"
+    val f = logOf(Seq(rec(1), rec(2, s), rec(3)).mkString("", "\n", "\n"))
+    assert(rec(1, "").length + 1 + rec(2, s).indexOf('€') === Block - 1)
+    assert(served(f) === Seq(record(1), record(2, s), record(3)))
+    assert(served(f, from = 3) === Seq(record(3)))
+    assert(lines(f)._1 === Seq(rec(1), rec(2, s), rec(3)))
+  }
+
+  test("scanner: a blank line consumes its pos and emits nothing") {
+    val f = logOf(rec(1) + "\n\n" + rec(3) + "\n\n\n" + rec(6) + "\n")
+    assert(served(f) === Seq(record(1), record(3), record(6)))
+    assert(served(f, 2, 4) === Seq(record(3)))
+    assert(served(f, 4, 6) === Nil)
+    assert(served(f, 6) === Seq(record(6)))
+    assert(ChangelogFiles.recordCount(f) === 6L)
+    assert(lines(f)._1 === Seq(rec(1), "", rec(3), "", "", rec(6)))
+  }
+
+  test("scanner: a '\\r' before '\\n' is kept as line content") {
+    val f = logOf(rec(1) + "\r\n" + rec(2) + "\r\n")
+    assert(served(f) === Seq(record(1), record(2)))
+    assert(lines(f) === ((Seq(rec(1) + "\r", rec(2) + "\r"), f.length())))
+    assert(ChangelogFiles.recordCount(f) === 2L)
+  }
+
+  test("scanner: a torn tail is never served, at a block boundary or inside a block") {
+    // complete lines end exactly at the block boundary
+    val first = rec(1, "a" * (Block - 1 - rec(1).length))
+    val atBoundary = logOf(first + "\n" + rec(2).take(20))
+    assert(served(atBoundary) === Seq(record(1, "a" * (Block - 1 - rec(1).length))))
+    assert(ChangelogFiles.recordCount(atBoundary) === 1L)
+    assert(lines(atBoundary) === ((Seq(first), Block.toLong)))
+    // the torn line runs across the boundary
+    val across = logOf(rec(1) + "\n" + rec(2, "b" * 70000).take(66000))
+    assert(served(across) === Seq(record(1)))
+    assert(ChangelogFiles.recordCount(across) === 1L)
+    assert(lines(across) === ((Seq(rec(1)), rec(1).length + 1L)))
+    // the torn line ends inside the first block
+    val inside = logOf(rec(1) + "\n" + rec(2) + "\n" + rec(3).take(30))
+    assert(served(inside) === Seq(record(1), record(2)))
+    assert(served(inside, from = 3) === Nil)
+    assert(ChangelogFiles.recordCount(inside) === 2L)
+    assert(lines(inside) ===
+      ((Seq(rec(1), rec(2)), rec(1).length + rec(2).length + 2L)))
+  }
+
+  private def padded(i: Int): String = rec(i, "p" * (i % 37))
+
+  test("scanner: fromPos in a later block") {
+    val f = logOf((1 to 3000).map(padded).mkString("", "\n", "\n"))
+    assert(f.length() > 3L * Block)
+    assert(served(f, 2500, 2503) ===
+      (2500 to 2502).map(i => record(i, "p" * (i % 37))))
+    assert(served(f, 2999) === (2999 to 3000).map(i => record(i, "p" * (i % 37))))
+    assert(ChangelogFiles.recordCount(f) === 3000L)
+  }
+
+  test("scanner: nothing at or past untilPos is parsed, and the reader ends there") {
+    // line 6 is not a record: parsing it throws
+    val f = logOf((1 to 5).map(rec(_)).mkString("", "\n", "\n") +
+      "not a record\n" + rec(7) + "\n")
+    val it = ChangelogFiles.readRange(f, 1, 6)
+    assert(it.toList === (1 to 5).map(record(_)))
+    assert(!it.hasNext)
+    assert(served(f, 3, 6) === (3 to 5).map(record(_)))
+    assert(served(f, 5, 6) === Seq(record(5)))
+    intercept[Exception](served(f, 1, 7))
+  }
+
+  test("scanner: a mid-file seekBytes start") {
+    val all = (1 to 2000).map(padded)
+    val f = logOf(all.mkString("", "\n", "\n"))
+    val startOf = all.scanLeft(0L)(_ + _.length + 1) // startOf(i - 1): line i
+    assert(served(f, 1500, 1504, seekBytes = startOf(1399), seekPos = 1400) ===
+      (1500 to 1503).map(i => record(i, "p" * (i % 37))))
+    assert(served(f, 1400, 1402, seekBytes = startOf(1399), seekPos = 1400) ===
+      (1400 to 1401).map(i => record(i, "p" * (i % 37))))
+    assert(served(f, 1999, seekBytes = startOf(1997), seekPos = 1998) ===
+      (1999 to 2000).map(i => record(i, "p" * (i % 37))))
+  }
+
+  test("scanner: an empty file") {
+    val f = logOf("")
+    assert(served(f) === Nil)
+    assert(ChangelogFiles.recordCount(f) === 0L)
+    assert(lines(f) === ((Nil, 0L)))
+  }
+
+  test("scanner: consumed offsets and incremental counts on an appended file") {
+    val f = logOf("")
+    val text = (1 to 4000).map(i => rec(i, "r" * (i % 53))).mkString("", "\n", "\n")
+    val rnd = new scala.util.Random(7)
+    var at = 0
+    var consumed = 0L
+    var seen = 0
+    while (at < text.length) {
+      val n = math.min(text.length - at, 1 + rnd.nextInt(90000))
+      Files.write(f.toPath, text.substring(at, at + n).getBytes(StandardCharsets.UTF_8),
+        java.nio.file.StandardOpenOption.APPEND)
+      at += n
+      val written = text.substring(0, at)
+      val complete = written.count(_ == '\n')
+      assert(ChangelogFiles.recordCount(f) === complete.toLong)
+      consumed = ChangelogFiles.forEachCompleteLine(f, consumed, f.length())(_ => seen += 1)
+      assert(consumed === written.lastIndexOf('\n') + 1L)
+      assert(seen === complete)
+    }
+    assert(served(f).size === 4000)
   }
 }

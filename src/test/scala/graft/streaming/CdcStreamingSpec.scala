@@ -541,4 +541,29 @@ class CdcStreamingSpec extends SparkSuite {
       .orderBy("user_id", "session_start_ms").collect().toSeq
     assert(got === want)
   }
+
+  test("parsed runs from_json once per envelope and emits the rows explode emits") {
+    val envelopes = Seq(
+      """{"type":"insert","timestamp":1,"offset":1,"rows":[{"event_id":1},{"event_id":2}]}""",
+      """{"type":"insert","timestamp":2,"offset":2,"rows":[]}""",
+      """{"type":"ddl","timestamp":3,"offset":3}""",
+      """{"type":"delete","timestamp":4,"offset":4,"rows":[null,{"event_id":5}]}""",
+      "not an envelope")
+    // a scanned relation, not a local one the optimizer would fold
+    val scanned = spark.sparkContext.parallelize(envelopes, 2).toDF("value")
+    val out = CdcStream.parsed(scanned, rowSchema)
+    val parses = out.queryExecution.optimizedPlan.collect { case n => n.expressions }
+      .flatten.flatMap(_.collect {
+        case j: org.apache.spark.sql.catalyst.expressions.JsonToStructs => j
+      })
+    assert(parses.size === 1, out.queryExecution.optimizedPlan)
+    val explodedRows = scanned
+      .select(from_json($"value", CdcStream.envelopeSchema(rowSchema)).as("e"))
+      .select($"e.timestamp".as("ts_ms"), explode($"e.rows").as("row"))
+      .select($"ts_ms", $"row.event_id".as("event_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"ts_ms", $"event_id").as[(Long, Option[Long])].collect().toSeq.sorted
+    assert(rows(out) === rows(explodedRows))
+    assert(rows(out) === Seq((1L, Some(1L)), (1L, Some(2L)), (4L, None), (4L, Some(5L))))
+  }
 }

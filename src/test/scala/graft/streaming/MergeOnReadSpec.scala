@@ -516,4 +516,76 @@ class MergeOnReadSpec extends SparkSuite {
       applyDefer(dir, Seq((1L, "back", 1L, "update")))
     }
   }
+
+  /** `n` rows over 150 keys, several per key; `seq` is unique and rises
+    * with `seed`, so later batches carry greater orders.
+    */
+  private def churn(seed: Long, n: Int): Seq[(Long, String, Long, String)] =
+    (0 until n).map { i =>
+      val id = (i * 7919L + seed * 31L) % 150L
+      (id, s"v$seed-$i", seed * 10000L + i, if (i % 7 == 0) "delete" else "update")
+    }
+
+  /** `rows` as a scanned batch: an RDD, not a local relation, whose
+    * filters the optimizer would evaluate once on the driver.
+    */
+  private def scanned(rows: Seq[(Long, String, Long, String)]) =
+    spark.sparkContext.parallelize(rows, 2).toDF("id", "v", "seq", "op")
+
+  /** Per key, the row with the greatest `seq` (the batch's last op). */
+  private def lastPerKey(rows: Seq[(Long, String, Long, String)]) =
+    rows.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq
+
+  /** The state a fold of `batches` leaves: deleted keys are absent. */
+  private def folded(batches: Seq[Seq[(Long, String, Long, String)]]) =
+    lastPerKey(batches.flatten).filter(_._4 != "delete")
+      .map(r => (r._1, r._2)).sorted
+
+  test("job budget: an un-indexed deferred commit runs at most 2 Spark " +
+      "jobs, and its store equals the fold") {
+    // measured: 2 jobs (the routing shuffle, which also reduces the
+    // batch, and the delta write) against 3 when the reduce ran its own
+    // window shuffle before the routing one
+    Seq(false, true).foreach { conditional =>
+      val dir = freshDir()
+      def commit(rows: Seq[(Long, String, Long, String)]): Unit =
+        CdcStream.applyBatchToReplica(dir, scanned(rows), Seq("id"),
+          Seq(col("seq")), conditionalOrder = conditional, deferMerge = true)
+      val batches = (1L to 3L).map(churn(_, 600))
+      commit(batches.head)
+      batches.tail.foreach { b =>
+        val jobs = countJobs(commit(b))
+        assert(jobs <= 2, s"deferred commit (conditional=$conditional) ran $jobs jobs")
+      }
+      assert(content(dir) == folded(batches), s"conditional=$conditional")
+    }
+  }
+
+  test("a deferred commit with a change feed evaluates its batch once") {
+    val dir = freshDir()
+    val sink = new graft.sources.replica.ReplicaSink(
+      graft.sources.replica.ReplicaSinkConfig(Map(
+        "path" -> dir, "keys" -> "id", "orderColumns" -> "seq",
+        "deferMerge" -> "true", "changeFeed" -> "true")))
+    val evaluated = spark.sparkContext.longAccumulator("deferred-feed-input")
+    val counted = udf((_: Long) => { evaluated.add(1); true }).asNondeterministic()
+    val batches = (1L to 2L).map(churn(_, 400))
+    batches.zipWithIndex.foreach { case (rows, i) =>
+      sink.addBatch(i.toLong, scanned(rows).filter(counted($"id")))
+    }
+    // each version's feed entry is its batch's net, in the batch's
+    // column order
+    val feed = CdcStream.readReplicaChanges(spark, dir).get
+    assert(feed.columns.filterNot(_.startsWith("_")).toSeq ==
+      Seq("id", "v", "seq", "op"))
+    val got = feed.select($"_commit_version", $"id", $"v", $"seq", $"op")
+      .as[(Long, Long, String, Long, String)].collect().toSeq.sorted
+    val want = batches.zipWithIndex.flatMap { case (rows, i) =>
+      lastPerKey(rows).map { case (id, v, seq, op) => (i + 1L, id, v, seq, op) }
+    }.sorted
+    assert(got == want)
+    assert(evaluated.value == batches.map(_.size).sum,
+      "each input row is evaluated once")
+    assert(content(dir) == folded(batches))
+  }
 }

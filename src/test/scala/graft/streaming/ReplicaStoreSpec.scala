@@ -92,4 +92,53 @@ class ReplicaStoreSpec extends SparkSuite {
       assert(stagingDirs(dir).isEmpty, name)
     }
   }
+
+  test("a CURRENT that names a missing version dir is refused by every " +
+      "entry point, and no version dir is touched") {
+    val dir = Files.createTempDirectory("dangling").toString
+    def merge(rows: Seq[(Long, String, Long, String)], defer: Boolean = false): Unit =
+      CdcStream.applyBatchToReplica(dir, rows.toDF("id", "v", "seq", "op"),
+        Seq("id"), Seq(col("seq")), numBuckets = 4, deferMerge = defer)
+    merge(Seq((1L, "a", 1L, "update"), (2L, "b", 1L, "update")))
+    merge(Seq((3L, "c", 2L, "update"), (4L, "d", 2L, "update")))
+    merge(Seq((5L, "e", 3L, "update"), (6L, "f", 3L, "update")))
+    assert(CdcStream.readReplica(spark, dir).get.count() == 6)
+    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(dir, "v000000003").toFile)
+    // every file under a version dir, with its size and mtime
+    def versionFiles(): Map[String, (Long, Long)] =
+      Files.walk(Paths.get(dir)).iterator().asScala
+        .filter(p => Files.isRegularFile(p) &&
+          dir.length < p.toString.length &&
+          Paths.get(dir).relativize(p).getName(0).toString.matches("v[0-9]{9}"))
+        .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis))
+        .toMap
+    val before = versionFiles()
+    assert(before.nonEmpty)
+    val keys = Seq(1L).toDF("id")
+    def chain(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: chain(t.getCause)
+    Seq[(String, () => Any)](
+      "read" -> (() => CdcStream.readReplica(spark, dir)),
+      "keyed read" -> (() => CdcStream.readReplicaForKeys(spark, dir, Seq("id"), keys)),
+      "eager merge" -> (() => merge(Seq((7L, "g", 4L, "update")))),
+      "deferred merge" -> (() => merge(Seq((7L, "g", 4L, "update")), defer = true)),
+      "compact" -> (() => CdcStream.compactReplica(spark, dir)),
+      "erase" -> (() => CdcStream.eraseKeys(spark, dir, Seq("id"), keys)),
+      "restore" -> (() => CdcStream.restoreReplica(spark, dir, 2L))
+    ).foreach { case (what, run) =>
+      val e = intercept[Exception](run())
+      assert(chain(e).exists(c => c.isInstanceOf[ReplicaStore.DanglingCurrentException] &&
+        c.getMessage.contains("v000000003") && c.getMessage.contains("fsckReplica")),
+        s"$what: $e")
+      assert(versionFiles() == before, s"$what touched a version dir")
+    }
+    val pointer = CdcStream.fsckReplica(spark, dir)
+      .filter($"check" === "current_pointer").collect()
+    assert(pointer.map(_.getString(2)).toSeq == Seq("v000000003"))
+    assert(pointer.head.getString(3).contains("does not exist"))
+    // a store that was never written still reads as None
+    val never = Files.createTempDirectory("never").toString
+    assert(CdcStream.readReplica(spark, never).isEmpty)
+    assert(CdcStream.replicaCurrentVersion(never).isEmpty)
+  }
 }

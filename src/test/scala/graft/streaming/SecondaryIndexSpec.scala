@@ -687,27 +687,6 @@ class SecondaryIndexSpec extends SparkSuite {
     Option(new java.io.File(dir).list()).getOrElse(Array.empty[String])
       .filter(_.startsWith(".staging-")).toSeq
 
-  /** Spark jobs run by `body`, counted by a listener between two drains
-    * of the listener bus.
-    */
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    val sc = spark.sparkContext
-    org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-    sc.addSparkListener(l)
-    try {
-      body
-      org.apache.spark.GraftSparkBridge.drainListenerBus(sc)
-    } finally sc.removeSparkListener(l)
-    n.get
-  }
-
   private def rows(seed: Long, n: Int) = (0 until n).map { i =>
     val id = (i * 7919L + seed * 31L) % 2000L
     (id, id % 64, (id * 13 + seed) % 1000, seed * 10000L + i,
